@@ -17,8 +17,10 @@ equivalents (SURVEY.md §1.5, §7.3):
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from data_wrangler_spark.session import apply_runtime_confs
 
@@ -103,23 +105,31 @@ def scratch_tag(sf_dir: str, source_table: str = "orders", params: str = "") -> 
     return f"{os.path.basename(abs_dir)}_{digest}"
 
 
-# Opt-in reuse of table DataFrame *objects* across queries in one
-# session: every load_table call otherwise re-lists the path and
-# re-reads parquet footers at analysis time — a fixed ~10-30 ms per
-# table per query that dominates sub-second queries in a harness
-# running the whole registry back-to-back. This caches only the lazy
-# plan (schema + file index), NOT data — scans still hit storage, so
-# engine-vs-engine benchmarks stay honest. Off by default because a
-# long-lived session would not see files replaced under the path.
-_DF_CACHE: dict[tuple[int, str, str], DataFrame] = {}
-_DF_CACHE_ON = False
+# Parquet schema per table file, inferred once per file version.
+# Inferring a schema runs a Spark job (a parquet footer read, tens of
+# ms per call); reading with the schema passed in runs none. Only the
+# StructType is kept, never a DataFrame: every load_table call builds
+# a new relation with fresh attribute ids and a fresh file listing, so
+# two loads of one table self-join correctly and no caller sees a
+# stale plan. A cached schema is used only while the file's version
+# is unchanged: (mtime_ns, size) of the file, or of every file under
+# it when the table is a directory of parts, so a rewrite, a replace
+# or an added part infers again. One entry per absolute path; two
+# threads missing at once both infer and store the same answer.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
 
 
-def enable_table_df_cache(on: bool = True) -> None:
-    global _DF_CACHE_ON
-    _DF_CACHE_ON = on
-    if not on:
-        _DF_CACHE.clear()
+def _file_version(path: str) -> tuple:
+    st = os.stat(path)
+    if not stat.S_ISDIR(st.st_mode):
+        return (st.st_mtime_ns, st.st_size)
+    version = []
+    for root, _, files in os.walk(path):
+        for f in files:
+            fp = os.path.join(root, f)
+            fst = os.stat(fp)
+            version.append((os.path.relpath(fp, path), fst.st_mtime_ns, fst.st_size))
+    return tuple(sorted(version))
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -135,15 +145,22 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name not in TABLES:
         raise UnknownIdentifierError(f"unknown table: {name!r}")
-    key = (id(spark), sf_dir, name)
-    if _DF_CACHE_ON and key in _DF_CACHE:
-        return _DF_CACHE[key]
     apply_runtime_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    key = os.path.abspath(path)
+    try:
+        version = _file_version(key)
+    except OSError:
+        version = None  # missing or non-local path: Spark reports it
+    cached = _SCHEMAS.get(key)
+    if cached is not None and cached[0] == version:
+        df = spark.read.schema(cached[1]).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        if version is not None:
+            _SCHEMAS[key] = (version, df.schema)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    if _DF_CACHE_ON:
-        _DF_CACHE[key] = df
     return df
 
 

@@ -21,10 +21,6 @@ from data_wrangler_spark.functions.vectors import micro_csv, sql_micro_csv
 from data_wrangler_spark.registry import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "q_str_funcs",
     oracle="""
@@ -44,7 +40,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def q_str_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String family: upper/substring/concat/trim/LIKE/regexp_extract/
     length/replace over part."""
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     return p.select(
         "p_partkey",
         F.upper("p_brand").alias("brand_upper"),
@@ -80,7 +76,7 @@ def q_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark's is 1-based Sunday — oracle uses dayofweek+... both
     engines: DuckDB dayofweek(Sunday)=0, Spark dayofweek(Sunday)=1,
     so the Spark side subtracts 1.)"""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return o.select(
         "o_orderkey",
         F.year("o_orderdate").alias("order_year"),
@@ -114,7 +110,7 @@ def q_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Math family: round/abs/sqrt/ln/pow/floor/ceil/mod. All IEEE
     double ops — deterministic per row in both engines."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.select(
         "l_orderkey",
         "l_linenumber",
@@ -157,7 +153,7 @@ def q_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate (sequential fold — same element order in both engines)/
     slice/exists. These are the primitives the similarity operators
     build on."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     return e.select(
         "vec_id",
         F.size("embedding").alias("dim"),
@@ -184,7 +180,7 @@ def q_array_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """posexplode: array elements to rows with their ordinal — the
     row-expansion primitive (here bounded to the first 3 dims so the
     output stays oracle-sized)."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     return e.select(
         "vec_id", F.posexplode(F.slice("embedding", 1, 3)).alias("pos", "val")
     )
@@ -204,7 +200,7 @@ def q_text_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII-style scrubbing: numeric tokens redacted via regex — the
     shape of redaction passes over training corpora (Spark
     regexp_replace is global; DuckDB needs the 'g' flag)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     scrubbed = F.regexp_replace("props", r"[0-9]+", "<NUM>")
     return ev.select(
         "event_id",
@@ -230,7 +226,7 @@ def q_map_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     element_at/map_keys/map_contains_key. The oracle states the
     round-trip identity in plain columns (DuckDB map syntax differs;
     the *values* are what the harness compares)."""
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     m = F.create_map(
         F.lit("brand"), F.col("p_brand"), F.lit("type"), F.col("p_type")
     )
@@ -260,7 +256,7 @@ def q_json_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     get_json_object for ad-hoc path extraction, from_json with an
     explicit schema for typed access — the scale-correct pattern
     (schema known → columnar struct, no per-row re-parse)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     parsed = F.from_json("props", "k INT")
     return ev.select(
         "event_id",

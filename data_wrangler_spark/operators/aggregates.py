@@ -28,10 +28,6 @@ from data_wrangler_spark.catalog import load_table
 from data_wrangler_spark.registry import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def dsum(col: str | Column, scale: str = "decimal(22,6)") -> Column:
     """Order-independent sum of a double column: exact decimal sum,
     result cast back to double (matches the oracle's identical cast)."""
@@ -70,7 +66,7 @@ def _oavg(expr: str) -> str:
 )
 def q_agg_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ungrouped sum/avg/min/max/count over the fact table."""
-    return _t(spark, sf_dir, "lineitem").agg(
+    return load_table(spark, sf_dir, "lineitem").agg(
         F.count("*").alias("n_rows"),
         dsum("l_quantity").alias("sum_qty"),
         davg("l_extendedprice").alias("avg_price"),
@@ -125,7 +121,7 @@ def q_agg_groupby(
     pre-aggregate per (group, salt) in longs and decimal-sum the
     partials (SCALE.md), or store decimals in the schema as TPC-H
     itself does. q_agg_global keeps the decimal pattern for contrast."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     P, D, T, Q = (
         _cents("l_extendedprice"),
         _cents("l_discount"),
@@ -172,7 +168,7 @@ def q_agg_count_distinct(
     registered default — scans everything, matching the oracle).
     Spark plans multi-distinct via Expand; at 100 TB prefer one
     distinct per query or approx_*."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     if since is not None:
         o = o.filter(
             F.col("o_orderdate") >= F.lit(since).cast("timestamp_ntz")
@@ -222,7 +218,7 @@ def q_agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     failure rather than a correctness-gate mismatch."""
     bound = 10 * 0.02
     return (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .groupBy("o_orderstatus")
         .agg(
             F.countDistinct("o_custkey").alias("n_customers_exact"),
@@ -258,7 +254,7 @@ _ROLLUP_ORACLE_BODY = f"""
 def q_agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP: hierarchical subtotals (flag,status) → (flag) → ()."""
     return (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .rollup("l_returnflag", "l_linestatus")
         .agg(dsum("l_quantity").alias("sum_qty"), F.count("*").alias("n_rows"))
     )
@@ -272,7 +268,7 @@ def q_agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE: all 2^2 grouping-set combinations."""
     return (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .cube("l_returnflag", "l_linestatus")
         .agg(dsum("l_quantity").alias("sum_qty"), F.count("*").alias("n_rows"))
     )
@@ -292,7 +288,7 @@ def q_agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS via Spark SQL (the DataFrame API has no
     direct equivalent — rollup/cube are its fixed special cases)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     li.createOrReplaceTempView("lineitem")
     return spark.sql(
         """
@@ -321,7 +317,7 @@ def q_agg_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     region, sorted for determinism — collect_list order is
     partition-dependent, so the sort inside the aggregate is
     mandatory, not cosmetic."""
-    n = _t(spark, sf_dir, "nation")
+    n = load_table(spark, sf_dir, "nation")
     return n.groupBy("n_regionkey").agg(
         F.array_join(F.array_sort(F.collect_list("n_name")), ",").alias("nations"),
         F.count("*").alias("n_nations"),
@@ -345,7 +341,7 @@ def q_topk(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     K-row heap, the driver merges — no global sort, no full shuffle,
     O(K) memory. The right plan at any scale."""
     return (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate")
         .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
         .limit(int(k))
@@ -429,7 +425,7 @@ def q_agg_skewed(spark: SparkSession, sf_dir: str) -> DataFrame:
     to run; n_shards scales with the measured hot-key share."""
     from data_wrangler_spark.plans.skew import salted_distinct_count
 
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         F.when(F.col("l_suppkey") % 10 < 9, F.lit(1).cast("long"))
         .otherwise(F.col("l_suppkey"))
         .alias("sk_suppkey"),

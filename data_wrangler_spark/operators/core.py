@@ -23,10 +23,6 @@ from data_wrangler_spark.plans.pagination import paginate
 from data_wrangler_spark.registry import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --------------------------------------------------------------------------
 # D1 — full scan + SELECT * projection
 # --------------------------------------------------------------------------
@@ -34,7 +30,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def q_scan_project_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full scan, all columns (reference: `select * from …` patterns,
     config.json:20, index.js:482)."""
-    return _t(spark, sf_dir, "region").select("*")
+    return load_table(spark, sf_dir, "region").select("*")
 
 
 # --------------------------------------------------------------------------
@@ -49,7 +45,7 @@ def q_project_cols(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Column projection (reference: `select id, name from fooMakers`,
     README.md:142; `select id, accountnumber, name from account`,
     config.json:57). Column pruning reaches the Parquet scan."""
-    return _t(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_mktsegment")
+    return load_table(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_mktsegment")
 
 
 # --------------------------------------------------------------------------
@@ -66,7 +62,7 @@ def q_filter_eq(spark: SparkSession, sf_dir: str, priority: str) -> DataFrame:
     (`where date = ?` config.json:20, `where id = ?` config.json:35).
     The parameter binds as a Column literal, never spliced into SQL;
     the predicate is pushed down to Parquet row-group stats."""
-    return _t(spark, sf_dir, "orders").filter(F.col("o_orderpriority") == priority)
+    return load_table(spark, sf_dir, "orders").filter(F.col("o_orderpriority") == priority)
 
 
 # --------------------------------------------------------------------------
@@ -86,9 +82,9 @@ def q_filter_fk(spark: SparkSession, sf_dir: str, orderkey: int | None) -> DataF
     where invoice_id = ?`, config.json:21). Default parameter is the
     smallest order key so the query is meaningful at every scale
     factor."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     if orderkey is None:
-        orderkey = _t(spark, sf_dir, "orders").agg(F.min("o_orderkey")).collect()[0][0]
+        orderkey = load_table(spark, sf_dir, "orders").agg(F.min("o_orderkey")).collect()[0][0]
     return li.filter(F.col("l_orderkey") == int(orderkey))
 
 
@@ -108,7 +104,7 @@ def q_point_lookup(spark: SparkSession, sf_dir: str, key: int | None) -> DataFra
     """Single-row fetch by id (reference: `select * from %s where
     id = ?` + fetchRow, index.js:524-526; `anyById` config.json:22).
     The relation is a validated identifier, not a spliced string."""
-    cust = _t(spark, sf_dir, "customer")
+    cust = load_table(spark, sf_dir, "customer")
     if key is None:
         key = cust.agg(F.min("c_custkey")).collect()[0][0]
     return cust.filter(F.col("c_custkey") == int(key)).limit(1)
@@ -133,7 +129,7 @@ def q_child_list(
     README.md:263-265). The `<parent>_id` convention is engine
     metadata (catalog.FK_CONVENTIONS) instead of string formatting."""
     fk = FK_CONVENTIONS[(parent, child)]
-    return _t(spark, sf_dir, child).filter(F.col(fk) == int(parent_id))
+    return load_table(spark, sf_dir, child).filter(F.col(fk) == int(parent_id))
 
 
 # --------------------------------------------------------------------------
@@ -157,8 +153,8 @@ def q_inner_join(spark: SparkSession, sf_dir: str, priority: str) -> DataFrame:
     Spark-first: declared as a DataFrame join so Catalyst chooses the
     physical strategy (broadcast-hash here — orders-side is filtered
     small; sort-merge at 100 TB with AQE skew splitting)."""
-    o = _t(spark, sf_dir, "orders").alias("o")
-    l = _t(spark, sf_dir, "lineitem").alias("l")
+    o = load_table(spark, sf_dir, "orders").alias("o")
+    l = load_table(spark, sf_dir, "lineitem").alias("l")
     return (
         o.filter(F.col("o.o_orderpriority") == priority)
         .join(l, F.col("o.o_orderkey") == F.col("l.l_orderkey"), "inner")
@@ -187,7 +183,7 @@ def q_sort_paginate(
     """Paged list with the reference's clamps (perpage∈[1,1000],
     offset = perpage*(page-1); index.js:434-436,475-480) plus a unique
     pk tiebreaker for determinism Spark doesn't otherwise guarantee."""
-    return paginate(_t(spark, sf_dir, "customer"), "customer", page, perpage, sortby)
+    return paginate(load_table(spark, sf_dir, "customer"), "customer", page, perpage, sortby)
 
 
 # --------------------------------------------------------------------------
@@ -248,7 +244,7 @@ def q_describe(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     MySQL, config.json:34; name-only inference in examineQuery,
     lib/examiner.js:139-160). Spark gives the exact typed StructType
     from Catalyst analysis for free."""
-    df = _t(spark, sf_dir, Catalog(spark, sf_dir).validate_table(table))
+    df = load_table(spark, sf_dir, Catalog(spark, sf_dir).validate_table(table))
     rows = [(name, dtype) for name, dtype in df.dtypes]
     return spark.createDataFrame(rows, "col_name string, data_type string")
 
@@ -266,4 +262,4 @@ def q_soql_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     name from account`, config.json:57; executed via SOQL at
     plugins/salesforce.js:103). Federation collapses into the Spark
     catalog: a remote object is just another table."""
-    return _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name", "s_acctbal")
+    return load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name", "s_acctbal")

@@ -335,9 +335,11 @@ def _band_table(
     no verify step — strictly narrower keys. (A 60-bit hash of the
     string was considered and rejected: it needs the signature in
     the payload for collision rejection anyway, totalling MORE bytes
-    than keying on the 4 longs directly.) The string form remains
-    the persisted-index schema (ensure_inc_index et al.) — an
-    on-disk format shared by batch and streaming probes.
+    than keying on the 4 longs directly.) The persisted index
+    (ensure_inc_index et al.) uses the same compact keys: its on-disk
+    format, shared by batch and streaming probes, is fmt=l4: the
+    raw minhash longs plus doc_id, partitioned by band
+    (_BANDS_SCHEMA), not the string form.
 
     Docs with an EMPTY shingle set (< 3 words) are dropped here, on
     every consumer — index build, probe, and stream alike. Their

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from data_wrangler_spark.catalog import load_table
-from data_wrangler_spark.functions.distributed import pin
+from data_wrangler_spark.functions.distributed import pin, release_local_checkpoint
 from data_wrangler_spark.registry import register
 
 PR_ITERATIONS = 8
@@ -139,8 +139,12 @@ def _pr_float_loop(edges, ranks, n_nodes):
         # contribution join, the dangling aggregate, and the final
         # join of iteration i+1 — 3 references, so an uncheckpointed
         # step re-executes 3x inside the next one (measured: every-
-        # other-iteration checkpointing is a net 2x LOSS).
-        ranks = ranks.localCheckpoint()
+        # other-iteration checkpointing is a net 2x LOSS). The
+        # previous iteration's checkpoint blocks are released once the
+        # new one has materialized (they otherwise live until session
+        # end); the first one is the caller's loop-private checkpoint.
+        prev, ranks = ranks, ranks.localCheckpoint()
+        release_local_checkpoint(prev)
     return ranks
 
 
@@ -444,6 +448,8 @@ def _pr_int_loop(edges, ranks, base, n):
                 ).alias("r"),
             )
         )
-        # per-iteration eager checkpoint (see q_pagerank)
-        ranks = ranks.localCheckpoint()
+        # per-iteration eager checkpoint, previous one released (see
+        # q_pagerank)
+        prev, ranks = ranks, ranks.localCheckpoint()
+        release_local_checkpoint(prev)
     return ranks

@@ -25,10 +25,6 @@ from data_wrangler_spark.catalog import load_table
 from data_wrangler_spark.registry import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "q_filter_range",
     oracle="""
@@ -44,7 +40,7 @@ def q_filter_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Comparison / BETWEEN / IN predicates — the superset of the
     reference's equality-only WHERE surface. All three predicate
     forms push down to Parquet row-group statistics."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.filter(
         F.col("l_quantity").between(10, 20)
         & (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp_ntz"))
@@ -65,8 +61,8 @@ def q_filter_range(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left outer equi-join; nations without suppliers surface NULLs."""
-    n = _t(spark, sf_dir, "nation").alias("n")
-    s = _t(spark, sf_dir, "supplier").alias("s")
+    n = load_table(spark, sf_dir, "nation").alias("n")
+    s = load_table(spark, sf_dir, "supplier").alias("s")
     return n.join(s, F.col("n.n_nationkey") == F.col("s.s_nationkey"), "left").select(
         "n.n_nationkey", "n.n_name", "s.s_suppkey", "s.s_name", "s.s_acctbal"
     )
@@ -83,8 +79,8 @@ def q_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-semi join: nations having at least one supplier. Plans as
     a broadcast semi at this size; no row duplication ever."""
-    n = _t(spark, sf_dir, "nation")
-    s = _t(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
+    s = load_table(spark, sf_dir, "supplier")
     return n.join(s, n.n_nationkey == s.s_nationkey, "left_semi")
 
 
@@ -102,8 +98,8 @@ def q_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-anti join: customers with no in-progress ('P') order —
     non-empty at every scale factor, unlike nation∖supplier."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "P")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "P")
     return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select(
         "c_custkey", "c_name", "c_mktsegment"
     )
@@ -122,8 +118,8 @@ def q_join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fact⋈dim with an explicit broadcast hint: at 100 TB the fact
     side never shuffles — the filtered dimension ships to every
     executor (map-side hash join)."""
-    l = _t(spark, sf_dir, "lineitem").alias("l")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_size") < 10).alias("p")
+    l = load_table(spark, sf_dir, "lineitem").alias("l")
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_size") < 10).alias("p")
     return l.join(F.broadcast(p), F.col("l.l_partkey") == F.col("p.p_partkey")).select(
         "l.l_orderkey", "l.l_linenumber", "l.l_quantity",
         "p.p_name", "p.p_brand", "p.p_size",
@@ -144,8 +140,8 @@ def q_join_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-nested-loop with the small side broadcast. Scale path:
     bucketize `acctbal` to width-100 bins and equi-join on bin±1
     before the residual BETWEEN filter (see SCALE.md)."""
-    s = _t(spark, sf_dir, "supplier").alias("s")
-    c = _t(spark, sf_dir, "customer").alias("c")
+    s = load_table(spark, sf_dir, "supplier").alias("s")
+    c = load_table(spark, sf_dir, "customer").alias("c")
     cond = F.col("c.c_acctbal").between(F.col("s.s_acctbal") - 100, F.col("s.s_acctbal"))
     return F.broadcast(s).join(c, cond).select(
         "s.s_suppkey", "s.s_name", "c.c_custkey", "c.c_acctbal"
@@ -185,11 +181,11 @@ def q_join_multi(spark: SparkSession, sf_dir: str, region: str) -> DataFrame:
     Overflow bound: ≤1e9 micro-units/row → safe to ~9e9 rows per
     group per task chain; past that, pre-aggregate per (group, salt)
     (SCALE.md)."""
-    l = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == region)
+    l = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == region)
     p_cents = F.floor(F.col("l_extendedprice") * 100 + 0.5).cast("long")
     d_cents = F.floor(F.col("l_discount") * 100 + 0.5).cast("long")
     return (
@@ -235,14 +231,14 @@ def q_join_skewed(spark: SparkSession, sf_dir: str) -> DataFrame:
     unsalted join, proving the salt is semantically invisible."""
     from data_wrangler_spark.plans.skew import salted_join
 
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         F.when(F.col("o_custkey") % 10 < 9, F.lit(1).cast("long"))
         .otherwise(F.col("o_custkey"))
         .alias("sk_custkey"),
         "o_totalprice",
         "o_orderkey",
     )
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_name")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_name")
     joined = salted_join(
         o, c, "sk_custkey", "c_custkey", salt_cols=["o_orderkey"], n_salts=8
     )
@@ -277,8 +273,8 @@ def q_join_range_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-nested-loop cannot give you — with per-bin fan-out
     bounded by the bin population, and skewed bins handled by AQE or
     plans/skew.salted_join composed on the same key."""
-    s = _t(spark, sf_dir, "supplier")
-    c = _t(spark, sf_dir, "customer")
+    s = load_table(spark, sf_dir, "supplier")
+    c = load_table(spark, sf_dir, "customer")
     sbin = F.floor(F.col("s_acctbal") / 100).cast("long")
     s2 = s.select(
         "s_suppkey",
@@ -339,7 +335,7 @@ def q_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     for tbl, name in names.items():
         if not spark.catalog.tableExists(name):
             (
-                _t(spark, sf_dir, tbl)
+                load_table(spark, sf_dir, tbl)
                 .write.mode("overwrite")
                 .bucketBy(_BUCKET_N, keys[tbl])
                 .sortBy(keys[tbl])
@@ -396,14 +392,14 @@ def q_join_null_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is the first thing to check when one straggler
     task dominates an outer join: SQL NULL semantics make the fix
     free — no salt arithmetic, just a filter and a union."""
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         F.when(F.col("o_custkey") % 7 == 0, F.lit(None).cast("long"))
         .otherwise(F.col("o_custkey"))
         .alias("k"),
         "o_orderstatus",
         "o_totalprice",
     )
-    c = _t(spark, sf_dir, "customer").select("c_custkey")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey")
 
     joined = o.filter(F.col("k").isNotNull()).join(
         c, F.col("k") == F.col("c_custkey"), "left"
@@ -479,7 +475,7 @@ def q_join_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by ⌈len/width⌉+1 per row, shuffle on the bin key replaces
     the quadratic broadcast-nested-loop; skewed bins (an incident
     storm) fall to AQE's skew split."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     sec = F.unix_timestamp(F.col("ts").cast("timestamp"))
     a = (
         ev.filter(F.col("event_type") == "click")

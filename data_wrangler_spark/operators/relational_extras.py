@@ -15,10 +15,6 @@ from data_wrangler_spark.operators.aggregates import dsum
 from data_wrangler_spark.registry import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "q_pivot",
     oracle="""
@@ -36,7 +32,7 @@ def q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot order status into columns per priority. Explicit value
     list — at scale an unlisted pivot triggers a distinct-scan first;
     always enumerate when the domain is known."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     p = (
         o.groupBy("o_orderpriority")
         .pivot("o_orderstatus", ["F", "O", "P"])
@@ -68,7 +64,7 @@ def q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unpivot (melt) part metrics into long form — zero-shuffle
     row expansion."""
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     return p.select(
         "p_partkey",
         F.col("p_size").cast("double").alias("p_size"),
@@ -91,7 +87,7 @@ def q_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_agg_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUP BY + HAVING (post-aggregation filter): high-frequency
     customers."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.groupBy("o_custkey")
         .agg(F.count("*").alias("n_orders"), dsum("o_totalprice").alias("total_spend"))
@@ -116,7 +112,7 @@ def q_agg_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark and DuckDB — verified). Exact percentile sorts per group;
     the 100 TB path is percentile_approx (mergeable KLL-style sketch,
     bounded memory)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     # the two price points share ONE percentile buffer (bit-identical
     # to independent aggregates; halves the per-group value buffering)
     return (
@@ -169,7 +165,7 @@ def q_agg_approx_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch, so it does not exhibit the approx path's scale profile —
     in production the call is percentile_approx alone; this query is
     the accuracy audit you run on a sampled stratum."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     # the three exact percentiles per column come from ONE buffer
     # (percentile over an array of percentages) instead of three
     # independent sort-aggregate buffers each holding every group
@@ -219,7 +215,7 @@ def q_agg_approx_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_cond_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conditional family: CASE/coalesce/nullif/greatest/least and
     boolean composition."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return o.select(
         "o_orderkey",
         F.when(F.col("o_totalprice") > 200000, "big")
@@ -250,9 +246,9 @@ def q_cond_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_subquery_in(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IN-subquery — planned as a left-semi join (same physical shape
     as q_join_semi; IN is the SQL spelling)."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     c = (
-        _t(spark, sf_dir, "customer")
+        load_table(spark, sf_dir, "customer")
         .filter(F.col("c_mktsegment") == "AUTOMOBILE")
         .select("c_custkey")
     )
@@ -275,7 +271,7 @@ def q_subquery_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     Expressed via Spark SQL so Catalyst plans the scalar subquery as
     a broadcast single-row value (l_quantity is integer-valued, so
     SUM/COUNT is exact in both engines)."""
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
+    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     return spark.sql(
         """
         SELECT l_orderkey, l_linenumber, l_quantity
@@ -302,8 +298,8 @@ def q_null_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     coalesce fills, and null-safe equality (Spark `<=>` ≡ SQL
     IS NOT DISTINCT FROM). Three-valued logic is where engines
     quietly disagree — pinned here."""
-    n = _t(spark, sf_dir, "nation").alias("n")
-    s = _t(spark, sf_dir, "supplier").alias("s")
+    n = load_table(spark, sf_dir, "nation").alias("n")
+    s = load_table(spark, sf_dir, "supplier").alias("s")
     j = n.join(s, F.col("n.n_nationkey") == F.col("s.s_nationkey"), "left")
     return j.select(
         "n.n_nationkey",
@@ -343,7 +339,7 @@ def q_agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     var = (s2 − s1²/n)/(n−1) in identical double arithmetic on both
     sides. Same mergeability (two partial sums), deterministic
     result at any scale."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     q = F.col("l_quantity").cast("decimal(22,6)")
     s1 = F.sum(q).cast("double")
     s2 = F.sum(q * q).cast("double")
@@ -383,7 +379,7 @@ def q_date_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     reporting/gap-fill operator. The spine is sequence+explode from
     the data's own min/max (no collect); at scale the spine is tiny
     and broadcast while the aggregate side shuffles once."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     bounds = o.agg(
         F.min(F.col("o_orderdate").cast("date")).alias("d0"),
         F.max(F.col("o_orderdate").cast("date")).alias("d1"),
@@ -420,7 +416,7 @@ def q_join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id, no per-group Python, no range explosion. Matches DuckDB
     ASOF LEFT JOIN (inclusive on equal timestamps: the error sorts
     before the purchase at the same instant)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts", "value", F.lit(1).alias("is_p"),
         F.lit(None).cast("timestamp_ntz").alias("err_ts"),
@@ -485,7 +481,7 @@ def q_join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical to q_join_asof — one shuffle on user_id, O(1)
     state per row in the window pass; the tolerance adds a scan-side
     projection only."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts", "value", F.lit(1).alias("is_p"),
         F.lit(None).cast("timestamp_ntz").alias("err_ts"),
@@ -560,7 +556,7 @@ def q_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     one aggregate over the same (custkey, time) partitioning: one
     shuffle at any scale; this is how dimension history is maintained
     on plain Parquet."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     runs = o.select(
         "o_custkey",
@@ -608,7 +604,7 @@ def q_dedup_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     within nation blocks. Levenshtein is identical in both engines;
     the block key bounds the pair space exactly as in q_dedup_embed —
     the universal shape of record linkage at scale."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     # FastSS deletion-neighborhood blocking (Bocek et al. 2007),
     # replacing the within-nation quadratic pair stream: two names
     # are within edit distance 1 iff they share an element of
@@ -853,8 +849,8 @@ def q_pivot_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows per task; the collected list is driver-bounded by the same
     |domain| ≤ a few thousand that any pivot result must satisfy
     anyway (wider than that and you want q_unpivot's long form)."""
-    ev = _t(spark, sf_dir, "events")
-    d = _t(spark, sf_dir, "documents").select("doc_id", "lang")
+    ev = load_table(spark, sf_dir, "events")
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
     joined = ev.join(d, ev["user_id"] == d["doc_id"]).select("event_type", "lang")
     # discovery: the pivot domain, sorted for deterministic columns
     domain = [
@@ -910,7 +906,7 @@ def q_recursive_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoints each step like the hand-built iterative operators.
     Unbounded-depth graphs still belong on the label-propagation
     path (q_dedup_cluster) where convergence is data-dependent."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     view = "rh_customer"
     c.select("c_custkey", "c_acctbal").createOrReplaceTempView(view)
     return spark.sql(f"""

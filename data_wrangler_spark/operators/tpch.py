@@ -28,10 +28,6 @@ from data_wrangler_spark.registry import register
 _REV_DEC = "CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(22,6))"
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def _rev() -> F.Column:
     return (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(22,6)")
 
@@ -63,15 +59,15 @@ def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier BEFORE it can apply the customer-nation equality. Dims
     broadcast; only lineitem⋈orders shuffles; the date filter prunes
     the orders scan (pushed to parquet)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1995-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
     )
-    l = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    l = load_table(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     return (
         c.join(o, c.c_custkey == o.o_custkey)
         .join(l, F.col("l_orderkey") == F.col("o_orderkey"))
@@ -120,16 +116,16 @@ def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys, which Catalyst handles as two independent broadcasts. The
     share is a ratio of two exact decimal sums, divided in double on
     identical operands — engine-identical to the last bit."""
-    p = _t(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY")
-    l = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n1 = _t(spark, sf_dir, "nation")
-    n2 = _t(spark, sf_dir, "nation").select(
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY")
+    l = load_table(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    n1 = load_table(spark, sf_dir, "nation")
+    n2 = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("n2_nationkey"), F.col("n_name").alias("supp_nation")
     )
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "AMERICA")
+    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "AMERICA")
     vol = _rev()
     base = (
         l.join(F.broadcast(p), F.col("p_partkey") == F.col("l_partkey"))
@@ -186,13 +182,13 @@ def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     (revenue, custkey) tiebreak keeps it equal to the oracle's
     row_number. Revenue ranking happens on doubles derived from exact
     decimal sums, so both engines rank identical values."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
     )
-    l = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    n = _t(spark, sf_dir, "nation")
+    l = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    n = load_table(spark, sf_dir, "nation")
     agg = (
         c.join(o, F.col("c_custkey") == F.col("o_custkey"))
         .join(l, F.col("l_orderkey") == F.col("o_orderkey"))

@@ -45,10 +45,6 @@ _REV_DEC = "CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(22,6))"
 _ZERO_DEC = "CAST(0 AS DECIMAL(22,6))"
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def _rev() -> F.Column:
     return (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(22,6)")
 
@@ -87,9 +83,9 @@ def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject (per-task heaps + a driver merge of 10
     rows), not a global single-partition sort; the full (revenue,
     orderkey) tiebreak keeps it equal to the oracle's row_number."""
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderdate") < _ts("1997-06-01"))
-    l = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > _ts("1997-06-01"))
+    c = load_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderdate") < _ts("1997-06-01"))
+    l = load_table(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > _ts("1997-06-01"))
     agg = (
         c.join(o, F.col("c_custkey") == F.col("o_custkey"))
         .join(l, F.col("l_orderkey") == F.col("o_orderkey"))
@@ -124,11 +120,11 @@ def q_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     more than 60 days after the order date. The correlated EXISTS is a
     left-semi hash join on orderkey with the lateness predicate as a
     join residual — one shuffle, no per-row subquery."""
-    o = _t(spark, sf_dir, "orders").filter(
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= _ts("1996-07-01"))
         & (F.col("o_orderdate") < _ts("1996-10-01"))
     )
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     late = (F.col("l_orderkey") == F.col("o_orderkey")) & (
         F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS")
     )
@@ -158,7 +154,7 @@ def q_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole query is one WholeStageCodegen span over the parquet scan
     with all three predicates pushed down; at 100 TB this is the
     I/O-bound query whose cost is min/max-pruned row groups."""
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     return (
         l.filter(
             (F.col("l_shipdate") >= _ts("1996-01-01"))
@@ -202,20 +198,20 @@ def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-nation restriction into each broadcast-joined nation scan
     keeps the fact rows that survive to the shuffle minimal."""
     two = ["NATION_1", "NATION_2"]
-    s = _t(spark, sf_dir, "supplier")
-    l = _t(spark, sf_dir, "lineitem").filter(
+    s = load_table(spark, sf_dir, "supplier")
+    l = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= _ts("1996-01-01"))
         & (F.col("l_shipdate") < _ts("1998-01-01"))
     )
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
     n1 = (
-        _t(spark, sf_dir, "nation")
+        load_table(spark, sf_dir, "nation")
         .filter(F.col("n_name").isin(two))
         .select(F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("supp_nation"))
     )
     n2 = (
-        _t(spark, sf_dir, "nation")
+        load_table(spark, sf_dir, "nation")
         .filter(F.col("n_name").isin(two))
         .select(F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("cust_nation"))
     )
@@ -259,11 +255,11 @@ def q_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIKE-filtered part broadcast into the fact, profit arithmetic,
     nation-year rollup — is unchanged; only the cost operand differs).
     Profit is a difference of two exact decimals summed exactly."""
-    p = _t(spark, sf_dir, "part").filter(F.col("p_name").like("%red%"))
-    l = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    o = _t(spark, sf_dir, "orders")
-    n = _t(spark, sf_dir, "nation")
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_name").like("%red%"))
+    l = load_table(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier")
+    o = load_table(spark, sf_dir, "orders")
+    n = load_table(spark, sf_dir, "nation")
     cost = (0.5 * F.col("p_retailprice") * F.col("l_quantity")).cast("decimal(22,6)")
     return (
         l.join(F.broadcast(p), F.col("p_partkey") == F.col("l_partkey"))
@@ -301,8 +297,8 @@ def q_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     shipped >30 days after order date (no commit/receipt dates). The
     conditional counts are map-side partial aggregates; the only
     shuffle is lineitem⋈orders on orderkey."""
-    o = _t(spark, sf_dir, "orders")
-    l = _t(spark, sf_dir, "lineitem").filter(
+    o = load_table(spark, sf_dir, "orders")
+    l = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= _ts("1996-01-01"))
         & (F.col("l_shipdate") < _ts("1997-01-01"))
     )
@@ -339,8 +335,8 @@ def q_tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     comment filter, adapted to o_orderpriority — pulling it into WHERE
     would silently drop the zero bucket). Two aggregations: the first
     shuffles on custkey, the second on the (tiny) count domain."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     on = (F.col("c_custkey") == F.col("o_custkey")) & (
         F.col("o_orderpriority") != "5-LOW"
     )
@@ -372,11 +368,11 @@ def q_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     revenue. Part broadcasts; the month filter prunes the lineitem
     scan; the ratio divides two doubles derived from exact decimal
     sums, so both engines compute the identical IEEE quotient."""
-    l = _t(spark, sf_dir, "lineitem").filter(
+    l = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= _ts("1996-03-01"))
         & (F.col("l_shipdate") < _ts("1996-04-01"))
     )
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     promo = F.when(F.col("p_type") == "PROMO", _rev()).otherwise(
         F.lit(0).cast("decimal(22,6)")
     )
@@ -411,7 +407,7 @@ def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     revenue0 is computed once and reused for both sides (Spark reuses
     the exchange), and the double equality is safe because both sides
     are the same exact-decimal-derived values."""
-    l = _t(spark, sf_dir, "lineitem").filter(
+    l = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= _ts("1996-01-01"))
         & (F.col("l_shipdate") < _ts("1996-04-01"))
     )
@@ -419,7 +415,7 @@ def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(_rev()).cast("double").alias("total_revenue")
     )
     mx = revenue0.agg(F.max("total_revenue").alias("mx"))
-    s = _t(spark, sf_dir, "supplier")
+    s = load_table(spark, sf_dir, "supplier")
     return (
         s.join(revenue0, F.col("s_suppkey") == F.col("supplier_no"))
         .join(F.broadcast(mx), F.col("total_revenue") == F.col("mx"))
@@ -450,13 +446,13 @@ def q_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     suppliers. NOT IN over a non-null key column is a broadcast
     left-anti join; COUNT(DISTINCT) shuffles on the group keys with
     a partial distinct per mapper."""
-    p = _t(spark, sf_dir, "part").filter(
+    p = load_table(spark, sf_dir, "part").filter(
         (F.col("p_brand") != "Brand#1")
         & (F.col("p_type") != "PROMO")
         & (F.col("p_size").isin(1, 5, 10, 15, 20, 25, 30, 35))
     )
-    l = _t(spark, sf_dir, "lineitem")
-    bad = _t(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0.0).select(
+    l = load_table(spark, sf_dir, "lineitem")
+    bad = load_table(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0.0).select(
         "s_suppkey"
     )
     return (
@@ -490,8 +486,8 @@ def q_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtered lines — computed on ALL lines of each part (matching the
     subquery's scope), not just the brand's. Averages use the exact
     decimal-sum/count rule so the 0.2× threshold is bit-identical."""
-    l = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#3")
+    l = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#3")
     per_part = l.groupBy(F.col("l_partkey").alias("pk")).agg(
         (
             0.2
@@ -536,9 +532,9 @@ def q_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     HAVING-IN subquery is an aggregate → semi join on orderkey; both
     that aggregate and the final one shuffle on the same key, so Spark
     reuses the partitioning instead of re-shuffling."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    l = _t(spark, sf_dir, "lineitem")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
+    l = load_table(spark, sf_dir, "lineitem")
     big = (
         l.groupBy("l_orderkey")
         .agg(F.sum(F.col("l_quantity").cast("decimal(22,6)")).alias("q"))
@@ -576,8 +572,8 @@ def q_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     join residual — but Catalyst derives the implied single-table
     prefilters (brand ∈ {...}, size ∈ [1,50], quantity ∈ [1,40]) and
     pushes those to the scans, shrinking the join input."""
-    l = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
+    l = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part")
     q, b, sz = F.col("l_quantity"), F.col("p_brand"), F.col("p_size")
     cond = (
         ((b == "Brand#1") & sz.between(1, 15) & q.between(1.0, 20.0))
@@ -618,8 +614,8 @@ def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     Three plan pieces: an uncorrelated scalar avg (broadcast 1-row
     cross join), a date-filtered anti join on custkey, and the final
     rollup. The avg uses the exact decimal-sum/count rule."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderdate") >= _ts("1999-01-01"))
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderdate") >= _ts("1999-01-01"))
     avg_bal = c.filter(F.col("c_acctbal") > 0.0).agg(
         (
             F.sum(F.col("c_acctbal").cast("decimal(22,6)")).cast("double")
@@ -698,8 +694,8 @@ def q_tpch_q12_shipmode(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts partial-aggregate map-side."""
     from data_wrangler_spark.operators.dedup import _md5_long
 
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     # the line hash is computed ONCE as a named column; shipmode and
     # both derived dates read it — one md5 per row and one definition
     # (dedup._md5_long) to stay in lockstep with the oracle's
@@ -805,8 +801,8 @@ def q_tpch_q19_true(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_tpch_q19's docstring describes."""
     from data_wrangler_spark.operators.dedup import _md5_long
 
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part")
 
     pd_ = p.select(
         "p_partkey",

@@ -47,10 +47,6 @@ from data_wrangler_spark.operators.dedup import _md5_long, _sql_md5_long
 from data_wrangler_spark.registry import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # -- the derived partsupp view ------------------------------------------------
 
 _PS_HASH_SQL = _sql_md5_long(
@@ -75,7 +71,7 @@ def partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The DISTINCT partial-aggregates map-side before one shuffle on the
     pair key; the hash columns are pure projections after it."""
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey").distinct()
+    li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey").distinct()
     h = _md5_long(
         F.concat(
             F.col("l_partkey").cast("string"),
@@ -130,10 +126,10 @@ def q_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     Top-100 by account balance plans as TakeOrderedAndProject with a
     full unique tiebreak (acctbal, nation, supplier, partkey)."""
     ps = partsupp(spark, sf_dir)
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
-    p = _t(spark, sf_dir, "part").filter(
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
+    p = load_table(spark, sf_dir, "part").filter(
         (F.col("p_size") <= 15) & (F.col("p_type") == "LARGE")
     )
     eu = (
@@ -192,8 +188,8 @@ def q_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     Integer-cents values make the threshold comparison exact 64-bit
     arithmetic on both engines."""
     ps = partsupp(spark, sf_dir)
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_7")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_7")
     nat = (
         ps.join(F.broadcast(s), ps.ps_suppkey == s.s_suppkey)
         .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
@@ -252,7 +248,7 @@ def q_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     set semi-joins the nation-filtered supplier dim. The quantity
     threshold compares exact BIGINTs (integral quantities cast per-row
     before the sum on both engines)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     shipped = (
         li.filter(
             (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp_ntz"))
@@ -262,7 +258,7 @@ def q_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(F.col("l_quantity").cast("long")).alias("qty"))
     )
     red_parts = (
-        _t(spark, sf_dir, "part")
+        load_table(spark, sf_dir, "part")
         .filter(F.col("p_name").like("red%"))
         .select("p_partkey")
     )
@@ -281,8 +277,8 @@ def q_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("ps_suppkey")
         .distinct()
     )
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_3")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_3")
     return (
         s.join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
         .join(F.broadcast(excess), F.col("s_suppkey") == F.col("ps_suppkey"), "left_semi")
@@ -332,11 +328,11 @@ def q_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     needs at 100 TB; Spark reuses the lineitem⋈orders exchange for
     both consumers). Supplier/nation broadcast at the end."""
     o = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderstatus") == "F")
         .select("o_orderkey", "o_orderdate")
     )
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey", "l_shipdate")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey", "l_shipdate")
     lines = li.join(o, F.col("l_orderkey") == F.col("o_orderkey")).select(
         "l_orderkey",
         "l_suppkey",
@@ -353,8 +349,8 @@ def q_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("is_late") == 1, F.col("l_suppkey"))
         ).alias("nlate"),
     )
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_7")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_7")
     late = lines.filter(F.col("is_late") == 1)
     return (
         late.join(

@@ -100,3 +100,90 @@ def test_engine_explain_shows_physical_plan(spark, sf_dir):
 
     plan = Engine(spark, sf_dir).explain("q_filter_eq")
     assert "PushedFilters" in plan and "Scan parquet" in plan
+
+
+# -- load_table: parquet schema inferred once per file version --------
+
+def _write_parquet(path, **cols):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table(cols), str(path))
+
+
+def _jobs_started_by(spark, fn):
+    """(fn(), number of Spark jobs fn started). The status store is
+    fed asynchronously, so a marker job in a second group runs after
+    fn; once it is visible, every job fn started is visible too."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"load-table-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "load_table under test")
+    try:
+        out = fn()
+        sc.setJobGroup(group + "-marker", "status store flush")
+        sc.parallelize([0], 1).count()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(group + "-marker"):
+        assert time.monotonic() < deadline, "marker job never reached the status store"
+        time.sleep(0.05)
+    return out, len(tracker.getJobIdsForGroup(group))
+
+
+def test_load_table_reuses_schema_without_a_job(spark, tmp_path):
+    from data_wrangler_spark.catalog import load_table
+
+    _write_parquet(tmp_path / "region.parquet", r_regionkey=[0, 1, 2], r_name=["a", "b", "c"])
+    first, first_jobs = _jobs_started_by(spark, lambda: load_table(spark, str(tmp_path), "region"))
+    second, second_jobs = _jobs_started_by(spark, lambda: load_table(spark, str(tmp_path), "region"))
+    assert first_jobs >= 1  # schema inference
+    assert second_jobs == 0
+    assert second.schema == first.schema
+    assert sorted(second.collect()) == sorted(first.collect())
+
+
+def test_load_table_sees_rewritten_file(spark, tmp_path):
+    from data_wrangler_spark.catalog import load_table
+
+    path = tmp_path / "nation.parquet"
+    _write_parquet(path, n_nationkey=[1, 2])
+    assert load_table(spark, str(tmp_path), "nation").columns == ["n_nationkey"]
+    _write_parquet(path, n_nationkey=[1, 2], n_name=["x", "y"])
+    df = load_table(spark, str(tmp_path), "nation")
+    assert df.columns == ["n_nationkey", "n_name"]
+    assert sorted(tuple(r) for r in df.collect()) == [(1, "x"), (2, "y")]
+
+
+def test_load_table_self_join_on_pk(spark, tmp_path):
+    """Every load is a new relation with its own attribute ids, so a
+    join of two loads on the pk is a real self-join: one row per key,
+    not a cartesian product or an ambiguous reference."""
+    from data_wrangler_spark.catalog import load_table
+
+    _write_parquet(tmp_path / "supplier.parquet", s_suppkey=[1, 2, 3], s_name=["a", "b", "c"])
+    load_table(spark, str(tmp_path), "supplier")  # infer and store the schema
+    a = load_table(spark, str(tmp_path), "supplier")
+    b = load_table(spark, str(tmp_path), "supplier")
+    rows = a.join(b, a.s_suppkey == b.s_suppkey).select(a.s_suppkey, b.s_name).collect()
+    assert sorted(tuple(r) for r in rows) == [(1, "a"), (2, "b"), (3, "c")]
+
+
+def test_load_table_directory_invalidated_by_added_part(spark, tmp_path):
+    from data_wrangler_spark.catalog import load_table
+
+    table = tmp_path / "documents.parquet"
+    table.mkdir()
+    _write_parquet(table / "part-0.parquet", doc_id=[1, 2])
+    assert sorted(r.doc_id for r in load_table(spark, str(tmp_path), "documents").collect()) == [1, 2]
+    _write_parquet(table / "part-1.parquet", doc_id=[3])
+    df, jobs = _jobs_started_by(spark, lambda: load_table(spark, str(tmp_path), "documents"))
+    assert jobs >= 1  # new file version: the schema is inferred again
+    assert sorted(r.doc_id for r in df.collect()) == [1, 2, 3]
+    _, jobs = _jobs_started_by(spark, lambda: load_table(spark, str(tmp_path), "documents"))
+    assert jobs == 0

@@ -25,7 +25,6 @@ def main() -> None:
 
     from data_wrangler_spark.session import get_spark
     from data_wrangler_spark import REGISTRY
-    from data_wrangler_spark.catalog import enable_table_df_cache
 
     if not names:
         import bench
@@ -33,7 +32,6 @@ def main() -> None:
         names = bench.HEADLINE
 
     spark = get_spark("capture_plans")
-    enable_table_df_cache()
     out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", round_dir)
     os.makedirs(out_dir, exist_ok=True)
     import contextlib

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -30,11 +31,9 @@ def main() -> int:
 
     from data_wrangler_spark.session import get_spark
     from data_wrangler_spark import REGISTRY
-    from data_wrangler_spark.catalog import enable_table_df_cache
     from data_wrangler_spark.functions.distributed import release_pinned
 
     spark = get_spark("isolate")
-    enable_table_df_cache()
     out = {}
     for name in args:
         spark.sparkContext.setJobDescription(f"isolate warmup: {name}")
@@ -51,7 +50,7 @@ def main() -> int:
             runs.append(round(time.perf_counter() - t0, 4))
         release_pinned()
         spark.sparkContext.setJobDescription(None)
-        med = sorted(runs)[len(runs) // 2]
+        med = round(statistics.median(runs), 4)
         out[name] = {"median": med, "runs": runs}
         print(json.dumps({"query": name, "median": med, "runs": runs}))
     return 0

@@ -47,11 +47,9 @@ def main() -> int:
 
     from data_wrangler_spark.session import get_spark
     from data_wrangler_spark import REGISTRY
-    from data_wrangler_spark.catalog import enable_table_df_cache
     from data_wrangler_spark.functions.distributed import release_pinned
 
     spark = get_spark("plan_sweep")
-    enable_table_df_cache()
 
     rows = []
     for name in sorted(REGISTRY):

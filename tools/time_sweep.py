@@ -25,11 +25,9 @@ def main() -> int:
 
     from data_wrangler_spark.session import get_spark
     from data_wrangler_spark import REGISTRY
-    from data_wrangler_spark.catalog import enable_table_df_cache
     from data_wrangler_spark.functions.distributed import release_pinned
 
     spark = get_spark("time_sweep")
-    enable_table_df_cache()
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
     for name in sorted(REGISTRY):

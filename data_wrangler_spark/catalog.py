@@ -76,35 +76,6 @@ class UnknownIdentifierError(ValueError):
     """Raised when a dynamic table/column identifier fails validation."""
 
 
-def scratch_tag(sf_dir: str, source_table: str = "orders", params: str = "") -> str:
-    """Collision- and staleness-safe cache key for per-sf scratch
-    artifacts (roundtrip sinks, bucketed tables, persisted indexes).
-
-    Keyed on the ABSOLUTE path (two fixture dirs sharing a basename
-    get distinct caches) plus the source parquet's (mtime, size), so
-    regenerated fixtures invalidate the key instead of serving stale
-    bytes behind a _SUCCESS marker.
-
-    ``params`` folds the GOVERNING SEMANTICS of the cached artifact
-    into the key (r10 review): a persisted index must pass the
-    constants it was built from (n-gram size, band layout, split
-    percentage, ...) so a later constant change invalidates the cache
-    automatically instead of relying on a remembered manual directory
-    rename (the pipeline_inc → pipeline_inc_v2 trap)."""
-    import hashlib
-    import os
-
-    abs_dir = os.path.abspath(sf_dir.rstrip("/"))
-    src = os.path.join(abs_dir, f"{source_table}.parquet")
-    try:
-        st = os.stat(src)
-        stamp = f"{st.st_mtime_ns}:{st.st_size}"
-    except OSError:
-        stamp = "nosrc"
-    digest = hashlib.md5(f"{abs_dir}|{stamp}|{params}".encode()).hexdigest()[:10]
-    return f"{os.path.basename(abs_dir)}_{digest}"
-
-
 # Parquet schema per table file, inferred once per file version.
 # Inferring a schema runs a Spark job (a parquet footer read, tens of
 # ms per call); reading with the schema passed in runs none. Only the

@@ -37,6 +37,7 @@ from data_wrangler_spark.functions.vectors import (
 )
 from data_wrangler_spark.functions.distributed import pin, spread
 from data_wrangler_spark.registry import register
+from data_wrangler_spark.scratch import ROOT, materialize, scratch_tag
 
 N_MINHASH = 16  # minhash signature length
 N_BANDS = 4  # LSH bands (rows per band = 16/4 = 4)
@@ -1397,16 +1398,14 @@ def prefix_verified_pairs(
     return verified.filter(F.col("jaccard") >= t).select("doc_a", "doc_b", "jaccard")
 
 
-_INC_SCRATCH = "/root/repo/.scratch/dedup_inc"
+_INC_SCRATCH = f"{ROOT}/dedup_inc"
 
 
 def _inc_index_path(sf_dir: str) -> str:
     """Path of the persisted LSH band index, keyed on the constants
     it was built from — changing the signature family, band layout,
     hot-bucket cap, or split auto-invalidates the cache instead of
-    serving stale bands behind a _SUCCESS marker (r10 review)."""
-    from data_wrangler_spark.catalog import scratch_tag
-
+    serving stale bands behind a completeness marker (r10 review)."""
     # fmt=l4 (r17): bands persisted with the COMPACT key — the 4 raw
     # minhash longs instead of the '|'-joined bucket string (see
     # _band_table's injectivity note; probes join on the same 4
@@ -1424,7 +1423,7 @@ SHINGLE_PB = 16         # hash-partition count of the shingle table
 
 def _ensure_inc_built(spark: SparkSession, sf_dir: str) -> str:
     """Build-if-missing BOTH halves of the persisted incremental
-    index under one root: `bands/` (the guarded LSH band index,
+    index under one root, published as one artifact: `bands/` (the guarded LSH band index,
     partitioned by band so a probe prunes to its band's files) and
     `shingles/` (each history doc's DISTINCT shingle set, the
     verify-join operand, hash-partitioned on pb = doc_id % SHINGLE_PB
@@ -1437,13 +1436,8 @@ def _ensure_inc_built(spark: SparkSession, sf_dir: str) -> str:
     this, every streaming-gate RUN re-shingled the whole history
     corpus; now history text is shingled exactly once, at index
     build, and probes read columnar shingle bytes."""
-    import os as _os
 
-    path = _inc_index_path(sf_dir)
-    if not (
-        _os.path.exists(f"{path}/bands/_SUCCESS")
-        and _os.path.exists(f"{path}/shingles/_SUCCESS")
-    ):
+    def build(path: str) -> None:
         d = load_table(spark, sf_dir, "documents")
         shf = pin(
             _shingle_frame(
@@ -1456,16 +1450,15 @@ def _ensure_inc_built(spark: SparkSession, sf_dir: str) -> str:
         ).filter(F.col("bsize") <= MAX_BUCKET)
         guarded.select(*BAND_KEY, "doc_id").repartition(
             "band"
-        ).write.mode("overwrite").partitionBy("band").parquet(f"{path}/bands")
+        ).write.partitionBy("band").parquet(f"{path}/bands")
         shf.select(
             "doc_id",
             F.array_distinct("sh").alias("sb"),
             F.pmod("doc_id", F.lit(SHINGLE_PB)).alias("pb"),
-        ).repartition("pb").write.mode("overwrite").partitionBy(
-            "pb"
-        ).parquet(f"{path}/shingles")
+        ).repartition("pb").write.partitionBy("pb").parquet(f"{path}/shingles")
         shf.unpersist()
-    return path
+
+    return materialize(_inc_index_path(sf_dir), build)
 
 
 def ensure_inc_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1642,8 +1635,6 @@ INC2_DAY2 = 8  # doc_id % 10 == 8 → day-2 batch; rest = history
 
 
 def _inc2day_path(sf_dir: str) -> str:
-    from data_wrangler_spark.catalog import scratch_tag
-
     params = (
         f"mh={N_MINHASH},bands={N_BANDS},cap={MAX_BUCKET},"
         f"d1={INC2_DAY1},d2={INC2_DAY2},fmt=l4"
@@ -1654,31 +1645,25 @@ def _inc2day_path(sf_dir: str) -> str:
 def _ensure_inc2day_built(spark: SparkSession, sf_dir: str) -> str:
     """Build-if-missing the two-day append-path index: `day0/` (the
     history bands, immutable) and `day1/` (day-1's appended bands as
-    a sibling subdirectory). Shared by q_dedup_incremental_2day and
-    the compaction maintenance op q_dedup_index_compact."""
-    import os as _os
+    a sibling subdirectory), published as one artifact so a rerun
+    never double-appends (the determinism contract). Shared by
+    q_dedup_incremental_2day and the compaction maintenance op
+    q_dedup_index_compact."""
 
-    d = load_table(spark, sf_dir, "documents")
-    m10 = F.col("doc_id") % 10
-    base = _inc2day_path(sf_dir)
-
-    # day0: history bands, written once (immutable thereafter)
-    if not _os.path.exists(f"{base}/day0/_SUCCESS"):
-        _guarded_bands(
-            d.filter(~m10.isin(INC2_DAY1, INC2_DAY2))
-        ).repartition("band").write.mode("overwrite").partitionBy(
+    def build(base: str) -> None:
+        d = load_table(spark, sf_dir, "documents")
+        m10 = F.col("doc_id") % 10
+        # day0: history bands, written once (immutable thereafter)
+        _guarded_bands(d.filter(~m10.isin(INC2_DAY1, INC2_DAY2))).repartition(
             "band"
-        ).parquet(f"{base}/day0")
-    # day1 ingest's APPEND: its guarded bands land as a sibling
-    # subdirectory — idempotent via its own _SUCCESS, so a rerun
-    # never double-appends (the determinism contract)
-    if not _os.path.exists(f"{base}/day1/_SUCCESS"):
+        ).write.partitionBy("band").parquet(f"{base}/day0")
+        # day1 ingest's APPEND: its guarded bands land as a sibling
+        # subdirectory
         _guarded_bands(d.filter(m10 == INC2_DAY1)).repartition(
             "band"
-        ).write.mode("overwrite").partitionBy("band").parquet(
-            f"{base}/day1"
-        )
-    return base
+        ).write.partitionBy("band").parquet(f"{base}/day1")
+
+    return materialize(_inc2day_path(sf_dir), build)
 
 
 def _guarded_bands(d: DataFrame) -> DataFrame:
@@ -1918,30 +1903,25 @@ def q_dedup_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     promises. Run it when appends accumulate, like any LSM-ish
     maintenance; probes before/after are identical except through
     re-guarded buckets, which is the point."""
-    import os as _os
-
     base = _ensure_inc2day_built(spark, sf_dir)
     u = spark.read.schema(_BANDS_SCHEMA).parquet(f"{base}/day0").unionByName(
         spark.read.schema(_BANDS_SCHEMA).parquet(f"{base}/day1")
     )
-    if not _os.path.exists(f"{base}/compacted/_SUCCESS"):
-        (
-            u.withColumn(
-                "bsize", F.count("*").over(Window.partitionBy(*BAND_KEY))
-            )
-            .filter(F.col("bsize") <= MAX_BUCKET)
-            .select(*BAND_KEY, "doc_id")
-            .repartition("band")
-            .write.mode("overwrite")
-            .partitionBy("band")
-            .parquet(f"{base}/compacted")
+    compacted = materialize(
+        f"{base}/compacted",
+        lambda p: u.withColumn(
+            "bsize", F.count("*").over(Window.partitionBy(*BAND_KEY))
         )
+        .filter(F.col("bsize") <= MAX_BUCKET)
+        .select(*BAND_KEY, "doc_id")
+        .repartition("band")
+        .write.partitionBy("band")
+        .parquet(p),
+    )
     # explicit schema: a fully-re-guarded index compacts to ZERO rows
     # (no partition directories at all) and schema inference would
     # fail on the empty root — a legal outcome, not an error
-    comp = spark.read.schema(_BANDS_SCHEMA).parquet(
-        f"{base}/compacted"
-    )
+    comp = spark.read.schema(_BANDS_SCHEMA).parquet(compacted)
 
     before = u.groupBy("band").agg(
         F.count("*").alias("n_rows_before")
@@ -2143,14 +2123,13 @@ def q_embed_cell_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_EMB_INC_SCRATCH = "/root/repo/.scratch/embed_inc"
+_EMB_INC_SCRATCH = f"{ROOT}/embed_inc"
 
 
 def _embed_inc_path(sf_dir: str) -> str:
     """Path of the persisted embedding-dedup index (centroids +
     cell-assigned history vectors), keyed on the constants it was
     built from so a parameter change auto-invalidates (r10)."""
-    from data_wrangler_spark.catalog import scratch_tag
     from data_wrangler_spark.operators.embeddings_ext import (
         KM_ITER,
         KM_K,
@@ -2192,6 +2171,14 @@ def _embed_inc_oracle() -> str:
     """
 
 
+def _write_centroids(spark: SparkSession, cl_ids, cmat, path: str) -> None:
+    """Persist a fitted quantizer as one (cl, c[]) parquet file."""
+    spark.createDataFrame(
+        [(int(cl), [int(x) for x in cmat[i]]) for i, cl in enumerate(cl_ids)],
+        "cl long, c array<long>",
+    ).coalesce(1).write.parquet(path)
+
+
 def _read_embed_centroids(spark: SparkSession, path: str):
     """Read a persisted (cl, c[]) centroid table back into the
     (cl_ids, cmat) numpy form kmeans_assign_mat consumes — the KB-
@@ -2214,29 +2201,16 @@ def ensure_embed_inc_index(spark: SparkSession, sf_dir: str):
     batch probe (q_dedup_embed_incremental) and its streaming
     delivery (q_stream_embed_gate) — ONE index, two delivery modes,
     the ensure_inc_index pattern applied to the embedding family."""
-    import os as _os
-
     from data_wrangler_spark.operators.embeddings_ext import (
         kmeans_assign_mat,
         kmeans_fit_mat,
     )
 
     exist = F.col("vec_id") % 10 < INC_EXIST_PCT
-    path = _embed_inc_path(sf_dir)
-    if not _os.path.exists(f"{path}/members/_SUCCESS"):
+
+    def build(path: str) -> None:
         v_arr, cl_ids, cmat = kmeans_fit_mat(spark, sf_dir, fit_filter=exist)
-        (
-            spark.createDataFrame(
-                [
-                    (int(cl), [int(x) for x in cmat[i]])
-                    for i, cl in enumerate(cl_ids)
-                ],
-                "cl long, c array<long>",
-            )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{path}/centroids")
-        )
+        _write_centroids(spark, cl_ids, cmat, f"{path}/centroids")
         hist_asg = kmeans_assign_mat(
             v_arr.filter(exist), cl_ids, cmat
         ).select("vec_id", F.col("cl").cast("int").alias("cell"))
@@ -2245,9 +2219,10 @@ def ensure_embed_inc_index(spark: SparkSession, sf_dir: str):
             .filter(exist)
             .select("vec_id", to_double_array("embedding").alias("e"))
             .join(hist_asg, "vec_id")
-            .write.mode("overwrite")
-            .parquet(f"{path}/members")
+            .write.parquet(f"{path}/members")
         )
+
+    path = materialize(_embed_inc_path(sf_dir), build)
     cl_ids, cmat = _read_embed_centroids(spark, f"{path}/centroids")
     members = spark.read.schema("vec_id bigint, e array<double>, cell int").parquet(
         f"{path}/members"
@@ -2345,11 +2320,10 @@ def q_dedup_embed_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ── embedding index APPEND path: the two-day ingest ────────────────
-_EMB_2DAY_SCRATCH = "/root/repo/.scratch/embed_2day"
+_EMB_2DAY_SCRATCH = f"{ROOT}/embed_2day"
 
 
 def _embed_2day_path(sf_dir: str) -> str:
-    from data_wrangler_spark.catalog import scratch_tag
     from data_wrangler_spark.operators.embeddings_ext import (
         KM_ITER,
         KM_K,
@@ -2368,63 +2342,44 @@ def _ensure_embed_2day_built(spark: SparkSession, sf_dir: str) -> str:
     (the quantizer, FIT ON HISTORY ALONE and frozen thereafter),
     `day0/` (history vectors CELL-PARTITIONED — the IVF-style layout
     q_sim_search_ivf_indexed serves from), and `day1/` (day-1's
-    appended members as a sibling cell-partitioned root). Append =
-    new files under a new root; history bytes are never rewritten,
-    and day1's own _SUCCESS makes the append idempotent — the same
-    growth discipline as the LSH index's _ensure_inc2day_built."""
-    import os as _os
-
+    appended members as a sibling cell-partitioned root), published
+    as one artifact. Append = new files under a new root; history
+    bytes are never rewritten — the same growth discipline as the LSH
+    index's _ensure_inc2day_built."""
     from data_wrangler_spark.operators.embeddings_ext import (
         kmeans_assign_mat,
         kmeans_fit_mat,
         quantize_xs,
     )
 
-    base = _embed_2day_path(sf_dir)
-    m10 = F.col("vec_id") % 10
-    hist_pred = ~m10.isin(INC2_DAY1, INC2_DAY2)
-    e_all = load_table(spark, sf_dir, "embeddings")
+    def build(base: str) -> None:
+        m10 = F.col("vec_id") % 10
+        hist_pred = ~m10.isin(INC2_DAY1, INC2_DAY2)
+        e_all = load_table(spark, sf_dir, "embeddings")
 
-    def write_members(raw: DataFrame, asg: DataFrame, sub: str) -> None:
-        (
-            raw.select("vec_id", to_double_array("embedding").alias("e"))
-            .join(asg, "vec_id")
-            .repartition("cell")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(f"{base}/{sub}")
-        )
-
-    if not _os.path.exists(f"{base}/day0/_SUCCESS"):
-        v_arr, cl_ids, cmat = kmeans_fit_mat(
-            spark, sf_dir, fit_filter=hist_pred
-        )
-        (
-            spark.createDataFrame(
-                [
-                    (int(cl), [int(x) for x in cmat[i]])
-                    for i, cl in enumerate(cl_ids)
-                ],
-                "cl long, c array<long>",
+        def write_members(raw: DataFrame, asg: DataFrame, sub: str) -> None:
+            raw.select("vec_id", to_double_array("embedding").alias("e")).join(
+                asg, "vec_id"
+            ).repartition("cell").write.partitionBy("cell").parquet(
+                f"{base}/{sub}"
             )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{base}/centroids")
-        )
+
+        v_arr, cl_ids, cmat = kmeans_fit_mat(spark, sf_dir, fit_filter=hist_pred)
+        _write_centroids(spark, cl_ids, cmat, f"{base}/centroids")
         hist_asg = kmeans_assign_mat(v_arr.filter(hist_pred), cl_ids, cmat).select(
             "vec_id", F.col("cl").cast("int").alias("cell")
         )
         write_members(e_all.filter(hist_pred), hist_asg, "day0")
-    # day-1 ingest's APPEND: assign against the FROZEN centroids and
-    # land as a sibling root — idempotent via its own _SUCCESS
-    if not _os.path.exists(f"{base}/day1/_SUCCESS"):
+        # day-1 ingest's APPEND: assign against the FROZEN centroids
+        # (read back as persisted) and land as a sibling root
         cl_ids, cmat = _read_embed_centroids(spark, f"{base}/centroids")
         d1_raw = e_all.filter(m10 == INC2_DAY1)
         d1_asg = kmeans_assign_mat(quantize_xs(d1_raw), cl_ids, cmat).select(
             "vec_id", F.col("cl").cast("int").alias("cell")
         )
         write_members(d1_raw, d1_asg, "day1")
-    return base
+
+    return materialize(_embed_2day_path(sf_dir), build)
 
 
 def _embed_2day_oracle() -> str:

@@ -28,10 +28,11 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from data_wrangler_spark.catalog import load_table, scratch_tag
+from data_wrangler_spark.catalog import load_table
 from data_wrangler_spark.registry import register
+from data_wrangler_spark.scratch import ROOT, materialize, scratch_tag
 
-_IO_SCRATCH = "/root/repo/.scratch/io"
+_IO_SCRATCH = f"{ROOT}/io"
 
 # Shared projection: text-safe orders rows (cents + ISO date string).
 _ORDERS_TEXT_ORACLE = """
@@ -53,12 +54,6 @@ def _orders_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sf_tag(sf_dir: str, source_table: str = "orders") -> str:
-    # collision- and staleness-safe (abs path + source mtime/size):
-    # a regenerated fixture or a same-basename dir gets a fresh key
-    return scratch_tag(sf_dir, source_table)
-
-
 @register(
     "q_csv_roundtrip",
     oracle=_ORDERS_TEXT_ORACLE,
@@ -72,11 +67,10 @@ def q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     inferSchema — that is a full extra pass at scale). The returned
     rows come from the CSV files; the oracle reads parquet directly,
     so the hash match certifies the text round-trip row-for-row."""
-    path = f"{_IO_SCRATCH}/{_sf_tag(sf_dir)}/orders_csv"
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        _orders_text(spark, sf_dir).write.mode("overwrite").option(
-            "header", True
-        ).csv(path)
+    path = materialize(
+        f"{_IO_SCRATCH}/{scratch_tag(sf_dir)}/orders_csv",
+        lambda p: _orders_text(spark, sf_dir).write.option("header", True).csv(p),
+    )
     schema = (
         "o_orderkey long, o_orderstatus string, price_cents long, order_date string"
     )
@@ -102,11 +96,12 @@ def q_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     directly: the hash match certifies sink + source row-for-row.
     Same text-safety contract as the other round-trips: integers and
     strings only ever cross the format."""
-    path = f"{_IO_SCRATCH}/{_sf_tag(sf_dir)}/orders_xml"
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        _orders_text(spark, sf_dir).write.mode("overwrite").format("xml").option(
+    path = materialize(
+        f"{_IO_SCRATCH}/{scratch_tag(sf_dir)}/orders_xml",
+        lambda p: _orders_text(spark, sf_dir).write.format("xml").option(
             "rootTag", "orders"
-        ).option("rowTag", "order").save(path)
+        ).option("rowTag", "order").save(p),
+    )
     schema = (
         "o_orderkey long, o_orderstatus string, price_cents long, order_date string"
     )
@@ -137,10 +132,9 @@ def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the line format and the nested extraction. Explicit read schema;
     sharded files; value quantized to micro-units before the write so
     no double ever meets a text format."""
-    path = f"{_IO_SCRATCH}/{_sf_tag(sf_dir, 'events')}/events_jsonl"
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        ev = load_table(spark, sf_dir, "events")
-        ev.select(
+
+    def build(p: str) -> None:
+        load_table(spark, sf_dir, "events").select(
             "event_id",
             "user_id",
             "event_type",
@@ -148,7 +142,11 @@ def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("value_micro"),
             "props",
-        ).write.mode("overwrite").json(path)
+        ).write.json(p)
+
+    path = materialize(
+        f"{_IO_SCRATCH}/{scratch_tag(sf_dir, 'events')}/events_jsonl", build
+    )
     schema = (
         "event_id long, user_id long, event_type string, "
         "value_micro long, props string"
@@ -174,9 +172,10 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     reader/writer (columnar, predicate-pushdown-capable like
     parquet). Same projection and oracle as q_csv_roundtrip, so the
     hash match certifies the ORC hop row-for-row."""
-    path = f"{_IO_SCRATCH}/{_sf_tag(sf_dir)}/orders_orc"
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        _orders_text(spark, sf_dir).write.mode("overwrite").orc(path)
+    path = materialize(
+        f"{_IO_SCRATCH}/{scratch_tag(sf_dir)}/orders_orc",
+        lambda p: _orders_text(spark, sf_dir).write.orc(p),
+    )
     return spark.read.orc(path)
 
 
@@ -201,15 +200,23 @@ def q_partitioned_write_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     lever at 100 TB: a date/tenant-partitioned table turns a full
     scan into a file-listing of one subtree. The oracle replays the
     filter on the raw table, proving the layout lost nothing."""
-    path = f"{_IO_SCRATCH}/{_sf_tag(sf_dir)}/orders_by_status"
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        _orders_text(spark, sf_dir).select(
-            "o_orderkey", "price_cents", "o_orderstatus"
-        ).write.mode("overwrite").partitionBy("o_orderstatus").parquet(path)
     return (
-        spark.read.parquet(path)
+        spark.read.parquet(_orders_by_status(spark, sf_dir))
         .filter(F.col("o_orderstatus") == "F")
         .select("o_orderkey", "price_cents", "o_orderstatus")
+    )
+
+
+def _orders_by_status(spark: SparkSession, sf_dir: str) -> str:
+    """The cents-exact orders projection, persisted once per sf
+    partitioned by o_orderstatus (shared by the static and dynamic
+    partition-pruning operators)."""
+    return materialize(
+        f"{_IO_SCRATCH}/{scratch_tag(sf_dir)}/orders_by_status",
+        lambda p: _orders_text(spark, sf_dir)
+        .select("o_orderkey", "price_cents", "o_orderstatus")
+        .write.partitionBy("o_orderstatus")
+        .parquet(p),
     )
 
 
@@ -413,24 +420,19 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     repurpose a name with a new type (parquet reconciliation fails —
     by design), and pin `mergeSchema` on the READ because at scale
     the default (first-footer schema) silently drops new columns."""
-    path = f"{_IO_SCRATCH}/{_sf_tag(sf_dir, 'documents')}/schema_evo"
-    if not os.path.exists(f"{path}/_DONE"):
-        d = load_table(spark, sf_dir, "documents")
-        (
-            d.filter(F.col("doc_id") % 2 == 0)
-            .select("doc_id", "lang")
-            .write.mode("overwrite")
-            .parquet(f"{path}/gen=1")
-        )
-        (
-            d.filter(F.col("doc_id") % 2 == 1)
-            .select("doc_id", "lang", "n_chars")
-            .write.mode("overwrite")
-            .parquet(f"{path}/gen=2")
-        )
-        with open(f"{path}/_DONE", "w") as fh:
-            fh.write("two generations\n")
 
+    def build(p: str) -> None:
+        d = load_table(spark, sf_dir, "documents")
+        d.filter(F.col("doc_id") % 2 == 0).select("doc_id", "lang").write.parquet(
+            f"{p}/gen=1"
+        )
+        d.filter(F.col("doc_id") % 2 == 1).select(
+            "doc_id", "lang", "n_chars"
+        ).write.parquet(f"{p}/gen=2")
+
+    path = materialize(
+        f"{_IO_SCRATCH}/{scratch_tag(sf_dir, 'documents')}/schema_evo", build
+    )
     merged = spark.read.option("mergeSchema", "true").parquet(
         f"{path}/gen=1", f"{path}/gen=2"
     )
@@ -489,29 +491,21 @@ def q_join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     smarter, but it would bypass the runtime-pruning path this
     operator exists to pin. Stored data is opaque to inference, so
     the plan carries a real `dynamicpruningexpression`."""
-    fact_path = f"{_IO_SCRATCH}/{_sf_tag(sf_dir)}/orders_by_status"
-    if not os.path.exists(f"{fact_path}/_SUCCESS"):
-        _orders_text(spark, sf_dir).select(
-            "o_orderkey", "price_cents", "o_orderstatus"
-        ).write.mode("overwrite").partitionBy("o_orderstatus").parquet(fact_path)
-    fact = spark.read.parquet(fact_path)
-
-    dim_path = f"{_IO_SCRATCH}/{_sf_tag(sf_dir)}/status_dim"
-    if not os.path.exists(f"{dim_path}/_SUCCESS"):
-        (
-            load_table(spark, sf_dir, "orders")
-            .select("o_orderstatus")
-            .distinct()
-            .select(
-                F.when(F.col("o_orderstatus") == "F", "CLOSED")
-                .when(F.col("o_orderstatus") == "O", "OPEN")
-                .otherwise("PARTIAL")
-                .alias("status_name"),
-                F.col("o_orderstatus").alias("status_code"),
-            )
-            .write.mode("overwrite")
-            .parquet(dim_path)
+    fact = spark.read.parquet(_orders_by_status(spark, sf_dir))
+    dim_path = materialize(
+        f"{_IO_SCRATCH}/{scratch_tag(sf_dir)}/status_dim",
+        lambda p: load_table(spark, sf_dir, "orders")
+        .select("o_orderstatus")
+        .distinct()
+        .select(
+            F.when(F.col("o_orderstatus") == "F", "CLOSED")
+            .when(F.col("o_orderstatus") == "O", "OPEN")
+            .otherwise("PARTIAL")
+            .alias("status_name"),
+            F.col("o_orderstatus").alias("status_code"),
         )
+        .write.parquet(p),
+    )
     dim = spark.read.parquet(dim_path)
     return (
         fact.join(
@@ -596,7 +590,7 @@ def q_delete_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot be an append."""
     import shutil
 
-    base = f"{_IO_SCRATCH}/{_sf_tag(sf_dir, 'documents')}/delete_cow"
+    base = f"{_IO_SCRATCH}/{scratch_tag(sf_dir, 'documents')}/delete_cow"
     src = f"{base}/table"
     if not os.path.exists(f"{base}/_DELETED"):
         d = load_table(spark, sf_dir, "documents").select(
@@ -686,7 +680,7 @@ def q_snapshot_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     directory-granular. The query reads CURRENT (v2); the oracle
     filters raw parquet — a hash match certifies no survivor lost,
     no victim retained, through the manifest indirection."""
-    base = f"{_IO_SCRATCH}/{_sf_tag(sf_dir, 'documents')}/snapshot_tbl"
+    base = f"{_IO_SCRATCH}/{scratch_tag(sf_dir, 'documents')}/snapshot_tbl"
 
     def _built() -> bool:
         # complete iff the v2 commit landed AND CURRENT points at it —

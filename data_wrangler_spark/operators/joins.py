@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from data_wrangler_spark.catalog import load_table
 from data_wrangler_spark.registry import register
+from data_wrangler_spark.scratch import ROOT, scratch_tag
 
 
 @register(
@@ -297,6 +298,7 @@ def q_join_range_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _BUCKET_N = 8  # bucket count for the co-located join demo
+_BUCKET_SCRATCH = f"{ROOT}/bucketed"
 
 
 @register(
@@ -324,12 +326,10 @@ def q_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     thousands on a cluster); AQE cannot give you this — it still
     shuffles, bucketing doesn't. The oracle replays the plain join on
     the raw tables, proving the layout changed nothing semantically."""
-    from data_wrangler_spark.catalog import scratch_tag
-
     # staleness/collision-safe key (abs path + source mtime), dots
     # stripped so the tag is a valid SQL identifier fragment
     tag = scratch_tag(sf_dir, "orders").replace(".", "_")
-    base = f"/root/repo/.scratch/bucketed/{tag}"
+    base = f"{_BUCKET_SCRATCH}/{tag}"
     names = {"orders": f"bkt_orders_{tag}", "customer": f"bkt_customer_{tag}"}
     keys = {"orders": "o_custkey", "customer": "c_custkey"}
     for tbl, name in names.items():

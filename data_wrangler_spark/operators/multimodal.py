@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from data_wrangler_spark.catalog import load_table
 from data_wrangler_spark.functions.vectors import micro_csv, sql_micro_csv
 from data_wrangler_spark.registry import register
+from data_wrangler_spark.scratch import ROOT, materialize, scratch_tag
 
 
 @register(
@@ -665,7 +666,7 @@ def q_mm_phash_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _keeper_from_pairs(spark, d, pairs)
 
 
-_PHASH_INC_SCRATCH = "/root/repo/.scratch/phash_inc"
+_PHASH_INC_SCRATCH = f"{ROOT}/phash_inc"
 
 
 def _phash_inc_oracle() -> str:
@@ -717,9 +718,6 @@ def q_mm_phash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     test pins exactly that). Either way the shape is the only
     affordable one at 100 TB image scale: each payload is touched
     once, at its own ingest; forever after only signatures move."""
-    import os as _os
-
-    from data_wrangler_spark.catalog import scratch_tag as _stag
     from data_wrangler_spark.operators.dedup import INC_EXIST_PCT
 
     d = load_table(spark, sf_dir, "documents").select(
@@ -729,18 +727,14 @@ def q_mm_phash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # signature-index cache keyed on the hash/banding constants it was
     # built from — changing them auto-invalidates (r10 review)
-    path = (
+    path = materialize(
         f"{_PHASH_INC_SCRATCH}/"
-        f"{_stag(sf_dir, 'documents', f'pix={P_PIX},grid={P_ROWS}x{P_COLS},bandbits={PHASH_BAND_BITS},exist={INC_EXIST_PCT}')}"
+        f"{scratch_tag(sf_dir, 'documents', f'pix={P_PIX},grid={P_ROWS}x{P_COLS},bandbits={PHASH_BAND_BITS},exist={INC_EXIST_PCT}')}",
+        lambda p: _phash_banded_df(d.filter(exist))
+        .repartition("band")
+        .write.partitionBy("band")
+        .parquet(p),
     )
-    if not _os.path.exists(f"{path}/_SUCCESS"):
-        (
-            _phash_banded_df(d.filter(exist))
-            .repartition("band")
-            .write.mode("overwrite")
-            .partitionBy("band")
-            .parquet(path)
-        )
     index = spark.read.parquet(path).select(
         "band",
         "bucket",

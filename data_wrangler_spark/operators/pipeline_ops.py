@@ -41,6 +41,7 @@ from data_wrangler_spark.operators.dedup import (
 )
 from data_wrangler_spark.functions.distributed import pin, spread
 from data_wrangler_spark.registry import register
+from data_wrangler_spark.scratch import ROOT, materialize, scratch_tag
 
 SAMPLE_PCT = 10          # q_sample_hash keeps hash%100 < 10 → ~10%
 SPLIT_SEED = 42          # q_split_train_test hash seed
@@ -836,38 +837,32 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CONTAM_INC_SCRATCH = "/root/repo/.scratch/contam_inc"
+_CONTAM_INC_SCRATCH = f"{ROOT}/contam_inc"
 
 
 def _contam_index_path(sf_dir: str) -> str:
     """Path of the persisted eval-gram index. The governing constants
     are folded into the cache key, so changing the gram size or the
     eval source invalidates the index automatically instead of
-    serving stale grams behind a _SUCCESS marker (r10 review)."""
-    from data_wrangler_spark.catalog import scratch_tag as _stag
-
+    serving stale grams behind a completeness marker (r10 review)."""
     params = f"ngram={CONTAM_NGRAM},eval={CONTAM_EVAL_SOURCE}"
-    return f"{_CONTAM_INC_SCRATCH}/{_stag(sf_dir, 'documents', params)}"
+    return f"{_CONTAM_INC_SCRATCH}/{scratch_tag(sf_dir, 'documents', params)}"
 
 
 def ensure_contam_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build the persisted eval-gram index if missing and return it as
     a DataFrame — shared by q_contamination_incremental, the pipeline
     counter, and q_stream_decontaminate's static join side."""
-    import os as _os
-
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text"
     )
-    path = _contam_index_path(sf_dir)
-    if not _os.path.exists(f"{path}/_SUCCESS"):
-        (
-            _doc_grams(d.filter(F.col("source") == CONTAM_EVAL_SOURCE))
-            .select("g")
-            .distinct()
-            .write.mode("overwrite")
-            .parquet(path)
-        )
+    path = materialize(
+        _contam_index_path(sf_dir),
+        lambda p: _doc_grams(d.filter(F.col("source") == CONTAM_EVAL_SOURCE))
+        .select("g")
+        .distinct()
+        .write.parquet(p),
+    )
     return spark.read.parquet(path)
 
 
@@ -1110,9 +1105,7 @@ def q_contamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The packed bitmap is cached per fixture (the filter is built
     # once per eval suite in production, not per probe run); the key
     # carries every constant baked into the bits.
-    from data_wrangler_spark.catalog import scratch_tag as _stag
-
-    bm_key = _stag(
+    bm_key = scratch_tag(
         sf_dir, "documents", f"bloom_bm,m={BLOOM_M_BITS},k={BLOOM_K}"
     )
     bm_sql = _BLOOM_BM_CACHE.get(bm_key)
@@ -2268,8 +2261,8 @@ def q_dedup_keep_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # v2: counter semantics gained the stage-2.5 decontamination gate in
 # round 10 — the path bump invalidates r9 counters that would
-# otherwise read as fresh behind their _SUCCESS marker
-_PIPE_INC_SCRATCH = "/root/repo/.scratch/pipeline_inc_v2"
+# otherwise read as fresh behind their completeness marker
+_PIPE_INC_SCRATCH = f"{ROOT}/pipeline_inc_v2"
 
 
 def _pipe_inc_oracle() -> str:
@@ -2437,9 +2430,6 @@ def q_corpus_pipeline_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
     window, rank window — is over the new batch. Cross-factor
     timings in SCALE.md pin the claim: wall time tracks batch size,
     not corpus size."""
-    import os as _os
-
-    from data_wrangler_spark.catalog import scratch_tag as _stag
     from data_wrangler_spark.operators.dedup import INC_EXIST_PCT
     from data_wrangler_spark.registry import REGISTRY
 
@@ -2527,8 +2517,8 @@ def q_corpus_pipeline_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
         f"{GOPHER_MAX_SHORT_FRAC}-{GOPHER_MIN_STOPWORD_HITS}-"
         f"{_sw_hash}"
     )
-    path = f"{_PIPE_INC_SCRATCH}/{_stag(sf_dir, 'documents', counter_params)}"
-    if not _os.path.exists(f"{path}/_SUCCESS"):
+
+    def build(p: str) -> None:
         exist_d = d.filter(exist)
         ek = (
             exist_d.withColumn("rn", F.row_number().over(keeper_w))
@@ -2558,9 +2548,13 @@ def q_corpus_pipeline_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
             .groupBy("source")
             .agg(F.count("*").cast("bigint").alias("n_src"))
             .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(path)
+            .write.parquet(p)
         )
+
+    path = materialize(
+        f"{_PIPE_INC_SCRATCH}/{scratch_tag(sf_dir, 'documents', counter_params)}",
+        build,
+    )
     prior = spark.read.parquet(path)
 
     # coalesce: SUM over an empty prior counter is NULL, which would

@@ -36,6 +36,7 @@ from data_wrangler_spark.catalog import load_table
 from data_wrangler_spark.functions.distributed import pin
 from data_wrangler_spark.operators.aggregates import _osum, dsum
 from data_wrangler_spark.registry import register
+from data_wrangler_spark.scratch import ROOT, materialize, scratch_tag
 
 Z_THRESHOLD = 2.0
 BASKET_TOP_N = 100
@@ -635,7 +636,7 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ROLLUP_SCRATCH = "/root/repo/.scratch/rollup"
+_ROLLUP_SCRATCH = f"{ROOT}/rollup"
 
 
 def hourly_partials(df: DataFrame) -> DataFrame:
@@ -680,22 +681,13 @@ def q_rollup_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     the serving query reads |hours|x|types| rows instead of the
     event log — queries get ~4 orders of magnitude cheaper and the
     answer is provably identical."""
-    import os as _os
-
-    from data_wrangler_spark.catalog import scratch_tag as _stag
-
-    sf_tag = _stag(sf_dir, "events")
-    path = f"{_ROLLUP_SCRATCH}/{sf_tag}"
-    marker = f"{path}/_SUCCESS"
-    if not _os.path.exists(marker):
-        ev = load_table(spark, sf_dir, "events")
-        (
-            hourly_partials(ev)
-            .repartition("day")
-            .write.mode("overwrite")
-            .partitionBy("day")
-            .parquet(path)
-        )
+    path = materialize(
+        f"{_ROLLUP_SCRATCH}/{scratch_tag(sf_dir, 'events')}",
+        lambda p: hourly_partials(load_table(spark, sf_dir, "events"))
+        .repartition("day")
+        .write.partitionBy("day")
+        .parquet(p),
+    )
     rollup = spark.read.parquet(path)
     return rollup.groupBy("day", "event_type").agg(
         F.sum("n_events").alias("n_events"),
@@ -703,7 +695,7 @@ def q_rollup_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_COMPACT_SCRATCH = "/root/repo/.scratch/compact"
+_COMPACT_SCRATCH = f"{ROOT}/compact"
 COMPACT_TARGET_BYTES = 256 * 1024  # test-scale target; 128-512 MiB in prod
 COMPACT_FRAGMENT_FILES = 64       # simulated small-file debris
 
@@ -739,29 +731,26 @@ def q_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math as _math
     import os as _os
 
-    from data_wrangler_spark.catalog import scratch_tag as _stag
-
-    sf_tag = _stag(sf_dir, "documents")
-    frag = f"{_COMPACT_SCRATCH}/{sf_tag}/fragmented"
-    comp = f"{_COMPACT_SCRATCH}/{sf_tag}/compacted"
-    if not _os.path.exists(f"{comp}/_SUCCESS"):
+    def build(base: str) -> None:
+        frag = f"{base}/fragmented"
         d = load_table(spark, sf_dir, "documents").select(
             "doc_id", "text", "lang", "source", "n_chars"
         )
-        d.repartition(COMPACT_FRAGMENT_FILES).write.mode("overwrite").parquet(frag)
+        d.repartition(COMPACT_FRAGMENT_FILES).write.parquet(frag)
         frag_bytes = sum(
             e.stat().st_size
             for e in _os.scandir(frag)
             if e.name.endswith(".parquet")
         )
         n_target = max(1, _math.ceil(frag_bytes / COMPACT_TARGET_BYTES))
-        (
-            spark.read.parquet(frag)
-            .repartition(n_target)
-            .write.mode("overwrite")
-            .parquet(comp)
+        spark.read.parquet(frag).repartition(n_target).write.parquet(
+            f"{base}/compacted"
         )
-    c = spark.read.parquet(comp)
+
+    base = materialize(
+        f"{_COMPACT_SCRATCH}/{scratch_tag(sf_dir, 'documents')}", build
+    )
+    c = spark.read.parquet(f"{base}/compacted")
     return c.groupBy("lang").agg(
         F.count("*").alias("n_docs"),
         F.sum("n_chars").alias("sum_chars"),
@@ -902,7 +891,7 @@ def q_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ROLLUP_INC_SCRATCH = "/root/repo/.scratch/rollup_inc"
+_ROLLUP_INC_SCRATCH = f"{ROOT}/rollup_inc"
 
 
 @register(
@@ -941,37 +930,23 @@ def q_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-statement overwrites just that day's partition (dynamic
     partition overwrite), and serving still reads |hours|×|types|
     rows, never the event log."""
-    import os as _os
 
-    from data_wrangler_spark.catalog import scratch_tag as _stag
-
-    path = f"{_ROLLUP_INC_SCRATCH}/{_stag(sf_dir, 'events')}"
-    done = f"{path}/_DONE_INC"
-
-    hourly = hourly_partials
-
-    if not _os.path.exists(done):
+    def build(p: str) -> None:
         ev = load_table(spark, sf_dir, "events")
         day = F.date_trunc("day", "ts").cast("date")
         # bounded 1-row scalar: the newest day in the fixture
         dmax = ev.agg(F.max(day).alias("d")).collect()[0].d
-        (
-            hourly(ev.filter(day < F.lit(dmax)))
-            .repartition("day")
-            .write.mode("overwrite")
-            .partitionBy("day")
-            .parquet(path)
-        )
-        (
-            hourly(ev.filter(day == F.lit(dmax)))
-            .repartition("day")
-            .write.mode("append")
-            .partitionBy("day")
-            .parquet(path)
-        )
-        with open(done, "w") as fh:
-            fh.write("base+increment\n")
+        # base build, then the newest day as a separate append job
+        hourly_partials(ev.filter(day < F.lit(dmax))).repartition(
+            "day"
+        ).write.partitionBy("day").parquet(p)
+        hourly_partials(ev.filter(day == F.lit(dmax))).repartition(
+            "day"
+        ).write.mode("append").partitionBy("day").parquet(p)
 
+    path = materialize(
+        f"{_ROLLUP_INC_SCRATCH}/{scratch_tag(sf_dir, 'events')}", build
+    )
     rollup = spark.read.parquet(path)
     return rollup.groupBy("day", "event_type").agg(
         F.sum("n_events").alias("n_events"),

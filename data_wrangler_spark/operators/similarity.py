@@ -34,6 +34,7 @@ from data_wrangler_spark.functions.vectors import (
     to_double_array,
 )
 from data_wrangler_spark.registry import register
+from data_wrangler_spark.scratch import ROOT, materialize, scratch_tag
 
 N_PLANES = 16  # LSH hyperplanes → 16-bit signature, 4 bands × 4 bits
 LSH_BAND_BITS = 4
@@ -424,7 +425,7 @@ def q_sim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bp.mapInPandas(gemm, "vec_a long, vec_b long, cos_sim double")
 
 
-_IVF_SCRATCH = "/root/repo/.scratch/ivf"
+_IVF_SCRATCH = f"{ROOT}/ivf"
 
 
 @register(
@@ -453,21 +454,13 @@ def q_sim_search_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     nprobe/nlist of the corpus. Through r11 this used pyspark.ml
     KMeans and was rows-only; the quantizer swap (VERDICT r11 #5)
     makes the whole persisted pipeline hash-checked."""
-    import os as _os
-
-    from data_wrangler_spark.catalog import scratch_tag as _stag
     from data_wrangler_spark.operators.embeddings_ext import (
         kmeans_assign_np,
         kmeans_fit_arr,
         quantize_xs,
     )
 
-    base = (
-        f"{_IVF_SCRATCH}/"
-        f"{_stag(sf_dir, 'embeddings', f'q=intkm,k={IVFX_NLIST}')}"
-    )
-    vec_path, cen_path = f"{base}/vectors", f"{base}/centroids"
-    if not _os.path.exists(f"{base}/_DONE"):
+    def build(base: str) -> None:
         raw = load_table(spark, sf_dir, "embeddings")
         v_arr, cen = kmeans_fit_arr(spark, sf_dir, k=IVFX_NLIST)
         asg = kmeans_assign_np(v_arr, cen).select(
@@ -476,15 +469,14 @@ def q_sim_search_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         e = raw.select(
             "vec_id", "label", to_double_array("embedding").alias("e")
         )
-        (
-            e.join(asg, "vec_id")
-            .repartition("cell")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(vec_path)
-        )
-        cen.coalesce(1).write.mode("overwrite").parquet(cen_path)
-        open(f"{base}/_DONE", "w").close()
+        e.join(asg, "vec_id").repartition("cell").write.partitionBy(
+            "cell"
+        ).parquet(f"{base}/vectors")
+        cen.coalesce(1).write.parquet(f"{base}/centroids")
+
+    tag = scratch_tag(sf_dir, "embeddings", f"q=intkm,k={IVFX_NLIST}")
+    base = materialize(f"{_IVF_SCRATCH}/{tag}", build)
+    vec_path, cen_path = f"{base}/vectors", f"{base}/centroids"
 
     raw = load_table(spark, sf_dir, "embeddings")
     qid, q = _query_vec(spark, sf_dir)

@@ -742,16 +742,24 @@ class GatewayServer:
         limit = int(q["limit"]) if "limit" in q else None
         return _ok({"results": _rows_json(df, limit)})
 
-    # Registered queries verified free of scratch-directory writes
-    # (streaming staged inputs, persisted-index builds — those are
-    # single-writer check-then-write with no locking of their own and
-    # MUST stay serialized). Members serve CONCURRENTLY under the
-    # r16 per-thread pin list (functions/distributed.py): each
-    # request thread owns a disjoint build-pin → materialize →
-    # release lifecycle, so parallel binds of the template catalog —
-    # the real gateway workload BENCH_SERVING measures — never
-    # contend on a lock. Conservative default: anything NOT listed
-    # here keeps the serialized path.
+    # Registered queries verified free of session-global side
+    # effects. Persisted scratch artifacts are safe under concurrency
+    # (scratch.materialize locks per path); what still forces the
+    # rest through _run_lock is:
+    # - the session-global `spark.sql.shuffle.partitions` writes in
+    #   streaming/windows.py's _run_stream and _run_stream_to_dir and
+    #   in session.shuffle_width (a query planned inside the window
+    #   inherits the narrowed width);
+    # - session.rocksdb_state_store's session-global provider toggle;
+    # - fixed-name temp views (q_agg_grouping_sets and
+    #   q_subquery_scalar both register "lineitem");
+    # - streaming/windows.py _stage_parts' per-call rmtree-and-restage
+    #   of a stream input dir shared by name.
+    # Members serve CONCURRENTLY under the per-thread pin list
+    # (functions/distributed.py): each request thread owns a disjoint
+    # build-pin → materialize → release lifecycle, so parallel binds
+    # of the template catalog never contend on a lock. Conservative
+    # default: anything NOT listed here keeps the serialized path.
     _CONCURRENT_SAFE = frozenset(
         {
             "q_sort_paginate",
@@ -799,14 +807,14 @@ class GatewayServer:
 
         spec = REGISTRY[qname]
         binds = self._coerce_binds(spec, q)
-        # Pins are per-thread (r16), so concurrent requests can no
-        # longer corrupt each other's caches; what still REQUIRES
-        # serialization is the operators' check-then-write scratch
-        # builds (streaming staged inputs rmtree-and-rebuild). The
-        # explicit _CONCURRENT_SAFE set serves in parallel; all other
-        # names keep the one-at-a-time conservative default. /q, /dt
-        # and /db stay concurrent — they touch neither pins nor
-        # scratch.
+        # Pins are per-thread and scratch artifacts are published
+        # under a per-path lock; what still REQUIRES serialization is
+        # the session-global conf writes, fixed-name temp views and
+        # per-call stream-input restaging listed at _CONCURRENT_SAFE.
+        # The explicit _CONCURRENT_SAFE set serves in parallel; all
+        # other names keep the one-at-a-time conservative default.
+        # /q, /dt and /db stay concurrent — they touch neither pins
+        # nor scratch.
         ctx = (
             contextlib.nullcontext()
             if qname in self._CONCURRENT_SAFE

@@ -36,8 +36,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from data_wrangler_spark.catalog import load_table
 from data_wrangler_spark.operators.aggregates import _osum, dsum
 from data_wrangler_spark.registry import register
+from data_wrangler_spark.scratch import ROOT, materialize, scratch_tag
 
-SCRATCH = "/root/repo/.scratch"
+SCRATCH = ROOT
 
 
 # SQL mirror of Spark's epoch-aligned window start: floor the event
@@ -293,18 +294,22 @@ def _stage_parts(tag_base: str, parts: list) -> str:
     shutil.rmtree(base, ignore_errors=True)
     os.makedirs(base, exist_ok=True)
     for i, p in enumerate(parts):
-        tmp = os.path.join(base, f"_tmp{i}")
-        p.coalesce(1).write.mode("overwrite").parquet(tmp)
-        src = next(
-            os.path.join(tmp, f) for f in os.listdir(tmp) if f.endswith(".parquet")
-        )
-        dst = os.path.join(base, f"{i:03d}.parquet")
-        shutil.move(src, dst)
-        shutil.rmtree(tmp, ignore_errors=True)
-        # strictly increasing mtimes → deterministic batch order
-        ts_file = time.time() + i
-        os.utime(dst, (ts_file, ts_file))
+        _stage_file(p, os.path.join(base, f"{i:03d}.parquet"), i)
     return base
+
+
+def _stage_file(df: DataFrame, dst: str, bump: int) -> None:
+    """Write ``df`` as the single parquet file ``dst`` (through a
+    hidden `_tmp_` sibling dir) with mtime now + ``bump`` seconds:
+    strictly increasing bumps give a deterministic micro-batch order
+    to a file stream reading ``dst``'s directory."""
+    tmp = os.path.join(os.path.dirname(dst), f"_tmp_{os.path.basename(dst)}")
+    df.coalesce(1).write.parquet(tmp)
+    part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
+    shutil.move(os.path.join(tmp, part), dst)
+    shutil.rmtree(tmp, ignore_errors=True)
+    ts = time.time() + bump
+    os.utime(dst, (ts, ts))
 
 
 def _staged_events(spark: SparkSession, sf_dir: str, tag: str, n_copies: int = 1,
@@ -1512,12 +1517,9 @@ def q_stream_quarantine_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     the only addition is durability (checkpoint + file-sink log),
     which is how a 100 TB ingest actually runs: one long-lived
     checkpoint, restarted daily, each restart paying only the new
-    files. Scratch is keyed on fixture + split constants and
-    self-heals (a missing _DONE rebuilds from scratch)."""
-    import shutil as _sh
-    import time as _time
-
-    from data_wrangler_spark.catalog import scratch_tag
+    files. Scratch is keyed on fixture + split constants and is
+    published by scratch.materialize, so an interrupted build is
+    rebuilt from scratch."""
     from data_wrangler_spark.operators.dedup import INC_EXIST_PCT
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -1534,18 +1536,6 @@ def q_stream_quarantine_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = os.path.join(root, "out")
     ckpt = os.path.join(root, "ckpt")
 
-    def stage(df, name: str, bump: int) -> None:
-        tmp = os.path.join(root, f"_tmp_{name}")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            f for f in os.listdir(tmp) if f.endswith(".parquet")
-        )
-        dst = os.path.join(src_dir, name)
-        _sh.move(os.path.join(tmp, part), dst)
-        _sh.rmtree(tmp, ignore_errors=True)
-        ts = _time.time() + bump
-        os.utime(dst, (ts, ts))
-
     def run_once() -> None:
         src = (
             spark.readStream.schema(new.schema)
@@ -1554,17 +1544,20 @@ def q_stream_quarantine_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         _run_stream_to_dir(quarantine_gate_plan(spark, sf_dir, src), out, ckpt)
 
-    if not os.path.exists(os.path.join(root, "_DONE")):
-        _sh.rmtree(root, ignore_errors=True)
-        os.makedirs(src_dir, exist_ok=True)
+    def build(_root: str) -> None:
+        os.makedirs(src_dir)
         # day 1: even doc_ids arrive; first invocation drains them
-        stage(new.filter(F.col("doc_id") % 2 == 0), "000.parquet", 0)
+        _stage_file(
+            new.filter(F.col("doc_id") % 2 == 0), f"{src_dir}/000.parquet", 0
+        )
         run_once()
         # day 2 lands; the SECOND invocation resumes the checkpoint
-        stage(new.filter(F.col("doc_id") % 2 == 1), "001.parquet", 1)
+        _stage_file(
+            new.filter(F.col("doc_id") % 2 == 1), f"{src_dir}/001.parquet", 1
+        )
         run_once()
-        open(os.path.join(root, "_DONE"), "w").close()
 
+    materialize(root, build)
     return spark.read.schema("doc_id bigint, reason string").parquet(out)
 
 
@@ -1685,7 +1678,6 @@ def q_stream_embed_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     restart re-resolves the static side, which is precisely how a
     long-lived ingest picks up index appends without rebuilding —
     checkpointed stream progress + append-only index = the daily loop."""
-    from data_wrangler_spark.catalog import scratch_tag
     from data_wrangler_spark.operators.dedup import (
         INC2_DAY1,
         INC2_DAY2,
@@ -1707,7 +1699,7 @@ def q_stream_embed_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the scratch key folds in EVERY constant that governs the emitted
     # rows (quantizer shape + pairing threshold, not just the day
     # split) — same rule as dedup.py's index tag: a tuned constant
-    # must invalidate the _DONE-guarded scratch, or replay serves
+    # must invalidate the materialized scratch, or replay serves
     # stale rows against the refreshed oracle (ADVICE r13)
     from data_wrangler_spark.operators.dedup import MAX_CELL, SEM_TAU
     from data_wrangler_spark.operators.embeddings_ext import (
@@ -1730,16 +1722,6 @@ def q_stream_embed_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = os.path.join(root, "out")
     ckpt = os.path.join(root, "ckpt")
 
-    def stage(df, name: str, bump: int) -> None:
-        tmp = os.path.join(root, f"_tmp_{name}")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-        dst = os.path.join(src_dir, name)
-        shutil.move(os.path.join(tmp, part), dst)
-        shutil.rmtree(tmp, ignore_errors=True)
-        ts = time.time() + bump
-        os.utime(dst, (ts, ts))
-
     def run_once(members, day: int) -> None:
         src = (
             spark.readStream.schema(e_all.schema)
@@ -1752,17 +1734,16 @@ def q_stream_embed_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
             ckpt,
         )
 
-    if not os.path.exists(os.path.join(root, "_DONE")):
-        shutil.rmtree(root, ignore_errors=True)
-        os.makedirs(src_dir, exist_ok=True)
+    def build(_root: str) -> None:
+        os.makedirs(src_dir)
         # day 1 arrives; run 1 probes the history-only index
-        stage(e_all.filter(m10 == INC2_DAY1), "000.parquet", 0)
+        _stage_file(e_all.filter(m10 == INC2_DAY1), f"{src_dir}/000.parquet", 0)
         run_once(day0, 1)
         # the index appends day-1, day-2's file lands; run 2 resumes
-        stage(e_all.filter(m10 == INC2_DAY2), "001.parquet", 1)
+        _stage_file(e_all.filter(m10 == INC2_DAY2), f"{src_dir}/001.parquet", 1)
         run_once(day0.unionByName(day1), 2)
-        open(os.path.join(root, "_DONE"), "w").close()
 
+    materialize(root, build)
     return spark.read.schema(
         "ingest_day int, vec_new bigint, vec_old bigint, "
         "cell int, cos_sim double"

@@ -170,11 +170,12 @@ def test_schema_evolution_merges_nullable_column(spark, sf_dir):
     exactly on generation-1 rows, and both generation dirs exist."""
     import os
 
-    from data_wrangler_spark.operators.io_formats import _IO_SCRATCH, _sf_tag
+    from data_wrangler_spark.operators.io_formats import _IO_SCRATCH
+    from data_wrangler_spark.scratch import scratch_tag
 
     out = REGISTRY["q_schema_evolution"].run(spark, sf_dir)
     rows = out.collect()
-    path = f"{_IO_SCRATCH}/{_sf_tag(sf_dir, 'documents')}/schema_evo"
+    path = f"{_IO_SCRATCH}/{scratch_tag(sf_dir, 'documents')}/schema_evo"
     assert os.path.exists(f"{path}/gen=1") and os.path.exists(f"{path}/gen=2")
     for r in rows:
         if r.generation == 1:
@@ -203,12 +204,12 @@ def test_delete_rows_removes_only_victims(spark, sf_dir):
     from data_wrangler_spark.catalog import load_table
     from data_wrangler_spark.operators.io_formats import (
         _IO_SCRATCH,
-        _sf_tag,
         DELETE_MOD,
     )
+    from data_wrangler_spark.scratch import scratch_tag
 
     REGISTRY["q_delete_rows"].run(spark, sf_dir).collect()
-    src = f"{_IO_SCRATCH}/{_sf_tag(sf_dir, 'documents')}/delete_cow/table"
+    src = f"{_IO_SCRATCH}/{scratch_tag(sf_dir, 'documents')}/delete_cow/table"
     after = spark.read.parquet(src)
     assert after.filter(F.col("doc_id") % DELETE_MOD == 0).count() == 0
     survivors = {
@@ -236,11 +237,11 @@ def test_delete_rows_recovers_from_crash_window(spark, sf_dir):
     from data_wrangler_spark.operators.io_formats import (
         _IO_SCRATCH,
         _recover_delete_commit,
-        _sf_tag,
     )
+    from data_wrangler_spark.scratch import scratch_tag
 
     REGISTRY["q_delete_rows"].run(spark, sf_dir).collect()
-    base = f"{_IO_SCRATCH}/{_sf_tag(sf_dir, 'documents')}/delete_cow"
+    base = f"{_IO_SCRATCH}/{scratch_tag(sf_dir, 'documents')}/delete_cow"
     src = f"{base}/table"
     n_before = spark.read.parquet(src).count()
 
@@ -278,13 +279,13 @@ def test_snapshot_commit_time_travel_and_minimal_rewrite(spark, sf_dir):
 
     from data_wrangler_spark.operators.io_formats import (
         _IO_SCRATCH,
-        _sf_tag,
         SNAPSHOT_MOD,
         read_snapshot,
     )
+    from data_wrangler_spark.scratch import scratch_tag
 
     REGISTRY["q_snapshot_commit"].run(spark, sf_dir).collect()
-    base = f"{_IO_SCRATCH}/{_sf_tag(sf_dir, 'documents')}/snapshot_tbl"
+    base = f"{_IO_SCRATCH}/{scratch_tag(sf_dir, 'documents')}/snapshot_tbl"
     n_total = load_table(spark, sf_dir, "documents").count()
     n_victims = (
         load_table(spark, sf_dir, "documents")

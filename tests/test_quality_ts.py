@@ -115,7 +115,7 @@ def test_compact_files_reduces_file_count(spark, sf_dir):
         COMPACT_TARGET_BYTES,
     )
 
-    from data_wrangler_spark.catalog import scratch_tag
+    from data_wrangler_spark.scratch import scratch_tag
 
     REGISTRY["q_compact_files"].run(spark, sf_dir).collect()
     sf_tag = scratch_tag(sf_dir, "documents")
@@ -161,14 +161,15 @@ def test_rollup_incremental_layout_and_marker(spark, sf_dir):
     written by the separate append job)."""
     import os
 
-    from data_wrangler_spark.catalog import load_table, scratch_tag
+    from data_wrangler_spark.catalog import load_table
     from data_wrangler_spark.operators.quality_ts import _ROLLUP_INC_SCRATCH
+    from data_wrangler_spark.scratch import MARKER, scratch_tag
 
     from pyspark.sql import functions as F
 
     REGISTRY["q_rollup_incremental"].run(spark, sf_dir).collect()
     path = f"{_ROLLUP_INC_SCRATCH}/{scratch_tag(sf_dir, 'events')}"
-    assert os.path.exists(f"{path}/_DONE_INC")
+    assert os.path.exists(f"{path}/{MARKER}")
     days = {e.name for e in os.scandir(path) if e.name.startswith("day=")}
     ev = load_table(spark, sf_dir, "events")
     dmax = ev.agg(F.max(F.date_trunc("day", "ts").cast("date"))).collect()[0][0]

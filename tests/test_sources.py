@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_wrangler_spark.catalog import load_table
+from data_wrangler_spark.scratch import ROOT
 from data_wrangler_spark.sources.formats import (
     UnsupportedFormatError,
     read_table,
@@ -16,7 +17,7 @@ from data_wrangler_spark.sources.formats import (
     write_table,
 )
 
-SCRATCH = "/root/repo/.scratch/sources"
+SCRATCH = f"{ROOT}/sources"
 
 
 @pytest.fixture(scope="module")

@@ -30,6 +30,8 @@ import sys
 import numpy as np
 import pyarrow.parquet as pq
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
 
 def md5_long(s: str) -> int:
     return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
@@ -155,8 +157,10 @@ def _clustered_path(n, dim, k, std, seed) -> str:
     # for the engine's persisted indexes. Folding the generation
     # parameters into the directory name makes a changed config a
     # cache MISS by construction.
+    from data_wrangler_spark.scratch import ROOT
+
     tag = f"n{n}_d{dim}_k{k}_s{std}_seed{seed}"
-    return f"/root/repo/.scratch/ann_clustered_{tag}/embeddings.parquet"
+    return f"{ROOT}/ann_clustered_{tag}/embeddings.parquet"
 
 
 def gen_clustered(n=2000, dim=64, k=20, std=0.05, seed=42) -> str:

@@ -169,7 +169,9 @@ PARAMS: dict[str, dict] = {
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scratch/sfprobe/f50"
+    from data_wrangler_spark.scratch import ROOT
+
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else f"{ROOT}/sfprobe/f50"
     n = int(sys.argv[2]) if len(sys.argv) > 2 else 100
     load_before = [round(x, 2) for x in os.getloadavg()]
 

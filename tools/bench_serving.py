@@ -90,7 +90,9 @@ def _workload(n_per_query: int) -> list[tuple[str, dict]]:
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scratch/sfprobe/f50"
+    from data_wrangler_spark.scratch import ROOT
+
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else f"{ROOT}/sfprobe/f50"
     n_clients = int(sys.argv[2]) if len(sys.argv) > 2 else 12
     n_per_query = int(sys.argv[3]) if len(sys.argv) > 3 else 24
     load_before = [round(x, 2) for x in os.getloadavg()]

@@ -65,16 +65,17 @@ def _disk_counts(path: str) -> dict:
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scratch/sfprobe/f10"
-
     from data_wrangler_spark.session import get_spark
     from data_wrangler_spark import REGISTRY
-    from data_wrangler_spark.operators.io_formats import _IO_SCRATCH, _sf_tag
+    from data_wrangler_spark.operators.io_formats import _IO_SCRATCH
+    from data_wrangler_spark.scratch import ROOT, scratch_tag
+
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else f"{ROOT}/sfprobe/f10"
 
     spark = get_spark("dpp_probe")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        fact_path = f"{_IO_SCRATCH}/{_sf_tag(sf_dir)}/orders_by_status"
+        fact_path = f"{_IO_SCRATCH}/{scratch_tag(sf_dir)}/orders_by_status"
         for name in ("q_partitioned_write_prune", "q_join_dpp"):
             df = REGISTRY[name].run(spark, sf_dir)
             df.collect()

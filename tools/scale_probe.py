@@ -57,8 +57,10 @@ import sys
 
 sys.path.insert(0, "/root/repo")
 
+from data_wrangler_spark.scratch import ROOT  # noqa: E402
+
 SRC = "/root/testdata/sf0.1"
-OUT_BASE = "/root/repo/.scratch/sfprobe"
+OUT_BASE = f"{ROOT}/sfprobe"
 FIXTURE_VERSION = 3  # v2: decorrelated embedding copies + ≤2-way planted
                      # dups; v3: same treatment for documents (word-
                      # permuted copies + bounded cross-day planting)

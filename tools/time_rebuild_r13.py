@@ -25,13 +25,14 @@ sys.path.insert(0, "/root/repo")
 def main() -> None:
     from data_wrangler_spark.operators.dedup import _embed_2day_path
     from data_wrangler_spark.registry import REGISTRY
+    from data_wrangler_spark.scratch import ROOT
     from data_wrangler_spark.session import get_spark
 
     fixtures = sys.argv[1:] or [
         "/root/testdata/sf0.1",
-        "/root/repo/.scratch/sfprobe/f5",
-        "/root/repo/.scratch/sfprobe/f10",
-        "/root/repo/.scratch/sfprobe/f50",
+        f"{ROOT}/sfprobe/f5",
+        f"{ROOT}/sfprobe/f10",
+        f"{ROOT}/sfprobe/f50",
     ]
     spark = get_spark("time_rebuild_r13")
     for fx in fixtures:

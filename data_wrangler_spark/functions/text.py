@@ -47,13 +47,6 @@ def bigrams_from_words(wcol: Column) -> Column:
     return F.when(F.size(wcol) < 2, F.array().cast("array<string>")).otherwise(gram)
 
 
-def word_shingles(col: Column | str, n: int = 3) -> Column:
-    """Shingles straight from a text column — convenience for tests
-    and single-use expressions. Hot paths should bind words() to a
-    column and use shingles_from_words (see that docstring)."""
-    return shingles_from_words(words(col), n)
-
-
 def occurrence_count(col: Column | str, needle: str) -> Column:
     """Non-overlapping occurrence count via replace-length arithmetic —
     the formulation DuckDB reproduces exactly."""

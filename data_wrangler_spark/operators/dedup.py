@@ -488,7 +488,7 @@ def simhash_signatures(d: DataFrame) -> DataFrame:
     # the per-doc hash ARRAY 60 times with aggregate() — higher-order
     # functions run on the interpreted expression path, so every doc
     # paid 60 interpreted array traversals: measured 6.4 s at sf0.1
-    # vs ~1 s for this codegen aggregate (OPTIMIZATION_r16.md). The
+    # vs ~1 s for this codegen aggregate (round 16). The
     # exchange it introduces carries ≤ one 60-long partial row per
     # doc per task (map-side partial aggregation), never the tokens.
     toks = d.select("doc_id", F.explode(words("text")).alias("w")).select(

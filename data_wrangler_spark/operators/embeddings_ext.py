@@ -214,7 +214,7 @@ def kmeans_cte_sql(k: int = KM_K, fit_where: str = "", suffix: str = "") -> str:
     BIGINT, so the trajectory is bit-identical to the Spark loop
     regardless of partitioning or summation order. `k` defaults to
     the clustering family's KM_K; the IVF quantizer passes its own
-    nlist (tuned by tools/ann_tune.py) without perturbing
+    nlist (tuned per corpus by a numpy replay) without perturbing
     q_kmeans_exact/q_dedup_semantic.
 
     ``fit_where`` (a bare SQL predicate over vec_id/embedding)
@@ -342,18 +342,6 @@ def kmeans_assign(v: DataFrame, centroids: DataFrame) -> DataFrame:
         d.groupBy("vec_id")
         .agg(F.min(F.struct("dist", "cl")).alias("m"))
         .select("vec_id", F.col("m.cl").alias("cl"), F.col("m.dist").alias("dist"))
-    )
-
-
-def _cen_row(cen: DataFrame) -> DataFrame:
-    """(cl, dim, c) exploded centroids → ONE row holding all K
-    centroids as dim-ordered arrays sorted by cl — the broadcast
-    operand of the array-form assignment."""
-    return (
-        cen.groupBy("cl")
-        .agg(F.array_sort(F.collect_list(F.struct("dim", "c"))).alias("p"))
-        .select("cl", F.transform("p", lambda s: s["c"]).alias("cs"))
-        .agg(F.array_sort(F.collect_list(F.struct("cl", "cs"))).alias("cens"))
     )
 
 

@@ -602,7 +602,7 @@ def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reference them: inlined as expressions (the previous form) the
     # array_min/array_max folds re-evaluate per ELEMENT inside the
     # interpreted higher-order functions — O(d²) per vector instead
-    # of O(d) (measured 4.2 s → ~1 s at sf0.1, OPTIMIZATION_r16.md).
+    # of O(d) (measured 4.2 s → ~1 s at sf0.1, round 16).
     # CollapseProject leaves the split alone because each alias is a
     # non-cheap expression with multiple uses. Same IEEE expression
     # chain, computed once per row — byte-identical outputs.

@@ -368,6 +368,10 @@ LAST_STAR_ROUNDS = 0
 # mislabeling would diverge from the recursive-CTE oracle).
 STAR_ROUND_CAP = 50
 
+# Edge-count bound for min_label_components' driver-local union-find
+# fast path (~16 MB of packed longs at 2^20 edges); 0 disables it.
+STAR_LOCAL_MAX = 1 << 20
+
 
 def _orient(e: DataFrame) -> DataFrame:
     """Canonical high→low orientation, deduped, self-loops dropped."""
@@ -433,18 +437,12 @@ def min_label_components(
         # reaches the IDENTICAL fixpoint — each node labeled by its
         # component minimum — pinned equal to the distributed loop in
         # tests/test_pipeline_ops.py. Above the bound (the 100 TB
-        # path) the star-contraction loop below runs unchanged; the
-        # bound is env-overridable and 0 disables the fast path.
-        import os as _os
-
-        local_max = int(
-            _os.environ.get("SPARK_GRAFT_STAR_LOCAL_MAX", str(1 << 20))
-        )
+        # path) the star-contraction loop below runs unchanged.
         n_edges = edges.count()
-        # `local_max and ...`: 0 truly disables the fast path (ADVICE
-        # r16 #1 — the old `n_edges <= local_max` still engaged it on
-        # an empty edge list because 0 <= 0)
-        if local_max and n_edges <= local_max:
+        # `STAR_LOCAL_MAX and ...`: 0 truly disables the fast path
+        # (ADVICE r16 #1 — a bare `n_edges <= STAR_LOCAL_MAX` would
+        # still engage it on an empty edge list because 0 <= 0)
+        if STAR_LOCAL_MAX and n_edges <= STAR_LOCAL_MAX:
             import numpy as np
 
             # Arrow transfer + index-based union-find (ADVICE r16 #2):
@@ -1828,7 +1826,7 @@ def _lsh_keep_oracle(sweep: bool) -> str:
     exact integer-Jaccard verify on the md5-long shingle sets →
     components → keeper. The sweep form materializes the verified edge
     set into a temp table first — DuckDB 1.0 re-evaluates a plain CTE
-    at every recursive reference (see ROUND7.md), and this chain is
+    at every recursive reference (found in round 7), and this chain is
     heavy at derived scale factors."""
     from data_wrangler_spark.operators.dedup import (
         MAX_BUCKET,

@@ -617,7 +617,7 @@ def q_dedup_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the bound and returns -1, so kept distances equal the 2-arg
     # values the oracle computes. Measured at sf0.1: 4.5M brute
     # pairs → 39k candidates (max bucket 8), 14.8 s → sub-second
-    # (OPTIMIZATION_r16.md). At 100 TB the variant fan-out is
+    # (round 16). At 100 TB the variant fan-out is
     # ×(len+1) on the NAME TABLE (a dimension), while the old plan
     # grew quadratically per nation block.
     # keys only through the exchanges (guide §2.3 — shuffle metadata,

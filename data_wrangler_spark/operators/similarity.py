@@ -39,8 +39,8 @@ from data_wrangler_spark.scratch import ROOT, materialize, scratch_tag
 N_PLANES = 16  # LSH hyperplanes → 16-bit signature, 4 bands × 4 bits
 LSH_BAND_BITS = 4
 # Multi-probe (Lv et al. 2007): the query also probes every bucket at
-# Hamming distance ≤ LSH_PROBE_R within each band. r=1 measured by
-# tools/ann_tune.py: recall@10 0.2 → 0.9-1.0 on every fixture
+# Hamming distance ≤ LSH_PROBE_R within each band. r=1 measured with a
+# numpy replay of the index: recall@10 0.2 → 0.9-1.0 on every fixture
 # (sf0.001…f50) — these near-uniform synthetic embeddings are the
 # distance-concentration worst case, so single-probe recall collapses
 # while Hamming-1 probing recovers it (at a measured candidate-set
@@ -159,7 +159,7 @@ def q_sim_search_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-checked); candidates = vectors sharing ≥1 of 4 signature
     bands with the MULTI-PROBED query (the query probes its own
     bucket plus every Hamming-≤LSH_PROBE_R bucket per band — Lv et
-    al. 2007; measured by q_ann_recall / tools/ann_tune.py: recall@10
+    al. 2007; measured by q_ann_recall and a numpy replay: recall@10
     0.2 → 0.9-1.0 on every fixture); cosine re-rank of candidates
     only (1e-6 rounding). At 100 TB the bucket join replaces the full
     scan — probed partitions ∝ bucket selectivity, and multi-probe
@@ -221,7 +221,7 @@ def q_sim_search_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 IVFX_NLIST = 16  # IVF quantizer cells (own k; the clustering family's KM_K=8 untouched)
-IVFX_NPROBE = 8  # cells probed (ann_tune-measured: 4/16 cells -> 0.5; 8/16 -> 0.9-1.0)
+IVFX_NPROBE = 8  # cells probed (measured recall: 4/16 cells -> 0.5; 8/16 -> 0.9-1.0)
 IVFX_TOPK = 10
 
 
@@ -272,8 +272,7 @@ def q_sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     could only be rows-only checked (ml's float trajectory is
     seed-stable only within one Spark version — the very
     reproducibility gap q_kmeans_exact exists to close); VERDICT
-    r11 #5 asked for the conversion, and the MLlib-quantizer
-    experiment harness lives on in tools/ann_engine_clustered.py.
+    r11 #5 asked for the conversion.
 
     Scale: broadcast centroid table, candidate cells ~nprobe/nlist
     of the corpus, exact cosine only on candidates,
@@ -754,7 +753,7 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the exact top-10 feeds all three recall joins; unpinned, the
     # whole exact-search subtree re-executes once per family (no
     # ReusedExchange fires across the union branches — checked in
-    # plans/r17/q_ann_recall_before.txt). 10 rows cached (guide §5).
+    # the round-17 physical plan). 10 rows cached (guide §5).
     exact = pin(
         REGISTRY["q_sim_search"].run(spark, sf_dir).select("vec_id").persist()
     )

@@ -750,7 +750,6 @@ class GatewayServer:
     #   streaming/windows.py's _run_stream and _run_stream_to_dir and
     #   in session.shuffle_width (a query planned inside the window
     #   inherits the narrowed width);
-    # - session.rocksdb_state_store's session-global provider toggle;
     # - fixed-name temp views (q_agg_grouping_sets and
     #   q_subquery_scalar both register "lineitem");
     # - streaming/windows.py _stage_parts' per-call rmtree-and-restage

@@ -40,6 +40,9 @@ from data_wrangler_spark.scratch import ROOT, materialize, scratch_tag
 
 SCRATCH = ROOT
 
+# q_stream_quarantine's maxFilesPerTrigger (see the comment at its use).
+STREAM_TRIGGER_FILES = 1
+
 
 # SQL mirror of Spark's epoch-aligned window start: floor the event
 # epoch to the window grid (offset for sliding-window phases).
@@ -1072,20 +1075,17 @@ def q_stream_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
             new.filter(F.col("doc_id") % 2 == 1),
         ],
     )
-    # trigger width is env-parameterized (VERDICT r16 #8): the default
-    # of 1 file per trigger keeps the 2-micro-batch shape the resume
-    # proof pins (tests drive quarantine_gate_plan across a restart),
-    # while SPARK_GRAFT_STREAM_TRIGGER_FILES=2 runs the same plan in
-    # ONE wider micro-batch — the production trigger that amortizes
-    # the fixed per-batch cost (planning + state store round-trip)
-    # over more rows. Output is identical either way: both gates are
-    # stateless per row and dropDuplicates is batch-boundary-blind
-    # (pinned by tests/test_streaming.py).
-    trigger_files = int(
-        os.environ.get("SPARK_GRAFT_STREAM_TRIGGER_FILES", "1")
-    )
+    # trigger width (VERDICT r16 #8): the default of 1 file per
+    # trigger keeps the 2-micro-batch shape the resume proof pins
+    # (tests drive quarantine_gate_plan across a restart), while
+    # STREAM_TRIGGER_FILES = 2 runs the same plan in ONE wider
+    # micro-batch — the production trigger that amortizes the fixed
+    # per-batch cost (planning + state store round-trip) over more
+    # rows. Output is identical either way: both gates are stateless
+    # per row and dropDuplicates is batch-boundary-blind (pinned by
+    # tests/test_streaming.py).
     src = spark.readStream.schema(new.schema).option(
-        "maxFilesPerTrigger", trigger_files
+        "maxFilesPerTrigger", STREAM_TRIGGER_FILES
     ).parquet(base)
     return _run_stream(
         quarantine_gate_plan(spark, sf_dir, src), "q_stream_quarantine"

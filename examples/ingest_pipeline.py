@@ -24,9 +24,10 @@ correctness harness):
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from data_wrangler_spark.registry import REGISTRY
 from data_wrangler_spark.session import get_spark

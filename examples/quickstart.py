@@ -12,10 +12,11 @@ reference touches on day one.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from data_wrangler_spark.engine import Engine
 from data_wrangler_spark.server import GatewayServer

@@ -5,11 +5,17 @@ them in CI keeps the walkthroughs from rotting the way hand-kept
 inventory counts did. Each main() accepts an injected (spark, sf_dir)
 so the run shares the test session (and never stops it)."""
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo/examples")
+sys.path.insert(
+    0,
+    os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "examples"
+    ),
+)
 
 
 def test_ingest_pipeline_example(spark, sf_dir, capsys):

@@ -742,10 +742,9 @@ def test_star_contraction_on_long_chain(spark, monkeypatch):
     loop, which needed 399 rounds (and failed loudly past its 64-round
     cap) — converges in ~log2(n) alternations with every node labeled
     by the component minimum. Also pins multi-component + isolated-
-    node behavior. SPARK_GRAFT_STAR_LOCAL_MAX=0 forces the
+    node behavior. STAR_LOCAL_MAX = 0 forces the
     DISTRIBUTED loop (r16: small edge sets take the driver-local
     union-find fast path, pinned equal below)."""
-    monkeypatch.setenv("SPARK_GRAFT_STAR_LOCAL_MAX", "0")
     import math
 
     import data_wrangler_spark.operators.pipeline_ops as po
@@ -753,6 +752,8 @@ def test_star_contraction_on_long_chain(spark, monkeypatch):
         min_label_components,
     )
     from pyspark.sql import functions as F
+
+    monkeypatch.setattr(po, "STAR_LOCAL_MAX", 0)
 
     n = 400
     # chain 1-2-...-400, a separate triangle {900,901,902}, and the
@@ -783,7 +784,7 @@ def test_star_contraction_on_long_chain(spark, monkeypatch):
     # driver-local union-find must reach the IDENTICAL fixpoint the
     # distributed star contraction just produced — same labels on the
     # same adversarial fixture (chain + triangle + isolated node)
-    monkeypatch.setenv("SPARK_GRAFT_STAR_LOCAL_MAX", str(1 << 20))
+    monkeypatch.setattr(po, "STAR_LOCAL_MAX", 1 << 20)
     local_labels = {
         r.node: r.label
         for r in min_label_components(spark, nodes, pairs).collect()

@@ -136,6 +136,40 @@ def test_no_handkept_inventory_counts():
     )
 
 
+def test_doc_references_name_existing_files():
+    """Every concrete `tools/<name>.py` and root `<NAME>.md/.json/.jsonl`
+    that a current-state doc or a package comment names must exist, so
+    deleting a tool or an artifact cannot leave a dangling reference.
+    Templated names (`CORRECTNESS_r{N}.json`, `BENCH_*.json`) are
+    skipped; CHANGES, ROADMAP, VERDICT and ADVICE are history and
+    exempt."""
+    import re
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    tool = re.compile(r"(?<![\w/.{-])tools/(\w+\.py)\b")
+    root_file = re.compile(
+        r"(?<![\w/.{*-])[A-Z][A-Za-z0-9_]*\.(?:md|jsonl|json)\b"
+    )
+    docs = [
+        repo / name
+        for name in ("README.md", "SURVEY.md", "BASELINE.md", "SCALE.md",
+                     "PLANS.md", "FIXTURES.md", "TESTDATA.md",
+                     ".claude/skills/verify/SKILL.md")
+    ] + sorted((repo / "data_wrangler_spark").rglob("*.py"))
+    dangling = []
+    for doc in docs:
+        for n, line in enumerate(doc.read_text().splitlines(), 1):
+            where = f"{doc.relative_to(repo)}:{n}"
+            for m in tool.finditer(line):
+                if not (repo / "tools" / m.group(1)).exists():
+                    dangling.append(f"{where}: {m.group(0)}")
+            for m in root_file.finditer(line):
+                if not (repo / m.group(0)).exists():
+                    dangling.append(f"{where}: {m.group(0)}")
+    assert not dangling, f"references to missing files: {dangling}"
+
+
 def test_every_cap_constant_has_a_live_audit_op():
     """VERDICT r14 #8: each execution-bounding cap constant must map
     to a registered, exact-oracle accounting operator that NAMES the

@@ -90,3 +90,23 @@ def test_scratch_root_is_spelled_only_in_scratch_module():
                     if path_literal.search(line):
                         offenders.append(f"{os.path.relpath(fp, PKG)}:{n}")
     assert offenders == []
+
+
+def test_no_py_file_hard_codes_the_checkout_path():
+    """No tracked `.py` file names the absolute checkout directory:
+    tools, examples and tests derive the repo root from `__file__`, so
+    a checkout elsewhere never reads or writes into another one."""
+    repo = os.path.dirname(PKG)
+    literal = "/root" + "/repo"
+    offenders = []
+    for root, dirs, files in os.walk(repo):
+        dirs[:] = [d for d in dirs if not d.startswith(".") and d != "__pycache__"]
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            fp = os.path.join(root, f)
+            with open(fp, encoding="utf-8", errors="replace") as fh:
+                for n, line in enumerate(fh, 1):
+                    if literal in line:
+                        offenders.append(f"{os.path.relpath(fp, repo)}:{n}")
+    assert offenders == []

@@ -427,19 +427,20 @@ def test_stream_quarantine_equals_gate_union(spark, sf_dir):
 def test_stream_quarantine_wide_trigger_same_output(
     spark, sf_dir, monkeypatch
 ):
-    """VERDICT r16 #8: the trigger width is env-parameterized. The
+    """VERDICT r16 #8: the trigger width is a module constant. The
     wide mode (both staged files in ONE micro-batch) must emit the
     identical (doc, reason) set as the default 2-batch mode — both
     gates are stateless per row and dropDuplicates is batch-boundary-
     blind. The default stays 1 so the restart/resume proof keeps its
     2-batch shape."""
+    import data_wrangler_spark.streaming.windows as W
     from data_wrangler_spark.registry import REGISTRY
 
     base = {
         (r.doc_id, r.reason)
         for r in REGISTRY["q_stream_quarantine"].run(spark, sf_dir).collect()
     }
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_TRIGGER_FILES", "2")
+    monkeypatch.setattr(W, "STREAM_TRIGGER_FILES", 2)
     wide = {
         (r.doc_id, r.reason)
         for r in REGISTRY["q_stream_quarantine"].run(spark, sf_dir).collect()

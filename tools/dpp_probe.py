@@ -14,6 +14,8 @@ plain tree whose leaf metrics we read; DPP itself is independent of
 AQE (spark.sql.optimizer.dynamicPartitionPruning.enabled defaults on).
 
 Usage: python tools/dpp_probe.py [sf_dir]   (default .scratch/sfprobe/f10)
+The default is the ×10 fixture DPP_F10.json was measured on; no tool
+in the repo derives it, so pass any generated sf dir instead.
 Prints one JSON line per query for SCALE.md / PLANS.md.
 """
 
@@ -24,7 +26,7 @@ import json
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _scan_leaf_metrics(df) -> list[dict]:

@@ -8,10 +8,12 @@ plan shapes without running Spark.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 AUDIT = [
     ("q_filter_eq", "predicate pushdown to parquet"),
@@ -220,9 +222,9 @@ def main() -> None:
     # probe artifact exists, render the measured file counts — plan
     # shape says the scan CAN prune, these metrics say it DID.
     import json as _json
-    import os as _os
 
-    if _os.path.exists("/root/repo/DPP_F10.json"):
+    dpp = os.path.join(REPO, "DPP_F10.json")
+    if os.path.exists(dpp):
         out.append("## Runtime pruning proof at f10 (tools/dpp_probe.py → DPP_F10.json)\n")
         out.append(
             "FileSourceScan's own SQL metrics after execution: `numFiles` is\n"
@@ -230,7 +232,7 @@ def main() -> None:
             "would have read before runtime (dynamic) pruning.\n"
         )
         out.append("```")
-        with open("/root/repo/DPP_F10.json") as fh:
+        with open(dpp) as fh:
             for line in fh:
                 rec = _json.loads(line)
                 disk = rec["disk_files_per_partition"]
@@ -258,7 +260,7 @@ def main() -> None:
                         + f" pruningTime={m.get('pruningTime', 0)}ms"
                     )
         out.append("```\n")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("wrote PLANS.md")
 

@@ -2,9 +2,8 @@
 
 Runs each named query once unmeasured (warmup) then N measured runs
 (noop sink, pinned frames released after the measured block), and
-prints median + spread. The per-query complement of time_sweep.py's
-single-pass triage — use this to claim before/after numbers for one
-operator without the sweep's ordering/contention noise.
+prints median + spread. Use this to claim before/after numbers for
+one operator without a full sweep's ordering/contention noise.
 
 Usage: python tools/isolate.py [-n RUNS] QUERY [QUERY ...]
        (data dir from $SPARK_GRAFT_SF_DIR, default /root/testdata/sf0.1)

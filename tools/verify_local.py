@@ -26,7 +26,8 @@ import traceback
 
 import duckdb
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -216,7 +217,7 @@ def main() -> int:
     results, _, n_fail, _ = sweep(spark, sf_dir, only)
     # scratch artifact (gitignored): stamped with what was actually
     # checked so a stale copy can't read as coverage evidence
-    with open("/root/repo/CORRECTNESS_LOCAL.json", "w") as f:
+    with open(os.path.join(REPO, "CORRECTNESS_LOCAL.json"), "w") as f:
         json.dump(
             {"sf_dir": sf_dir, "only": sorted(only), "results": results},
             f,

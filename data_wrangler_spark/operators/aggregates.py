@@ -288,16 +288,15 @@ def q_agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS via Spark SQL (the DataFrame API has no
     direct equivalent — rollup/cube are its fixed special cases)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    li.createOrReplaceTempView("lineitem")
     return spark.sql(
         """
         SELECT l_returnflag, l_linestatus,
                CAST(SUM(CAST(l_quantity AS DECIMAL(22,6))) AS DOUBLE) AS sum_qty,
                COUNT(*) AS n_rows
-        FROM lineitem
+        FROM {li}
         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
-        """
+        """,
+        li=load_table(spark, sf_dir, "lineitem"),
     )
 
 

@@ -484,12 +484,13 @@ def kmeans_fit_mat(spark: SparkSession, sf_dir: str, k: int = KM_K, fit_filter=N
     # work): the old probe collected up to KM_FIT_LOCAL_MAX+1 full
     # dim-64 int64 rows (~130 MB) to the driver even when the verdict
     # was "too big — go distributed", a pure waste on exactly the
-    # 100 TB path. The limit+count job still materializes the cache
-    # but moves one long; the local route then collects from the
-    # warm cache (one extra tiny job on the SMALL-side path only).
+    # 100 TB path. The limit+count job moves one long and caches only
+    # the partitions the limit reaches; the local route's fetch then
+    # reads (and fills) the rest of the cache. The fetch goes through
+    # Arrow: packed int64 columns, not one Row object per vector.
     n_probe = v_fit.limit(KM_FIT_LOCAL_MAX + 1).count()
     if n_probe <= KM_FIT_LOCAL_MAX:
-        cl_ids, cmat = _km_fit_local(v_fit.collect(), k)
+        cl_ids, cmat = _km_fit_local(v_fit.select("vec_id", "xs").toArrow(), k)
         return v_arr, cl_ids, cmat
     cl_ids, cmat = _km_seed(v_fit, k)
     # the iteration loop is shuffle-free (per-task partials collect
@@ -516,20 +517,22 @@ def _km_seed(v_fit: DataFrame, k: int):
     return cl_ids, cmat
 
 
-def _km_fit_local(rows, k: int):
-    """Driver-numpy mirror of (_km_seed + _km_loop) over a collected
-    fit set: the SAME md5 seed key (hashlib replay of _md5_long), the
-    same first-minimum argmin over the cl-ascending centroid matrix,
-    the same exact-int64 sums and truncating-division means, the same
-    empty-cluster drops — so both paths land on the identical
-    fixpoint (tests/test_embeddings_ext.py pins matrix equality).
+def _km_fit_local(tbl, k: int):
+    """Driver-numpy mirror of (_km_seed + _km_loop) over the fit set
+    fetched as an Arrow table (vec_id, xs): the SAME md5 seed key
+    (hashlib replay of _md5_long), the same first-minimum argmin over
+    the cl-ascending centroid matrix, the same exact-int64 sums and
+    truncating-division means, the same empty-cluster drops — so both
+    paths land on the identical fixpoint (tests/test_embeddings_ext.py
+    pins matrix equality).
     Distances use the |x|²+|c|²−2x·c expansion (int64-exact: every
     term < 2^47 at the 2^20 quantizer and dim 64) so memory is
     O(n·K), not O(n·K·dim)."""
     import hashlib
 
-    ids = np.array([int(r["vec_id"]) for r in rows], dtype=np.int64)
-    X = np.array([r["xs"] for r in rows], dtype=np.int64)
+    ids = tbl.column("vec_id").to_numpy().astype(np.int64)
+    xs = tbl.column("xs").combine_chunks()
+    X = xs.flatten().to_numpy().astype(np.int64).reshape(len(ids), -1)
     sk = np.array(
         [
             int(hashlib.md5(str(i).encode()).hexdigest()[:15], 16)

@@ -271,13 +271,13 @@ def q_subquery_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     Expressed via Spark SQL so Catalyst plans the scalar subquery as
     a broadcast single-row value (l_quantity is integer-valued, so
     SUM/COUNT is exact in both engines)."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     return spark.sql(
         """
         SELECT l_orderkey, l_linenumber, l_quantity
-        FROM lineitem
-        WHERE l_quantity > (SELECT SUM(l_quantity) / COUNT(*) FROM lineitem) * 1.5
-        """
+        FROM {li}
+        WHERE l_quantity > (SELECT SUM(l_quantity) / COUNT(*) FROM {li}) * 1.5
+        """,
+        li=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -696,25 +696,24 @@ def q_dedup_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_subquery_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated EXISTS / NOT EXISTS: customers with at least one
     open order and no finished ones. Declared through the SQL path
-    (temp views + spark.sql) so Catalyst's subquery decorrelation is
-    what's on trial: both subqueries rewrite to one left-semi and one
-    left-anti hash join on o_custkey — no per-row re-execution, the
-    classic correlated-subquery trap the reference's backing RDBMSs
-    handle with the same rewrite."""
-    from data_wrangler_spark.catalog import Catalog
-
-    Catalog(spark, sf_dir).register_views(("customer", "orders"))
+    (spark.sql over DataFrame arguments) so Catalyst's subquery
+    decorrelation is what's on trial: both subqueries rewrite to one
+    left-semi and one left-anti hash join on o_custkey — no per-row
+    re-execution, the classic correlated-subquery trap the
+    reference's backing RDBMSs handle with the same rewrite."""
     return spark.sql(
         """
         SELECT c.c_custkey, c.c_name, c.c_acctbal
-        FROM customer c
+        FROM {customer} c
         WHERE EXISTS (
-          SELECT 1 FROM orders o
+          SELECT 1 FROM {orders} o
           WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'O')
           AND NOT EXISTS (
-          SELECT 1 FROM orders o
+          SELECT 1 FROM {orders} o
           WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'F')
-        """
+        """,
+        customer=load_table(spark, sf_dir, "customer"),
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -739,20 +738,19 @@ def q_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     physically one shuffle — the same plan the window formulation
     would produce, but exercising the SQL feature surface users
     migrate with."""
-    from data_wrangler_spark.catalog import Catalog
-
-    Catalog(spark, sf_dir).register_views(("customer", "orders"))
     return spark.sql(
         """
         SELECT c.c_custkey, t.o_orderkey, t.o_totalprice
-        FROM customer c,
+        FROM {customer} c,
         LATERAL (
           SELECT o_orderkey, o_totalprice
-          FROM orders o
+          FROM {orders} o
           WHERE o.o_custkey = c.c_custkey
           ORDER BY o_totalprice DESC, o_orderkey
           LIMIT 2) t
-        """
+        """,
+        customer=load_table(spark, sf_dir, "customer"),
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -906,12 +904,10 @@ def q_recursive_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoints each step like the hand-built iterative operators.
     Unbounded-depth graphs still belong on the label-propagation
     path (q_dedup_cluster) where convergence is data-dependent."""
-    c = load_table(spark, sf_dir, "customer")
-    view = "rh_customer"
-    c.select("c_custkey", "c_acctbal").createOrReplaceTempView(view)
-    return spark.sql(f"""
+    return spark.sql(
+        """
       WITH RECURSIVE walk(custkey, node, depth) AS (
-        SELECT c_custkey, c_custkey, 0 FROM {view}
+        SELECT c_custkey, c_custkey, 0 FROM {c}
         UNION ALL
         SELECT custkey, div(node, 10), depth + 1 FROM walk WHERE node >= 10),
       resolved AS (
@@ -923,6 +919,8 @@ def q_recursive_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
              COUNT(*) AS n_customers,
              CAST(SUM(CAST(c.c_acctbal AS DECIMAL(22,6))) AS DOUBLE)
                AS sum_acctbal
-      FROM resolved r JOIN {view} c ON c.c_custkey = r.custkey
+      FROM resolved r JOIN {c} c ON c.c_custkey = r.custkey
       GROUP BY r.depth, r.root
-    """)
+    """,
+        c=load_table(spark, sf_dir, "customer").select("c_custkey", "c_acctbal"),
+    )

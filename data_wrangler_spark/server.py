@@ -744,16 +744,16 @@ class GatewayServer:
 
     # Registered queries verified free of session-global side
     # effects. Persisted scratch artifacts are safe under concurrency
-    # (scratch.materialize locks per path); what still forces the
-    # rest through _run_lock is:
-    # - the session-global `spark.sql.shuffle.partitions` writes in
-    #   streaming/windows.py's _run_stream and _run_stream_to_dir and
-    #   in session.shuffle_width (a query planned inside the window
-    #   inherits the narrowed width);
-    # - fixed-name temp views (q_agg_grouping_sets and
-    #   q_subquery_scalar both register "lineitem");
-    # - streaming/windows.py _stage_parts' per-call rmtree-and-restage
-    #   of a stream input dir shared by name.
+    # (scratch.materialize locks per path), stream runs stage, sink and
+    # checkpoint under per-call names, and SQL-path builders register
+    # no named views. What still forces the rest through _run_lock is
+    # the session-global `spark.sql.shuffle.partitions` write: in
+    # streaming/windows.py's _run_stream it lasts for the stream's
+    # start(), in session.shuffle_width for a whole loop, and a query
+    # planned inside either window inherits the narrowed width. The
+    # lock also keeps the writer's ops off the readers' cores (see
+    # ROADMAP item 3 for the measured cost of serving one more name
+    # beside the writer).
     # Members serve CONCURRENTLY under the per-thread pin list
     # (functions/distributed.py): each request thread owns a disjoint
     # build-pin → materialize → release lifecycle, so parallel binds
@@ -808,8 +808,7 @@ class GatewayServer:
         binds = self._coerce_binds(spec, q)
         # Pins are per-thread and scratch artifacts are published
         # under a per-path lock; what still REQUIRES serialization is
-        # the session-global conf writes, fixed-name temp views and
-        # per-call stream-input restaging listed at _CONCURRENT_SAFE.
+        # the session-global conf writes listed at _CONCURRENT_SAFE.
         # The explicit _CONCURRENT_SAFE set serves in parallel; all
         # other names keep the one-at-a-time conservative default.
         # /q, /dt and /db stay concurrent — they touch neither pins

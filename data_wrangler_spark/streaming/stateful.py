@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from data_wrangler_spark.registry import register
-from data_wrangler_spark.streaming.windows import _run_stream, _staged_events
+from data_wrangler_spark.streaming.windows import _event_parts, _run_stream
 
 
 def _update_user_totals(
@@ -67,21 +67,18 @@ def q_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final state. Because the fold is exact integer arithmetic,
     the final state provably equals the batch GROUP BY — giving this
     streaming-only operator a SQL oracle."""
-    base, ev = _staged_events(spark, sf_dir, "stateful", split_frac=0.5)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(base)
-        .groupBy("user_id")
-        .applyInPandasWithState(
+    out = _run_stream(
+        "q_stream_stateful",
+        _event_parts(spark, sf_dir, split_frac=0.5),
+        lambda src: src.groupBy("user_id").applyInPandasWithState(
             _update_user_totals,
             outputStructType="user_id bigint, n_events bigint, total_cents bigint",
             stateStructType="n_events bigint, total_cents bigint",
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        ),
+        output_mode="update",
     )
-    out = _run_stream(stream, "q_stream_stateful", output_mode="update")
     # one emission per touched batch → keep the final (max) state
     final = out.groupBy("user_id").agg(F.max("n_events").alias("n_events"),
                                        F.max("total_cents").alias("tc"))
@@ -161,12 +158,10 @@ def q_stream_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     exists; state is two bigints per user — at 100 TB this is the
     RocksDB-provider state-store case (streaming/windows.py notes),
     sharded by the user_id shuffle."""
-    base, ev = _staged_events(spark, sf_dir, "asof_enrich", split_frac=0.5)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(base)
-        .filter(F.col("event_type").isin("click", "purchase"))
+    return _run_stream(
+        "q_stream_asof_enrich",
+        _event_parts(spark, sf_dir, split_frac=0.5),
+        lambda src: src.filter(F.col("event_type").isin("click", "purchase"))
         .groupBy("user_id")
         .applyInPandasWithState(
             _asof_enrich,
@@ -177,6 +172,5 @@ def q_stream_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             stateStructType="ref_event_id bigint, ref_cents bigint",
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        ),
     )
-    return _run_stream(stream, "q_stream_asof_enrich", output_mode="append")

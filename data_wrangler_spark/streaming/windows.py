@@ -9,11 +9,19 @@ built on Structured Streaming semantics:
   Spark guarantees identical results for the windowed aggregation, so
   these run in batch here (oracle-checkable) and
   tests/test_streaming.py pins batch ≡ readStream parity;
-- `q_stream_watermark` and `q_stream_dedup` run REAL streams (file
-  source → availableNow trigger → memory sink) because their
-  semantics — state eviction, append-mode emission,
-  dedup-within-watermark — only exist in streaming. Deterministic by
-  construction: fixed file splits, fixed watermark delays.
+- the other `q_stream_*` ops (here and in streaming/stateful.py) run
+  REAL streams because their semantics — state eviction, append-mode
+  emission, dedup-within-watermark, stream-static probes — only exist
+  in streaming. Deterministic by construction: fixed file splits,
+  fixed watermark delays.
+
+Every real stream goes through one runner, `_run_stream`: it stages
+the builder's input parts as a file stream (`_file_stream`), applies
+the builder's plan, checks the UTC guard, clamps the state-shard count
+for the length of `start()`, drives the stream with an availableNow
+trigger into a memory sink, a foreachBatch function or a durable
+parquet dir, and removes what a non-durable run staged, checkpointed
+or registered.
 
 Scale notes: streaming state (session windows, dedup keys) lives in
 the state store — at scale use the RocksDB provider
@@ -28,8 +36,10 @@ from __future__ import annotations
 
 import os
 import shutil
+import threading
 import time
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -167,14 +177,70 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# True-streaming runs (file source → availableNow → memory sink)
+# True-streaming runs: stage → file stream → availableNow → sink → clean up
 # ---------------------------------------------------------------------------
 
-def _run_stream(stream_df, query_name: str, output_mode: str = "append") -> DataFrame:
-    """Drive a bounded stream to completion synchronously and return
-    the sink contents as a batch DataFrame."""
-    spark = stream_df.sparkSession
-    # The ntz→timestamp→ntz round trip in every streaming builder is a
+# Serializes the shard-clamp window below: a stream that starts while
+# another start() holds the narrowed width would read the narrowed value
+# as "the caller's" and restore it.
+_START_LOCK = threading.Lock()
+
+# last executed micro-batch plan, for the plan audit (see _run_stream)
+_LAST_STREAM_PLAN: str | None = None
+
+
+def _file_stream(parts: list, src_dir: str, max_files: int) -> DataFrame:
+    """Stage each DataFrame of ``parts`` as one parquet file in
+    ``src_dir``, numbered after the files already there, and return the
+    file stream over the directory. Each file is written through a
+    hidden `_tmp_` sibling dir and gets mtime now + its number:
+    strictly increasing mtimes give a deterministic micro-batch order
+    at ``max_files`` files per trigger."""
+    os.makedirs(src_dir, exist_ok=True)
+    n = sum(not f.startswith("_") for f in os.listdir(src_dir))
+    for i, p in enumerate(parts, n):
+        dst = os.path.join(src_dir, f"{i:03d}.parquet")
+        tmp = os.path.join(src_dir, f"_tmp_{i:03d}")
+        p.coalesce(1).write.parquet(tmp)
+        part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
+        shutil.move(os.path.join(tmp, part), dst)
+        shutil.rmtree(tmp, ignore_errors=True)
+        ts = time.time() + i
+        os.utime(dst, (ts, ts))
+    return (
+        parts[0].sparkSession.readStream.schema(parts[0].schema)
+        .option("maxFilesPerTrigger", max_files)
+        .parquet(src_dir)
+    )
+
+
+def _run_stream(
+    name: str,
+    parts: list,
+    plan: Callable[[DataFrame], DataFrame] | None = None,
+    *,
+    output_mode: str = "append",
+    max_files: int = 1,
+    foreach_batch: Callable[[DataFrame, int], None] | None = None,
+    durable_root: str | None = None,
+) -> DataFrame | None:
+    """Stage ``parts`` as a file stream, apply ``plan`` to it and drive
+    the result to completion (availableNow) into one of three sinks:
+
+    - default: a memory sink, returned as a batch DataFrame;
+    - ``foreach_batch``: that function per micro-batch; returns None;
+    - ``durable_root``: the restartable form. Input is staged into
+      ``<root>/src`` after the files earlier runs left there, output is
+      an exactly-once parquet sink at ``<root>/out`` and the checkpoint
+      lives at ``<root>/ckpt``, so a second call resumes the first.
+      Returns None.
+
+    Memory and foreachBatch runs keep nothing: the staged input and the
+    checkpoint are removed when the stream ends, and the memory sink's
+    temp view is dropped once the returned DataFrame has resolved it
+    (the rows stay reachable through that DataFrame's plan)."""
+    spark = parts[0].sparkSession
+    # The ntz→timestamp→ntz round trip in the streaming builders is a
     # wall-clock identity ONLY at session timeZone=UTC. The engine pins
     # it (session.RUNTIME_CONFS), but apply_runtime_confs is best-
     # effort — on a session whose conf is locked elsewhere, window
@@ -186,27 +252,44 @@ def _run_stream(stream_df, query_name: str, output_mode: str = "append") -> Data
             f"(got {tz!r}): timestamp_ntz round-trips would shift window "
             f"bounds; unlock the conf or set it to UTC before running"
         )
-    sink = f"{query_name}_{uuid.uuid4().hex[:8]}"
-    ckpt = os.path.join(SCRATCH, "ckpt", sink)
-    # The state-store shard count is frozen from shuffle partitions at
-    # the first checkpoint; for these bounded few-batch streams, 32
-    # shards are pure per-batch maintenance overhead (measured 12.4 s
-    # -> 3.7 s on the stream-stream join at 8). Production streams
-    # size shards to peak rate BEFORE first launch — this clamp is
-    # per-query (fresh checkpoint each run), so it encodes "size to
-    # the data", not a global downsize.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    clamp = str(min(int(prev), 8))
-    spark.conf.set("spark.sql.shuffle.partitions", clamp)
+    run_id = f"{name}_{uuid.uuid4().hex[:8]}"
+    if durable_root is None:
+        src_dir = os.path.join(SCRATCH, "stream_in", run_id)
+        ckpt = os.path.join(SCRATCH, "ckpt", run_id)
+    else:
+        src_dir = os.path.join(durable_root, "src")
+        ckpt = os.path.join(durable_root, "ckpt")
+    memory = foreach_batch is None and durable_root is None
     try:
-        q = (
-            stream_df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(sink)
+        src = _file_stream(parts, src_dir, max_files)
+        w = (
+            (src if plan is None else plan(src))
+            .writeStream.outputMode(output_mode)
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
-            .start()
         )
+        if foreach_batch is not None:
+            w = w.foreachBatch(foreach_batch)
+        elif durable_root is not None:
+            w = w.format("parquet").option("path", os.path.join(durable_root, "out"))
+        else:
+            w = w.format("memory").queryName(run_id)
+        # The state-store shard count is frozen from shuffle partitions
+        # at the first checkpoint; for these bounded few-batch streams,
+        # 32 shards are pure per-batch maintenance overhead (measured
+        # 12.4 s -> 3.7 s on the stream-stream join at 8). Production
+        # streams size shards to peak rate BEFORE first launch — this
+        # clamp is per-query, so it encodes "size to the data", not a
+        # global downsize. The stream runs on a clone of the session
+        # taken inside start(), so the caller's width is back as soon
+        # as start() returns.
+        with _START_LOCK:
+            prev = spark.conf.get("spark.sql.shuffle.partitions")
+            spark.conf.set("spark.sql.shuffle.partitions", str(min(int(prev), 8)))
+            try:
+                q = w.start()
+            finally:
+                spark.conf.set("spark.sql.shuffle.partitions", prev)
         q.awaitTermination()
         # stash the executed micro-batch physical plan so
         # tools/explain_audit.py can pin the stream-static join and
@@ -217,13 +300,14 @@ def _run_stream(stream_df, query_name: str, output_mode: str = "append") -> Data
             _LAST_STREAM_PLAN = q._jsq.explainInternal(False)
         except Exception:
             _LAST_STREAM_PLAN = None
+        # resolved here, before the finally drops the view
+        return spark.table(run_id) if memory else None
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(sink)
-
-
-# last executed micro-batch plan, for the plan audit (see _run_stream)
-_LAST_STREAM_PLAN: str | None = None
+        if durable_root is None:
+            if memory:
+                spark.catalog.dropTempView(run_id)
+            shutil.rmtree(src_dir, ignore_errors=True)
+            shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def _ts_bounds(spark: SparkSession, sf_dir: str, ev: DataFrame):
@@ -284,56 +368,22 @@ def _ts_bounds(spark: SparkSession, sf_dir: str, ev: DataFrame):
         return lo, hi
 
 
-def _stage_parts(tag_base: str, parts: list) -> str:
-    """Stage pre-split DataFrames as one parquet file each, with
-    strictly increasing mtimes → deterministic micro-batch order.
-    Rebuilds UNCONDITIONALLY: staging is cheap, and any existence-
-    based cache here would replay stale fixture bytes against a
-    fresh oracle after the source parquet is regenerated (the mtime
-    trap every scratch_tag-keyed cache avoids by keying; a stream
-    input is rebuilt instead of keyed because its content also
-    depends on the split policy of the calling operator)."""
-    base = os.path.join(SCRATCH, "stream_in", tag_base)
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base, exist_ok=True)
-    for i, p in enumerate(parts):
-        _stage_file(p, os.path.join(base, f"{i:03d}.parquet"), i)
-    return base
-
-
-def _stage_file(df: DataFrame, dst: str, bump: int) -> None:
-    """Write ``df`` as the single parquet file ``dst`` (through a
-    hidden `_tmp_` sibling dir) with mtime now + ``bump`` seconds:
-    strictly increasing bumps give a deterministic micro-batch order
-    to a file stream reading ``dst``'s directory."""
-    tmp = os.path.join(os.path.dirname(dst), f"_tmp_{os.path.basename(dst)}")
-    df.coalesce(1).write.parquet(tmp)
-    part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-    shutil.move(os.path.join(tmp, part), dst)
-    shutil.rmtree(tmp, ignore_errors=True)
-    ts = time.time() + bump
-    os.utime(dst, (ts, ts))
-
-
-def _staged_events(spark: SparkSession, sf_dir: str, tag: str, n_copies: int = 1,
-                   split_frac: float | None = None) -> tuple[str, DataFrame]:
-    """Stage the events table into scratch parquet files that a file
-    stream will consume as separate micro-batches (one file per
-    trigger, ordered by modification time)."""
+def _event_parts(spark: SparkSession, sf_dir: str, n_copies: int = 1,
+                 split_frac: float | None = None) -> list[DataFrame]:
+    """The events table as the micro-batches of a stream: split at the
+    ``split_frac`` time point into two parts, or ``n_copies`` whole
+    copies."""
     ev = load_table(spark, sf_dir, "events")
+    if split_frac is None:
+        return [ev] * n_copies
+    lo, hi = _ts_bounds(spark, sf_dir, ev)
+    cut = lo + (hi - lo) * split_frac
+    return [ev.filter(F.col("ts") < cut), ev.filter(F.col("ts") >= cut)]
 
-    parts: list[DataFrame] = []
-    if split_frac is not None:
-        lo, hi = _ts_bounds(spark, sf_dir, ev)
-        cut = lo + (hi - lo) * split_frac
-        parts = [ev.filter(F.col("ts") < cut), ev.filter(F.col("ts") >= cut)]
-    else:
-        parts = [ev] * n_copies
 
-    base = _stage_parts(
-        f"{tag}_{os.path.basename(sf_dir.rstrip('/'))}", parts
-    )
-    return base, ev
+def _parity_parts(df: DataFrame, key: str = "doc_id") -> list[DataFrame]:
+    """``df`` as two deterministic micro-batches: even, then odd ``key``."""
+    return [df.filter(F.col(key) % 2 == 0), df.filter(F.col(key) % 2 == 1)]
 
 
 @register(
@@ -363,12 +413,10 @@ def q_stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose end ≤ that bound — the oracle's HAVING predicate. The
     tail-retention semantics (windows above the bound withheld) are
     additionally pinned in tests/test_streaming.py."""
-    base, ev = _staged_events(spark, sf_dir, "wm", split_frac=0.8)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(base)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
+    return _run_stream(
+        "q_stream_watermark",
+        _event_parts(spark, sf_dir, split_frac=0.8),
+        lambda src: src.withColumn("ts", F.col("ts").cast("timestamp"))
         .withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
         .agg(F.count("*").alias("n_events"), dsum("value").alias("total_value"))
@@ -378,9 +426,8 @@ def q_stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             "n_events",
             "total_value",
-        )
+        ),
     )
-    return _run_stream(stream, "q_stream_watermark")
 
 
 @register(
@@ -395,20 +442,46 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole time span, so no dedup state is ever evicted and the result
     is exactly one row per event_id — which is why this streaming-only
     operator still gets a SQL oracle (SELECT * FROM events)."""
-    base, ev = _staged_events(spark, sf_dir, "dedup", n_copies=2)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(base)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
+    out = _run_stream(
+        "q_stream_dedup",
+        _event_parts(spark, sf_dir, n_copies=2),
+        lambda src: src.withColumn("ts", F.col("ts").cast("timestamp"))
         .withWatermark("ts", "35 days")
-        .dropDuplicatesWithinWatermark(["event_id"])
+        .dropDuplicatesWithinWatermark(["event_id"]),
     )
-    out = _run_stream(stream, "q_stream_dedup")
     return out.select(
         "event_id",
         F.col("ts").cast("timestamp_ntz").alias("ts"),
         "user_id", "event_type", "value", "props",
+    )
+
+
+def _view_purchase_join(src: DataFrame, how: str = "inner") -> DataFrame:
+    """Views joined to the same user's purchases in the next 30
+    minutes, both sides read from the one event stream ``src`` under a
+    40-minute watermark (q_stream_join, q_stream_left_join)."""
+
+    def side(event_type: str, alias: str) -> DataFrame:
+        return (
+            src.filter(F.col("event_type") == event_type)
+            .withColumn("ts", F.col("ts").cast("timestamp"))
+            .withWatermark("ts", "40 minutes")
+            .alias(alias)
+        )
+
+    return side("view", "v").join(
+        side("purchase", "p"),
+        F.expr(
+            "v.user_id = p.user_id AND "
+            "p.ts >= v.ts AND p.ts <= v.ts + INTERVAL 30 MINUTES"
+        ),
+        how,
+    ).select(
+        F.col("v.event_id").alias("view_id"),
+        F.col("p.event_id").alias("purchase_id"),
+        F.col("v.user_id").alias("user_id"),
+        F.col("v.ts").cast("timestamp_ntz").alias("view_ts"),
+        F.col("p.ts").cast("timestamp_ntz").alias("purchase_ts"),
     )
 
 
@@ -438,33 +511,11 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     40min > 30min delay). At scale the join shuffles both streams on
     user_id once; skew on hot users is AQE-salted like any batch
     join."""
-    base, ev = _staged_events(spark, sf_dir, "sj", split_frac=0.7)
-
-    def side(event_type: str, alias: str) -> DataFrame:
-        return (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(base)
-            .filter(F.col("event_type") == event_type)
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-            .withWatermark("ts", "40 minutes")
-            .alias(alias)
-        )
-
-    joined = side("view", "v").join(
-        side("purchase", "p"),
-        F.expr(
-            "v.user_id = p.user_id AND "
-            "p.ts >= v.ts AND p.ts <= v.ts + INTERVAL 30 MINUTES"
-        ),
-    ).select(
-        F.col("v.event_id").alias("view_id"),
-        F.col("p.event_id").alias("purchase_id"),
-        F.col("v.user_id").alias("user_id"),
-        F.col("v.ts").cast("timestamp_ntz").alias("view_ts"),
-        F.col("p.ts").cast("timestamp_ntz").alias("purchase_ts"),
+    return _run_stream(
+        "q_stream_join",
+        _event_parts(spark, sf_dir, split_frac=0.7),
+        _view_purchase_join,
     )
-    return _run_stream(joined, "q_stream_join")
 
 
 @register(
@@ -507,34 +558,11 @@ def q_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     end of input stay withheld, which the oracle's predicate
     reproduces. Scale notes are q_stream_join's: state bounded to
     the watermark horizon per side, shuffled once on user_id."""
-    base, ev = _staged_events(spark, sf_dir, "slj", split_frac=0.7)
-
-    def side(event_type: str, alias: str) -> DataFrame:
-        return (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(base)
-            .filter(F.col("event_type") == event_type)
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-            .withWatermark("ts", "40 minutes")
-            .alias(alias)
-        )
-
-    joined = side("view", "v").join(
-        side("purchase", "p"),
-        F.expr(
-            "v.user_id = p.user_id AND "
-            "p.ts >= v.ts AND p.ts <= v.ts + INTERVAL 30 MINUTES"
-        ),
-        "leftOuter",
-    ).select(
-        F.col("v.event_id").alias("view_id"),
-        F.col("p.event_id").alias("purchase_id"),
-        F.col("v.user_id").alias("user_id"),
-        F.col("v.ts").cast("timestamp_ntz").alias("view_ts"),
-        F.col("p.ts").cast("timestamp_ntz").alias("purchase_ts"),
+    return _run_stream(
+        "q_stream_left_join",
+        _event_parts(spark, sf_dir, split_frac=0.7),
+        lambda src: _view_purchase_join(src, "leftOuter"),
     )
-    return _run_stream(joined, "q_stream_left_join")
 
 
 @register(
@@ -556,21 +584,19 @@ def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale, refresh the dim by re-resolving the batch DataFrame per
     trigger (foreachBatch) or use a slowly-changing broadcast; the
     stream side itself never shuffles."""
-    base, ev = _staged_events(spark, sf_dir, "enrich", split_frac=0.6)
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey", "c_mktsegment"
     )
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(base)
-        .join(F.broadcast(cust), F.col("user_id") == F.col("c_custkey"))
-        .select(
+    return _run_stream(
+        "q_stream_enrich",
+        _event_parts(spark, sf_dir, split_frac=0.6),
+        lambda src: src.join(
+            F.broadcast(cust), F.col("user_id") == F.col("c_custkey")
+        ).select(
             "event_id", "user_id", "event_type", "value",
             "c_nationkey", "c_mktsegment",
-        )
+        ),
     )
-    return _run_stream(stream, "q_stream_enrich")
 
 
 @register(
@@ -592,9 +618,7 @@ def q_stream_sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     and schema fidelity all round-trip. At scale the same pattern
     fans out to partitioned-by-date layouts; compaction is a
     downstream concern."""
-    base, ev = _staged_events(spark, sf_dir, "sink", split_frac=0.5)
     out = os.path.join(SCRATCH, "sink_out", f"pq_{uuid.uuid4().hex[:8]}")
-    ckpt = os.path.join(SCRATCH, "ckpt", f"sink_{uuid.uuid4().hex[:8]}")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         (
@@ -604,16 +628,11 @@ def q_stream_sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(out)
         )
 
-    q = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(base)
-        .writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    _run_stream(
+        "q_stream_sink_parquet",
+        _event_parts(spark, sf_dir, split_frac=0.5),
+        foreach_batch=write_batch,
     )
-    q.awaitTermination()
     return spark.read.parquet(out)
 
 
@@ -650,7 +669,6 @@ def q_stream_upsert_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern with the directory as the transaction boundary."""
     from pyspark.sql import Window as W
 
-    base, ev = _staged_events(spark, sf_dir, "upsert", split_frac=0.5)
     state_root = os.path.join(SCRATCH, "upsert_state", uuid.uuid4().hex[:8])
     os.makedirs(state_root, exist_ok=True)
     latest: dict[str, str | None] = {"path": None}
@@ -679,17 +697,11 @@ def q_stream_upsert_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         merged.write.mode("overwrite").parquet(vdir)
         latest["path"] = vdir
 
-    ckpt = os.path.join(SCRATCH, "ckpt", f"upsert_{uuid.uuid4().hex[:8]}")
-    q = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(base)
-        .writeStream.foreachBatch(upsert_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    _run_stream(
+        "q_stream_upsert_state",
+        _event_parts(spark, sf_dir, split_frac=0.5),
+        foreach_batch=upsert_batch,
     )
-    q.awaitTermination()
     assert latest["path"] is not None
     return spark.read.parquet(latest["path"])
 
@@ -731,7 +743,6 @@ def q_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     RocksDB-state windowed aggregation (q_stream_tumbling) solves
     the same problem engine-side; this foreachBatch form is what you
     use when the VIEW must live in an external table."""
-    base, ev = _staged_events(spark, sf_dir, "rollup", split_frac=0.5)
     state_root = os.path.join(SCRATCH, "rollup_state", uuid.uuid4().hex[:8])
     os.makedirs(state_root, exist_ok=True)
 
@@ -771,17 +782,11 @@ def q_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         vdir = os.path.join(state_root, f"v{batch_id:05d}")
         merged.write.mode("overwrite").parquet(vdir)
 
-    ckpt = os.path.join(SCRATCH, "ckpt", f"rollup_{uuid.uuid4().hex[:8]}")
-    q = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(base)
-        .writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    _run_stream(
+        "q_stream_rollup",
+        _event_parts(spark, sf_dir, split_frac=0.5),
+        foreach_batch=merge_batch,
     )
-    q.awaitTermination()
     final = _version_before(10**9)
     assert final is not None
     rollup = spark.read.parquet(final)
@@ -857,21 +862,10 @@ def q_stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text"
     )
-    # two deterministic halves by doc_id parity → two micro-batches;
-    # staged via the shared helper (rebuilds each run — no stale cache)
-    base = _stage_parts(
-        f"decontam_{os.path.basename(sf_dir.rstrip('/'))}",
-        [
-            docs.filter(F.col("doc_id") % 2 == 0),
-            docs.filter(F.col("doc_id") % 2 == 1),
-        ],
-    )
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(base)
-        .filter(
+    return _run_stream(
+        "q_stream_decontaminate",
+        _parity_parts(docs),
+        lambda src: src.filter(
             (F.col("source") != CONTAM_EVAL_SOURCE)
             & (F.col("doc_id") % 10 >= INC_EXIST_PCT)
         )
@@ -884,9 +878,8 @@ def q_stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .join(evset, "g", "left_semi")
         .select("doc_id", "source")
-        .dropDuplicates(["doc_id"])
+        .dropDuplicates(["doc_id"]),
     )
-    return _run_stream(stream, "q_stream_decontaminate")
 
 
 
@@ -958,13 +951,6 @@ def q_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     new = docs.filter(F.col("doc_id") % 10 >= INC_EXIST_PCT)
-    base = _stage_parts(
-        f"dedup_ingest_{os.path.basename(sf_dir.rstrip('/'))}",
-        [
-            new.filter(F.col("doc_id") % 2 == 0),
-            new.filter(F.col("doc_id") % 2 == 1),
-        ],
-    )
 
     # static verify side: the history shingle sets PERSISTED beside
     # the band index (the stream side's set rides the stream row) —
@@ -981,40 +967,37 @@ def q_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist()
     )
 
-    sigs = (
-        spark.readStream.schema(new.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(base)
-        .select(
+    # size() is int32 — promote before the ×1e6 (ANSI overflow trap)
+    ni = F.size(F.array_intersect("sa", "sb")).cast("long")
+
+    def plan(src: DataFrame) -> DataFrame:
+        sigs = src.select(
             "doc_id", shingles_from_words(words("text"), 3).alias("sh")
-        )
-        .select(
+        ).select(
             "doc_id",
             sig_expr(F.col("sh")).alias("sig"),
             F.array_distinct("sh").alias("sa"),
         )
-    )
-    # size() is int32 — promote before the ×1e6 (ANSI overflow trap)
-    ni = F.size(F.array_intersect("sa", "sb")).cast("long")
-    stream = (
-        # compact band keys (r17): the stream-static probe joins on
-        # the 4 raw minhash longs, matching the fmt=l4 index
-        _band_table(sigs, carry=("sa",), compact=True)
-        .join(index_g.withColumnRenamed("doc_id", "doc_old"), list(BAND_KEY))
-        .join(shd_old, "doc_old")
-        .withColumn("_ni", ni)
-        .select(
-            F.col("doc_id").alias("doc_new"),
-            "doc_old",
-            F.expr(
-                "div(_ni * 1000000, "
-                "cast(size(sa) as bigint) + size(sb) - _ni)"
-            ).alias("jac_micro"),
+        return (
+            # compact band keys (r17): the stream-static probe joins on
+            # the 4 raw minhash longs, matching the fmt=l4 index
+            _band_table(sigs, carry=("sa",), compact=True)
+            .join(index_g.withColumnRenamed("doc_id", "doc_old"), list(BAND_KEY))
+            .join(shd_old, "doc_old")
+            .withColumn("_ni", ni)
+            .select(
+                F.col("doc_id").alias("doc_new"),
+                "doc_old",
+                F.expr(
+                    "div(_ni * 1000000, "
+                    "cast(size(sa) as bigint) + size(sb) - _ni)"
+                ).alias("jac_micro"),
+            )
+            .filter(F.col("jac_micro") >= INC_JAC_MICRO)
+            .dropDuplicates(["doc_new", "doc_old"])
         )
-        .filter(F.col("jac_micro") >= INC_JAC_MICRO)
-        .dropDuplicates(["doc_new", "doc_old"])
-    )
-    return _run_stream(stream, "q_stream_dedup_ingest")
+
+    return _run_stream("q_stream_dedup_ingest", _parity_parts(new), plan)
 
 
 def _stream_quarantine_oracle() -> str:
@@ -1068,13 +1051,6 @@ def q_stream_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "source", "text"
     )
     new = docs.filter(F.col("doc_id") % 10 >= INC_EXIST_PCT)
-    base = _stage_parts(
-        f"quarantine_{os.path.basename(sf_dir.rstrip('/'))}",
-        [
-            new.filter(F.col("doc_id") % 2 == 0),
-            new.filter(F.col("doc_id") % 2 == 1),
-        ],
-    )
     # trigger width (VERDICT r16 #8): the default of 1 file per
     # trigger keeps the 2-micro-batch shape the resume proof pins
     # (tests drive quarantine_gate_plan across a restart), while
@@ -1084,11 +1060,11 @@ def q_stream_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rows. Output is identical either way: both gates are stateless
     # per row and dropDuplicates is batch-boundary-blind (pinned by
     # tests/test_streaming.py).
-    src = spark.readStream.schema(new.schema).option(
-        "maxFilesPerTrigger", STREAM_TRIGGER_FILES
-    ).parquet(base)
     return _run_stream(
-        quarantine_gate_plan(spark, sf_dir, src), "q_stream_quarantine"
+        "q_stream_quarantine",
+        _parity_parts(new),
+        lambda src: quarantine_gate_plan(spark, sf_dir, src),
+        max_files=STREAM_TRIGGER_FILES,
     )
 
 
@@ -1247,13 +1223,6 @@ def q_stream_embed_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     new = raw.filter(F.col("vec_id") % 10 >= INC_EXIST_PCT).select(
         "vec_id", "embedding"
     )
-    base = _stage_parts(
-        f"embed_gate_{os.path.basename(sf_dir.rstrip('/'))}",
-        [
-            new.filter(F.col("vec_id") % 2 == 0),
-            new.filter(F.col("vec_id") % 2 == 1),
-        ],
-    )
 
     # static side: history members with precomputed norms; pinned so
     # later micro-batches reuse the decoded arrays (see
@@ -1274,36 +1243,36 @@ def q_stream_embed_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist()
     )
 
-    a = _with_sub(
-        spark.readStream.schema(new.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(base)
-        .select(
-            F.col("vec_id").alias("vec_new"),
-            to_double_array("embedding").alias("ea"),
-            quantize_expr(F.col("embedding")).alias("xs"),
-        )
-        .withColumn("cell", assign_cell_expr(cl_ids, cmat).cast("int"))
-        .withColumn("na", norm(F.col("ea")))
-        .drop("xs"),
-        subs,
-        "ea",
-    )
     dot_udf = make_dot_udf()
-    stream = (
-        a.join(b, ["cell", "sub"])
-        .withColumn(
-            "cos_sim",
-            round6(
-                dot_udf(F.col("ea"), F.col("eb"))
-                / (F.col("na") * F.col("nb"))
-            ),
+
+    def plan(src: DataFrame) -> DataFrame:
+        a = _with_sub(
+            src.select(
+                F.col("vec_id").alias("vec_new"),
+                to_double_array("embedding").alias("ea"),
+                quantize_expr(F.col("embedding")).alias("xs"),
+            )
+            .withColumn("cell", assign_cell_expr(cl_ids, cmat).cast("int"))
+            .withColumn("na", norm(F.col("ea")))
+            .drop("xs"),
+            subs,
+            "ea",
         )
-        .filter(F.col("cos_sim") >= SEM_TAU)
-        .select("vec_new", "vec_old", "cell", "cos_sim")
-        .dropDuplicates(["vec_new", "vec_old"])
-    )
-    return _run_stream(stream, "q_stream_embed_gate")
+        return (
+            a.join(b, ["cell", "sub"])
+            .withColumn(
+                "cos_sim",
+                round6(
+                    dot_udf(F.col("ea"), F.col("eb"))
+                    / (F.col("na") * F.col("nb"))
+                ),
+            )
+            .filter(F.col("cos_sim") >= SEM_TAU)
+            .select("vec_new", "vec_old", "cell", "cos_sim")
+            .dropDuplicates(["vec_new", "vec_old"])
+        )
+
+    return _run_stream("q_stream_embed_gate", _parity_parts(new, "vec_id"), plan)
 
 
 def _stream_dsir_oracle() -> str:
@@ -1412,13 +1381,6 @@ def q_stream_dsir_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text",
     )
     new = docs.filter(F.col("doc_id") % 10 >= INC_EXIST_PCT)
-    base = _stage_parts(
-        f"dsir_gate_{os.path.basename(sf_dir.rstrip('/'))}",
-        [
-            new.filter(F.col("doc_id") % 2 == 0),
-            new.filter(F.col("doc_id") % 2 == 1),
-        ],
-    )
 
     def bucket_of(g):
         # same estimator expression as the batch side and the oracle:
@@ -1429,11 +1391,10 @@ def q_stream_dsir_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     avg = F.floor(
         F.col("sum_lw_micro").cast("double") / F.col("n_grams")
     ).cast("long")
-    stream = (
-        spark.readStream.schema(new.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(base)
-        .select(
+    return _run_stream(
+        "q_stream_dsir_gate",
+        _parity_parts(new),
+        lambda src: src.select(
             "doc_id",
             "is_target",
             bigrams_from_words(words("text")).alias("grams"),
@@ -1452,43 +1413,8 @@ def q_stream_dsir_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("sum_lw_micro"),
         )
         .withColumn("avg_lw_micro", avg)
-        .withColumn("selected", avg > 0)
+        .withColumn("selected", avg > 0),
     )
-    return _run_stream(stream, "q_stream_dsir_gate")
-
-
-def _run_stream_to_dir(stream_df, out: str, ckpt: str) -> None:
-    """Drive a bounded stream to completion into a DURABLE parquet
-    sink + checkpoint (the restart-capable counterpart of
-    _run_stream's fresh memory sink). Same UTC guard and state-shard
-    clamp discipline; exactly-once delivery comes from the file
-    sink's own commit log, resumability from the checkpoint."""
-    spark = stream_df.sparkSession
-    tz = spark.conf.get("spark.sql.session.timeZone")
-    if tz != "UTC":
-        raise RuntimeError(
-            f"streaming operators require spark.sql.session.timeZone=UTC "
-            f"(got {tz!r})"
-        )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(min(int(prev), 8)))
-    try:
-        q = (
-            stream_df.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        global _LAST_STREAM_PLAN
-        try:
-            _LAST_STREAM_PLAN = q._jsq.explainInternal(False)
-        except Exception:
-            _LAST_STREAM_PLAN = None
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 @register(
@@ -1532,33 +1458,22 @@ def q_stream_quarantine_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         "stream_resume",
         scratch_tag(sf_dir, "documents", f"exist={INC_EXIST_PCT},split=2,v1"),
     )
-    src_dir = os.path.join(root, "src")
-    out = os.path.join(root, "out")
-    ckpt = os.path.join(root, "ckpt")
-
-    def run_once() -> None:
-        src = (
-            spark.readStream.schema(new.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        _run_stream_to_dir(quarantine_gate_plan(spark, sf_dir, src), out, ckpt)
 
     def build(_root: str) -> None:
-        os.makedirs(src_dir)
-        # day 1: even doc_ids arrive; first invocation drains them
-        _stage_file(
-            new.filter(F.col("doc_id") % 2 == 0), f"{src_dir}/000.parquet", 0
-        )
-        run_once()
-        # day 2 lands; the SECOND invocation resumes the checkpoint
-        _stage_file(
-            new.filter(F.col("doc_id") % 2 == 1), f"{src_dir}/001.parquet", 1
-        )
-        run_once()
+        # day 1: even doc_ids arrive; first invocation drains them.
+        # Day 2 lands; the SECOND invocation resumes the checkpoint
+        for day in _parity_parts(new):
+            _run_stream(
+                "q_stream_quarantine_resume",
+                [day],
+                lambda src: quarantine_gate_plan(spark, sf_dir, src),
+                durable_root=root,
+            )
 
     materialize(root, build)
-    return spark.read.schema("doc_id bigint, reason string").parquet(out)
+    return spark.read.schema("doc_id bigint, reason string").parquet(
+        os.path.join(root, "out")
+    )
 
 
 def embed_gate_resume_plan(
@@ -1718,36 +1633,28 @@ def q_stream_embed_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"it={KM_ITER},tau={SEM_TAU},cap={MAX_CELL},v1",
         ),
     )
-    src_dir = os.path.join(root, "src")
-    out = os.path.join(root, "out")
-    ckpt = os.path.join(root, "ckpt")
 
-    def run_once(members, day: int) -> None:
-        src = (
-            spark.readStream.schema(e_all.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        _run_stream_to_dir(
-            embed_gate_resume_plan(spark, src, members, cl_ids, cmat, day),
-            out,
-            ckpt,
+    def run_once(vecs: DataFrame, members: DataFrame, day: int) -> None:
+        _run_stream(
+            "q_stream_embed_resume",
+            [vecs],
+            lambda src: embed_gate_resume_plan(
+                spark, src, members, cl_ids, cmat, day
+            ),
+            durable_root=root,
         )
 
     def build(_root: str) -> None:
-        os.makedirs(src_dir)
         # day 1 arrives; run 1 probes the history-only index
-        _stage_file(e_all.filter(m10 == INC2_DAY1), f"{src_dir}/000.parquet", 0)
-        run_once(day0, 1)
+        run_once(e_all.filter(m10 == INC2_DAY1), day0, 1)
         # the index appends day-1, day-2's file lands; run 2 resumes
-        _stage_file(e_all.filter(m10 == INC2_DAY2), f"{src_dir}/001.parquet", 1)
-        run_once(day0.unionByName(day1), 2)
+        run_once(e_all.filter(m10 == INC2_DAY2), day0.unionByName(day1), 2)
 
     materialize(root, build)
     return spark.read.schema(
         "ingest_day int, vec_new bigint, vec_old bigint, "
         "cell int, cos_sim double"
-    ).parquet(out)
+    ).parquet(os.path.join(root, "out"))
 
 
 def _stream_pii_oracle() -> str:
@@ -1783,21 +1690,11 @@ def q_stream_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     the stream's), so throughput is scan-bound and a restart needs
     only the source log. Every arriving document is scrubbed
     exactly once by the file source's own commit semantics."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    base = _stage_parts(
-        f"pii_{os.path.basename(sf_dir.rstrip('/'))}",
-        [
-            docs.filter(F.col("doc_id") % 2 == 0),
-            docs.filter(F.col("doc_id") % 2 == 1),
-        ],
-    )
     from data_wrangler_spark.operators.text_analysis import pii_perdoc
 
-    src = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(base)
-    )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     return _run_stream(
-        pii_perdoc(src).filter(F.col("n_pii") > 0), "q_stream_pii_scrub"
+        "q_stream_pii_scrub",
+        _parity_parts(docs),
+        lambda src: pii_perdoc(src).filter(F.col("n_pii") > 0),
     )

@@ -92,6 +92,42 @@ def test_scratch_root_is_spelled_only_in_scratch_module():
     assert offenders == []
 
 
+def test_streams_and_temp_views_have_one_home():
+    """Every file stream is opened by streaming/windows.py's
+    `_file_stream` and started by its `_run_stream`; only catalog.py
+    registers named temp views (builders pass frames to spark.sql as
+    arguments instead)."""
+    import ast
+
+    homes = {
+        ".readStream": ("streaming/windows.py", "_file_stream"),
+        ".writeStream": ("streaming/windows.py", "_run_stream"),
+        "createOrReplaceTempView": ("catalog.py", None),
+    }
+    offenders = []
+    for root, _, files in os.walk(PKG):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            fp = os.path.join(root, f)
+            rel = os.path.relpath(fp, PKG)
+            with open(fp, encoding="utf-8") as fh:
+                src = fh.read()
+            spans = {
+                n.name: (n.lineno, n.end_lineno)
+                for n in ast.walk(ast.parse(src))
+                if isinstance(n, ast.FunctionDef)
+            }
+            for n, line in enumerate(src.splitlines(), 1):
+                for needle, (home, fn) in homes.items():
+                    if needle not in line:
+                        continue
+                    lo, hi = spans.get(fn, (0, 0)) if fn else (n, n)
+                    if rel != home or not lo <= n <= hi:
+                        offenders.append(f"{rel}:{n}: {needle}")
+    assert offenders == []
+
+
 def test_no_py_file_hard_codes_the_checkout_path():
     """No tracked `.py` file names the absolute checkout directory:
     tools, examples and tests derive the repo root from `__file__`, so

@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 from data_wrangler_spark import REGISTRY
 from data_wrangler_spark.catalog import load_table
 from data_wrangler_spark.operators.aggregates import dsum
-from data_wrangler_spark.streaming.windows import _run_stream, _staged_events
+from data_wrangler_spark.streaming.windows import _event_parts, _run_stream
 
 
 def _rows(df, keys):
@@ -19,11 +19,10 @@ def test_tumbling_batch_equals_streaming(spark, sf_dir):
     semantics, verified end-to-end."""
     batch = REGISTRY["q_stream_tumbling"].run(spark, sf_dir)
 
-    base, ev = _staged_events(spark, sf_dir, "parity", n_copies=1)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .parquet(base)
-        .groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
+    streamed = _run_stream(
+        "parity",
+        _event_parts(spark, sf_dir),
+        lambda src: src.groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
         .agg(F.count("*").alias("n_events"), dsum("value").alias("total_value"))
         .select(
             F.col("w.start").alias("w_start"),
@@ -31,20 +30,9 @@ def test_tumbling_batch_equals_streaming(spark, sf_dir):
             "event_type",
             "n_events",
             "total_value",
-        )
+        ),
+        output_mode="complete",
     )
-    import uuid
-
-    sink = f"parity_{uuid.uuid4().hex[:8]}"
-    q = (
-        stream.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    streamed = spark.table(sink)
 
     keys = ["w_start", "w_end", "event_type", "n_events", "total_value"]
     assert _rows(batch, keys) == _rows(streamed, keys)
@@ -846,3 +834,128 @@ def test_stream_dsir_gate_matches_independent_rescore_and_stateless(spark, tmp_p
             == (is_target, n, s, avg, sel)
     # content decides: en-style doc labeled xx selected, reverse not
     assert got[18].selected and not got[28].selected
+
+
+def _stream_leftovers(spark):
+    """Session temp views/tables, and the per-call scratch dirs a
+    stream run stages into or checkpoints under."""
+    import os
+
+    from data_wrangler_spark.streaming.windows import SCRATCH
+
+    dirs = {}
+    for d in ("stream_in", "ckpt"):
+        p = os.path.join(SCRATCH, d)
+        dirs[d] = set(os.listdir(p)) if os.path.isdir(p) else set()
+    return {t.name for t in spark.catalog.listTables()}, dirs
+
+
+def test_stream_calls_leave_no_views_inputs_or_checkpoints(spark, sf_dir):
+    """A memory-sink op and a foreachBatch op keep nothing once they
+    return: no temp view in the session, no staged input, no
+    checkpoint. The memory sink's rows stay readable through the
+    returned DataFrame after its view is gone."""
+    before = _stream_leftovers(spark)
+    out = REGISTRY["q_stream_dedup"].run(spark, sf_dir)
+    REGISTRY["q_stream_sink_parquet"].run(spark, sf_dir).collect()
+    assert _stream_leftovers(spark) == before
+    n_events = load_table(spark, sf_dir, "events").count()
+    assert out.count() == n_events
+
+
+def test_stream_shard_clamp_lasts_only_for_start(spark, sf_dir, tmp_path):
+    """With the session at 16 shuffle partitions, a stream records the
+    clamped width (8) in its first offset-log entry and runs its
+    micro-batches at 8, while the caller's session reads 16 again from
+    start() on: during the micro-batches and after the run returns."""
+    import json
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "16")
+    widths = []
+
+    def probe(batch_df, batch_id):
+        widths.append((
+            spark.conf.get("spark.sql.shuffle.partitions"),
+            batch_df.sparkSession.conf.get("spark.sql.shuffle.partitions"),
+        ))
+
+    try:
+        ev = load_table(spark, sf_dir, "events")
+        _run_stream(
+            "clamp_probe",
+            [ev],
+            lambda src: src.dropDuplicates(["event_id"]),
+            durable_root=str(tmp_path),
+        )
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "16"
+        with open(tmp_path / "ckpt" / "offsets" / "0") as fh:
+            meta = json.loads(fh.read().splitlines()[1])
+        assert meta["conf"]["spark.sql.shuffle.partitions"] == "8"
+
+        _run_stream("clamp_probe", [ev], foreach_batch=probe)
+        assert widths and all(w == ("16", "8") for w in widths), widths
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "16"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def test_concurrent_stream_calls_match_serial(spark, sf_dir):
+    """Two threads run the same stream op on one session at once; each
+    gets the serial result (every call stages, checkpoints and sinks
+    under its own names)."""
+    import threading
+
+    def rows():
+        out = REGISTRY["q_stream_dedup"].run(spark, sf_dir)
+        return sorted(tuple(r) for r in out.collect())
+
+    serial = rows()
+    got, errors = [None, None], []
+
+    def work(i):
+        try:
+            got[i] = rows()
+        except Exception as exc:  # surfaced by the assert below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=work, args=(i,)) for i in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert got == [serial, serial]
+
+
+def test_sql_builders_leave_caller_views_alone(spark, sf_dir):
+    """The SQL-path builders pass their frames as spark.sql DataFrame
+    arguments: the session's views are the same set afterwards, and a
+    caller's own `lineitem` / `customer` / ... views still hold what
+    the caller put there."""
+    names = ("lineitem", "rh_customer", "customer", "orders")
+    saved = {
+        t.name: spark.table(t.name)
+        for t in spark.catalog.listTables()
+        if t.isTemporary and t.name in names
+    }
+    for n in names:
+        spark.range(1).createOrReplaceTempView(n)
+    try:
+        before = {t.name for t in spark.catalog.listTables()}
+        for q in (
+            "q_agg_grouping_sets",
+            "q_subquery_scalar",
+            "q_recursive_hierarchy",
+            "q_subquery_exists",
+            "q_lateral_topn",
+        ):
+            REGISTRY[q].run(spark, sf_dir).collect()
+        assert {t.name for t in spark.catalog.listTables()} == before
+        assert all(spark.table(n).columns == ["id"] for n in names)
+    finally:
+        for n in names:
+            spark.catalog.dropTempView(n)
+        for n, df in saved.items():
+            df.createOrReplaceTempView(n)

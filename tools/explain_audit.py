@@ -148,7 +148,7 @@ STREAM_AUDIT = [
     ("q_stream_dsir_gate", "stateless codegen scoring: weight-array literal in-plan, no join, no state store"),
 ]
 
-# Durable-sink resume ops replay their plan through _run_stream_to_dir
+# Durable-sink resume ops run their plan through the same _run_stream
 # (same stash); their micro-batch evidence is the gate plan above plus
 # the file-source/file-sink commit logs exercised by the resume tests.
 

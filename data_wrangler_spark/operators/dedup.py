@@ -184,14 +184,44 @@ def _shingle_frame(d: DataFrame) -> DataFrame:
     hop's losslessness)."""
     from data_wrangler_spark.functions.text import words
 
-    return spread(d.select("doc_id", "text"), "doc_id").select(
-        "doc_id", shingles_from_words(words("text"), 3).alias("sh")
+    return (
+        spread(d.select("doc_id", "text"), "doc_id")
+        .select("doc_id", words("text").alias("w"))
+        .select("doc_id", shingles_from_words(F.col("w"), 3).alias("sh"))
     )
 
 
 def _minhash_signatures(d: DataFrame) -> DataFrame:
     """doc_id → N_MINHASH minhash values over word-3-gram shingles."""
     return _signatures_from_shingles(_shingle_frame(d))
+
+
+# The signature and band expressions are SQL text built once at
+# import: the same trees built through the Column API cost ~2,000 py4j
+# round trips (~140 ms) per query build, one F.expr costs a handful.
+# (h1, h2) per shingle: two independent md5 components (48 and 44
+# bits, h1 + 15*h2 < 2^49) of the g_j = h1 + j*h2 family.
+_HS_SQL = (
+    "transform({sh}, s -> struct("
+    "CAST(conv(substring(md5(s), 1, 12), 16, 10) AS BIGINT) AS h1, "
+    "CAST(conv(substring(md5(s), 13, 11), 16, 10) AS BIGINT) AS h2))"
+)
+_SIG_FOLDS_SQL = "array({})".format(
+    ", ".join(
+        f"array_min(transform(hs, p -> p.h1 + {j} * p.h2))" for j in range(N_MINHASH)
+    )
+)
+# identity for min: g_j = h1 + j*h2 < 2^48 + 15*2^44 < 2^49 << 2^62
+_SIG_SENTINEL = f"{2**62}L"
+_SIG_EXPR_SQL = (
+    "aggregate("
+    + _HS_SQL
+    + f", array({', '.join([_SIG_SENTINEL] * N_MINHASH)}), "
+    + "(acc, p) -> zip_with(acc, "
+    + f"array({', '.join(f'{j}L' for j in range(N_MINHASH))}), "
+    + "(m, j) -> least(m, p.h1 + j * p.h2)), "
+    + f"acc -> transform(acc, x -> CASE WHEN x < {_SIG_SENTINEL} THEN x END))"
+)
 
 
 def _signatures_from_shingles(sh: DataFrame) -> DataFrame:
@@ -207,62 +237,25 @@ def _signatures_from_shingles(sh: DataFrame) -> DataFrame:
     """
     from pyspark import StorageLevel
 
-    hs = F.transform(
-        F.col("sh"),
-        lambda s: F.struct(
-            F.conv(F.substring(F.md5(s), 1, 12), 16, 10).cast("long").alias("h1"),
-            F.conv(F.substring(F.md5(s), 13, 11), 16, 10).cast("long").alias("h2"),
-        ),
-    )
+    hs = F.expr(_HS_SQL.format(sh="sh"))
     base = pin(sh.select("doc_id", hs.alias("hs")).persist(StorageLevel.MEMORY_AND_DISK))
-
-    def g(j: int):
-        # factory keeps the transform lambda 1-arg (a j=j default
-        # would make PySpark treat it as an (element, index) lambda)
-        return lambda p: p.h1 + j * p.h2
-
-    sig = F.array(
-        *[F.array_min(F.transform(F.col("hs"), g(j))) for j in range(N_MINHASH)]
-    )
-    return base.select("doc_id", sig.alias("sig"))
+    return base.select("doc_id", F.expr(_SIG_FOLDS_SQL).alias("sig"))
 
 
-def sig_expr(sh_col) -> F.Column:
-    """Stream-safe minhash signature: the SAME (h1,h2) / g_j = h1+j·h2
-    family as _minhash_signatures, folded into ONE expression —
-    transform computes each shingle's md5 pair once, then a single
-    aggregate() zip_with-folds the element-wise minimum of the 16
-    g_j arrays. No persist barrier needed (streaming plans cannot
-    persist), and CollapseProject cannot duplicate the md5 work
-    because the whole signature is one expression tree. The finish
-    lambda maps the untouched 2^62 sentinel back to NULL so an
-    empty shingle array yields the same all-NULL signature
-    array_min produces in the batch form (parity pinned by
+def sig_expr(sh: str) -> F.Column:
+    """Stream-safe minhash signature of the shingle-array column named
+    ``sh``: the SAME (h1,h2) / g_j = h1+j·h2 family as
+    _minhash_signatures, folded into ONE expression — transform
+    computes each shingle's md5 pair once, then a single aggregate()
+    zip_with-folds the element-wise minimum of the 16 g_j arrays. No
+    persist barrier needed (streaming plans cannot persist), and
+    CollapseProject cannot duplicate the md5 work because the whole
+    signature is one expression tree. The finish lambda maps the
+    untouched 2^62 sentinel back to NULL so an empty shingle array
+    yields the same all-NULL signature array_min produces in the
+    batch form (parity pinned by
     tests/test_streaming.py::test_sig_expr_matches_batch)."""
-    hs = F.transform(
-        sh_col,
-        lambda s: F.struct(
-            F.conv(F.substring(F.md5(s), 1, 12), 16, 10).cast("long").alias("h1"),
-            F.conv(F.substring(F.md5(s), 13, 11), 16, 10).cast("long").alias("h2"),
-        ),
-    )
-    # identity for min: g_j = h1 + j*h2 < 2^48 + 15*2^44 < 2^49 << 2^62
-    sentinel = F.lit(2**62).cast("long")
-    init = F.array(*[sentinel for _ in range(N_MINHASH)])
-    js = F.array(*[F.lit(j).cast("long") for j in range(N_MINHASH)])
-    return F.aggregate(
-        hs,
-        init,
-        lambda acc, p: F.zip_with(
-            acc,
-            js,
-            lambda a, j: F.least(a, p["h1"] + j * p["h2"]),
-        ),
-        lambda acc: F.transform(
-            acc,
-            lambda x: F.when(x < sentinel, x),
-        ),
-    )
+    return F.expr(_SIG_EXPR_SQL.format(sh=sh))
 
 
 def _sig_select_sql() -> str:
@@ -315,6 +308,33 @@ def _minhash_oracle() -> str:
     """
 
 
+_ROWS_PER_BAND = N_MINHASH // N_BANDS
+# one struct per band: (band, k0..k3) raw minhash longs, or (band,
+# bucket) with the '|'-joined decimal string (see _band_table)
+_BANDS_COMPACT_SQL = "explode(array({}))".format(
+    ", ".join(
+        f"struct({b} AS band, "
+        + ", ".join(
+            f"element_at(sig, {b * _ROWS_PER_BAND + r + 1}) AS k{r}"
+            for r in range(_ROWS_PER_BAND)
+        )
+        + ")"
+        for b in range(N_BANDS)
+    )
+)
+_BANDS_STRING_SQL = "explode(array({}))".format(
+    ", ".join(
+        f"struct({b} AS band, concat_ws('|', "
+        + ", ".join(
+            f"CAST(element_at(sig, {b * _ROWS_PER_BAND + r + 1}) AS STRING)"
+            for r in range(_ROWS_PER_BAND)
+        )
+        + ") AS bucket)"
+        for b in range(N_BANDS)
+    )
+)
+
+
 def _band_table(
     sigs: DataFrame, carry: tuple = (), compact: bool = False
 ) -> DataFrame:
@@ -355,52 +375,18 @@ def _band_table(
     filters them out before banding (ADVICE r11 #1). Minhash values
     are all-or-nothing NULL, so testing element 1 suffices; the
     filter is a plain predicate, stream-safe."""
-    rows = N_MINHASH // N_BANDS
     sigs = sigs.filter(F.element_at("sig", 1).isNotNull())
-    if compact:
-        key_cols = tuple(f"k{r}" for r in range(rows))
-        return sigs.select(
-            "doc_id",
-            *carry,
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            *[
-                                F.element_at("sig", b * rows + r + 1).alias(f"k{r}")
-                                for r in range(rows)
-                            ],
-                        )
-                        for b in range(N_BANDS)
-                    ]
-                )
-            ).alias("bb"),
-        ).select("doc_id", *carry, "bb.band", *[f"bb.{k}" for k in key_cols])
-    return sigs.select(
-        "doc_id",
-        *carry,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat_ws(
-                            "|",
-                            *[F.element_at("sig", b * rows + r + 1).cast("string")
-                              for r in range(rows)],
-                        ).alias("bucket"),
-                    )
-                    for b in range(N_BANDS)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", *carry, "bb.band", "bb.bucket")
+    bands, keys = (
+        (_BANDS_COMPACT_SQL, BAND_KEY[1:]) if compact else (_BANDS_STRING_SQL, ("bucket",))
+    )
+    return sigs.select("doc_id", *carry, F.expr(bands).alias("bb")).select(
+        "doc_id", *carry, "bb.band", *[f"bb.{k}" for k in keys]
+    )
 
 
 # the compact band-key column names (band + the rows-per-band raw
 # minhash longs) — the grouping key every compact consumer must use
-BAND_KEY = ("band",) + tuple(f"k{r}" for r in range(N_MINHASH // N_BANDS))
+BAND_KEY = ("band",) + tuple(f"k{r}" for r in range(_ROWS_PER_BAND))
 
 # persisted band-index schema (fmt=l4, r17): the compact key columns
 # plus doc_id; `band` last because it is the partition column
@@ -642,8 +628,10 @@ def _effective_shingle_pairs(spark: SparkSession, sf_dir: str):
     from data_wrangler_spark.functions.text import words
 
     d = load_table(spark, sf_dir, "documents")
-    sh0 = spread(d.select("doc_id", "text"), "doc_id").select(
-        "doc_id", shingles_from_words(words("text"), 3).alias("shingles")
+    sh0 = (
+        spread(d.select("doc_id", "text"), "doc_id")
+        .select("doc_id", words("text").alias("w"))
+        .select("doc_id", shingles_from_words(F.col("w"), 3).alias("shingles"))
     )
     sh0 = pin(sh0.persist(StorageLevel.MEMORY_AND_DISK))
     hot_df = (
@@ -1586,11 +1574,10 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     new_ids = cand.select(F.col("doc_new").alias("doc_id")).distinct()
     a = (
         d.join(new_ids, "doc_id", "left_semi")
+        .select("doc_id", words("text").alias("w"))
         .select(
             F.col("doc_id").alias("doc_new"),
-            F.array_distinct(
-                shingles_from_words(words("text"), 3)
-            ).alias("sa"),
+            F.array_distinct(shingles_from_words(F.col("w"), 3)).alias("sa"),
         )
     )
     b = (
@@ -1807,9 +1794,10 @@ def q_dedup_incremental_2day(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     shd = pin(
         d.join(cand_ids, "doc_id", "left_semi")
+        .select("doc_id", words("text").alias("w"))
         .select(
             "doc_id",
-            F.array_distinct(shingles_from_words(words("text"), 3)).alias("s"),
+            F.array_distinct(shingles_from_words(F.col("w"), 3)).alias("s"),
         )
         .persist()
     )
@@ -2952,10 +2940,13 @@ def q_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pinned: the shingle pipeline feeds tex (BOTH sides of the
     # self-join) and tsz (twice) — one materialization, not four
     shd = pin(
-        spread(d.select("doc_id", "text"), "doc_id").select(
+        spread(d.select("doc_id", "text"), "doc_id")
+        .select("doc_id", words("text").alias("w"))
+        .select(
             "doc_id",
-            F.array_distinct(shingles_from_words(words("text"), 3)).alias("s"),
-        ).persist()
+            F.array_distinct(shingles_from_words(F.col("w"), 3)).alias("s"),
+        )
+        .persist()
     )
     tex = shd.select("doc_id", F.explode("s").alias("shingle"))
     tsz = shd.select("doc_id", F.size("s").cast("long").alias("n"))

@@ -870,9 +870,13 @@ def _doc_grams(d: DataFrame) -> DataFrame:
     q_contamination / q_decontaminate-style probes, the incremental
     index build, and the pipeline counter's history replay (r10
     review: previously three inlined copies that could drift)."""
-    return spread(d.select("doc_id", "text"), "doc_id").select(
-        "doc_id",
-        F.explode(shingles_from_words(words("text"), CONTAM_NGRAM)).alias("g"),
+    return (
+        spread(d.select("doc_id", "text"), "doc_id")
+        .select("doc_id", words("text").alias("w"))
+        .select(
+            "doc_id",
+            F.explode(shingles_from_words(F.col("w"), CONTAM_NGRAM)).alias("g"),
+        )
     )
 
 

@@ -442,10 +442,8 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select("source", "text")
     g = pin(
         spread(d, "source")
-        .select(
-            "source",
-            F.explode(shingles_from_words(words("text"), 3)).alias("g"),
-        )
+        .select("source", words("text").alias("w"))
+        .select("source", F.explode(shingles_from_words(F.col("w"), 3)).alias("g"))
         .distinct()
         .persist()
     )

@@ -58,6 +58,11 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
+# Size of Spark's compiled-codegen class cache (a static conf that
+# get_spark's builder sets; see the comment there).
+CODEGEN_CACHE_ENTRIES = 1000
+
+
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     """Best-effort apply engine confs to an externally built session."""
     for k, v in RUNTIME_CONFS.items():
@@ -138,6 +143,19 @@ def get_spark(app_name: str = "data_wrangler_spark", cpus: int | None = None) ->
         # (gateway sets one per request thread) gets equal share.
         # Static conf — applies when this builder creates the session.
         .config("spark.scheduler.mode", "FAIR")
+        # Compile each whole-stage-codegen class once per process. One
+        # analytics pass (the heavy four plus the light four) generates
+        # ~190 classes, so Spark's default LRU of 100 evicted the last
+        # pass's classes every pass: 181 Janino recompilations per
+        # pass, each run as fresh un-JIT-ed bytecode. 1000 holds the
+        # analytics set 5x over (each distinct point-read key adds 2
+        # classes, since codegen inlines integer literals). Each cached
+        # class costs ~45 KB of Metaspace (a full registry pass at
+        # sf0.001 compiles ~3,400 classes, Metaspace 77 -> 220-239 MB),
+        # so 1000 entries bound the growth to ~50 MB. Static conf: it
+        # applies only when this builder creates the session, and a
+        # foreign session keeps its own value.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")
     )
     for k, v in RUNTIME_CONFS.items():

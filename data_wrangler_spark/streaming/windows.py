@@ -869,12 +869,11 @@ def q_stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("source") != CONTAM_EVAL_SOURCE)
             & (F.col("doc_id") % 10 >= INC_EXIST_PCT)
         )
+        .select("doc_id", "source", words("text").alias("w"))
         .select(
             "doc_id",
             "source",
-            F.explode(
-                shingles_from_words(words("text"), CONTAM_NGRAM)
-            ).alias("g"),
+            F.explode(shingles_from_words(F.col("w"), CONTAM_NGRAM)).alias("g"),
         )
         .join(evset, "g", "left_semi")
         .select("doc_id", "source")
@@ -971,12 +970,14 @@ def q_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ni = F.size(F.array_intersect("sa", "sb")).cast("long")
 
     def plan(src: DataFrame) -> DataFrame:
-        sigs = src.select(
-            "doc_id", shingles_from_words(words("text"), 3).alias("sh")
-        ).select(
-            "doc_id",
-            sig_expr(F.col("sh")).alias("sig"),
-            F.array_distinct("sh").alias("sa"),
+        sigs = (
+            src.select("doc_id", words("text").alias("w"))
+            .select("doc_id", shingles_from_words(F.col("w"), 3).alias("sh"))
+            .select(
+                "doc_id",
+                sig_expr("sh").alias("sig"),
+                F.array_distinct("sh").alias("sa"),
+            )
         )
         return (
             # compact band keys (r17): the stream-static probe joins on
@@ -1108,12 +1109,14 @@ def quarantine_gate_plan(
     )
 
     # gate 1: near-dup (q_stream_dedup_ingest's plan, doc_id only)
-    sigs = src.select(
-        "doc_id", shingles_from_words(words("text"), 3).alias("sh")
-    ).select(
-        "doc_id",
-        sig_expr(F.col("sh")).alias("sig"),
-        F.array_distinct("sh").alias("sa"),
+    sigs = (
+        src.select("doc_id", words("text").alias("w"))
+        .select("doc_id", shingles_from_words(F.col("w"), 3).alias("sh"))
+        .select(
+            "doc_id",
+            sig_expr("sh").alias("sig"),
+            F.array_distinct("sh").alias("sa"),
+        )
     )
     ni = F.size(F.array_intersect("sa", "sb")).cast("long")
     dup_flags = (
@@ -1135,11 +1138,10 @@ def quarantine_gate_plan(
     # gate 2: contamination (q_stream_decontaminate's plan)
     contam_flags = (
         src.filter(F.col("source") != CONTAM_EVAL_SOURCE)
+        .select("doc_id", words("text").alias("w"))
         .select(
             "doc_id",
-            F.explode(
-                shingles_from_words(words("text"), CONTAM_NGRAM)
-            ).alias("g"),
+            F.explode(shingles_from_words(F.col("w"), CONTAM_NGRAM)).alias("g"),
         )
         .join(evset, "g", "left_semi")
         .select("doc_id", F.lit("contaminated").alias("reason"))

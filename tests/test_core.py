@@ -187,3 +187,36 @@ def test_load_table_directory_invalidated_by_added_part(spark, tmp_path):
     assert sorted(r.doc_id for r in df.collect()) == [1, 2, 3]
     _, jobs = _jobs_started_by(spark, lambda: load_table(spark, str(tmp_path), "documents"))
     assert jobs == 0
+
+
+def test_analytics_pass_reuses_compiled_codegen_classes(engine, spark):
+    """The codegen class cache holds a whole analytics pass (the heavy
+    four plus the light four, ~190 generated classes), so a second pass
+    compiles next to nothing. With Spark's default 100 entries each
+    pass evicted the previous one and recompiled all of its ~180
+    classes. Not 0: AQE may re-plan a stage now and then."""
+    from data_wrangler_spark.session import CODEGEN_CACHE_ENTRIES
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(CODEGEN_CACHE_ENTRIES)
+    compilations = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    ops = [
+        ("q_triangles", {}),
+        ("q_dedup_minhash", {}),
+        ("q_dedup_jaccard", {}),
+        ("q_dedup_jaccard_prefix", {}),
+        ("q_topk", {"k": 10}),
+        ("q_agg_groupby", {"ship_before": "1998-08-01 00:00:00"}),
+        ("q_join_multi", {"region": "ASIA"}),
+        ("q_window_running_sum", {}),
+    ]
+
+    def one_pass() -> int:
+        before = compilations.getCount()
+        for name, binds in ops:
+            engine.run(name, **binds).write.format("noop").mode("overwrite").save()
+            engine.release_cache()
+        return compilations.getCount() - before
+
+    first = one_pass()
+    second = one_pass()
+    assert second <= 0.1 * first, (first, second)

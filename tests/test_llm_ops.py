@@ -1428,3 +1428,24 @@ def test_quality_repetition_and_entropy_semantics(spark, tmp_path):
     assert all(
         0.0 <= r.entropy_bits <= math.log2(26) + 1e-9 for r in ent.values()
     )
+
+
+def test_no_package_file_shingles_an_unbound_words_array():
+    """shingles_from_words needs `words(text)` bound to a column by a
+    prior select: inlined, the regex split re-runs for every
+    element_at inside the interpreted lambda."""
+    import os
+    import re
+
+    import data_wrangler_spark
+
+    pkg = os.path.dirname(data_wrangler_spark.__file__)
+    inline = re.compile(r"shingles_from_words\(\s*words\(")
+    offenders = []
+    for root, _, files in os.walk(pkg):
+        for f in files:
+            if f.endswith(".py"):
+                with open(os.path.join(root, f), encoding="utf-8") as fh:
+                    if inline.search(fh.read()):
+                        offenders.append(os.path.relpath(os.path.join(root, f), pkg))
+    assert offenders == []

@@ -375,20 +375,22 @@ def test_sig_expr_matches_batch(spark, sf_dir):
         sig_expr,
     )
 
+    def signed(df):
+        return (
+            df.select("*", words("text").alias("w"))
+            .select("*", shingles_from_words(F.col("w"), 3).alias("sh"))
+            .select("*", sig_expr("sh").alias("sig"))
+        )
+
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    expr_form = d.select(
-        "doc_id",
-        sig_expr(shingles_from_words(words("text"), 3)).alias("sig"),
-    )
+    expr_form = signed(d)
     batch_form = _minhash_signatures(d)
     a = {r.doc_id: tuple(r.sig) for r in expr_form.collect()}
     b = {r.doc_id: tuple(r.sig) for r in batch_form.collect()}
     assert a == b
     # the empty-shingle NULL convention itself (no fixture doc may
     # exercise it — pin it on a synthetic row)
-    empty = spark.createDataFrame([("x",)], "text string").select(
-        sig_expr(shingles_from_words(words("text"), 3)).alias("sig")
-    )
+    empty = signed(spark.createDataFrame([("x",)], "text string"))
     assert all(v is None for v in empty.collect()[0].sig)
 
 

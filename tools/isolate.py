@@ -2,7 +2,9 @@
 
 Runs each named query once unmeasured (warmup) then N measured runs
 (noop sink, pinned frames released after the measured block), and
-prints median + spread. Use this to claim before/after numbers for
+prints median + spread, plus how many whole-stage-codegen classes
+Janino compiled during the measured runs (a warm query that keeps
+compiling is thrashing Spark's codegen class cache). Use this to claim before/after numbers for
 one operator without a full sweep's ordering/contention noise.
 
 Usage: python tools/isolate.py [-n RUNS] QUERY [QUERY ...]
@@ -33,6 +35,7 @@ def main() -> int:
     from data_wrangler_spark.functions.distributed import release_pinned
 
     spark = get_spark("isolate")
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     out = {}
     for name in args:
         spark.sparkContext.setJobDescription(f"isolate warmup: {name}")
@@ -40,6 +43,7 @@ def main() -> int:
             "overwrite"
         ).save()
         runs = []
+        c0 = compiles.getCount()
         for i in range(n):
             spark.sparkContext.setJobDescription(f"isolate {i}: {name}")
             t0 = time.perf_counter()
@@ -47,11 +51,12 @@ def main() -> int:
                 "overwrite"
             ).save()
             runs.append(round(time.perf_counter() - t0, 4))
+        compilations = compiles.getCount() - c0
         release_pinned()
         spark.sparkContext.setJobDescription(None)
         med = round(statistics.median(runs), 4)
-        out[name] = {"median": med, "runs": runs}
-        print(json.dumps({"query": name, "median": med, "runs": runs}))
+        out[name] = {"median": med, "compilations": compilations, "runs": runs}
+        print(json.dumps({"query": name, "median": med, "compilations": compilations, "runs": runs}))
     return 0
 
 

@@ -31,6 +31,7 @@ __all__ = [
     "with_global_running_max",
     "ntile_from_position",
     "pin",
+    "pin_dir",
     "release_pinned",
     "release_local_checkpoint",
     "spread",
@@ -96,16 +97,21 @@ def spread(df: DataFrame, *keys: str) -> DataFrame:
 # release would unpersist request B's still-needed frame mid-query.
 # Single-threaded harnesses (bench.py, verify_local) see the exact
 # old behavior: their thread's list is the only one.
+#
+# A builder whose result reads a per-call scratch dir lazily (the
+# foreachBatch sink ops) cannot delete that dir either; it registers
+# the dir beside the pins and release_pinned() removes it.
+import shutil as _shutil
 import threading as _threading
 
 _PIN_TL = _threading.local()
 
 
-def _pin_list() -> list[DataFrame]:
-    lst = getattr(_PIN_TL, "pinned", None)
+def _pin_list(kind: str = "pinned") -> list:
+    lst = getattr(_PIN_TL, kind, None)
     if lst is None:
         lst = []
-        _PIN_TL.pinned = lst
+        setattr(_PIN_TL, kind, lst)
     return lst
 
 
@@ -116,14 +122,22 @@ def pin(df: DataFrame) -> DataFrame:
     return df
 
 
+def pin_dir(path: str) -> str:
+    """Track a per-call output dir that the current thread's next
+    release_pinned() removes; returns ``path``."""
+    _pin_list("dirs").append(path)
+    return path
+
+
 def pinned_frames() -> list[DataFrame]:
     """The current thread's pinned frames (read-only snapshot)."""
     return list(_pin_list())
 
 
 def release_pinned(blocking: bool = False) -> int:
-    """Unpersist every frame the current thread pinned; returns how
-    many were released."""
+    """Unpersist every frame the current thread pinned, then remove
+    the dirs it registered with pin_dir; returns how many frames were
+    released."""
     n = 0
     lst = _pin_list()
     while lst:
@@ -132,6 +146,9 @@ def release_pinned(blocking: bool = False) -> int:
             n += 1
         except Exception:
             pass  # session already stopped — nothing to release
+    dirs = _pin_list("dirs")
+    while dirs:
+        _shutil.rmtree(dirs.pop(), ignore_errors=True)
     return n
 
 

@@ -309,9 +309,8 @@ def _minhash_oracle() -> str:
 
 
 _ROWS_PER_BAND = N_MINHASH // N_BANDS
-# one struct per band: (band, k0..k3) raw minhash longs, or (band,
-# bucket) with the '|'-joined decimal string (see _band_table)
-_BANDS_COMPACT_SQL = "explode(array({}))".format(
+# one struct per band: (band, k0..k3), the band's raw minhash longs
+_BANDS_SQL = "explode(array({}))".format(
     ", ".join(
         f"struct({b} AS band, "
         + ", ".join(
@@ -322,71 +321,53 @@ _BANDS_COMPACT_SQL = "explode(array({}))".format(
         for b in range(N_BANDS)
     )
 )
-_BANDS_STRING_SQL = "explode(array({}))".format(
-    ", ".join(
-        f"struct({b} AS band, concat_ws('|', "
-        + ", ".join(
-            f"CAST(element_at(sig, {b * _ROWS_PER_BAND + r + 1}) AS STRING)"
-            for r in range(_ROWS_PER_BAND)
-        )
-        + ") AS bucket)"
-        for b in range(N_BANDS)
-    )
-)
+# the band-key column names (band + the rows-per-band raw minhash
+# longs) — the grouping key every band consumer must use
+BAND_KEY = ("band",) + tuple(f"k{r}" for r in range(_ROWS_PER_BAND))
 
 
-def _band_table(
-    sigs: DataFrame, carry: tuple = (), compact: bool = False
-) -> DataFrame:
-    """signature frame → (doc_id, [carry...], band, bucket): each
+def _band_table(sigs: DataFrame, carry: tuple = ()) -> DataFrame:
+    """signature frame → (doc_id, [carry...], band, k0..k3): each
     doc's sig is split into N_BANDS buckets of rows-per-band values
     (map-side explode, fan-out ×N_BANDS — never the corpus). `carry`
     names extra columns to pass through the explode (the streaming
     ingest gate carries the doc's shingle set to the verify join).
 
-    ``compact`` (guide §2.3 — shuffle fewer bytes) replaces the
-    ~40–70-byte `bucket` STRING with the rows-per-band raw minhash
-    LONGS as separate key columns k0..k{rows-1} (32 fixed bytes).
-    The string form is `concat_ws('|', cast(kᵢ as string)...)` over
-    values that are all non-NULL after the empty-sig filter below —
-    an INJECTIVE encoding (decimal digits never contain '|'), so
-    grouping or joining on (band, k0..k3) partitions the rows
-    IDENTICALLY to (band, bucket): same buckets, same candidate
-    pairs, bit-identical downstream output. No hash, no collisions,
-    no verify step — strictly narrower keys. (A 60-bit hash of the
-    string was considered and rejected: it needs the signature in
-    the payload for collision rejection anyway, totalling MORE bytes
-    than keying on the 4 longs directly.) The persisted index
-    (ensure_inc_index et al.) uses the same compact keys: its on-disk
-    format, shared by batch and streaming probes, is fmt=l4: the
-    raw minhash longs plus doc_id, partitioned by band
-    (_BANDS_SCHEMA), not the string form.
+    A bucket is keyed by its rows-per-band raw minhash LONGS as
+    separate key columns (guide §2.3 — shuffle fewer bytes: 32 fixed
+    bytes where the oracles' `m0::VARCHAR || '|' || …` decimal string
+    takes ~40–70). That string is an INJECTIVE encoding of the same
+    non-NULL values (decimal digits never contain '|'), so grouping
+    or joining on (band, k0..k3) partitions the rows IDENTICALLY to
+    the oracles' (band, bucket): same buckets, same candidate pairs,
+    bit-identical downstream output. No hash, no collisions, no
+    verify step. (A 60-bit hash of the string was considered and
+    rejected: it needs the signature in the payload for collision
+    rejection anyway, totalling MORE bytes than keying on the 4 longs
+    directly.) The persisted index (ensure_inc_index et al.) stores
+    the same keys: its on-disk format, shared by batch and streaming
+    probes, is fmt=l4: the raw minhash longs plus doc_id, partitioned
+    by band (_BANDS_SCHEMA).
 
     Docs with an EMPTY shingle set (< 3 words) are dropped here, on
     every consumer — index build, probe, and stream alike. Their
     signature is all-NULL (array_min/the sig_expr sentinel both map
     an empty array to NULLs), and the two engines disagree on what
-    that means downstream: Spark's concat_ws SKIPS NULLs, collapsing
-    every all-NULL sig to bucket '' (so any two <3-word docs would
-    pair — then divide by zero in the Jaccard verify), while the
-    oracles' `m0::VARCHAR || '|' || …` yields a NULL bucket that
-    never equi-joins. The oracle semantics are the correct ones — a
-    doc with no shingles has no LSH evidence — so the Spark side
-    filters them out before banding (ADVICE r11 #1). Minhash values
-    are all-or-nothing NULL, so testing element 1 suffices; the
-    filter is a plain predicate, stream-safe."""
+    that means downstream: Spark's grouping on (band, k0..k3) — the
+    q_dedup_minhash bucket aggregate, the index build's bucket-size
+    window — treats NULL keys as equal, so any two <3-word docs would
+    share a bucket and pair (then divide by zero in the Jaccard
+    verify), while the oracles' NULL bucket string never equi-joins.
+    The oracle semantics are the correct ones — a doc with no
+    shingles has no LSH evidence — so the Spark side filters them out
+    before banding (ADVICE r11 #1). Minhash values are all-or-nothing
+    NULL, so testing element 1 suffices; the filter is a plain
+    predicate, stream-safe."""
     sigs = sigs.filter(F.element_at("sig", 1).isNotNull())
-    bands, keys = (
-        (_BANDS_COMPACT_SQL, BAND_KEY[1:]) if compact else (_BANDS_STRING_SQL, ("bucket",))
-    )
-    return sigs.select("doc_id", *carry, F.expr(bands).alias("bb")).select(
-        "doc_id", *carry, "bb.band", *[f"bb.{k}" for k in keys]
+    return sigs.select("doc_id", *carry, F.expr(_BANDS_SQL).alias("bb")).select(
+        "doc_id", *carry, "bb.band", *[f"bb.{k}" for k in BAND_KEY[1:]]
     )
 
-
-# the compact band-key column names (band + the rows-per-band raw
-# minhash longs) — the grouping key every compact consumer must use
-BAND_KEY = ("band",) + tuple(f"k{r}" for r in range(_ROWS_PER_BAND))
 
 # persisted band-index schema (fmt=l4, r17): the compact key columns
 # plus doc_id; `band` last because it is the partition column
@@ -424,7 +405,7 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # injective encoding, identical grouping, ~half the key bytes
     # (see _band_table).
     buckets = (
-        _band_table(sigs, compact=True)
+        _band_table(sigs)
         .groupBy(*BAND_KEY)
         .agg(F.array_sort(F.collect_list("doc_id")).alias("ds"))
         .filter((F.size("ds") >= 2) & (F.size("ds") <= MAX_BUCKET))
@@ -1432,7 +1413,7 @@ def _ensure_inc_built(spark: SparkSession, sf_dir: str) -> str:
                 d.filter(F.col("doc_id") % 10 < INC_EXIST_PCT)
             ).persist()
         )
-        bands_ex = _band_table(_signatures_from_shingles(shf), compact=True)
+        bands_ex = _band_table(_signatures_from_shingles(shf))
         guarded = bands_ex.withColumn(
             "bsize", F.count("*").over(Window.partitionBy(*BAND_KEY))
         ).filter(F.col("bsize") <= MAX_BUCKET)
@@ -1452,7 +1433,9 @@ def _ensure_inc_built(spark: SparkSession, sf_dir: str) -> str:
 def ensure_inc_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The guarded (band, k0..k3, doc_id) LSH index of the existing
     corpus, built if missing (shared by q_dedup_incremental and the
-    streaming ingest gates — ONE index, two delivery modes)."""
+    streaming ingest gates — ONE index, two delivery modes: batches
+    probe it through band_candidates, streams through
+    stream_lsh_gate, and both verify with jaccard_verify)."""
     # explicit schema: an empty history (legal on a degenerate
     # fixture) writes a partition-less root that schema inference
     # cannot read — same hardening as q_dedup_index_compact's read
@@ -1474,6 +1457,85 @@ def inc_index_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).parquet(
         f"{_ensure_inc_built(spark, sf_dir)}/shingles"
     ).select("doc_id", "sb")
+
+
+def band_candidates(d: DataFrame, index: DataFrame) -> DataFrame:
+    """(doc_new, doc_old, n_bands): the docs of batch ``d`` that share
+    a band bucket with a doc of the persisted band ``index``, and in
+    how many bands — the batch probe of q_dedup_incremental and both
+    days of q_dedup_incremental_2day. The equi-join is on the band
+    key (fmt=l4, see _band_table)."""
+    return (
+        _band_table(_minhash_signatures(d))
+        .withColumnRenamed("doc_id", "doc_new")
+        .join(index.withColumnRenamed("doc_id", "doc_old"), list(BAND_KEY))
+        .groupBy("doc_new", "doc_old")
+        .agg(F.countDistinct("band").alias("n_bands"))
+    )
+
+
+def jaccard_verify(pairs: DataFrame, *keep) -> DataFrame:
+    """The exact-Jaccard verify of every incremental LSH probe, batch
+    and stream: candidate ``pairs`` carrying the new doc's distinct
+    shingle set ``sa`` and the stored doc's ``sb`` → the ``keep``
+    columns plus jac_micro = |sa∩sb| / |sa∪sb| in integer micro-units,
+    kept at ≥ INC_JAC_MICRO. size() is int32 — promoted to bigint
+    BEFORE the ×1e6 or docs with ≥2148 shared shingles overflow under
+    the session's ANSI mode; the intersect is computed once and
+    reused."""
+    return (
+        pairs.withColumn("_ni", F.size(F.array_intersect("sa", "sb")).cast("long"))
+        .select(
+            *keep,
+            F.expr(
+                "div(_ni * 1000000, cast(size(sa) as bigint) + size(sb) - _ni)"
+            ).alias("jac_micro"),
+        )
+        .filter(F.col("jac_micro") >= INC_JAC_MICRO)
+    )
+
+
+def stream_lsh_gate(spark: SparkSession, sf_dir: str, src: DataFrame) -> DataFrame:
+    """The persisted LSH band index probed by a stream of arriving
+    documents ``src`` (doc_id, text) → (doc_new, doc_old, jac_micro),
+    every verified pair before any dedup — the plan
+    q_stream_dedup_ingest and the quarantine gate both deliver. Each
+    doc is minhash-signed PER ROW by sig_expr (one expression tree,
+    no persist barrier; batch parity pinned by pytest), banded,
+    equi-joined to the static band index, and verified by
+    jaccard_verify against the history shingle sets persisted beside
+    the index (inc_index_shingles): a run never re-shingles history
+    text, it pays one columnar scan of stored shingle bytes. Those
+    sets are pinned so the second and later micro-batches reuse the
+    decoded arrays instead of re-decoding the parquet and rebuilding
+    the broadcast per trigger (measured). A pair can match on up to
+    N_BANDS buckets, so a pair is verified (and emitted) up to ×4
+    here; the callers' stateful dedup keeps state bounded by VERIFIED
+    pairs, not by candidates or corpus."""
+    from data_wrangler_spark.functions.text import words
+
+    index_g = ensure_inc_index(spark, sf_dir)
+    shd_old = pin(
+        inc_index_shingles(spark, sf_dir)
+        .select(F.col("doc_id").alias("doc_old"), "sb")
+        .persist()
+    )
+    sigs = (
+        src.select("doc_id", words("text").alias("w"))
+        .select("doc_id", shingles_from_words(F.col("w"), 3).alias("sh"))
+        .select(
+            "doc_id",
+            sig_expr("sh").alias("sig"),
+            F.array_distinct("sh").alias("sa"),
+        )
+    )
+    return jaccard_verify(
+        _band_table(sigs, carry=("sa",))
+        .join(index_g.withColumnRenamed("doc_id", "doc_old"), list(BAND_KEY))
+        .join(shd_old, "doc_old"),
+        F.col("doc_id").alias("doc_new"),
+        "doc_old",
+    )
 
 
 def _inc_oracle() -> str:
@@ -1544,24 +1606,11 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     exist = F.col("doc_id") % 10 < INC_EXIST_PCT
 
-    index_g = ensure_inc_index(spark, sf_dir)
-    # compact band keys (r17): probe equi-join on the 4 raw minhash
-    # longs — value-identical to the bucket-string join (injective
-    # encoding, see _band_table) with ~half the key bytes in the
-    # probe exchange and on disk
-    bands_new = _band_table(_minhash_signatures(d.filter(~exist)), compact=True)
     # pin the candidate table: it feeds the id-set derivation twice
     # and the verify join once — unpinned, the whole signature+probe
     # pipeline would re-execute per consumer (measured 3× at sf0.1)
     cand = pin(
-        bands_new.withColumnRenamed("doc_id", "doc_new")
-        .join(
-            index_g.withColumnRenamed("doc_id", "doc_old"),
-            list(BAND_KEY),
-        )
-        .groupBy("doc_new", "doc_old")
-        .agg(F.countDistinct("band").alias("n_bands"))
-        .persist()
+        band_candidates(d.filter(~exist), ensure_inc_index(spark, sf_dir)).persist()
     )
 
     from data_wrangler_spark.functions.text import words
@@ -1589,24 +1638,8 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("doc_id").alias("doc_old"), "sb")
     )
-    # size() is int32 — promote to bigint BEFORE the ×1e6 or docs with
-    # ≥2148 shared shingles overflow under the session's ANSI mode;
-    # the intersect is computed once and reused
-    ni = F.size(F.array_intersect("sa", "sb")).cast("long")
-    return (
-        cand.join(a, "doc_new")
-        .join(b, "doc_old")
-        .withColumn("_ni", ni)
-        .select(
-            "doc_new",
-            "doc_old",
-            "n_bands",
-            F.expr(
-                "div(_ni * 1000000, "
-                "cast(size(sa) as bigint) + size(sb) - _ni)"
-            ).alias("jac_micro"),
-        )
-        .filter(F.col("jac_micro") >= INC_JAC_MICRO)
+    return jaccard_verify(
+        cand.join(a, "doc_new").join(b, "doc_old"), "doc_new", "doc_old", "n_bands"
     )
 
 
@@ -1659,7 +1692,7 @@ def _guarded_bands(d: DataFrame) -> DataFrame:
     across appends; q_dedup_index_compact is the maintenance op that
     re-guards across the union (the oracle replays the same
     per-batch semantics, so the hop is lossless)."""
-    bands = _band_table(_minhash_signatures(d), compact=True)
+    bands = _band_table(_minhash_signatures(d))
     return (
         bands.withColumn(
             "bsize", F.count("*").over(Window.partitionBy(*BAND_KEY))
@@ -1768,15 +1801,8 @@ def q_dedup_incremental_2day(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def probe(batch: DataFrame, idx: DataFrame, day: int) -> DataFrame:
-        return (
-            _band_table(_minhash_signatures(batch), compact=True)
-            .withColumnRenamed("doc_id", "doc_new")
-            .join(idx.withColumnRenamed("doc_id", "doc_old"), list(BAND_KEY))
-            .groupBy("doc_new", "doc_old")
-            .agg(F.countDistinct("band").alias("n_bands"))
-            .select(
-                F.lit(day).alias("ingest_day"), "doc_new", "doc_old", "n_bands"
-            )
+        return band_candidates(batch, idx).select(
+            F.lit(day).alias("ingest_day"), "doc_new", "doc_old", "n_bands"
         )
 
     cand = pin(
@@ -1803,22 +1829,9 @@ def q_dedup_incremental_2day(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = shd.select(F.col("doc_id").alias("doc_new"), F.col("s").alias("sa"))
     b = shd.select(F.col("doc_id").alias("doc_old"), F.col("s").alias("sb"))
-    ni = F.size(F.array_intersect("sa", "sb")).cast("long")
-    return (
-        cand.join(a, "doc_new")
-        .join(b, "doc_old")
-        .withColumn("_ni", ni)
-        .select(
-            "ingest_day",
-            "doc_new",
-            "doc_old",
-            "n_bands",
-            F.expr(
-                "div(_ni * 1000000, "
-                "cast(size(sa) as bigint) + size(sb) - _ni)"
-            ).alias("jac_micro"),
-        )
-        .filter(F.col("jac_micro") >= INC_JAC_MICRO)
+    return jaccard_verify(
+        cand.join(a, "doc_new").join(b, "doc_old"),
+        "ingest_day", "doc_new", "doc_old", "n_bands",
     )
 
 
@@ -2188,7 +2201,8 @@ def ensure_embed_inc_index(spark: SparkSession, sf_dir: str):
     artifacts a production vector-dedup index stores; shared by the
     batch probe (q_dedup_embed_incremental) and its streaming
     delivery (q_stream_embed_gate) — ONE index, two delivery modes,
-    the ensure_inc_index pattern applied to the embedding family."""
+    one probe (cell_probe): the ensure_inc_index pattern applied to
+    the embedding family."""
     from data_wrangler_spark.operators.embeddings_ext import (
         kmeans_assign_mat,
         kmeans_fit_mat,
@@ -2216,6 +2230,69 @@ def ensure_embed_inc_index(spark: SparkSession, sf_dir: str):
         f"{path}/members"
     )
     return cl_ids, cmat, members
+
+
+def _assigned(raw: DataFrame, cl_ids, cmat) -> DataFrame:
+    """(vec_new, cell, ea): a batch of raw (vec_id, embedding) rows
+    assigned to the nearest stored centroid — one Arrow pass over the
+    SHARED quantizer (new vectors must be quantized exactly as the
+    persisted centroids were fit, r10 review), the closure-shipped
+    K×dim matrix, no shuffle. The batch probe side of cell_probe."""
+    from data_wrangler_spark.operators.embeddings_ext import (
+        kmeans_assign_mat,
+        quantize_xs,
+    )
+
+    asg = kmeans_assign_mat(quantize_xs(raw), cl_ids, cmat).select(
+        "vec_id", F.col("cl").cast("int").alias("cell")
+    )
+    return (
+        raw.select("vec_id", to_double_array("embedding").alias("ea"))
+        .join(asg, "vec_id")
+        .select(F.col("vec_id").alias("vec_new"), "cell", "ea")
+    )
+
+
+def cell_probe(probe: DataFrame, members: DataFrame) -> DataFrame:
+    """The persisted k-means cell index probed by cell-assigned
+    vectors — the one probe every vector-index delivery runs, batch
+    (q_dedup_embed_incremental, q_dedup_embed_2day,
+    q_embed_index_rebuild) and stream (q_stream_embed_gate,
+    q_stream_embed_resume). ``probe`` is (vec_new, cell, ea),
+    ``members`` the stored (vec_id, e, cell). The MAX_CELL split
+    arity comes from the INDEX side's populations and probe vectors
+    hash into the same sub rule (see the MAX_CELL doc); pairs joined
+    on (cell, sub) keep exact cosine ≥ SEM_TAU as (vec_new, vec_old,
+    cell, cos_sim). The cosine is the Arrow dot (make_dot_udf +
+    round6) — NOT the unrolled 64-dim expression, which exceeds
+    HotSpot's JIT bytecode limit and runs interpreted on the per-pair
+    hot path (make_dot_udf's docstring; measured on the stream gate:
+    29.4 s → 3.6 s warm per run at f5). A streaming probe joins the
+    same members in every micro-batch, so there the member side is
+    pinned and its arrays decoded once."""
+    from data_wrangler_spark.functions.vectors import make_dot_udf, norm, round6
+
+    subs = _cell_subs(members)
+    a = _with_sub(probe.withColumn("na", norm(F.col("ea"))), subs, "ea")
+    b = _with_sub(members, subs, "e").select(
+        F.col("vec_id").alias("vec_old"),
+        "cell",
+        "sub",
+        F.col("e").alias("eb"),
+        norm(F.col("e")).alias("nb"),
+    )
+    if probe.isStreaming:
+        b = pin(b.persist())
+    dot_udf = make_dot_udf()
+    return (
+        a.join(b, ["cell", "sub"])
+        .withColumn(
+            "cos_sim",
+            round6(dot_udf(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))),
+        )
+        .filter(F.col("cos_sim") >= SEM_TAU)
+        .select("vec_new", "vec_old", "cell", "cos_sim")
+    )
 
 
 @register(
@@ -2249,62 +2326,10 @@ def q_dedup_embed_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB, k scales with n to hold E|cell| constant (the
     q_dedup_semantic knob), and the fit stays a bounded-iteration
     integer loop over history partials."""
-    from data_wrangler_spark.functions.vectors import (
-        make_dot_udf,
-        norm,
-        round6,
-    )
-    from data_wrangler_spark.operators.embeddings_ext import (
-        kmeans_assign_mat,
-    )
-
     exist = F.col("vec_id") % 10 < INC_EXIST_PCT
     cl_ids, cmat, members = ensure_embed_inc_index(spark, sf_dir)
-
     raw_new = load_table(spark, sf_dir, "embeddings").filter(~exist)
-    from data_wrangler_spark.operators.embeddings_ext import quantize_xs
-
-    # the SHARED quantizer — new vectors must be quantized exactly as
-    # the persisted centroids were fit (r10 review)
-    new_arr = quantize_xs(raw_new)
-    new_asg = kmeans_assign_mat(new_arr, cl_ids, cmat).select(
-        "vec_id", F.col("cl").cast("int").alias("cell")
-    )
-    # MAX_CELL: split arity comes from the INDEX side's populations,
-    # probe vectors hash into the same sub rule (see MAX_CELL doc)
-    subs = _cell_subs(members)
-    a = _with_sub(
-        raw_new.select("vec_id", to_double_array("embedding").alias("ea"))
-        .join(new_asg, "vec_id")
-        .select(
-            F.col("vec_id").alias("vec_new"),
-            "cell",
-            "ea",
-            norm(F.col("ea")).alias("na"),
-        ),
-        subs,
-        "ea",
-    )
-    b = _with_sub(members, subs, "e").select(
-        F.col("vec_id").alias("vec_old"),
-        "cell",
-        "sub",
-        F.col("e").alias("eb"),
-        norm(F.col("e")).alias("nb"),
-    )
-    dot_udf = make_dot_udf()
-    return (
-        a.join(b, ["cell", "sub"])
-        .withColumn(
-            "cos_sim",
-            round6(
-                dot_udf(F.col("ea"), F.col("eb"))
-                / (F.col("na") * F.col("nb"))
-            ),
-        )
-        .filter(F.col("cos_sim") >= SEM_TAU)
-        .select("vec_new", "vec_old", "cell", "cos_sim")
-    )
+    return cell_probe(_assigned(raw_new, cl_ids, cmat), members)
 
 
 # ── embedding index APPEND path: the two-day ingest ────────────────
@@ -2446,16 +2471,6 @@ def q_dedup_embed_2day(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the separate maintenance decision (drift-triggered), exactly
     as LSH re-guarding is q_dedup_index_compact's job, not the
     ingest's."""
-    from data_wrangler_spark.functions.vectors import (
-        make_dot_udf,
-        norm,
-        round6,
-    )
-    from data_wrangler_spark.operators.embeddings_ext import (
-        kmeans_assign_mat,
-        quantize_xs,
-    )
-
     base = _ensure_embed_2day_built(spark, sf_dir)
     cl_ids, cmat = _read_embed_centroids(spark, f"{base}/centroids")
     mem_schema = "vec_id bigint, e array<double>, cell int"
@@ -2466,51 +2481,12 @@ def q_dedup_embed_2day(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e_all = load_table(spark, sf_dir, "embeddings")
     m10 = F.col("vec_id") % 10
-    dot_udf = make_dot_udf()
 
     def probe(batch_raw: DataFrame, members: DataFrame, day: int) -> DataFrame:
-        asg = kmeans_assign_mat(quantize_xs(batch_raw), cl_ids, cmat).select(
-            "vec_id", F.col("cl").cast("int").alias("cell")
-        )
         # MAX_CELL: split arity from THIS probe's index population
         # (day-1 sees day0, day-2 sees the grown day0 ∪ day1)
-        subs = _cell_subs(members)
-        a = _with_sub(
-            batch_raw.select("vec_id", to_double_array("embedding").alias("ea"))
-            .join(asg, "vec_id")
-            .select(
-                F.col("vec_id").alias("vec_new"),
-                "cell",
-                "ea",
-                norm(F.col("ea")).alias("na"),
-            ),
-            subs,
-            "ea",
-        )
-        b = _with_sub(members, subs, "e").select(
-            F.col("vec_id").alias("vec_old"),
-            "cell",
-            "sub",
-            F.col("e").alias("eb"),
-            norm(F.col("e")).alias("nb"),
-        )
-        return (
-            a.join(b, ["cell", "sub"])
-            .withColumn(
-                "cos_sim",
-                round6(
-                    dot_udf(F.col("ea"), F.col("eb"))
-                    / (F.col("na") * F.col("nb"))
-                ),
-            )
-            .filter(F.col("cos_sim") >= SEM_TAU)
-            .select(
-                F.lit(day).alias("ingest_day"),
-                "vec_new",
-                "vec_old",
-                "cell",
-                "cos_sim",
-            )
+        return cell_probe(_assigned(batch_raw, cl_ids, cmat), members).select(
+            F.lit(day).alias("ingest_day"), "*"
         )
 
     return probe(e_all.filter(m10 == INC2_DAY1), day0, 1).unionByName(
@@ -2812,57 +2788,13 @@ def q_embed_index_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
     PartitionFilters), and the manifest flip means a 100 TB index
     can rebuild in the background while v1 keeps serving, then cut
     over atomically — the standard two-version index deployment."""
-    from data_wrangler_spark.functions.vectors import (
-        make_dot_udf,
-        norm,
-        round6,
-    )
-    from data_wrangler_spark.operators.embeddings_ext import (
-        kmeans_assign_mat,
-        quantize_xs,
-    )
-
     base = _ensure_embed_rebuilt(spark, sf_dir)
     cl_ids, cmat, members = read_embed_index(spark, base)
-
-    e_all = load_table(spark, sf_dir, "embeddings")
-    d2_raw = e_all.filter(F.col("vec_id") % 10 == INC2_DAY2)
-    asg = kmeans_assign_mat(quantize_xs(d2_raw), cl_ids, cmat).select(
-        "vec_id", F.col("cl").cast("int").alias("cell")
+    d2_raw = load_table(spark, sf_dir, "embeddings").filter(
+        F.col("vec_id") % 10 == INC2_DAY2
     )
-    dot_udf = make_dot_udf()
     # MAX_CELL: split arity from the rebuilt index's cell populations
-    subs = _cell_subs(members)
-    a = _with_sub(
-        d2_raw.select("vec_id", to_double_array("embedding").alias("ea"))
-        .join(asg, "vec_id")
-        .select(
-            F.col("vec_id").alias("vec_new"),
-            "cell",
-            "ea",
-            norm(F.col("ea")).alias("na"),
-        ),
-        subs,
-        "ea",
-    )
-    b = _with_sub(members, subs, "e").select(
-        F.col("vec_id").alias("vec_old"),
-        "cell",
-        "sub",
-        F.col("e").alias("eb"),
-        norm(F.col("e")).alias("nb"),
-    )
-    return (
-        a.join(b, ["cell", "sub"])
-        .withColumn(
-            "cos_sim",
-            round6(
-                dot_udf(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
-            ),
-        )
-        .filter(F.col("cos_sim") >= SEM_TAU)
-        .select("vec_new", "vec_old", "cell", "cos_sim")
-    )
+    return cell_probe(_assigned(d2_raw, cl_ids, cmat), members)
 
 
 EVAL_JAC_MICRO = 500000  # ground-truth near-dup threshold for the eval

@@ -722,14 +722,10 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(
         load_table(spark, sf_dir, "documents").select("doc_id", "source", "text"),
         "doc_id",
-    ).select("doc_id", "source", words("text").alias("w"))
+    )
     sh = pin(
-        d.select(
-            "doc_id",
-            "source",
-            F.explode(shingles_from_words(F.col("w"), CONTAM_NGRAM)).alias("g0"),
-        )
-        .select("doc_id", "source", _md5_long(F.col("g0")).alias("g"))
+        contam_grams(d, "source")
+        .select("doc_id", "source", _md5_long(F.col("g")).alias("g"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     train = (
@@ -808,14 +804,8 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(
         load_table(spark, sf_dir, "documents").select("doc_id", "source", "text"),
         "doc_id",
-    ).select("doc_id", "source", words("text").alias("w"))
-    sh = pin(
-        d.select(
-            "doc_id",
-            "source",
-            F.explode(shingles_from_words(F.col("w"), CONTAM_NGRAM)).alias("g"),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
     )
+    sh = pin(contam_grams(d, "source").persist(StorageLevel.MEMORY_AND_DISK))
     evset = (
         sh.filter(F.col("source") == CONTAM_EVAL_SOURCE).select("g").distinct()
     )
@@ -864,20 +854,29 @@ def ensure_contam_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def _doc_grams(d: DataFrame) -> DataFrame:
-    """(doc_id, g): each doc's word CONTAM_NGRAM-grams, with
-    multiplicity — the ONE definition of "gram" shared by
-    q_contamination / q_decontaminate-style probes, the incremental
-    index build, and the pipeline counter's history replay (r10
-    review: previously three inlined copies that could drift)."""
-    return (
-        spread(d.select("doc_id", "text"), "doc_id")
-        .select("doc_id", words("text").alias("w"))
-        .select(
-            "doc_id",
-            F.explode(shingles_from_words(F.col("w"), CONTAM_NGRAM)).alias("g"),
-        )
+def contam_grams(d: DataFrame, *carry: str) -> DataFrame:
+    """(doc_id, [carry...], g): each doc's word CONTAM_NGRAM-grams,
+    with multiplicity — the ONE definition of "gram" in the engine:
+    the eval-gram index build, every probe of that index
+    (q_contamination_incremental, the pipeline counter's history
+    replay, the stream gates q_stream_decontaminate and
+    quarantine_gate_plan's gate 2), q_contamination and
+    q_decontaminate all call it, so the stored grams and the probed
+    grams cannot drift (r10 review). Stream-safe: a plain projection
+    of ``d`` (no spread, which reads df.rdd); ``carry`` names extra
+    columns to keep beside doc_id."""
+    return d.select("doc_id", *carry, words("text").alias("w")).select(
+        "doc_id",
+        *carry,
+        F.explode(shingles_from_words(F.col("w"), CONTAM_NGRAM)).alias("g"),
     )
+
+
+def _doc_grams(d: DataFrame) -> DataFrame:
+    """contam_grams of a batch frame, widened first (spread: a narrow
+    scan would shingle on one task). Not for streams — spread reads
+    df.rdd."""
+    return contam_grams(spread(d.select("doc_id", "text"), "doc_id"))
 
 
 def _contam_inc_oracle() -> str:
@@ -1978,7 +1977,7 @@ def lsh_verified_pairs(
     # minhash longs, not the '|'-joined string — injective, identical
     # grouping (see dedup._band_table)
     buckets = (
-        _band_table(_minhash_signatures(d), compact=True)
+        _band_table(_minhash_signatures(d))
         .groupBy(*BAND_KEY)
         .agg(F.array_sort(F.collect_list("doc_id")).alias("ds"))
         .filter((F.size("ds") >= 2) & (F.size("ds") <= MAX_BUCKET))

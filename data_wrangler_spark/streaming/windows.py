@@ -21,7 +21,19 @@ the builder's plan, checks the UTC guard, clamps the state-shard count
 for the length of `start()`, drives the stream with an availableNow
 trigger into a memory sink, a foreachBatch function or a durable
 parquet dir, and removes what a non-durable run staged, checkpointed
-or registered.
+or registered. The foreachBatch sink ops (q_stream_sink_parquet,
+q_stream_upsert_state, q_stream_rollup) return frames that read a
+per-call output dir lazily, so they register that dir with
+functions.distributed.pin_dir and the caller's release_pinned()
+removes it.
+
+The ingest gates define no probe of their own. Each persisted index
+is probed by one function in the module that owns it —
+dedup.stream_lsh_gate (band index, with dedup.jaccard_verify, the
+batch probes' verify), dedup.cell_probe (k-means cell index, shared
+with the batch probes) and pipeline_ops.contam_grams (eval-gram
+index) — and a gate adds only its stream source, output columns and
+stateful dropDuplicates keys.
 
 Scale notes: streaming state (session windows, dedup keys) lives in
 the state store — at scale use the RocksDB provider
@@ -44,6 +56,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from data_wrangler_spark.catalog import load_table
+from data_wrangler_spark.functions.distributed import pin_dir
 from data_wrangler_spark.operators.aggregates import _osum, dsum
 from data_wrangler_spark.registry import register
 from data_wrangler_spark.scratch import ROOT, materialize, scratch_tag
@@ -618,7 +631,7 @@ def q_stream_sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     and schema fidelity all round-trip. At scale the same pattern
     fans out to partitioned-by-date layouts; compaction is a
     downstream concern."""
-    out = os.path.join(SCRATCH, "sink_out", f"pq_{uuid.uuid4().hex[:8]}")
+    out = pin_dir(os.path.join(SCRATCH, "sink_out", f"pq_{uuid.uuid4().hex[:8]}"))
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         (
@@ -669,7 +682,7 @@ def q_stream_upsert_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern with the directory as the transaction boundary."""
     from pyspark.sql import Window as W
 
-    state_root = os.path.join(SCRATCH, "upsert_state", uuid.uuid4().hex[:8])
+    state_root = pin_dir(os.path.join(SCRATCH, "upsert_state", uuid.uuid4().hex[:8]))
     os.makedirs(state_root, exist_ok=True)
     latest: dict[str, str | None] = {"path": None}
 
@@ -743,7 +756,7 @@ def q_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     RocksDB-state windowed aggregation (q_stream_tumbling) solves
     the same problem engine-side; this foreachBatch form is what you
     use when the VIEW must live in an external table."""
-    state_root = os.path.join(SCRATCH, "rollup_state", uuid.uuid4().hex[:8])
+    state_root = pin_dir(os.path.join(SCRATCH, "rollup_state", uuid.uuid4().hex[:8]))
     os.makedirs(state_root, exist_ok=True)
 
     def _version_before(batch_id: int) -> str | None:
@@ -849,11 +862,10 @@ def q_stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the gate q_corpus_pipeline_incremental applies in batch
     (stage 2.5), here proven to compose with Structured Streaming
     delivery."""
-    from data_wrangler_spark.functions.text import shingles_from_words, words
     from data_wrangler_spark.operators.dedup import INC_EXIST_PCT
     from data_wrangler_spark.operators.pipeline_ops import (
         CONTAM_EVAL_SOURCE,
-        CONTAM_NGRAM,
+        contam_grams,
         ensure_contam_index,
     )
 
@@ -865,15 +877,12 @@ def q_stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_stream(
         "q_stream_decontaminate",
         _parity_parts(docs),
-        lambda src: src.filter(
-            (F.col("source") != CONTAM_EVAL_SOURCE)
-            & (F.col("doc_id") % 10 >= INC_EXIST_PCT)
-        )
-        .select("doc_id", "source", words("text").alias("w"))
-        .select(
-            "doc_id",
+        lambda src: contam_grams(
+            src.filter(
+                (F.col("source") != CONTAM_EVAL_SOURCE)
+                & (F.col("doc_id") % 10 >= INC_EXIST_PCT)
+            ),
             "source",
-            F.explode(shingles_from_words(F.col("w"), CONTAM_NGRAM)).alias("g"),
         )
         .join(evset, "g", "left_semi")
         .select("doc_id", "source")
@@ -908,13 +917,13 @@ def q_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     designed for (the q_stream_decontaminate pattern applied to the
     dedup family, closing the matrix: every stage-2 gate now has a
     proven streaming delivery). New documents arrive as a file
-    stream (two micro-batches, doc_id parity split); each doc is
-    minhash-signed PER ROW by dedup.sig_expr (one expression tree —
-    no persist barrier, batch-parity pinned by pytest), banded, and
-    a STREAM-STATIC equi-join probes the persisted band-key (fmt=l4)
-    index built once by dedup.ensure_inc_index. Candidates verify by
-    exact shingle Jaccard against the static history shingle sets,
-    and stateful dropDuplicates emits each verified pair once.
+    stream (two micro-batches, doc_id parity split) into
+    dedup.stream_lsh_gate — per-row minhash signature, STREAM-STATIC
+    equi-join against the persisted band-key (fmt=l4) index built
+    once by dedup.ensure_inc_index, exact shingle Jaccard verify
+    (dedup.jaccard_verify, the batch probe's verify) against the
+    static history shingle sets — and stateful dropDuplicates emits
+    each verified pair once.
     Output: (doc_new, doc_old, jac_micro) — the duplicates a
     production ingest would QUARANTINE, emitted as they stream past
     the gate. Runs a REAL stream (file source → availableNow →
@@ -925,80 +934,23 @@ def q_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the static index side is (band, k0..k3, doc_id) — bytes
     per history doc, not text; band-partitioned so each probe prunes
-    to its band. The verify side joins the candidate doc_olds'
-    shingle sets read from the PERSISTED shingle table written
-    beside the band index at build time (inc_index_shingles) —
-    a probe run never re-shingles history text. A pair can
-    match on up to N_BANDS buckets, so verify work is duplicated at
-    most ×4 before the stateful dedup — the deliberate trade that
-    keeps state bounded by VERIFIED duplicates (leakage volume), not
-    by candidates or corpus. ingest cost stays O(new batch +
-    candidates) per micro-batch, the q_dedup_incremental property,
-    now demonstrated under Structured Streaming delivery."""
-    from data_wrangler_spark.functions.text import shingles_from_words, words
-    from data_wrangler_spark.operators.dedup import (
-        BAND_KEY,
-        INC_EXIST_PCT,
-        INC_JAC_MICRO,
-        _band_table,
-        ensure_inc_index,
-        inc_index_shingles,
-        sig_expr,
-    )
-
-    index_g = ensure_inc_index(spark, sf_dir)
+    to its band, and a probe run never re-shingles history text (see
+    stream_lsh_gate). State is one key per VERIFIED pair (leakage
+    volume), not per candidate or corpus doc; ingest cost stays
+    O(new batch + candidates) per micro-batch, the
+    q_dedup_incremental property, under Structured Streaming
+    delivery."""
+    from data_wrangler_spark.operators.dedup import INC_EXIST_PCT, stream_lsh_gate
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     new = docs.filter(F.col("doc_id") % 10 >= INC_EXIST_PCT)
-
-    # static verify side: the history shingle sets PERSISTED beside
-    # the band index (the stream side's set rides the stream row) —
-    # no per-run re-shingle of history text; the run pays one
-    # columnar scan of stored shingle bytes. persist() so the SECOND
-    # and later micro-batches reuse the decoded arrays instead of
-    # re-decoding the parquet per trigger (measured: unpinned, each
-    # trigger re-decodes + rebuilds the broadcast from disk)
-    from data_wrangler_spark.functions.distributed import pin
-
-    shd_old = pin(
-        inc_index_shingles(spark, sf_dir)
-        .select(F.col("doc_id").alias("doc_old"), "sb")
-        .persist()
+    return _run_stream(
+        "q_stream_dedup_ingest",
+        _parity_parts(new),
+        lambda src: stream_lsh_gate(spark, sf_dir, src).dropDuplicates(
+            ["doc_new", "doc_old"]
+        ),
     )
-
-    # size() is int32 — promote before the ×1e6 (ANSI overflow trap)
-    ni = F.size(F.array_intersect("sa", "sb")).cast("long")
-
-    def plan(src: DataFrame) -> DataFrame:
-        sigs = (
-            src.select("doc_id", words("text").alias("w"))
-            .select("doc_id", shingles_from_words(F.col("w"), 3).alias("sh"))
-            .select(
-                "doc_id",
-                sig_expr("sh").alias("sig"),
-                F.array_distinct("sh").alias("sa"),
-            )
-        )
-        return (
-            # compact band keys (r17): the stream-static probe joins on
-            # the 4 raw minhash longs, matching the fmt=l4 index
-            _band_table(sigs, carry=("sa",), compact=True)
-            .join(index_g.withColumnRenamed("doc_id", "doc_old"), list(BAND_KEY))
-            .join(shd_old, "doc_old")
-            .withColumn("_ni", ni)
-            .select(
-                F.col("doc_id").alias("doc_new"),
-                "doc_old",
-                F.expr(
-                    "div(_ni * 1000000, "
-                    "cast(size(sa) as bigint) + size(sb) - _ni)"
-                ).alias("jac_micro"),
-            )
-            .filter(F.col("jac_micro") >= INC_JAC_MICRO)
-            .dropDuplicates(["doc_new", "doc_old"])
-        )
-
-    return _run_stream("q_stream_dedup_ingest", _parity_parts(new), plan)
 
 
 def _stream_quarantine_oracle() -> str:
@@ -1028,8 +980,9 @@ def q_stream_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The unified QUARANTINE stream — both ingest gates in ONE
     Structured Streaming job: each arriving document is probed
     against the persisted LSH band index (near-dup gate,
-    q_stream_dedup_ingest's plan) AND the persisted eval-gram index
-    (contamination gate, q_stream_decontaminate's plan); a doc
+    dedup.stream_lsh_gate) AND the persisted eval-gram index
+    (contamination gate, pipeline_ops.contam_grams semi-joined to
+    it); a doc
     failing either gate is emitted once per failed gate as
     (doc_id, reason ∈ {{'near_dup', 'contaminated'}}). This is the
     operational shape of a production ingest: one stream in, one
@@ -1079,71 +1032,22 @@ def quarantine_gate_plan(
     plan across two invocations of a DURABLE checkpoint — production
     ingest restarts daily; the gate logic must not care which run of
     the query a document arrives in (VERDICT r11 #2)."""
-    from data_wrangler_spark.functions.text import shingles_from_words, words
-    from data_wrangler_spark.operators.dedup import (
-        BAND_KEY,
-        INC_JAC_MICRO,
-        _band_table,
-        ensure_inc_index,
-        inc_index_shingles,
-        sig_expr,
-    )
+    from data_wrangler_spark.operators.dedup import stream_lsh_gate
     from data_wrangler_spark.operators.pipeline_ops import (
         CONTAM_EVAL_SOURCE,
-        CONTAM_NGRAM,
+        contam_grams,
         ensure_contam_index,
     )
 
-    index_g = ensure_inc_index(spark, sf_dir)
-    evset = ensure_contam_index(spark, sf_dir)
-
-    # history shingle sets from the PERSISTED table beside the band
-    # index — no per-run history re-shingle; pinned so later triggers
-    # reuse the decoded arrays (see q_stream_dedup_ingest)
-    from data_wrangler_spark.functions.distributed import pin
-
-    shd_old = pin(
-        inc_index_shingles(spark, sf_dir)
-        .select(F.col("doc_id").alias("doc_old"), "sb")
-        .persist()
+    # gate 1: near-dup — dedup.stream_lsh_gate, projected to the doc
+    dup_flags = stream_lsh_gate(spark, sf_dir, src).select(
+        F.col("doc_new").alias("doc_id"), F.lit("near_dup").alias("reason")
     )
-
-    # gate 1: near-dup (q_stream_dedup_ingest's plan, doc_id only)
-    sigs = (
-        src.select("doc_id", words("text").alias("w"))
-        .select("doc_id", shingles_from_words(F.col("w"), 3).alias("sh"))
-        .select(
-            "doc_id",
-            sig_expr("sh").alias("sig"),
-            F.array_distinct("sh").alias("sa"),
-        )
-    )
-    ni = F.size(F.array_intersect("sa", "sb")).cast("long")
-    dup_flags = (
-        # compact band keys (r17): probe on the 4 raw minhash longs
-        _band_table(sigs, carry=("sa",), compact=True)
-        .join(index_g.withColumnRenamed("doc_id", "doc_old"), list(BAND_KEY))
-        .join(shd_old, "doc_old")
-        .withColumn("_ni", ni)
-        .filter(
-            F.expr(
-                "div(_ni * 1000000, "
-                "cast(size(sa) as bigint) + size(sb) - _ni)"
-            )
-            >= INC_JAC_MICRO
-        )
-        .select("doc_id", F.lit("near_dup").alias("reason"))
-    )
-
-    # gate 2: contamination (q_stream_decontaminate's plan)
+    # gate 2: contamination — pipeline_ops.contam_grams probing the
+    # eval-gram index, as in q_stream_decontaminate
     contam_flags = (
-        src.filter(F.col("source") != CONTAM_EVAL_SOURCE)
-        .select("doc_id", words("text").alias("w"))
-        .select(
-            "doc_id",
-            F.explode(shingles_from_words(F.col("w"), CONTAM_NGRAM)).alias("g"),
-        )
-        .join(evset, "g", "left_semi")
+        contam_grams(src.filter(F.col("source") != CONTAM_EVAL_SOURCE))
+        .join(ensure_contam_index(spark, sf_dir), "g", "left_semi")
         .select("doc_id", F.lit("contaminated").alias("reason"))
     )
 
@@ -1174,23 +1078,16 @@ def q_stream_embed_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams: q_stream_decontaminate; embeddings: this). New vectors
     arrive as a file stream (two micro-batches, vec_id parity split);
     each row is quantized and assigned to its nearest FROZEN
-    history-fit centroid by ONE codegen expression
-    (embeddings_ext.assign_cell_expr — the K×dim matrix rides the
-    plan as a SQL-parsed literal; no Arrow barrier, no shuffle,
-    batch-parity with kmeans_assign_mat pinned by pytest), then a
-    STREAM-STATIC equi-join on cell against the persisted history
-    members verifies exact cosine ≥ SEM_TAU, and stateful
-    dropDuplicates emits each verified pair once as (vec_new,
-    vec_old, cell, cos_sim). The oracle replays fit + assignments +
-    cosines from raw embeddings (the batch q_dedup_embed_incremental
-    oracle), so the persisted index AND the streaming emission are
-    both value-checked; pytest pins the streamed pair set ≡ the batch
-    op's. The pair cosine is the batch op's Arrow dot
-    (make_dot_udf + round6) — NOT the unrolled 64-dim expression,
-    which exceeds HotSpot's JIT bytecode limit and runs interpreted
-    on the per-pair hot path (make_dot_udf's docstring; re-measured
-    here: 29.4 s → 3.6 s warm per run at f5 when the expression dot
-    was swapped out).
+    history-fit centroid by ONE codegen expression (_assigned_stream;
+    batch-parity with kmeans_assign_mat pinned by pytest), then
+    dedup.cell_probe — the batch op's probe — joins the persisted
+    history members STREAM-STATIC on (cell, sub) and keeps exact
+    cosine ≥ SEM_TAU, and stateful dropDuplicates emits each verified
+    pair once as (vec_new, vec_old, cell, cos_sim). The oracle
+    replays fit + assignments + cosines from raw embeddings (the
+    batch q_dedup_embed_incremental oracle), so the persisted index
+    AND the streaming emission are both value-checked; pytest pins
+    the streamed pair set ≡ the batch op's.
 
     Scale: per micro-batch the work is O(batch + same-cell pairs) —
     assignment is embarrassingly row-local (the KB-sized centroid
@@ -1202,79 +1099,47 @@ def q_stream_embed_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     files. State is one key per EMITTED pair (~bytes each), bounded
     by leakage volume, never corpus size — the q_stream_dedup_ingest
     property, inherited."""
-    from data_wrangler_spark.functions.distributed import pin
-    from data_wrangler_spark.functions.vectors import (
-        make_dot_udf,
-        norm,
-        round6,
-        to_double_array,
-    )
     from data_wrangler_spark.operators.dedup import (
         INC_EXIST_PCT,
-        SEM_TAU,
+        cell_probe,
         ensure_embed_inc_index,
     )
+
+    cl_ids, cmat, members = ensure_embed_inc_index(spark, sf_dir)
+    new = (
+        load_table(spark, sf_dir, "embeddings")
+        .filter(F.col("vec_id") % 10 >= INC_EXIST_PCT)
+        .select("vec_id", "embedding")
+    )
+    return _run_stream(
+        "q_stream_embed_gate",
+        _parity_parts(new, "vec_id"),
+        lambda src: cell_probe(_assigned_stream(src, cl_ids, cmat), members)
+        .dropDuplicates(["vec_new", "vec_old"]),
+    )
+
+
+def _assigned_stream(src: DataFrame, cl_ids, cmat) -> DataFrame:
+    """(vec_new, ea, cell): arriving (vec_id, embedding) rows
+    quantized and assigned to the nearest FROZEN centroid by ONE
+    codegen expression (assign_cell_expr: the K×dim matrix rides the
+    plan as a SQL-parsed literal; no Arrow barrier, no shuffle) — the
+    stream probe side of dedup.cell_probe."""
+    from data_wrangler_spark.functions.vectors import to_double_array
     from data_wrangler_spark.operators.embeddings_ext import (
         assign_cell_expr,
         quantize_expr,
     )
 
-    cl_ids, cmat, members = ensure_embed_inc_index(spark, sf_dir)
-    raw = load_table(spark, sf_dir, "embeddings")
-
-    new = raw.filter(F.col("vec_id") % 10 >= INC_EXIST_PCT).select(
-        "vec_id", "embedding"
+    return (
+        src.select(
+            F.col("vec_id").alias("vec_new"),
+            to_double_array("embedding").alias("ea"),
+            quantize_expr(F.col("embedding")).alias("xs"),
+        )
+        .withColumn("cell", assign_cell_expr(cl_ids, cmat).cast("int"))
+        .drop("xs")
     )
-
-    # static side: history members with precomputed norms; pinned so
-    # later micro-batches reuse the decoded arrays (see
-    # q_stream_dedup_ingest). MAX_CELL sub-split arity comes from the
-    # static index side, exactly as in the batch twin.
-    from data_wrangler_spark.operators.dedup import _cell_subs, _with_sub
-
-    subs = _cell_subs(members)
-    b = pin(
-        _with_sub(members, subs, "e")
-        .select(
-            F.col("vec_id").alias("vec_old"),
-            "cell",
-            "sub",
-            F.col("e").alias("eb"),
-            norm(F.col("e")).alias("nb"),
-        )
-        .persist()
-    )
-
-    dot_udf = make_dot_udf()
-
-    def plan(src: DataFrame) -> DataFrame:
-        a = _with_sub(
-            src.select(
-                F.col("vec_id").alias("vec_new"),
-                to_double_array("embedding").alias("ea"),
-                quantize_expr(F.col("embedding")).alias("xs"),
-            )
-            .withColumn("cell", assign_cell_expr(cl_ids, cmat).cast("int"))
-            .withColumn("na", norm(F.col("ea")))
-            .drop("xs"),
-            subs,
-            "ea",
-        )
-        return (
-            a.join(b, ["cell", "sub"])
-            .withColumn(
-                "cos_sim",
-                round6(
-                    dot_udf(F.col("ea"), F.col("eb"))
-                    / (F.col("na") * F.col("nb"))
-                ),
-            )
-            .filter(F.col("cos_sim") >= SEM_TAU)
-            .select("vec_new", "vec_old", "cell", "cos_sim")
-            .dropDuplicates(["vec_new", "vec_old"])
-        )
-
-    return _run_stream("q_stream_embed_gate", _parity_parts(new, "vec_id"), plan)
 
 
 def _stream_dsir_oracle() -> str:
@@ -1478,71 +1343,18 @@ def q_stream_quarantine_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def embed_gate_resume_plan(
-    spark: SparkSession, src, members, cl_ids, cmat, day: int
-):
-    """One restart's plan for the resumable embedding gate: quantize
-    + nearest-FROZEN-centroid assignment as a single codegen
-    expression (the centroid matrix rides the plan as a SQL-parsed
-    literal — q_stream_embed_gate's rule), stream-static equi-join on
-    cell against the index members AS OF this restart, exact Arrow-
-    dot cosine ≥ SEM_TAU, tagged with this restart's ingest_day.
-    Factored out so the registry op and the RocksDB restart pytest
-    drive the identical plan against their own checkpoints."""
-    from data_wrangler_spark.functions.vectors import (
-        make_dot_udf,
-        norm,
-        round6,
-        to_double_array,
-    )
-    from data_wrangler_spark.operators.dedup import SEM_TAU
-    from data_wrangler_spark.operators.embeddings_ext import (
-        assign_cell_expr,
-        quantize_expr,
-    )
+def embed_gate_resume_plan(src: DataFrame, members, cl_ids, cmat, day: int):
+    """One restart's plan for the resumable embedding gate: the
+    q_stream_embed_gate plan (dedup.cell_probe over _assigned_stream)
+    against the index members AS OF this restart, tagged with this
+    restart's ingest_day. Factored out so the registry op and the
+    RocksDB restart pytest drive the identical plan against their
+    own checkpoints."""
+    from data_wrangler_spark.operators.dedup import cell_probe
 
-    # MAX_CELL: split arity from this restart's index membership —
-    # identical to the batch two-day probe's per-day subs
-    from data_wrangler_spark.operators.dedup import _cell_subs, _with_sub
-
-    subs = _cell_subs(members)
-    a = _with_sub(
-        src.select(
-            F.col("vec_id").alias("vec_new"),
-            to_double_array("embedding").alias("ea"),
-            quantize_expr(F.col("embedding")).alias("xs"),
-        )
-        .withColumn("cell", assign_cell_expr(cl_ids, cmat).cast("int"))
-        .withColumn("na", norm(F.col("ea")))
-        .drop("xs"),
-        subs,
-        "ea",
-    )
-    b = _with_sub(members, subs, "e").select(
-        F.col("vec_id").alias("vec_old"),
-        "cell",
-        "sub",
-        F.col("e").alias("eb"),
-        norm(F.col("e")).alias("nb"),
-    )
-    dot_udf = make_dot_udf()
     return (
-        a.join(b, ["cell", "sub"])
-        .withColumn(
-            "cos_sim",
-            round6(
-                dot_udf(F.col("ea"), F.col("eb"))
-                / (F.col("na") * F.col("nb"))
-            ),
-        )
-        .filter(F.col("cos_sim") >= SEM_TAU)
-        .select(
-            F.lit(day).alias("ingest_day"),
-            "vec_new",
-            "vec_old",
-            "cell",
-            "cos_sim",
-        )
+        cell_probe(_assigned_stream(src, cl_ids, cmat), members)
+        .select(F.lit(day).alias("ingest_day"), "*")
         .dropDuplicates(["vec_new", "vec_old"])
     )
 
@@ -1640,9 +1452,7 @@ def q_stream_embed_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         _run_stream(
             "q_stream_embed_resume",
             [vecs],
-            lambda src: embed_gate_resume_plan(
-                spark, src, members, cl_ids, cmat, day
-            ),
+            lambda src: embed_gate_resume_plan(src, members, cl_ids, cmat, day),
             durable_root=root,
         )
 

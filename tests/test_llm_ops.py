@@ -928,8 +928,7 @@ def test_index_compaction_preserves_probes_and_reguards(spark, sf_dir, tmp_path)
     base = _inc2day_path(sf_dir)
     d = load_table(spark, sf_dir, "documents")
     d2_bands = _band_table(
-        _minhash_signatures(d.filter(F.col("doc_id") % 10 == INC2_DAY2)),
-        compact=True,
+        _minhash_signatures(d.filter(F.col("doc_id") % 10 == INC2_DAY2))
     )
 
     def probe(idx):
@@ -991,8 +990,7 @@ def test_index_compaction_preserves_probes_and_reguards(spark, sf_dir, tmp_path)
     syn_base = _ensure_inc2day_built(spark, sf)
     syn_d = load_table(spark, sf, "documents")
     syn_bands = _band_table(
-        _minhash_signatures(syn_d.filter(F.col("doc_id") % 10 == INC2_DAY2)),
-        compact=True,
+        _minhash_signatures(syn_d.filter(F.col("doc_id") % 10 == INC2_DAY2))
     )
     comp = spark.read.schema(_BANDS_SCHEMA).parquet(
         f"{syn_base}/compacted"

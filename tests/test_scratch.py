@@ -96,13 +96,17 @@ def test_streams_and_temp_views_have_one_home():
     """Every file stream is opened by streaming/windows.py's
     `_file_stream` and started by its `_run_stream`; only catalog.py
     registers named temp views (builders pass frames to spark.sql as
-    arguments instead)."""
+    arguments instead). The incremental dedup probes have one
+    definition each: the exact-Jaccard verify (dedup.jaccard_verify)
+    and the cell index's member-side sub split (dedup.cell_probe)."""
     import ast
 
     homes = {
         ".readStream": ("streaming/windows.py", "_file_stream"),
         ".writeStream": ("streaming/windows.py", "_run_stream"),
         "createOrReplaceTempView": ("catalog.py", None),
+        'array_intersect("sa", "sb")': ("operators/dedup.py", "jaccard_verify"),
+        "_with_sub(members": ("operators/dedup.py", "cell_probe"),
     }
     offenders = []
     for root, _, files in os.walk(PKG):

@@ -679,7 +679,7 @@ def test_embed_gate_resumes_from_durable_checkpoint(spark, sf_dir, tmp_path):
             .parquet(src_dir)
         )
         q = (
-            W.embed_gate_resume_plan(spark, src, members, cl_ids, cmat, day)
+            W.embed_gate_resume_plan(src, members, cl_ids, cmat, day)
             .writeStream.outputMode("append")
             .format("parquet")
             .option("path", out)
@@ -961,3 +961,29 @@ def test_sql_builders_leave_caller_views_alone(spark, sf_dir):
             spark.catalog.dropTempView(n)
         for n, df in saved.items():
             df.createOrReplaceTempView(n)
+
+
+def test_sink_op_output_dirs_removed_on_release(engine):
+    """The foreachBatch sink ops return frames that read a per-call
+    output dir lazily, so the builder cannot delete it; the caller's
+    release_cache() does. Three calls of each op leave the three
+    output roots as they were (the ingest writer runs two of these
+    ops on every cycle)."""
+    import os
+
+    from data_wrangler_spark.streaming.windows import SCRATCH
+
+    def entries():
+        out = {}
+        for d in ("sink_out", "upsert_state", "rollup_state"):
+            p = os.path.join(SCRATCH, d)
+            out[d] = sorted(os.listdir(p)) if os.path.isdir(p) else []
+        return out
+
+    engine.release_cache()
+    before = entries()
+    for name in ("q_stream_sink_parquet", "q_stream_upsert_state", "q_stream_rollup"):
+        for _ in range(3):
+            assert engine.run(name).count() > 0
+    engine.release_cache()
+    assert entries() == before

@@ -152,6 +152,26 @@ STREAM_AUDIT = [
 # (same stash); their micro-batch evidence is the gate plan above plus
 # the file-source/file-sink commit logs exercised by the resume tests.
 
+# Plan tokens that differ between two runs of the same code: attribute
+# ids, exchange plan ids, object hashes, stream run ids, the per-call
+# suffix of checkpoint and staging dirs, and the checkout's location.
+# They are rewritten so an unchanged engine regenerates PLANS.md byte
+# for byte and a diff shows only plan-shape changes.
+VOLATILE = [
+    (re.compile(r"#\d+"), "#"),
+    (re.compile(r"plan_id=\d+"), "plan_id="),
+    (re.compile(r"@[0-9a-f]{5,}\b"), "@"),
+    (re.compile(r"runId = [0-9a-f-]+"), "runId = "),
+    (re.compile(r"/(ckpt|stream_in)/(\w+?)_[0-9a-f]{8}\b"), r"/\1/\2"),
+    (re.compile(re.escape(REPO)), "<repo>"),
+]
+
+
+def stable(line: str) -> str:
+    for pat, repl in VOLATILE:
+        line = pat.sub(repl, line)
+    return line
+
 
 def main() -> None:
     from data_wrangler_spark.session import get_spark
@@ -189,7 +209,7 @@ def main() -> None:
             if name in no_broadcast:
                 spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bc)
         lines = [
-            ln.strip()[:160]
+            stable(ln.strip())[:160]
             for ln in plan.splitlines()
             if keep.search(ln) and not ln.strip().startswith("ReusedExchange")
         ]
@@ -208,7 +228,7 @@ def main() -> None:
 
         plan = _sw._LAST_STREAM_PLAN or "(no micro-batch plan captured)"
         lines = [
-            ln.strip()[:160]
+            stable(ln.strip())[:160]
             for ln in plan.splitlines()
             if stream_keep.search(ln)
             and not ln.strip().startswith("ReusedExchange")

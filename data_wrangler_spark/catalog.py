@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import os
 import stat
+import threading
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
@@ -136,12 +137,21 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 class Catalog:
-    """Named-table catalog bound to one (spark, sf_dir) pair."""
+    """Named-table catalog bound to one (spark, sf_dir) pair.
+
+    ``table`` loads on the caller's session. SQL templates run on a
+    session the catalog owns (``register_views``), where its ten tables
+    are registered as temp views once: no other code writes into that
+    namespace, so two catalogs over different fixture dirs never
+    clobber each other's views and a caller's own views on ``spark``
+    are never overwritten."""
 
     def __init__(self, spark: SparkSession, sf_dir: str):
         self.spark = spark
         self.sf_dir = sf_dir
         self._cache: dict[str, DataFrame] = {}
+        self._views: SparkSession | None = None
+        self._views_lock = threading.Lock()
 
     def table(self, name: str) -> DataFrame:
         if name not in self._cache:
@@ -164,7 +174,22 @@ class Catalog:
             )
         return column
 
-    def register_views(self, names: tuple[str, ...] = TABLES) -> None:
-        """Register temp views so queries can use ``spark.sql``."""
-        for name in names:
-            self.table(name).createOrReplaceTempView(name)
+    def register_views(self) -> SparkSession:
+        """Return the catalog's own session, where every table is a
+        temp view so queries can use ``sql``.
+
+        The first call builds it: ``spark.newSession()`` (shared
+        SparkContext, cache and job scheduling; its own temp views and
+        SQL conf) with the engine's runtime confs, then one
+        ``createOrReplaceTempView`` per table. The session is published
+        only after every view is registered, so a missing table fails
+        that call and the next call tries again; later calls register
+        nothing."""
+        if self._views is None:
+            with self._views_lock:
+                if self._views is None:
+                    session = apply_runtime_confs(self.spark.newSession())
+                    for name in TABLES:
+                        load_table(session, self.sf_dir, name).createOrReplaceTempView(name)
+                    self._views = session
+        return self._views

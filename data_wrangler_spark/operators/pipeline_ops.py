@@ -1931,12 +1931,6 @@ def q_dedup_lsh_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     alternations, window over cluster-sized frames."""
     from pyspark import StorageLevel
 
-    from data_wrangler_spark.operators.dedup import (
-        MAX_BUCKET,
-        _band_table,
-        _minhash_signatures,
-    )
-
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "n_chars"
     )

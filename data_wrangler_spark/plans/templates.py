@@ -156,6 +156,10 @@ class SQLTemplates:
         raise KeyError(name)
 
     def run(self, spark: SparkSession, name: str, *positional, **named) -> DataFrame:
+        """Bind ``positional`` / ``named`` into template ``name`` and
+        return its DataFrame. The query runs on the catalog's own
+        session (``Catalog.register_views``), not on ``spark``, so a
+        call writes no state into the caller's session."""
         tpl = self.get(name)
         name = tpl.name
         if len(positional) != tpl.n_positional:
@@ -170,10 +174,10 @@ class SQLTemplates:
         # known table — checked against real schema, not a regex
         for p in tpl.identifier_params:
             self._validate_identifier(str(named[p]))
-        self.catalog.register_views()
+        session = self.catalog.register_views()
         args = {f"p{i + 1}": v for i, v in enumerate(positional)}
         args.update({k: named[k] for k in (*tpl.named_params, *tpl.identifier_params)})
-        return spark.sql(tpl.sql, args=args)
+        return session.sql(tpl.sql, args=args)
 
     def _validate_identifier(self, ident: str) -> None:
         from data_wrangler_spark.catalog import TABLES, UnknownIdentifierError

@@ -57,27 +57,43 @@ def scratch_tag(sf_dir: str, source_table: str = "orders", params: str = "") -> 
     return f"{os.path.basename(abs_dir)}_{digest}"
 
 
+def _built_here(marker: str, path: str) -> bool:
+    """The marker exists and names ``path``, or is empty (markers
+    written before they recorded a path)."""
+    try:
+        with open(marker) as fh:
+            where = fh.read()
+    except FileNotFoundError:
+        return False
+    return where in ("", os.path.realpath(path))
+
+
 def materialize(path: str, build: Callable[[str], None]) -> str:
     """Return ``path`` once ``build(path)`` has written it completely.
 
-    Hit: one ``exists`` on the marker. Miss: take an exclusive flock on
-    the sibling ``path + ".lock"`` (it serializes threads and processes
-    alike), check the marker again, remove any partial output a failed
-    or killed build left, build, write the marker last. ``build``
-    writes straight into ``path``, which does not exist when it is
-    called; it is not a temp dir renamed afterwards, because stream
-    checkpoints and file-sink logs record absolute paths. If ``build``
-    raises, no marker is written and the next call rebuilds."""
+    Hit: the marker exists and names ``path``. Miss: take an exclusive
+    flock on the sibling ``path + ".lock"`` (it serializes threads and
+    processes alike), check the marker again, remove any partial output
+    a failed or killed build left, build, write the marker last.
+    ``build`` writes straight into ``path``, which does not exist when
+    it is called; it is not a temp dir renamed afterwards, because
+    stream checkpoints and file-sink logs record absolute paths. For
+    the same reason the marker records the absolute path it was built
+    at, and an artifact moved or copied elsewhere is a miss: read from
+    the new place, a file sink whose log names the old paths reads as
+    empty. If ``build`` raises, no marker is
+    written and the next call rebuilds."""
     marker = os.path.join(path, MARKER)
-    if os.path.exists(marker):
+    if _built_here(marker, path):
         return path
     os.makedirs(os.path.dirname(path), exist_ok=True)
     # closing the lock file releases the flock
     with open(path + ".lock", "a") as lock:
         fcntl.flock(lock, fcntl.LOCK_EX)
-        if not os.path.exists(marker):
+        if not _built_here(marker, path):
             shutil.rmtree(path, ignore_errors=True)
             build(path)
             os.makedirs(path, exist_ok=True)
-            open(marker, "w").close()
+            with open(marker, "w") as fh:
+                fh.write(os.path.realpath(path))
     return path

@@ -756,9 +756,11 @@ class GatewayServer:
     # beside the writer).
     # Members serve CONCURRENTLY under the per-thread pin list
     # (functions/distributed.py): each request thread owns a disjoint
-    # build-pin → materialize → release lifecycle, so parallel binds
-    # of the template catalog never contend on a lock. Conservative
-    # default: anything NOT listed here keeps the serialized path.
+    # build-pin → materialize → release lifecycle. The /q template
+    # catalog writes no session state at all: it runs on a session
+    # its Catalog owns, whose views are registered once, so parallel
+    # binds never contend on a lock. Conservative default: anything
+    # NOT listed here keeps the serialized path.
     _CONCURRENT_SAFE = frozenset(
         {
             "q_sort_paginate",
@@ -812,7 +814,7 @@ class GatewayServer:
         # The explicit _CONCURRENT_SAFE set serves in parallel; all
         # other names keep the one-at-a-time conservative default.
         # /q, /dt and /db stay concurrent — they touch neither pins
-        # nor scratch.
+        # nor scratch, and /q writes no session state.
         ctx = (
             contextlib.nullcontext()
             if qname in self._CONCURRENT_SAFE

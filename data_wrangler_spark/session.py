@@ -156,6 +156,15 @@ def get_spark(app_name: str = "data_wrangler_spark", cpus: int | None = None) ->
         # applies only when this builder creates the session, and a
         # foreign session keeps its own value.
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # No PySpark call-site capture. With it on, every F.* / Column
+        # call adds ~5 py4j round trips (active session, origin lookup,
+        # conf get, set, clear); off, a warm q_agg_groupby run at
+        # sf0.01 makes 165 py4j calls instead of 665. The capture only
+        # names the Python line in an error's DataFrame context.
+        # PySpark reads the flag once per process from the first
+        # active session, so a foreign session the process started
+        # with keeps its own value.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
     )
     for k, v in RUNTIME_CONFS.items():

@@ -189,6 +189,12 @@ def test_load_table_directory_invalidated_by_added_part(spark, tmp_path):
     assert jobs == 0
 
 
+def test_engine_sessions_capture_no_python_call_sites(spark):
+    """get_spark turns off PySpark's per-Column call-site capture, which
+    costs ~5 py4j round trips on every F.* / Column call."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+
 def test_analytics_pass_reuses_compiled_codegen_classes(engine, spark):
     """The codegen class cache holds a whole analytics pass (the heavy
     four plus the light four, ~190 generated classes), so a second pass

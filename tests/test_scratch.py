@@ -75,6 +75,34 @@ def test_failed_build_is_removed_and_rebuilt(spark, tmp_path):
     assert got == list(range(10))
 
 
+def test_copied_artifact_is_rebuilt_where_it_lands(tmp_path):
+    """An artifact copied to another root is a miss there (stream
+    checkpoints and sink logs inside it name the old path), while a
+    marker written before markers recorded a path still counts as
+    built."""
+    import shutil
+
+    calls = []
+
+    def build(p):
+        calls.append(p)
+        os.makedirs(p)
+
+    a = str(tmp_path / "a" / "artifact")
+    b = str(tmp_path / "b" / "artifact")
+    materialize(a, build)
+    shutil.copytree(tmp_path / "a", tmp_path / "b")
+    materialize(b, build)
+    materialize(b, build)
+    assert calls == [a, b]
+
+    c = str(tmp_path / "c" / "artifact")
+    os.makedirs(c)
+    open(os.path.join(c, MARKER), "w").close()
+    materialize(c, build)
+    assert calls == [a, b]
+
+
 def test_scratch_root_is_spelled_only_in_scratch_module():
     """No package file except scratch.py names the `.scratch` directory
     (the module name `data_wrangler_spark.scratch` is not a path)."""

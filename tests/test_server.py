@@ -148,6 +148,25 @@ def test_relation_list_paged_sorted(server):
     assert body2["results"][0]["c_name"] >= names[-1]
 
 
+def test_named_query_leaves_caller_views_alone(server, spark, sf_dir):
+    """A /q template runs on the catalog's own session: the caller's
+    own `orders` view on the server's session still holds what the
+    caller put there, and the template still reads the orders table."""
+    from data_wrangler_spark.catalog import load_table
+
+    key = load_table(spark, sf_dir, "orders").agg(
+        {"o_orderkey": "min"}
+    ).collect()[0][0]
+    spark.range(1).createOrReplaceTempView("orders")
+    try:
+        code, body = get(server, f"/q/support/ticket/{key}")
+        assert spark.table("orders").columns == ["id"]
+    finally:
+        spark.catalog.dropTempView("orders")
+    assert code == 200 and body["ok"] is True
+    assert [r["o_orderkey"] for r in body["results"]] == [key]
+
+
 def test_get_record_by_pk(server, spark, sf_dir):
     """getRecord (index.js:496-533): {ok:true, row} — null on miss."""
     from data_wrangler_spark.catalog import load_table

@@ -2,6 +2,8 @@
 positional ?-binding, named params, identifier validation, missing-
 param errors (index.js:264-325, lib/examiner.js:162-208)."""
 
+import os
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -189,3 +191,86 @@ def test_column_name_as_table_is_refused(spark, fuzz_templates):
 
     with pytest.raises(AnalysisException):
         fuzz_templates.run(spark, "identOnly", tbl="r_name").collect()
+
+
+def test_template_calls_register_each_view_once(spark, sf_dir, monkeypatch):
+    """Views are registered on the first template run and never again:
+    five calls, started at once from five threads on a cold catalog,
+    register each of the ten tables at most once in total."""
+    import sys
+    import threading
+
+    df_class = type(spark.range(1))
+    register = df_class.createOrReplaceTempView
+    registered = []
+
+    def counting(self, name):
+        registered.append(name)
+        return register(self, name)
+
+    monkeypatch.setattr(df_class, "createOrReplaceTempView", counting)
+    reg = SQLTemplates(Catalog(spark, sf_dir))
+    reg.register("byKey", "SELECT * FROM orders WHERE o_orderkey = ?")
+    start = threading.Barrier(5)
+    rows = []
+
+    def call(key):
+        start.wait(timeout=60)
+        rows.append(reg.run(spark, "byKey", key).count())
+
+    threads = [threading.Thread(target=call, args=(k,)) for k in range(1, 6)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert len(rows) == 5
+    assert registered and max(registered.count(n) for n in registered) == 1
+
+
+def test_two_catalogs_on_one_session_keep_their_own_tables(spark, sf_dir, tmp_path):
+    """Two template catalogs over different fixture dirs, run
+    interleaved from two threads on one session, each read their own
+    fixture: neither catalog's views replace the other's."""
+    import threading
+
+    import pyarrow.parquet as pq
+
+    from data_wrangler_spark.catalog import TABLES
+    from data_wrangler_spark.gateway import reference_catalog
+
+    small = tmp_path / "small"
+    small.mkdir()
+    for t in TABLES:
+        src = os.path.abspath(f"{sf_dir}/{t}.parquet")
+        if t == "orders":
+            pq.write_table(pq.read_table(src).slice(0, 7), small / f"{t}.parquet")
+        else:
+            os.symlink(src, small / f"{t}.parquet")
+    expected = {
+        sf_dir: spark.read.parquet(f"{sf_dir}/orders.parquet").count(),
+        str(small): 7,
+    }
+    assert expected[sf_dir] != 7
+    regs = {d: reference_catalog(spark, d) for d in expected}
+    start = threading.Barrier(2)
+    got = {d: [] for d in expected}
+
+    def worker(d):
+        for _ in range(8):
+            start.wait(timeout=60)
+            df = regs[d].run(spark, "salesforce.fromwhat", pk="o_orderkey", what="orders")
+            got[d].append(df.count())
+
+    threads = [threading.Thread(target=worker, args=(d,)) for d in expected]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert got == {d: [n] * 8 for d, n in expected.items()}

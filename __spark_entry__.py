@@ -13,14 +13,17 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 import data_wrangler_spark as dws
+from data_wrangler_spark.session import apply_runtime_confs
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query (D7 inner equi-join, the reference's richest
-    query shape — config.json:36) on sf0.001; driver checks rows>0."""
-    return dws.REGISTRY["q_inner_join"].run(spark, SMOKE_SF_DIR)
+    query shape — config.json:36) on sf0.001; driver checks rows>0.
+    The caller owns ``spark``: the engine's runtime confs are applied
+    to it here, once."""
+    return dws.REGISTRY["q_inner_join"].run(apply_runtime_confs(spark), SMOKE_SF_DIR)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

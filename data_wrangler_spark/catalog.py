@@ -114,10 +114,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     rejects; with ``nanosAsLong`` it arrives as raw int64 nanos and
     the branch below converts it to a microsecond timestamp. Both
     paths yield the same wall-clock values under the UTC session TZ.
+
+    ``spark`` must already carry ``RUNTIME_CONFS`` (``nanosAsLong``,
+    the UTC time zone): ``get_spark``, ``Engine``, the catalog's own
+    session and the ``__spark_entry__`` contract apply them
+    once per session, so a load writes no session conf.
     """
     if name not in TABLES:
         raise UnknownIdentifierError(f"unknown table: {name!r}")
-    apply_runtime_confs(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
     key = os.path.abspath(path)
     try:

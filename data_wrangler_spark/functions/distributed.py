@@ -32,6 +32,7 @@ __all__ = [
     "ntile_from_position",
     "pin",
     "pin_dir",
+    "pin_scope",
     "release_pinned",
     "release_local_checkpoint",
     "spread",
@@ -103,6 +104,7 @@ def spread(df: DataFrame, *keys: str) -> DataFrame:
 # the dir beside the pins and release_pinned() removes it.
 import shutil as _shutil
 import threading as _threading
+from contextlib import contextmanager as _contextmanager
 
 _PIN_TL = _threading.local()
 
@@ -134,18 +136,36 @@ def pinned_frames() -> list[DataFrame]:
     return list(_pin_list())
 
 
-def release_pinned(blocking: bool = False) -> int:
-    """Unpersist every frame the current thread pinned, then remove
-    the dirs it registered with pin_dir; returns how many frames were
-    released."""
+def _unpersist_to(mark: int, blocking: bool = False) -> int:
+    """Unpersist the current thread's pins beyond the first ``mark``;
+    returns how many were released."""
     n = 0
     lst = _pin_list()
-    while lst:
+    while len(lst) > mark:
         try:
             lst.pop().unpersist(blocking)
             n += 1
         except Exception:
             pass  # session already stopped — nothing to release
+    return n
+
+
+@_contextmanager
+def pin_scope():
+    """Unpersist, on exit, the frames the current thread pinned inside
+    the block; frames pinned before it stay pinned."""
+    mark = len(_pin_list())
+    try:
+        yield
+    finally:
+        _unpersist_to(mark)
+
+
+def release_pinned(blocking: bool = False) -> int:
+    """Unpersist every frame the current thread pinned, then remove
+    the dirs it registered with pin_dir; returns how many frames were
+    released."""
+    n = _unpersist_to(0, blocking)
     dirs = _pin_list("dirs")
     while dirs:
         _shutil.rmtree(dirs.pop(), ignore_errors=True)

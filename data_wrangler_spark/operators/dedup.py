@@ -21,6 +21,8 @@ otherwise explode the join.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from data_wrangler_spark.catalog import load_table
@@ -37,7 +39,13 @@ from data_wrangler_spark.functions.vectors import (
 )
 from data_wrangler_spark.functions.distributed import pin, spread
 from data_wrangler_spark.registry import register
-from data_wrangler_spark.scratch import ROOT, materialize, scratch_tag
+from data_wrangler_spark.scratch import (
+    ROOT,
+    materialize,
+    read_manifest,
+    scratch_tag,
+    write_manifest,
+)
 
 N_MINHASH = 16  # minhash signature length
 N_BANDS = 4  # LSH bands (rows per band = 16/4 = 4)
@@ -124,8 +132,6 @@ _EMBED_SIZING_CACHE: dict[str, tuple[float, int]] = {}
 
 
 def _fixture_mtime(sf_dir: str, table: str) -> float:
-    import os
-
     path = f"{sf_dir}/{table}.parquet"
     try:
         return os.stat(path).st_mtime
@@ -1262,7 +1268,6 @@ def prefix_verified_pairs(
     # on any corpus where the guard passes, the result is unchanged
     # (the persist is reused by the pair-emission consumer below).
     import math
-    import os
 
     if bound is None:
         bound = float(
@@ -2595,129 +2600,78 @@ def q_embed_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _commit_index_manifest(
-    base: str, version: int, centroids: str, members: list[str]
-) -> None:
-    """Commit an embedding-index version: write INDEX-v{N}.json via
-    tmp + atomic rename, then flip CURRENT_INDEX the same way — the
-    q_snapshot_commit object-store protocol (io_formats.py
-    _commit_manifest) applied to the vector index's (quantizer,
-    member roots) pair. Readers resolve CURRENT_INDEX → manifest →
-    roots, so a serve sees v1 or v2 in full, never a mix."""
-    import json as _json
-    import os as _os
-
-    man = {"version": version, "centroids": centroids, "members": members}
-
-    def write_sync(path: str, body: str) -> None:
-        # fsync file then parent dir so the atomicity claim covers
-        # host/power crashes, not just process crashes (ADVICE r13):
-        # os.replace alone leaves the rename in the dirty page cache
-        with open(path + ".tmp", "w") as fh:
-            fh.write(body)
-            fh.flush()
-            _os.fsync(fh.fileno())
-        _os.replace(path + ".tmp", path)
-        dfd = _os.open(base, _os.O_RDONLY)
-        try:
-            _os.fsync(dfd)
-        finally:
-            _os.close(dfd)
-
-    write_sync(f"{base}/INDEX-v{version}.json", _json.dumps(man))
-    write_sync(f"{base}/CURRENT_INDEX", f"INDEX-v{version}.json")
-
-
-def read_embed_index(spark: SparkSession, base: str, version: int | None = None):
-    """Resolve CURRENT_INDEX (or a pinned version — time travel) to
-    its manifest and open the index it describes: returns
+def read_embed_index(spark: SparkSession, path: str, version: int | None = None):
+    """Open the rebuilt embedding index at ``path`` through its
+    manifest — CURRENT, or a pinned version (time travel): returns
     (cl_ids, cmat, members_df) — the quantizer in the numpy form
     kmeans_assign_mat consumes plus the member roots unioned into one
-    DataFrame (each root is its own cell-partitioned table)."""
-    import json as _json
-
-    if version is None:
-        with open(f"{base}/CURRENT_INDEX") as fh:
-            mname = fh.read().strip()
-    else:
-        mname = f"INDEX-v{version}.json"
-    with open(f"{base}/{mname}") as fh:
-        man = _json.load(fh)
-    cl_ids, cmat = _read_embed_centroids(spark, f"{base}/{man['centroids']}")
+    DataFrame (each root is its own cell-partitioned table). Manifest
+    roots are relative to ``path``."""
+    man = read_manifest(path, version)
+    roots = [os.path.normpath(f"{path}/{r}") for r in man["members"]]
+    cl_ids, cmat = _read_embed_centroids(
+        spark, os.path.normpath(f"{path}/{man['centroids']}")
+    )
     mem_schema = "vec_id bigint, e array<double>, cell int"
-    members = spark.read.schema(mem_schema).parquet(f"{base}/{man['members'][0]}")
-    for root in man["members"][1:]:
-        members = members.unionByName(
-            spark.read.schema(mem_schema).parquet(f"{base}/{root}")
-        )
+    members = spark.read.schema(mem_schema).parquet(roots[0])
+    for root in roots[1:]:
+        members = members.unionByName(spark.read.schema(mem_schema).parquet(root))
     return cl_ids, cmat, members
 
 
 def _ensure_embed_rebuilt(spark: SparkSession, sf_dir: str) -> str:
-    """Execute the re-cluster ACTION q_embed_index_refresh's drift
-    report recommends (VERDICT r12 #1) — the vector index's
+    """Build-if-missing the re-cluster ACTION q_embed_index_refresh's
+    drift report recommends (VERDICT r12 #1) — the vector index's
     compaction/maintenance leg, mirroring what q_dedup_index_compact
-    is to the LSH band index. Starting from the two-day index
-    (day0/ + day1/ sibling roots, frozen history-fit quantizer):
+    is to the LSH band index; returns the rebuilt index's path. Like
+    that op's `compacted/`, the rebuild is its own artifact nested in
+    the two-day index's root (`rebuild/`) and writes nothing outside
+    it. Its one `materialize` build:
 
-    - commit INDEX-v1.json describing the as-ingested index
-      (centroids + [day0, day1]) if no manifest exists yet;
-    - REFIT the integer k-means on the index's CURRENT membership
+    - writes manifest-v1 describing the as-ingested index (the
+      two-day root's centroids + [day0, day1]);
+    - REFITS the integer k-means on the index's CURRENT membership
       (everything except tomorrow's batch — the exact refit the
-      drift report measures), rewrite every member into ONE
+      drift report measures), rewrites every member into ONE
       cell-partitioned root `v2/members` under the new quantization
       (this also folds the append's sibling roots together —
-      VERDICT r12 #6), and persist the new quantizer `v2/centroids`;
-    - commit INDEX-v2.json + flip CURRENT_INDEX atomically.
+      VERDICT r12 #6), and persists the new quantizer `v2/centroids`;
+    - writes manifest-v2, which CURRENT names.
 
-    A crash mid-rebuild leaves CURRENT_INDEX on the still-valid v1;
-    the rerun rebuilds v2 (overwrite) and flips. Once flipped, the
-    ensure is a no-op — serves pay zero rebuild cost."""
-    import os as _os
-
+    The marker, written after the build, publishes both versions at
+    once; a crash mid-build leaves no marker and the next call
+    rebuilds. Once built, the ensure is a no-op — serves pay zero
+    rebuild cost."""
     from data_wrangler_spark.operators.embeddings_ext import (
         kmeans_assign_mat,
         kmeans_fit_mat,
     )
 
-    base = _ensure_embed_2day_built(spark, sf_dir)
-    try:
-        with open(f"{base}/CURRENT_INDEX") as fh:
-            if fh.read().strip() == "INDEX-v2.json":
-                return base
-    except OSError:
-        pass
-    _commit_index_manifest(base, 1, "centroids", ["day0", "day1"])
-
-    member_pred = F.col("vec_id") % 10 != INC2_DAY2
-    v_arr, cl_ids, cmat = kmeans_fit_mat(spark, sf_dir, fit_filter=member_pred)
-    asg = kmeans_assign_mat(v_arr.filter(member_pred), cl_ids, cmat).select(
-        "vec_id", F.col("cl").cast("int").alias("cell")
-    )
-    e_all = load_table(spark, sf_dir, "embeddings")
-    (
-        e_all.filter(member_pred)
-        .select("vec_id", to_double_array("embedding").alias("e"))
-        .join(asg, "vec_id")
-        .repartition("cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(f"{base}/v2/members")
-    )
-    (
-        spark.createDataFrame(
-            [
-                (int(cl), [int(x) for x in cmat[i]])
-                for i, cl in enumerate(cl_ids)
-            ],
-            "cl long, c array<long>",
+    def build(path: str) -> None:
+        os.makedirs(path)
+        write_manifest(
+            path, 1, {"centroids": "../centroids", "members": ["../day0", "../day1"]}
         )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(f"{base}/v2/centroids")
-    )
-    _commit_index_manifest(base, 2, "v2/centroids", ["v2/members"])
-    return base
+        member_pred = F.col("vec_id") % 10 != INC2_DAY2
+        v_arr, cl_ids, cmat = kmeans_fit_mat(spark, sf_dir, fit_filter=member_pred)
+        asg = kmeans_assign_mat(v_arr.filter(member_pred), cl_ids, cmat).select(
+            "vec_id", F.col("cl").cast("int").alias("cell")
+        )
+        (
+            load_table(spark, sf_dir, "embeddings")
+            .filter(member_pred)
+            .select("vec_id", to_double_array("embedding").alias("e"))
+            .join(asg, "vec_id")
+            .repartition("cell")
+            .write.partitionBy("cell")
+            .parquet(f"{path}/v2/members")
+        )
+        _write_centroids(spark, cl_ids, cmat, f"{path}/v2/centroids")
+        write_manifest(
+            path, 2, {"centroids": "v2/centroids", "members": ["v2/members"]}
+        )
+
+    return materialize(f"{_ensure_embed_2day_built(spark, sf_dir)}/rebuild", build)
 
 
 def _embed_rebuild_oracle() -> str:
@@ -2762,9 +2716,10 @@ def q_embed_index_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
     member into ONE cell-partitioned root under the refreshed
     quantization (also compacting the append's day0/day1 sibling
     roots — one root post-maintenance, matching the LSH story), and
-    swaps INDEX-v2 in with the q_snapshot_commit manifest protocol:
-    tmp-write + atomic rename + CURRENT_INDEX flip, so readers see
-    the old index or the new one, never a mix. The returned rows are
+    publishes v1 (as ingested) and v2 (rebuilt) manifests in the one
+    manifest format, through the one `scratch.materialize` build, so
+    readers see the whole rebuilt index or a rebuild, never a mix;
+    CURRENT names v2, v1 stays readable. The returned rows are
     the PROOF the swap kept the index correct: tomorrow's batch
     (day-2) probed through the CURRENT (rebuilt) index — nearest
     refreshed centroid, same-cell exact cosine ≥ SEM_TAU — as
@@ -2785,11 +2740,13 @@ def q_embed_index_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the cost the drift report exists to gate. Serving after
     the flip pays zero of it: probes read the one compacted root
     with cell-partition pruning (q_sim_search_ivf_indexed's
-    PartitionFilters), and the manifest flip means a 100 TB index
-    can rebuild in the background while v1 keeps serving, then cut
-    over atomically — the standard two-version index deployment."""
-    base = _ensure_embed_rebuilt(spark, sf_dir)
-    cl_ids, cmat, members = read_embed_index(spark, base)
+    PartitionFilters), and because the rebuild is its own artifact a
+    100 TB index can rebuild in the background while the two-day
+    index keeps serving, then cut over once its marker lands — the
+    standard two-version index deployment."""
+    cl_ids, cmat, members = read_embed_index(
+        spark, _ensure_embed_rebuilt(spark, sf_dir)
+    )
     d2_raw = load_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") % 10 == INC2_DAY2
     )

@@ -25,12 +25,19 @@ unique on both sides).
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from data_wrangler_spark.catalog import load_table
 from data_wrangler_spark.registry import register
-from data_wrangler_spark.scratch import ROOT, materialize, scratch_tag
+from data_wrangler_spark.scratch import (
+    ROOT,
+    materialize,
+    read_manifest,
+    scratch_tag,
+    write_manifest,
+)
 
 _IO_SCRATCH = f"{ROOT}/io"
 
@@ -521,39 +528,74 @@ def q_join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 DELETE_MOD = 97  # q_delete_rows: doc_id % 97 == 0 rows are erased
+SNAPSHOT_MOD = 89  # q_snapshot_commit: doc_id % 89 == 0 rows erased in v2
 
 
-def _recover_delete_commit(base: str, src: str) -> None:
-    """Crash recovery for q_delete_rows' two-rename commit chain
-    (ADVICE r4): a crash between `os.replace(shard, old)` and
-    `os.replace(tmp, shard)` leaves the shard missing; a rerun that
-    didn't check would silently read the table minus one shard. On
-    entry, every leftover is rolled back or forward:
+def _erasure_path(sf_dir: str, mod: int) -> str:
+    params = f"mod={mod},buckets=8"
+    return f"{_IO_SCRATCH}/{scratch_tag(sf_dir, 'documents', params)}/erasure"
 
-    - ``old_bucket_X`` present + ``bucket=X`` missing → crashed
-      mid-swap: roll BACK (restore the old shard; the delete rerun
-      redoes the rewrite from it).
-    - ``old_bucket_X`` present + ``bucket=X`` present → crashed
-      after the swap, before cleanup: roll FORWARD (drop the old
-      copy; the new shard is already committed).
-    - ``staging_bucket_X`` → always removable (rebuilt from the
-      shard on rerun).
-    """
-    import shutil
 
-    if not os.path.isdir(base):
-        return
-    for name in os.listdir(base):
-        full = os.path.join(base, name)
-        if name.startswith("staging_bucket_"):
-            shutil.rmtree(full, ignore_errors=True)
-        elif name.startswith("old_bucket_"):
-            bk = name[len("old_bucket_"):]
-            shard = f"{src}/bucket={bk}"
-            if os.path.exists(shard):
-                shutil.rmtree(full)
-            else:
-                os.replace(full, shard)
+def _erasure_snapshot(spark: SparkSession, sf_dir: str, mod: int) -> str:
+    """Build-once manifest-committed erasure of the documents corpus
+    (rows with doc_id % ``mod`` == 0); returns the artifact's base.
+
+    v1 is the corpus bucketed into immutable data files, 8 hash
+    buckets on doc_id (at 100 TB, the erasure key's bucketing column).
+    v2 is the erasure: only VICTIM buckets get replacement files,
+    survivors' files are carried into the v2 manifest by reference —
+    the minimal-rewrite property. The data files do not carry the
+    bucket column; it lives in the file names (``data/vN-b<bucket>-i``).
+    One ``materialize`` build writes both versions and both manifests,
+    so a reader sees v1 and v2 complete or a rebuild, never a mix,
+    and v1 stays readable after v2 (time travel)."""
+
+    def build(base: str) -> None:
+        stage = f"{base}/stage"
+
+        def publish(src: str, version: int, bk: int) -> list[str]:
+            # move a staged write's parquet files into data/ under
+            # their manifest names
+            names = sorted(f for f in os.listdir(src) if f.endswith(".parquet"))
+            dests = [f"data/v{version}-b{bk}-{i}.parquet" for i in range(len(names))]
+            for f_, dest in zip(names, dests):
+                os.replace(f"{src}/{f_}", f"{base}/{dest}")
+            return dests
+
+        os.makedirs(f"{base}/data")
+        d = load_table(spark, sf_dir, "documents").select(
+            "doc_id", "lang", "n_chars",
+            F.pmod(F.hash("doc_id"), F.lit(8)).alias("bucket"),
+        )
+        d.repartition("bucket").write.partitionBy("bucket").parquet(stage)
+        files = {bk: publish(f"{stage}/bucket={bk}", 1, bk) for bk in range(8)}
+        shutil.rmtree(stage)
+        write_manifest(base, 1, {"files": sorted(sum(files.values(), []))})
+        # which shards hold victims? (at 100 TB: a cheap pushed-down
+        # scan of the erasure keys, usually pruning most shards)
+        victim_buckets = sorted(
+            r.bucket
+            for r in d.filter(F.col("doc_id") % mod == 0)
+            .select("bucket").distinct().collect()
+        )
+        for bk in victim_buckets:
+            # sharded write — the manifest lists N files per bucket,
+            # so no coalesce(1) bottleneck at scale
+            spark.read.parquet(*[f"{base}/{p}" for p in files[bk]]).filter(
+                F.col("doc_id") % mod != 0
+            ).write.parquet(stage)
+            files[bk] = publish(stage, 2, bk)
+            shutil.rmtree(stage)
+        write_manifest(base, 2, {"files": sorted(sum(files.values(), []))})
+
+    return materialize(_erasure_path(sf_dir, mod), build)
+
+
+def read_snapshot(spark: SparkSession, base: str, version: int | None = None) -> DataFrame:
+    """Read exactly the data files of CURRENT's manifest (or of a
+    pinned version — time travel)."""
+    man = read_manifest(base, version)
+    return spark.read.parquet(*[f"{base}/{p}" for p in man["files"]])
 
 
 @register(
@@ -573,76 +615,28 @@ def q_delete_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Targeted row deletion (the GDPR-erasure / right-to-be-forgotten
     maintenance op): documents with doc_id % 97 == 0 must disappear
     from a persisted copy-on-write table. The rewrite is MINIMAL by
-    construction: the table is laid out hash-bucketed into directory
-    shards (bucket = hash(doc_id) % 8 — at 100 TB, the erasure key's
-    bucketing column), the delete set's buckets are computed first,
-    and ONLY those shards rewrite (here every shard contains victims
-    at fixture scale, but the plan touches shards by predicate, and
-    the test pins that untouched shards keep their original files).
-    The report reads from the post-delete table; the oracle filters
-    the raw table — a hash match certifies no survivor was lost and
-    no victim survived (count + id-checksum + char mass per lang).
+    construction: the table is hash-bucketed into immutable files,
+    the delete set's buckets are computed first, and ONLY those
+    buckets get new files (here every bucket contains victims at
+    fixture scale, but the build touches buckets by predicate). The
+    table and its erasure commit are the shared `_erasure_snapshot`
+    artifact, published by `scratch.materialize` like every persisted
+    artifact. The report reads the post-delete (CURRENT) version; the
+    oracle filters the raw table — a hash match certifies no survivor
+    was lost and no victim survived (count + id-checksum + char mass
+    per lang).
 
     This completes the lakehouse maintenance family: append
     (q_rollup_incremental), upsert (q_upsert_merge /
     q_stream_upsert_state), compact (q_compact_files), re-cluster
     (q_zorder_layout), and now erase — the operation that legally
     cannot be an append."""
-    import shutil
-
-    base = f"{_IO_SCRATCH}/{scratch_tag(sf_dir, 'documents')}/delete_cow"
-    src = f"{base}/table"
-    if not os.path.exists(f"{base}/_DELETED"):
-        d = load_table(spark, sf_dir, "documents").select(
-            "doc_id", "lang", "n_chars",
-            F.pmod(F.hash("doc_id"), F.lit(8)).alias("bucket"),
-        )
-        if not os.path.exists(f"{src}/_SUCCESS"):
-            d.repartition("bucket").write.mode("overwrite").partitionBy(
-                "bucket"
-            ).parquet(src)
-        _recover_delete_commit(base, src)
-        tbl = spark.read.parquet(src)
-        # which shards hold victims? (at 100 TB: a cheap pushed-down
-        # scan of the erasure keys, usually pruning most shards)
-        victim_buckets = [
-            r.bucket
-            for r in tbl.filter(F.col("doc_id") % DELETE_MOD == 0)
-            .select("bucket")
-            .distinct()
-            .collect()
-        ]
-        for bk in victim_buckets:
-            shard = f"{src}/bucket={bk}"
-            kept = spark.read.parquet(shard).filter(
-                F.col("doc_id") % DELETE_MOD != 0
-            )
-            tmp = f"{base}/staging_bucket_{bk}"
-            kept.write.mode("overwrite").parquet(tmp)
-            # copy-on-write commit as a RENAME CHAIN: old shard moves
-            # aside (atomic rename), staged shard moves in (atomic
-            # rename), THEN the old copy is deleted — a crash between
-            # the renames leaves a recoverable .old, never a lost
-            # shard. (A real lakehouse lifts this into a manifest
-            # commit — Iceberg/Delta-style — so readers flip tables
-            # atomically too; the per-directory chain is the
-            # single-writer form of the same idea.)
-            old_shard = f"{base}/old_bucket_{bk}"
-            os.replace(shard, old_shard)
-            os.replace(tmp, shard)
-            shutil.rmtree(old_shard)
-        with open(f"{base}/_DELETED", "w") as fh:
-            fh.write(f"buckets={sorted(victim_buckets)}\n")
-
-    after = spark.read.parquet(src)
-    return after.groupBy("lang").agg(
+    base = _erasure_snapshot(spark, sf_dir, DELETE_MOD)
+    return read_snapshot(spark, base).groupBy("lang").agg(
         F.count("*").alias("n_docs"),
         F.sum("doc_id").alias("sum_ids"),
         F.sum("n_chars").alias("sum_chars"),
     )
-
-
-SNAPSHOT_MOD = 89  # q_snapshot_commit: doc_id % 89 == 0 rows erased in v2
 
 
 @register(
@@ -658,124 +652,20 @@ SNAPSHOT_MOD = 89  # q_snapshot_commit: doc_id % 89 == 0 rows erased in v2
     tags=("ext", "layout", "maintenance"),
 )
 def q_snapshot_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Manifest-committed snapshot table — the Iceberg/Delta-style
-    commit protocol q_delete_rows' per-directory rename chain
-    approximates, done properly: data files are IMMUTABLE, each
-    version is a manifest (a JSON file listing its data files), and
-    a commit is ONE atomic rename of `manifest-vN.json.tmp` →
-    `manifest-vN.json` plus a CURRENT pointer flip. Readers resolve
-    CURRENT → manifest → file list, so they see v1 or v2 in full,
-    never a half-written mix — and v1 stays readable after the v2
-    commit (time travel; pinned by test). A crash before the pointer
-    flip leaves a stale-but-valid CURRENT: no recovery pass needed,
-    which is exactly why real lakehouses prefer manifest commits to
-    rename chains at 100 TB (the object store gives atomic
-    single-key puts, not atomic directory swaps).
-
-    The table's v1 is the documents corpus bucketed into immutable
-    shards; v2 is the GDPR-erasure commit (doc_id % 89 victims):
-    only VICTIM shards get replacement files, survivors' entries are
-    carried into the v2 manifest by reference — the minimal-rewrite
-    property, file-granular instead of q_delete_rows'
-    directory-granular. The query reads CURRENT (v2); the oracle
-    filters raw parquet — a hash match certifies no survivor lost,
-    no victim retained, through the manifest indirection."""
-    base = f"{_IO_SCRATCH}/{scratch_tag(sf_dir, 'documents')}/snapshot_tbl"
-
-    def _built() -> bool:
-        # complete iff the v2 commit landed AND CURRENT points at it —
-        # a crash mid-build leaves a valid-but-stale v1 pointer, which
-        # a rerun must rebuild from scratch, not serve
-        try:
-            with open(f"{base}/CURRENT") as fh:
-                return fh.read().strip() == "manifest-v2.json"
-        except OSError:
-            return False
-
-    if not _built():
-        import shutil as _shutil
-
-        _shutil.rmtree(base, ignore_errors=True)
-        os.makedirs(f"{base}/data", exist_ok=True)
-        d = load_table(spark, sf_dir, "documents").select(
-            "doc_id", "lang", "n_chars",
-            F.pmod(F.hash("doc_id"), F.lit(8)).alias("bucket"),
-        )
-        # v1 data files: one immutable shard per bucket
-        d.repartition("bucket").write.mode("overwrite").partitionBy(
-            "bucket"
-        ).parquet(f"{base}/stage_v1")
-        files_v1 = {}
-        for bk in range(8):
-            shard = f"{base}/stage_v1/bucket={bk}"
-            names = [f for f in os.listdir(shard) if f.endswith(".parquet")]
-            dests = []
-            for i, f_ in enumerate(names):
-                dest = f"data/v1-b{bk}-{i}.parquet"
-                os.replace(f"{shard}/{f_}", f"{base}/{dest}")
-                dests.append(dest)
-            files_v1[bk] = dests
-        _commit_manifest(base, 1, files_v1)
-
-        # v2: rewrite ONLY victim shards' files; survivors carry over.
-        # (victim buckets derive from the erasure keys BEFORE the
-        # write — the data files deliberately do not carry the bucket
-        # column, it lives in the manifest's file naming)
-        files_v2 = dict(files_v1)
-        victim_buckets = sorted(
-            r.bucket
-            for r in d.filter(F.col("doc_id") % SNAPSHOT_MOD == 0)
-            .select("bucket").distinct().collect()
-        )
-        for bk in victim_buckets:
-            kept = spark.read.parquet(
-                *[f"{base}/{p}" for p in files_v1[bk]]
-            ).filter(F.col("doc_id") % SNAPSHOT_MOD != 0)
-            stage = f"{base}/stage_v2_b{bk}"
-            # sharded write — the manifest lists N files per bucket,
-            # so no coalesce(1) bottleneck at scale
-            kept.write.mode("overwrite").parquet(stage)
-            names = [f for f in os.listdir(stage) if f.endswith(".parquet")]
-            dests = []
-            for i, f_ in enumerate(names):
-                dest = f"data/v2-b{bk}-{i}.parquet"
-                os.replace(f"{stage}/{f_}", f"{base}/{dest}")
-                dests.append(dest)
-            files_v2[bk] = dests
-        _commit_manifest(base, 2, files_v2)
-
+    """Manifest-versioned snapshot table, Iceberg/Delta-style: data
+    files are IMMUTABLE and each version is a manifest (a JSON file
+    listing its data files) that CURRENT points at. Readers resolve
+    CURRENT → manifest → file list; v1 (the corpus) stays readable
+    after v2 (the doc_id % 89 erasure) — time travel, pinned by test.
+    v2 rewrites only victim buckets' files and carries survivors'
+    files by reference. Both versions are written by one
+    `scratch.materialize` build (`_erasure_snapshot`, shared with
+    q_delete_rows), so a crash mid-build is a rebuild, not a stale
+    pointer to recover from. The query reads CURRENT (v2); the oracle
+    filters raw parquet — a hash match certifies no survivor lost, no
+    victim retained, through the manifest indirection."""
+    base = _erasure_snapshot(spark, sf_dir, SNAPSHOT_MOD)
     return read_snapshot(spark, base).groupBy("lang").agg(
         F.count("*").alias("n_docs"),
         F.sum("doc_id").alias("sum_ids"),
     )
-
-
-def _commit_manifest(base: str, version: int, files: dict) -> None:
-    """Write manifest-v{N}.json via tmp + atomic rename, then flip
-    CURRENT the same way — the object-store commit protocol (each
-    os.replace is one atomic key put)."""
-    import json as _json
-
-    man = {"version": version, "files": sorted(p for ps in files.values() for p in ps)}
-    mpath = f"{base}/manifest-v{version}.json"
-    with open(mpath + ".tmp", "w") as fh:
-        _json.dump(man, fh)
-    os.replace(mpath + ".tmp", mpath)
-    with open(f"{base}/CURRENT.tmp", "w") as fh:
-        fh.write(f"manifest-v{version}.json")
-    os.replace(f"{base}/CURRENT.tmp", f"{base}/CURRENT")
-
-
-def read_snapshot(spark: SparkSession, base: str, version: int | None = None) -> DataFrame:
-    """Resolve CURRENT (or a pinned version — time travel) to its
-    manifest's file list and read exactly those files."""
-    import json as _json
-
-    if version is None:
-        with open(f"{base}/CURRENT") as fh:
-            mname = fh.read().strip()
-    else:
-        mname = f"manifest-v{version}.json"
-    with open(f"{base}/{mname}") as fh:
-        man = _json.load(fh)
-    return spark.read.parquet(*[f"{base}/{p}" for p in man["files"]])

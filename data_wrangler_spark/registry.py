@@ -20,6 +20,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
+from data_wrangler_spark.session import apply_runtime_confs
+
 
 @dataclass(frozen=True)
 class QuerySpec:
@@ -77,11 +79,14 @@ def register(
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Driver-harness contract: name → (spark, sf_dir) -> DataFrame."""
+    """Driver-harness contract: name → (spark, sf_dir) -> DataFrame.
+
+    The harness owns its session, so each call applies the engine's
+    runtime confs to it before building (table loads do not)."""
 
     def make(spec: QuerySpec) -> Callable[[SparkSession, str], DataFrame]:
         def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-            return spec.run(spark, sf_dir)
+            return spec.run(apply_runtime_confs(spark), sf_dir)
 
         run.__name__ = f"run_{spec.name}"
         run.__doc__ = spec.doc

@@ -11,16 +11,25 @@ per fixture version and reused by every later call:
 - ``scratch_tag`` keys an artifact on the fixture and the constants it
   bakes in, so a regenerated fixture or a changed constant is a miss.
 - ``materialize`` publishes a build once and completely, even when
-  several threads or processes miss at the same time.
+  several threads or processes miss at the same time. It is the one
+  publication protocol: every persisted artifact, versioned ones
+  included, is written by a build it runs.
+- ``write_manifest`` / ``read_manifest`` are the one manifest format
+  for a versioned artifact (``manifest-vN.json`` plus ``CURRENT``).
+  A build writes all of its versions, so a reader sees an artifact
+  only once every version and the ``CURRENT`` pointer are on disk.
 """
 
 from __future__ import annotations
 
 import fcntl
 import hashlib
+import json
 import os
 import shutil
 from typing import Callable
+
+from data_wrangler_spark.functions.distributed import pin_scope
 
 ROOT = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
@@ -82,7 +91,9 @@ def materialize(path: str, build: Callable[[str], None]) -> str:
     at, and an artifact moved or copied elsewhere is a miss: read from
     the new place, a file sink whose log names the old paths reads as
     empty. If ``build`` raises, no marker is
-    written and the next call rebuilds."""
+    written and the next call rebuilds. Frames ``build`` pins are
+    unpersisted before this returns: a cold call must plan like a warm
+    one, which finds no such cache."""
     marker = os.path.join(path, MARKER)
     if _built_here(marker, path):
         return path
@@ -92,8 +103,50 @@ def materialize(path: str, build: Callable[[str], None]) -> str:
         fcntl.flock(lock, fcntl.LOCK_EX)
         if not _built_here(marker, path):
             shutil.rmtree(path, ignore_errors=True)
-            build(path)
+            with pin_scope():
+                build(path)
             os.makedirs(path, exist_ok=True)
             with open(marker, "w") as fh:
                 fh.write(os.path.realpath(path))
     return path
+
+
+def write_manifest(base: str, version: int, body: dict) -> None:
+    """Write ``manifest-v{version}.json`` (``body`` plus the version)
+    into ``base`` and point ``CURRENT`` at it.
+
+    Called by a ``materialize`` build, which writes every version of
+    its artifact; the marker, written after the build, is what makes
+    them visible. Each file is written to a tmp name, fsynced, renamed
+    into place, and the directory fsynced: ``os.replace`` alone leaves
+    the rename in the page cache, where a host crash (not only a
+    process crash) loses it. Paths in ``body`` are relative to
+    ``base``, so a copied artifact reads the same."""
+
+    def write_sync(path: str, text: str) -> None:
+        with open(path + ".tmp", "w") as fh:
+            fh.write(text)
+            fh.flush()
+            os.fsync(fh.fileno())
+        os.replace(path + ".tmp", path)
+        dfd = os.open(base, os.O_RDONLY)
+        try:
+            os.fsync(dfd)
+        finally:
+            os.close(dfd)
+
+    name = f"manifest-v{version}.json"
+    write_sync(os.path.join(base, name), json.dumps({"version": version, **body}))
+    write_sync(os.path.join(base, "CURRENT"), name)
+
+
+def read_manifest(base: str, version: int | None = None) -> dict:
+    """The manifest ``CURRENT`` names, or version ``version``'s (time
+    travel)."""
+    if version is None:
+        with open(os.path.join(base, "CURRENT")) as fh:
+            name = fh.read().strip()
+    else:
+        name = f"manifest-v{version}.json"
+    with open(os.path.join(base, name)) as fh:
+        return json.load(fh)

@@ -148,6 +148,28 @@ def test_load_table_reuses_schema_without_a_job(spark, tmp_path):
     assert sorted(second.collect()) == sorted(first.collect())
 
 
+def test_warm_load_table_writes_no_session_conf(spark, sf_dir, monkeypatch):
+    """The session already carries the engine's runtime confs
+    (get_spark, Engine, the catalog's own session and the __spark_entry__
+    contract apply them), so a warm table load writes none."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from data_wrangler_spark.catalog import load_table
+
+    load_table(spark, sf_dir, "orders")  # warms the schema cache
+    writes = []
+    set_conf = RuntimeConfig.set
+
+    def counted(self, key, value):
+        writes.append(key)
+        return set_conf(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", counted)
+    for _ in range(20):
+        load_table(spark, sf_dir, "orders")
+    assert writes == []
+
+
 def test_load_table_sees_rewritten_file(spark, tmp_path):
     from data_wrangler_spark.catalog import load_table
 

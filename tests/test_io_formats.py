@@ -195,22 +195,21 @@ def test_join_dpp_plan_has_dynamic_pruning(spark, sf_dir):
 
 
 def test_delete_rows_removes_only_victims(spark, sf_dir):
-    """Post-delete table: zero victims remain, every survivor
-    remains, bucket layout intact."""
-    import os
-
+    """Post-delete table (CURRENT): zero victims remain, every
+    survivor remains, all 8 buckets present."""
     from pyspark.sql import functions as F
 
     from data_wrangler_spark.catalog import load_table
     from data_wrangler_spark.operators.io_formats import (
-        _IO_SCRATCH,
         DELETE_MOD,
+        _erasure_path,
+        read_snapshot,
     )
-    from data_wrangler_spark.scratch import scratch_tag
+    from data_wrangler_spark.scratch import read_manifest
 
     REGISTRY["q_delete_rows"].run(spark, sf_dir).collect()
-    src = f"{_IO_SCRATCH}/{scratch_tag(sf_dir, 'documents')}/delete_cow/table"
-    after = spark.read.parquet(src)
+    base = _erasure_path(sf_dir, DELETE_MOD)
+    after = read_snapshot(spark, base)
     assert after.filter(F.col("doc_id") % DELETE_MOD == 0).count() == 0
     survivors = {
         r.doc_id
@@ -220,45 +219,8 @@ def test_delete_rows_removes_only_victims(spark, sf_dir):
         .collect()
     }
     assert {r.doc_id for r in after.select("doc_id").collect()} == survivors
-    buckets = {e.name for e in os.scandir(src) if e.name.startswith("bucket=")}
-    assert len(buckets) == 8
-
-
-def test_delete_rows_recovers_from_crash_window(spark, sf_dir):
-    """ADVICE r4 regression: a crash between the two os.replace calls
-    of the copy-on-write commit leaves `old_bucket_X` present and
-    `bucket=X` missing; a rerun must restore the shard instead of
-    silently reading the table minus one shard. Also: a leftover old
-    copy AFTER a completed swap rolls forward (gets dropped), and
-    stale staging dirs are cleared."""
-    import os
-    import shutil
-
-    from data_wrangler_spark.operators.io_formats import (
-        _IO_SCRATCH,
-        _recover_delete_commit,
-    )
-    from data_wrangler_spark.scratch import scratch_tag
-
-    REGISTRY["q_delete_rows"].run(spark, sf_dir).collect()
-    base = f"{_IO_SCRATCH}/{scratch_tag(sf_dir, 'documents')}/delete_cow"
-    src = f"{base}/table"
-    n_before = spark.read.parquet(src).count()
-
-    # simulate crash mid-swap: shard moved aside, replacement missing
-    shard, old = f"{src}/bucket=3", f"{base}/old_bucket_3"
-    os.replace(shard, old)
-    os.makedirs(f"{base}/staging_bucket_3", exist_ok=True)
-    _recover_delete_commit(base, src)
-    assert os.path.isdir(shard) and not os.path.exists(old)
-    assert not os.path.exists(f"{base}/staging_bucket_3")
-    assert spark.read.parquet(src).count() == n_before
-
-    # simulate crash after swap, before cleanup: both copies present
-    shutil.copytree(shard, old)
-    _recover_delete_commit(base, src)
-    assert os.path.isdir(shard) and not os.path.exists(old)
-    assert spark.read.parquet(src).count() == n_before
+    buckets = {p.split("-")[1] for p in read_manifest(base)["files"]}
+    assert buckets == {f"b{bk}" for bk in range(8)}
 
 
 def test_xml_roundtrip_matches_csv_roundtrip(spark, sf_dir):
@@ -278,14 +240,13 @@ def test_snapshot_commit_time_travel_and_minimal_rewrite(spark, sf_dir):
     import os
 
     from data_wrangler_spark.operators.io_formats import (
-        _IO_SCRATCH,
         SNAPSHOT_MOD,
+        _erasure_path,
         read_snapshot,
     )
-    from data_wrangler_spark.scratch import scratch_tag
 
     REGISTRY["q_snapshot_commit"].run(spark, sf_dir).collect()
-    base = f"{_IO_SCRATCH}/{scratch_tag(sf_dir, 'documents')}/snapshot_tbl"
+    base = _erasure_path(sf_dir, SNAPSHOT_MOD)
     n_total = load_table(spark, sf_dir, "documents").count()
     n_victims = (
         load_table(spark, sf_dir, "documents")

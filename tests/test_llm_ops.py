@@ -1117,7 +1117,7 @@ def test_ann_index_fresh_catch_and_phase_discipline(spark, sf_dir):
 
 def test_embed_index_rebuild_swap_compaction_and_serve(spark, sf_dir):
     """The executed re-cluster action (VERDICT r12 #1): after
-    q_embed_index_rebuild runs, (a) CURRENT_INDEX points at v2 whose
+    q_embed_index_rebuild runs, (a) CURRENT points at v2 whose
     manifest lists ONE compacted member root (v1 listed the day0/day1
     append siblings — VERDICT r12 #6), (b) the member set is
     preserved bit-for-bit across the swap (same vec_ids, same
@@ -1140,6 +1140,7 @@ def test_embed_index_rebuild_swap_compaction_and_serve(spark, sf_dir):
         INC2_DAY2,
         SEM_TAU,
         _embed_2day_path,
+        _ensure_embed_rebuilt,
         read_embed_index,
     )
     from data_wrangler_spark.operators.similarity import FRESH_K
@@ -1147,13 +1148,14 @@ def test_embed_index_rebuild_swap_compaction_and_serve(spark, sf_dir):
 
     rows = REGISTRY["q_embed_index_rebuild"].run(spark, sf_dir).collect()
     base = _embed_2day_path(sf_dir)
+    index = _ensure_embed_rebuilt(spark, sf_dir)
 
     # (a) atomic flip + compaction: v2 is CURRENT with one root
-    with open(f"{base}/CURRENT_INDEX") as fh:
-        assert fh.read().strip() == "INDEX-v2.json"
-    with open(f"{base}/INDEX-v1.json") as fh:
+    with open(f"{index}/CURRENT") as fh:
+        assert fh.read().strip() == "manifest-v2.json"
+    with open(f"{index}/manifest-v1.json") as fh:
         assert len(json.load(fh)["members"]) == 2
-    with open(f"{base}/INDEX-v2.json") as fh:
+    with open(f"{index}/manifest-v2.json") as fh:
         assert len(json.load(fh)["members"]) == 1
 
     # (b) member-set equivalence across the swap
@@ -1165,12 +1167,12 @@ def test_embed_index_rebuild_swap_compaction_and_serve(spark, sf_dir):
         .unionByName(spark.read.schema(mem_schema).parquet(f"{base}/day1"))
         .collect()
     }
-    _, _, members = read_embed_index(spark, base)
+    _, _, members = read_embed_index(spark, index)
     new = {r.vec_id: tuple(r.e) for r in members.collect()}
     assert new == old and new
     # time travel: the superseded v1 manifest still serves the
     # as-appended index after the flip (two roots, same members)
-    _, _, mem_v1 = read_embed_index(spark, base, version=1)
+    _, _, mem_v1 = read_embed_index(spark, index, version=1)
     assert {r.vec_id: tuple(r.e) for r in mem_v1.collect()} == old
 
     # (c) probe discipline + the planted day-1 catch survives

@@ -3,7 +3,10 @@ scratch root is spelled out in one place only."""
 
 import os
 import re
+import signal
+import subprocess
 import sys
+import textwrap
 import threading
 import time
 
@@ -75,6 +78,68 @@ def test_failed_build_is_removed_and_rebuilt(spark, tmp_path):
     assert got == list(range(10))
 
 
+def test_killed_build_is_removed_and_rebuilt(tmp_path):
+    """A process SIGKILLed inside a build, after it wrote part of its
+    output, leaves no marker and holds no lock: the next call removes
+    the partial output, builds once and writes the marker."""
+    path = str(tmp_path / "artifact")
+    child = textwrap.dedent(
+        f"""
+        import os, signal
+        from data_wrangler_spark.scratch import materialize
+
+        def build(p):
+            os.makedirs(p)
+            with open(os.path.join(p, "part-0"), "w") as fh:
+                fh.write("partial")
+            os.kill(os.getpid(), signal.SIGKILL)
+
+        materialize({path!r}, build)
+        """
+    )
+    proc = subprocess.run([sys.executable, "-c", child], cwd=os.path.dirname(PKG),
+                          timeout=300)
+    assert proc.returncode == -signal.SIGKILL
+    assert os.listdir(path) == ["part-0"]
+
+    calls = []
+
+    def build(p):
+        calls.append(os.path.exists(p))
+        os.makedirs(p)
+        with open(os.path.join(p, "data.txt"), "w") as fh:
+            fh.write("complete\n")
+
+    materialize(path, build)
+    materialize(path, build)
+    assert calls == [False]
+    assert sorted(os.listdir(path)) == sorted([MARKER, "data.txt"])
+
+
+def test_build_pins_do_not_outlive_the_build(spark, tmp_path):
+    """A cold build's pinned frames are unpersisted before materialize
+    returns, so the caller's next plan cannot read the build's cache;
+    frames the caller pinned before stay pinned and cached."""
+    from pyspark import StorageLevel
+
+    from data_wrangler_spark.functions.distributed import pin, pinned_frames
+
+    mine = pin(spark.range(5).persist())
+    held = [id(f) for f in pinned_frames()]
+    built = []
+
+    def build(p):
+        df = pin(spark.range(10).persist())
+        df.write.parquet(p)
+        built.append(df)
+
+    materialize(str(tmp_path / "t"), build)
+    assert [id(f) for f in pinned_frames()] == held
+    assert built[0].storageLevel == StorageLevel(False, False, False, False, 1)
+    assert mine.storageLevel != StorageLevel(False, False, False, False, 1)
+    mine.unpersist()
+
+
 def test_copied_artifact_is_rebuilt_where_it_lands(tmp_path):
     """An artifact copied to another root is a miss there (stream
     checkpoints and sink logs inside it name the old path), while a
@@ -126,7 +191,10 @@ def test_streams_and_temp_views_have_one_home():
     registers named temp views (builders pass frames to spark.sql as
     arguments instead). The incremental dedup probes have one
     definition each: the exact-Jaccard verify (dedup.jaccard_verify)
-    and the cell index's member-side sub split (dedup.cell_probe)."""
+    and the cell index's member-side sub split (dedup.cell_probe).
+    Persisted state has one publication protocol: only
+    scratch.materialize takes a build lock, and only the one manifest
+    writer (scratch.write_manifest) fsyncs."""
     import ast
 
     homes = {
@@ -135,6 +203,8 @@ def test_streams_and_temp_views_have_one_home():
         "createOrReplaceTempView": ("catalog.py", None),
         'array_intersect("sa", "sb")': ("operators/dedup.py", "jaccard_verify"),
         "_with_sub(members": ("operators/dedup.py", "cell_probe"),
+        "fcntl.flock": ("scratch.py", "materialize"),
+        "os.fsync": ("scratch.py", "write_manifest"),
     }
     offenders = []
     for root, _, files in os.walk(PKG):

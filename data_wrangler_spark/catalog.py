@@ -77,18 +77,18 @@ class UnknownIdentifierError(ValueError):
     """Raised when a dynamic table/column identifier fails validation."""
 
 
-# Parquet schema per table file, inferred once per file version.
-# Inferring a schema runs a Spark job (a parquet footer read, tens of
-# ms per call); reading with the schema passed in runs none. Only the
-# StructType is kept, never a DataFrame: every load_table call builds
-# a new relation with fresh attribute ids and a fresh file listing, so
-# two loads of one table self-join correctly and no caller sees a
-# stale plan. A cached schema is used only while the file's version
-# is unchanged: (mtime_ns, size) of the file, or of every file under
-# it when the table is a directory of parts, so a rewrite, a replace
-# or an added part infers again. One entry per absolute path; two
-# threads missing at once both infer and store the same answer.
-_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+# Parquet schema per read, inferred once per file version. Inferring
+# a schema runs a Spark job (a parquet footer read, tens of ms per
+# call); reading with the schema passed in runs none. Only the
+# StructType is kept, never a DataFrame: every read builds a new
+# relation with fresh attribute ids and a fresh file listing, so two
+# loads of one table self-join correctly and no caller sees a stale
+# plan. A cached schema is used only while every file's version is
+# unchanged: (mtime_ns, size) of the file, or of every file under it
+# when the path is a directory of parts, so a rewrite, a replace or
+# an added part infers again. One entry per tuple of absolute paths;
+# two threads missing at once both infer and store the same answer.
+_SCHEMAS: dict[tuple[str, ...], tuple[tuple, StructType]] = {}
 
 
 def _file_version(path: str) -> tuple:
@@ -102,6 +102,23 @@ def _file_version(path: str) -> tuple:
             fst = os.stat(fp)
             version.append((os.path.relpath(fp, path), fst.st_mtime_ns, fst.st_size))
     return tuple(sorted(version))
+
+
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """``spark.read.parquet(*paths)``, inferring the schema once per
+    file version (``_SCHEMAS``): a warm read starts no Spark job."""
+    key = tuple(os.path.abspath(p) for p in paths)
+    try:
+        version = tuple(_file_version(p) for p in key)
+    except OSError:
+        version = None  # missing or non-local path: Spark reports it
+    cached = _SCHEMAS.get(key)
+    if cached is not None and cached[0] == version:
+        return spark.read.schema(cached[1]).parquet(*paths)
+    df = spark.read.parquet(*paths)
+    if version is not None:
+        _SCHEMAS[key] = (version, df.schema)
+    return df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -122,19 +139,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name not in TABLES:
         raise UnknownIdentifierError(f"unknown table: {name!r}")
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    key = os.path.abspath(path)
-    try:
-        version = _file_version(key)
-    except OSError:
-        version = None  # missing or non-local path: Spark reports it
-    cached = _SCHEMAS.get(key)
-    if cached is not None and cached[0] == version:
-        df = spark.read.schema(cached[1]).parquet(path)
-    else:
-        df = spark.read.parquet(path)
-        if version is not None:
-            _SCHEMAS[key] = (version, df.schema)
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     return df

@@ -5,16 +5,18 @@ every row funnels through a single sort — fine at sf0.1, a straggler
 at 100 TB. The classic distributed form is TWO-PHASE:
 
 1. ``repartitionByRange`` on the ordering key (range partitioner, so
-   partition i holds strictly-lower keys than partition i+1);
-2. one tiny job collects per-partition counts/sums (K scalars — the
-   partition count, never the data);
-3. cumulative offsets broadcast back; a PARTITION-LOCAL window adds
-   the offset to the local rank/sum.
+   partition i holds strictly-lower keys than partition i+1), persisted
+   so every read of it sees one partitioning;
+2. a per-partition count/sum/max and its prefix over earlier
+   partitions — an aggregate to K rows and a window over those K rows
+   (the partition count, never the data);
+3. the offsets are broadcast-joined back; a PARTITION-LOCAL window
+   adds the offset to the local rank/sum.
 
 Every ordering used here carries a full pk tiebreak, so keys are
 unique and the global position is well defined regardless of where
-range boundaries fall. The K-row collect is bounded by the shuffle
-partition count — this is not a data collect.
+range boundaries fall. All of it is plan: building the frame starts
+no Spark job, so ``describe()`` / ``explain()`` of a caller do no work.
 
 ntile is then pure arithmetic on (position, n): with q = n div k and
 r = n mod k, the first r buckets get q+1 rows — identical to the
@@ -29,6 +31,7 @@ __all__ = [
     "with_global_position",
     "with_global_running_sum",
     "with_global_running_max",
+    "running_agg",
     "ntile_from_position",
     "pin",
     "pin_dir",
@@ -172,55 +175,82 @@ def release_pinned(blocking: bool = False) -> int:
     return n
 
 
-def _range_partitioned(df: DataFrame, order_by: list[Column | str]):
-    spark = df.sparkSession
+def _range_partitioned(df: DataFrame, order_by: list[Column | str]) -> DataFrame:
     try:
-        k = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        k = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     except Exception:
         k = 32
-    # persist is REQUIRED for correctness here, not just speed: the
-    # per-partition offset job and the final window job must see the
-    # same range-partition boundaries (repartitionByRange samples), so
-    # the shuffled frame is pinned and released by the caller's
-    # harness via release_pinned().
-    rp = pin(
+    # persist is REQUIRED for correctness, not just speed: the offsets
+    # and the partition-local window read this frame twice in one plan,
+    # and each recomputation samples other range boundaries (exchange
+    # reuse cannot be relied on). The persist is lazy, so no job runs
+    # here; the caller's harness releases the pin (release_pinned()).
+    return pin(
         df.repartitionByRange(k, *order_by)
         .withColumn("_pid", F.spark_partition_id())
         .persist()
     )
-    return spark, k, rp
+
+
+def _plus_offset(run: Column, off: Column) -> Column:
+    return run + F.coalesce(off, F.lit(0))
+
+
+def running_agg(
+    frame: DataFrame,
+    chunks: list[str],
+    order_by: list[Column | str],
+    val_col: str,
+    out_col: str,
+    agg=F.sum,
+    combine=_plus_offset,
+    end: int = Window.currentRow,
+) -> DataFrame:
+    """``out_col`` = ``agg`` (sum or max: partials merge exactly) of
+    ``val_col`` over the rows up to ``end`` under ``order_by``, two-
+    phase over ordered chunks. ``chunks`` is optional key columns,
+    then a chunk column whose order agrees with ``order_by`` within a
+    key. ``agg`` runs per chunk; the same ``agg`` over the key's
+    EARLIER chunks' partials (a window over chunk rows, NULL for the
+    first chunk) is broadcast back as ``_off``; the result is
+    ``combine(chunk-local running agg, _off)``. The chunk column is
+    dropped. Planned, never collected."""
+    *keys, chunk = chunks
+    start = Window.unboundedPreceding
+    earlier = Window.partitionBy(*keys).orderBy(chunk).rowsBetween(start, -1)
+    offs = frame.groupBy(*chunks).agg(agg(val_col).alias("_part")).select(
+        *chunks, agg("_part").over(earlier).alias("_off")
+    )
+    local = Window.partitionBy(*chunks).orderBy(*order_by).rowsBetween(start, end)
+    return (
+        frame.join(F.broadcast(offs), chunks)
+        .withColumn(out_col, combine(agg(val_col).over(local), F.col("_off")))
+        .drop(chunk, "_off")
+    )
 
 
 def with_global_position(
     df: DataFrame, order_by: list[Column | str], pos_col: str = "_pos"
-) -> tuple[DataFrame, int]:
+) -> tuple[DataFrame, Column]:
     """df + 0-based global position under ``order_by`` (which must be
-    a total order — include a pk tiebreak), computed without a global
-    sort. Returns (df_with_pos, n_rows)."""
-    spark, k, rp = _range_partitioned(df, order_by)
-    counts = {r["_pid"]: r["c"] for r in rp.groupBy("_pid").agg(F.count("*").alias("c")).collect()}
-    offs, acc = [], 0
-    for p in range(k):
-        offs.append((p, acc))
-        acc += counts.get(p, 0)
-    off_df = spark.createDataFrame(offs, "_pid int, _off long")
-    w = Window.partitionBy("_pid").orderBy(*order_by)
-    out = (
-        rp.join(F.broadcast(off_df), "_pid")
-        .withColumn(pos_col, F.row_number().over(w) - 1 + F.col("_off"))
-        .drop("_pid", "_off")
+    a total order — include a pk tiebreak): a two-phase running count,
+    less one. Returns (df_with_pos, n_rows as a scalar subquery)."""
+    rp = _range_partitioned(df.withColumn("_one", F.lit(1)), order_by)
+    out = running_agg(
+        rp, ["_pid"], order_by, "_one", pos_col,
+        combine=lambda run, off: _plus_offset(run - 1, off),
     )
-    return out, acc
+    return out.drop("_one"), rp.select(F.count(F.lit(1))).scalar()
 
 
 def with_global_running_sum(
     df: DataFrame, order_by: list[Column | str], val_col: str, out_col: str
 ) -> DataFrame:
     """Running sum of an integral column under a total order, two-
-    phase: per-partition sums roll into broadcast offsets, the local
-    window adds them. (Integral values only — offsets round-trip
-    through driver Python, so fractional inputs would be silently
-    truncated; reject them up front.)"""
+    phase (``running_agg``). Integral values only: a fractional sum
+    depends on the order its terms are added in, so partition sums
+    plus a local window would not be bit-identical to the one-task
+    window — fractional inputs are rejected up front."""
     val_type = dict(df.dtypes)[val_col]
     if val_type not in ("tinyint", "smallint", "int", "bigint"):
         raise TypeError(
@@ -228,26 +258,8 @@ def with_global_running_sum(
             f"{val_col!r} is {val_type!r} (cast or scale to integer "
             f"micro-units first)"
         )
-    spark, k, rp = _range_partitioned(df, order_by)
-    sums = {
-        r["_pid"]: r["s"]
-        for r in rp.groupBy("_pid").agg(F.sum(val_col).alias("s")).collect()
-    }
-    offs, acc = [], 0
-    for p in range(k):
-        offs.append((p, acc))
-        acc += int(sums.get(p) or 0)
-    off_df = spark.createDataFrame(offs, "_pid int, _off long")
-    w = (
-        Window.partitionBy("_pid")
-        .orderBy(*order_by)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        rp.join(F.broadcast(off_df), "_pid")
-        .withColumn(out_col, F.sum(val_col).over(w) + F.col("_off"))
-        .drop("_pid", "_off")
-    )
+    rp = _range_partitioned(df, order_by)
+    return running_agg(rp, ["_pid"], order_by, val_col, out_col)
 
 
 def with_global_running_max(
@@ -257,48 +269,26 @@ def with_global_running_max(
     out_col: str,
     exclusive: bool = False,
 ) -> DataFrame:
-    """Running max under a total order, two-phase: per-partition
-    maxima roll into prefix offsets (max over all PRECEDING range
-    partitions), the partition-local window takes `greatest` of the
-    local frame and the offset. With ``exclusive`` the frame ends at
-    the previous row (prefix-exclusive envelope — the skyline shape);
-    the first row's result is NULL, exactly like the one-task
-    window it replaces."""
-    spark, k, rp = _range_partitioned(df, order_by)
-    maxes = {
-        r["_pid"]: r["m"]
-        for r in rp.groupBy("_pid").agg(F.max(val_col).alias("m")).collect()
-    }
-    offs, run = [], None
-    for p in range(k):
-        offs.append((p, run))
-        m = maxes.get(p)
-        if m is not None:
-            run = m if run is None else max(run, m)
-    val_type = dict(df.dtypes)[val_col]
-    off_df = spark.createDataFrame(offs, f"_pid int, _off {val_type}")
+    """Running max under a total order, two-phase (``running_agg``).
+    `greatest` ignores NULL operands, so the offset seeds later
+    partitions. With ``exclusive`` the frame ends at the previous row
+    (prefix-exclusive envelope — the skyline shape); the first row's
+    result is NULL, exactly like the one-task window it replaces."""
     end = -1 if exclusive else Window.currentRow
-    w = (
-        Window.partitionBy("_pid")
-        .orderBy(*order_by)
-        .rowsBetween(Window.unboundedPreceding, end)
-    )
-    return (
-        rp.join(F.broadcast(off_df), "_pid")
-        # greatest() ignores NULL operands, so the offset seeds later
-        # partitions and the global first row stays NULL (exclusive)
-        .withColumn(out_col, F.greatest(F.max(val_col).over(w), F.col("_off")))
-        .drop("_pid", "_off")
-    )
+    rp = _range_partitioned(df, order_by)
+    return running_agg(rp, ["_pid"], order_by, val_col, out_col, F.max, F.greatest, end)
 
 
-def ntile_from_position(pos: Column, n: int, k: int) -> Column:
-    """NTILE(k) as arithmetic on a 0-based global position over n
-    rows: first n%k buckets take n//k+1 rows, the rest n//k —
-    byte-identical to the window function's positional assignment.
-    All operands < 2^53, so the floor-of-double division is exact."""
-    q, r = divmod(n, k)
+def ntile_from_position(pos: Column, n: Column, k: int) -> Column:
+    """NTILE(k) as arithmetic on a 0-based global position over ``n``
+    rows (a Column, e.g. with_global_position's row total): first
+    n%k buckets take n//k+1 rows, the rest n//k — byte-identical to
+    the window function's positional assignment. All operands
+    < 2^53, so the floor-of-double divisions are exact. (n < k puts
+    every row in the head; the tail's divisor is clamped to stay defined.)"""
+    q = F.floor(n / k)
+    r = n % k
     head = r * (q + 1)
     big = F.floor(pos / (q + 1))
-    small = r + F.floor((pos - head) / q) if q else F.lit(0)
+    small = r + F.floor((pos - head) / F.greatest(q, F.lit(1)))
     return F.when(pos < head, big).otherwise(small).cast("int") + 1

@@ -322,11 +322,11 @@ def q_cum_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-seen day and takes a running sum of the per-day counts.
     Two key-bounded shuffles (user_id, then day); the running sum
     runs over |days| rows only, TWO-PHASE (range partition →
-    per-partition sums as broadcast offsets → partition-local prefix
-    sum, functions/distributed.py) so even an unbounded time axis
-    never funnels through a one-task sort. All-integer arithmetic —
-    exact at any scale."""
-    from data_wrangler_spark.functions.distributed import with_global_running_sum, pin
+    per-partition sums as planned broadcast offsets → partition-local
+    prefix sum, functions/distributed.py) so even an unbounded time
+    axis never funnels through a one-task sort. All-integer
+    arithmetic — exact at any scale."""
+    from data_wrangler_spark.functions.distributed import with_global_running_sum
 
     ev = load_table(spark, sf_dir, "events")
     first_seen = ev.groupBy("user_id").agg(
@@ -365,8 +365,8 @@ def q_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     functions/distributed.py) with explicit custkey tiebreaks, so
     quintile boundaries are engine-identical and no dimension ever
     funnels through a one-task global sort. The recency anchor is
-    the data's own max date (broadcast scalar subquery, no
-    collect)."""
+    the data's own max date (broadcast scalar subquery); nothing is
+    collected."""
     o = load_table(spark, sf_dir, "orders")
     anchor = o.agg(F.max("o_orderdate").alias("d1"))
     base = (

@@ -81,11 +81,13 @@ def q_filter_fk(spark: SparkSession, sf_dir: str, orderkey: int | None) -> DataF
     """Child rows by parent key (reference: `select * from line_items
     where invoice_id = ?`, config.json:21). Default parameter is the
     smallest order key so the query is meaningful at every scale
-    factor."""
+    factor, bound as a scalar subquery like the oracle's."""
     li = load_table(spark, sf_dir, "lineitem")
     if orderkey is None:
-        orderkey = load_table(spark, sf_dir, "orders").agg(F.min("o_orderkey")).collect()[0][0]
-    return li.filter(F.col("l_orderkey") == int(orderkey))
+        key = load_table(spark, sf_dir, "orders").agg(F.min("o_orderkey")).scalar()
+    else:
+        key = F.lit(int(orderkey))
+    return li.filter(F.col("l_orderkey") == key)
 
 
 # --------------------------------------------------------------------------
@@ -103,11 +105,14 @@ def q_filter_fk(spark: SparkSession, sf_dir: str, orderkey: int | None) -> DataF
 def q_point_lookup(spark: SparkSession, sf_dir: str, key: int | None) -> DataFrame:
     """Single-row fetch by id (reference: `select * from %s where
     id = ?` + fetchRow, index.js:524-526; `anyById` config.json:22).
-    The relation is a validated identifier, not a spliced string."""
+    The relation is a validated identifier, not a spliced string; the
+    default key (the smallest) is a scalar subquery."""
     cust = load_table(spark, sf_dir, "customer")
     if key is None:
-        key = cust.agg(F.min("c_custkey")).collect()[0][0]
-    return cust.filter(F.col("c_custkey") == int(key)).limit(1)
+        bound = cust.agg(F.min("c_custkey")).scalar()
+    else:
+        bound = F.lit(int(key))
+    return cust.filter(F.col("c_custkey") == bound).limit(1)
 
 
 # --------------------------------------------------------------------------

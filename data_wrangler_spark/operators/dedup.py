@@ -982,7 +982,7 @@ def _prefix_audit_oracle() -> str:
 @register(
     "q_dedup_prefix_audit",
     oracle=_prefix_audit_oracle(),
-    tags=("llm", "dedup"),
+    tags=("llm", "dedup", "eager"),
 )
 def q_dedup_prefix_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PPJoin candidate-volume ACCOUNTING — the exact-prefix-join
@@ -1121,7 +1121,7 @@ def q_dedup_prefix_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             / (len(sa.shingles) + len(sb.shingles) - i.n_inter)
           >= {PREFIX_JACCARD_T}
     """,
-    tags=("llm", "dedup"),
+    tags=("llm", "dedup", "eager"),
 )
 def q_dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Prefix-filtered exact Jaccard join (the SSJoin/PPJoin family,
@@ -1993,7 +1993,7 @@ def _semantic_oracle() -> str:
     """
 
 
-@register("q_dedup_semantic", oracle=_semantic_oracle(), tags=("llm", "dedup"))
+@register("q_dedup_semantic", oracle=_semantic_oracle(), tags=("llm", "dedup", "eager"))
 def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (Abbas et al. 2023) — SEMANTIC deduplication, the
     method that catches what every lexical strategy above misses:
@@ -2089,7 +2089,7 @@ def _cell_audit_oracle() -> str:
 @register(
     "q_embed_cell_audit",
     oracle=_cell_audit_oracle(),
-    tags=("llm", "dedup", "embedding"),
+    tags=("llm", "dedup", "embedding", "eager"),
 )
 def q_embed_cell_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MAX_CELL accounting — the embedding family's counterpart of
@@ -2303,7 +2303,7 @@ def cell_probe(probe: DataFrame, members: DataFrame) -> DataFrame:
 @register(
     "q_dedup_embed_incremental",
     oracle=_embed_inc_oracle(),
-    tags=("llm", "dedup", "embedding"),
+    tags=("llm", "dedup", "embedding", "eager"),
 )
 def q_dedup_embed_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTAL semantic dedup — the SemDeDup shape
@@ -2443,7 +2443,7 @@ def _embed_2day_oracle() -> str:
 @register(
     "q_dedup_embed_2day",
     oracle=_embed_2day_oracle(),
-    tags=("llm", "dedup", "embedding"),
+    tags=("llm", "dedup", "embedding", "eager"),
 )
 def q_dedup_embed_2day(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TWO-DAY incremental semantic dedup — the embedding index's
@@ -2531,7 +2531,7 @@ def _embed_refresh_oracle() -> str:
 @register(
     "q_embed_index_refresh",
     oracle=_embed_refresh_oracle(),
-    tags=("llm", "dedup", "embedding"),
+    tags=("llm", "dedup", "embedding", "eager"),
 )
 def q_embed_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantizer-refresh DRIFT REPORT — the maintenance decision the
@@ -2704,7 +2704,7 @@ def _embed_rebuild_oracle() -> str:
 @register(
     "q_embed_index_rebuild",
     oracle=_embed_rebuild_oracle(),
-    tags=("llm", "dedup", "embedding"),
+    tags=("llm", "dedup", "embedding", "eager"),
 )
 def q_embed_index_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vector-index REBUILD executed, then served through — the

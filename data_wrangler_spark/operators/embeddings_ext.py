@@ -292,7 +292,7 @@ def _kmeans_oracle() -> str:
     """
 
 
-@register("q_kmeans_exact", oracle=_kmeans_oracle(), tags=("llm", "embedding", "iterative"))
+@register("q_kmeans_exact", oracle=_kmeans_oracle(), tags=("llm", "embedding", "iterative", "eager"))
 def q_kmeans_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed k-means whose every iteration is bit-reproducible:
     vector components quantized to integer micro-units (×2^20 — a
@@ -688,7 +688,7 @@ def _pca_oracle() -> str:
     """
 
 
-@register("q_embed_pca", oracle=_pca_oracle(), tags=("llm", "embeddings"))
+@register("q_embed_pca", oracle=_pca_oracle(), tags=("llm", "embeddings", "eager"))
 def q_embed_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dominant principal direction of the embedding corpus by POWER
     ITERATION on the integer Gram matrix — PCA's top component, the
@@ -936,7 +936,7 @@ def _kcenter_oracle(k: int) -> str:
 @register(
     "q_select_kcenter",
     oracle=_kcenter_oracle(KCENTER_K),
-    tags=("llm", "embeddings", "sampling"),
+    tags=("llm", "embeddings", "sampling", "eager"),
 )
 def q_select_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy k-center (farthest-point) data selection — the coreset

@@ -51,7 +51,7 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("q_pagerank", tags=("ext", "graph", "iterative"))  # rows-only: iterative, non-SQL
+@register("q_pagerank", tags=("ext", "graph", "iterative", "eager"))  # rows-only: iterative, non-SQL
 def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank by fixed-count power iteration on the bipartite
     customer→supplier purchase graph. Per iteration: distribute each
@@ -173,7 +173,7 @@ def _pr_float_loop(edges, ranks, n_nodes):
            CAST(3 * tri.c AS DOUBLE) / wed.w            AS global_clustering
     FROM tri, wed
     """,
-    tags=("ext", "graph"),
+    tags=("ext", "graph", "eager"),
 )
 def q_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle count + global clustering coefficient of the
@@ -370,7 +370,7 @@ def _pagerank_oracle() -> str:
     """
 
 
-@register("q_pagerank_exact", oracle=_pagerank_oracle(), tags=("ext", "graph", "iterative"))
+@register("q_pagerank_exact", oracle=_pagerank_oracle(), tags=("ext", "graph", "iterative", "eager"))
 def q_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank in integer micro-units (rank 1.0 ≡ 10^12): every
     operation is BIGINT multiply / integral `div` / sum, so the

@@ -29,7 +29,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from data_wrangler_spark.catalog import load_table
+from data_wrangler_spark.catalog import load_table, read_parquet
 from data_wrangler_spark.registry import register
 from data_wrangler_spark.scratch import (
     ROOT,
@@ -208,7 +208,7 @@ def q_partitioned_write_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan into a file-listing of one subtree. The oracle replays the
     filter on the raw table, proving the layout lost nothing."""
     return (
-        spark.read.parquet(_orders_by_status(spark, sf_dir))
+        read_parquet(spark, _orders_by_status(spark, sf_dir))
         .filter(F.col("o_orderstatus") == "F")
         .select("o_orderkey", "price_cents", "o_orderstatus")
     )
@@ -406,7 +406,7 @@ def q_table_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM gen
     GROUP BY lang, generation
     """,
-    tags=("ext", "source", "layout"),
+    tags=("ext", "source", "layout", "eager"),
 )
 def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema evolution across file generations — the append-only
@@ -498,7 +498,7 @@ def q_join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     smarter, but it would bypass the runtime-pruning path this
     operator exists to pin. Stored data is opaque to inference, so
     the plan carries a real `dynamicpruningexpression`."""
-    fact = spark.read.parquet(_orders_by_status(spark, sf_dir))
+    fact = read_parquet(spark, _orders_by_status(spark, sf_dir))
     dim_path = materialize(
         f"{_IO_SCRATCH}/{scratch_tag(sf_dir)}/status_dim",
         lambda p: load_table(spark, sf_dir, "orders")
@@ -513,7 +513,7 @@ def q_join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .write.parquet(p),
     )
-    dim = spark.read.parquet(dim_path)
+    dim = read_parquet(spark, dim_path)
     return (
         fact.join(
             dim.filter(F.col("status_name") == "CLOSED"),
@@ -595,7 +595,7 @@ def read_snapshot(spark: SparkSession, base: str, version: int | None = None) ->
     """Read exactly the data files of CURRENT's manifest (or of a
     pinned version — time travel)."""
     man = read_manifest(base, version)
-    return spark.read.parquet(*[f"{base}/{p}" for p in man["files"]])
+    return read_parquet(spark, *[f"{base}/{p}" for p in man["files"]])
 
 
 @register(

@@ -660,7 +660,7 @@ def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT query_id, vec_id, label, cos_sim
     FROM ranked WHERE rk <= {HN_K}
     """,
-    tags=("llm", "embedding", "similarity"),
+    tags=("llm", "embedding", "similarity", "eager"),
 )
 def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hard-negative mining for contrastive training: for each anchor

@@ -18,7 +18,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from data_wrangler_spark.catalog import load_table
+from data_wrangler_spark.catalog import load_table, read_parquet
 from data_wrangler_spark.functions.vectors import micro_csv, sql_micro_csv
 from data_wrangler_spark.registry import register
 from data_wrangler_spark.scratch import ROOT, materialize, scratch_tag
@@ -637,7 +637,7 @@ def _phash_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_mm_phash_keep",
     oracle=_phash_keep_oracle(sweep=False),
     oracle_sweep=_phash_keep_oracle(sweep=True),
-    tags=("llm", "multimodal", "dedup", "pipeline"),
+    tags=("llm", "multimodal", "dedup", "pipeline", "eager"),
 )
 def q_mm_phash_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual-hash near-dup FUSED with the keeper decision — the
@@ -735,7 +735,7 @@ def q_mm_phash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.partitionBy("band")
         .parquet(p),
     )
-    index = spark.read.parquet(path).select(
+    index = read_parquet(spark, path).select(
         "band",
         "bucket",
         F.col("doc_id").alias("doc_old"),

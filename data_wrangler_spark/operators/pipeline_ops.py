@@ -26,7 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from data_wrangler_spark.catalog import load_table
+from data_wrangler_spark.catalog import load_table, read_parquet
 from data_wrangler_spark.functions.text import (
     TOKEN_REGEX,
     shingles_from_words,
@@ -274,7 +274,7 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_id, token AS top_token, tf, df, score_micro
     FROM ranked WHERE rn = 1
     """,
-    tags=("llm", "text"),
+    tags=("llm", "text", "eager"),
 )
 def q_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TF-IDF keyword extraction: per-doc term counts joined with
@@ -602,7 +602,7 @@ def _cluster_comp_cte(tmp: str) -> str:
            (doc_id = component) AS is_canonical
     FROM comp
     """,
-    tags=("llm", "dedup"),
+    tags=("llm", "dedup", "eager"),
 )
 def q_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-cluster resolution: near-dup *pairs* (n-gram Jaccard
@@ -851,7 +851,7 @@ def ensure_contam_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .write.parquet(p),
     )
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def contam_grams(d: DataFrame, *carry: str) -> DataFrame:
@@ -1312,7 +1312,7 @@ def q_mix_proportions(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_id, component, n_chars, (rk = 1) AS keep
     FROM ranked
     """,
-    tags=("llm", "dedup"),
+    tags=("llm", "dedup", "eager"),
 )
 def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ACTION step of the dedup pipeline: after pair generation
@@ -1734,7 +1734,7 @@ _PREFIX_KEEP_TAIL = """
       SELECT e.dst AS node, r.label FROM reach r JOIN edges e ON e.src = r.node),
     {_PREFIX_KEEP_TAIL}
     """,
-    tags=("llm", "dedup", "pipeline"),
+    tags=("llm", "dedup", "pipeline", "eager"),
 )
 def q_dedup_prefix_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Prefix-filtered near-dup detection FUSED with the keeper
@@ -1904,7 +1904,7 @@ def _lsh_keep_oracle(sweep: bool) -> str:
     "q_dedup_lsh_keep",
     oracle=_lsh_keep_oracle(sweep=False),
     oracle_sweep=_lsh_keep_oracle(sweep=True),
-    tags=("llm", "dedup", "pipeline"),
+    tags=("llm", "dedup", "pipeline", "eager"),
 )
 def q_dedup_lsh_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH candidates FUSED with the keeper decision — the
@@ -2169,7 +2169,7 @@ def _keep_auto_oracle(sweep: bool) -> str:
     "q_dedup_keep_auto",
     oracle=_keep_auto_oracle(sweep=False),
     oracle_sweep=_keep_auto_oracle(sweep=True),
-    tags=("llm", "dedup", "pipeline"),
+    tags=("llm", "dedup", "pipeline", "eager"),
 )
 def q_dedup_keep_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Saturation-ROUTED dedup keeper (VERDICT r15 #1) — the recorded
@@ -2550,7 +2550,7 @@ def q_corpus_pipeline_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
         f"{_PIPE_INC_SCRATCH}/{scratch_tag(sf_dir, 'documents', counter_params)}",
         build,
     )
-    prior = spark.read.parquet(path)
+    prior = read_parquet(spark, path)
 
     # coalesce: SUM over an empty prior counter is NULL, which would
     # make the cap predicate NULL and drop every new-batch row — the

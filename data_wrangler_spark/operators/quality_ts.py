@@ -32,7 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from data_wrangler_spark.catalog import load_table
+from data_wrangler_spark.catalog import load_table, read_parquet
 from data_wrangler_spark.functions.distributed import pin
 from data_wrangler_spark.operators.aggregates import _osum, dsum
 from data_wrangler_spark.registry import register
@@ -602,7 +602,7 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     order, computed TWO-PHASE (range partition on zval + broadcast
     offsets + positional bucket arithmetic, functions/distributed.py)
     — the very repartitionByRange(zval) a real layout job writes
-    with, so no one-task sort. At 100 TB this query IS the layout
+    with, so no one-task sort, and no job before the plan runs. At 100 TB this query IS the layout
     job's planning step: the same envelopes materialize as row-group
     statistics."""
     o = load_table(spark, sf_dir, "orders")
@@ -688,7 +688,7 @@ def q_rollup_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.partitionBy("day")
         .parquet(p),
     )
-    rollup = spark.read.parquet(path)
+    rollup = read_parquet(spark, path)
     return rollup.groupBy("day", "event_type").agg(
         F.sum("n_events").alias("n_events"),
         F.sum("sum_dec").cast("double").alias("sum_value"),
@@ -750,7 +750,7 @@ def q_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = materialize(
         f"{_COMPACT_SCRATCH}/{scratch_tag(sf_dir, 'documents')}", build
     )
-    c = spark.read.parquet(f"{base}/compacted")
+    c = read_parquet(spark, f"{base}/compacted")
     return c.groupBy("lang").agg(
         F.count("*").alias("n_docs"),
         F.sum("n_chars").alias("sum_chars"),
@@ -947,7 +947,7 @@ def q_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = materialize(
         f"{_ROLLUP_INC_SCRATCH}/{scratch_tag(sf_dir, 'events')}", build
     )
-    rollup = spark.read.parquet(path)
+    rollup = read_parquet(spark, path)
     return rollup.groupBy("day", "event_type").agg(
         F.sum("n_events").alias("n_events"),
         F.sum("sum_dec").cast("double").alias("sum_value"),

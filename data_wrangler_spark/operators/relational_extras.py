@@ -828,7 +828,7 @@ def q_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM events e JOIN documents d ON d.doc_id = e.user_id)
     GROUP BY lang
     """,
-    tags=("ext", "pivot"),
+    tags=("ext", "pivot", "eager"),
 )
 def q_pivot_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DYNAMIC pivot — the real-world variant q_pivot's docstring

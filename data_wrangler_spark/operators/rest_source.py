@@ -35,10 +35,6 @@ def q_rest_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangler_spark.sources.restapi import RestApiDataSource
 
     spark.dataSource.register(RestApiDataSource)
-    # runtime-settable; required for pushFilters on Python sources —
-    # set here (not in session.py) so the query works on the driver's
-    # plain foreign session too
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     return (
         spark.read.format("restapi")
         .option("pages", "8")

@@ -20,7 +20,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from data_wrangler_spark.catalog import load_table
+from data_wrangler_spark.catalog import load_table, read_parquet
 from data_wrangler_spark.functions.vectors import (
     cosine,
     embedding_dim,
@@ -51,9 +51,9 @@ LSH_PROBE_MASKS = [0] + [1 << r for r in range(LSH_BAND_BITS)]
 
 def _query_vec(spark: SparkSession, sf_dir: str):
     """The query point: embedding of the smallest vec_id (exists at
-    every SF). Returned as (vec_id, broadcastable 1-row DataFrame)."""
+    every SF). Returned as (vec_id scalar subquery, 1-row DataFrame)."""
     e = load_table(spark, sf_dir, "embeddings")
-    qid = e.agg(F.min("vec_id")).collect()[0][0]
+    qid = e.agg(F.min("vec_id")).scalar()
     q = e.filter(F.col("vec_id") == qid).select(
         to_double_array("embedding").alias("qe")
     )
@@ -74,7 +74,7 @@ def _query_vec(spark: SparkSession, sf_dir: str):
     ORDER BY cos_sim DESC, vec_id
     LIMIT 10
     """,
-    tags=("llm", "similarity"),
+    tags=("llm", "similarity", "eager"),
 )
 def q_sim_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-10 cosine neighbors of the first vector. Broadcast
@@ -151,7 +151,7 @@ def _lsh_oracle(dim: int = 64) -> str:
     """
 
 
-@register("q_sim_search_lsh", oracle=_lsh_oracle(), tags=("llm", "similarity"))
+@register("q_sim_search_lsh", oracle=_lsh_oracle(), tags=("llm", "similarity", "eager"))
 def q_sim_search_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-k: random-hyperplane (sign-LSH) signatures from
     literal ±1 weights (md5-seeded; identical constants embedded in
@@ -260,7 +260,7 @@ def _ivf_exact_oracle() -> str:
     """
 
 
-@register("q_sim_search_ivf", oracle=_ivf_exact_oracle(), tags=("llm", "similarity"))
+@register("q_sim_search_ivf", oracle=_ivf_exact_oracle(), tags=("llm", "similarity", "eager"))
 def q_sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF (inverted-file) approximate search with a FULLY exact
     oracle: the coarse quantizer is the integer-arithmetic k-means
@@ -332,7 +332,7 @@ def q_sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM n a JOIN n b ON a.vec_id < b.vec_id)
     SELECT vec_a, vec_b, cos_sim FROM scored WHERE cos_sim >= 0.35
     """,
-    tags=("llm", "similarity"),
+    tags=("llm", "similarity", "eager"),
 )
 def q_sim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact all-pairs similarity join (cosine ≥ 0.35, reported at
@@ -430,7 +430,7 @@ _IVF_SCRATCH = f"{ROOT}/ivf"
 @register(
     "q_sim_search_ivf_indexed",
     oracle=_ivf_exact_oracle(),
-    tags=("llm", "similarity"),
+    tags=("llm", "similarity", "eager"),
 )
 def q_sim_search_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF with a PERSISTED index — the build/serve split the
@@ -488,7 +488,7 @@ def q_sim_search_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         quantize_xs(raw.filter(F.col("vec_id") == qid))
         .select(F.posexplode("xs").alias("dim", "x"))
     )
-    cen = spark.read.parquet(cen_path)
+    cen = read_parquet(spark, cen_path)
     probe_rows = (
         cen.join(F.broadcast(qv), "dim")
         .groupBy("cl")
@@ -500,7 +500,7 @@ def q_sim_search_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     probe_cells = [int(r.cl) for r in probe_rows]
 
-    vecs = spark.read.parquet(vec_path)
+    vecs = read_parquet(spark, vec_path)
     cand = vecs.filter(
         F.col("cell").isin(probe_cells) & (F.col("vec_id") != qid)
     )
@@ -579,7 +579,7 @@ def _pq_sql() -> str:
     """
 
 
-@register("q_sim_search_pq", oracle=_pq_sql(), tags=("llm", "similarity"))
+@register("q_sim_search_pq", oracle=_pq_sql(), tags=("llm", "similarity", "eager"))
 def q_sim_search_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN (Jégou et al. 2011) — the third ANN
     family next to LSH (q_sim_search_lsh) and IVF (q_sim_search_ivf*),
@@ -729,7 +729,7 @@ def _ann_recall_oracle() -> str:
     """
 
 
-@register("q_ann_recall", oracle=_ann_recall_oracle(), tags=("llm", "similarity", "eval"))
+@register("q_ann_recall", oracle=_ann_recall_oracle(), tags=("llm", "similarity", "eval", "eager"))
 def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN-config EVALUATION: recall@10 of each approximate family
     (IVF via the integer-kmeans quantizer, hyperplane LSH, PQ with
@@ -807,7 +807,7 @@ def _threshold_curve_oracle() -> str:
 @register(
     "q_dedup_threshold_curve",
     oracle=_threshold_curve_oracle(),
-    tags=("llm", "dedup", "similarity"),
+    tags=("llm", "dedup", "similarity", "eager"),
 )
 def q_dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-count vs cosine-threshold CURVE — the calibration

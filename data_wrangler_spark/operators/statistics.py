@@ -152,7 +152,7 @@ def q_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     are the only inexact steps and run on identical operands in both
     engines. The global rank runs TWO-PHASE (range partition →
     per-partition prefix counts as broadcast offsets, functions/
-    distributed.py) — same algebra, no one-task sort."""
+    distributed.py) — same algebra, no one-task sort, no collect."""
     from data_wrangler_spark.functions.distributed import with_global_position
 
     o = load_table(spark, sf_dir, "orders")
@@ -292,7 +292,7 @@ def q_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical operands. The decile assignment runs TWO-PHASE over the
     *aggregated* per-customer frame (range partition → broadcast
     offsets → positional bucket arithmetic, functions/distributed.py)
-    — byte-identical to the oracle's NTILE, no one-task sort."""
+    — byte-identical to the oracle's NTILE, no one-task sort/collect."""
     from data_wrangler_spark.functions.distributed import (
         ntile_from_position,
         with_global_position,
@@ -349,9 +349,9 @@ def q_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the quadratic work never happens; the envelope window runs
     over the distinct-x frame (≤ one row per customer, collapsed
     from the fact table by the aggregate). That frame's global sort
-    is the only non-partition-local step — at 100 TB it
-    range-partitions (sortWithinPartitions + per-partition prefix
-    max merged in one driver-sized pass of partition maxima)."""
+    is the only non-partition-local step — it range-partitions
+    (local running max seeded by a K-row window of earlier
+    partitions' maxima, broadcast back; no collect)."""
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     agg = (
@@ -406,9 +406,9 @@ def q_quantile_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal-exact sum. A naive global NTILE is a one-task sort; this
     runs TWO-PHASE over the raw rows (range partition on the full
     unique order → broadcast per-partition offsets → positional
-    bucket arithmetic, functions/distributed.py), byte-identical to
-    the oracle's NTILE at any partition count. The pk tiebreak
-    (orderkey, linenumber) makes the order total, so bucket
+    bucket arithmetic, functions/distributed.py, no collect),
+    byte-identical to the oracle's NTILE at any partition count. The
+    pk tiebreak (orderkey, linenumber) makes the order total, so bucket
     boundaries are deterministic even among equal prices."""
     from data_wrangler_spark.functions.distributed import (
         ntile_from_position,

@@ -634,7 +634,7 @@ def _bpe_merges_oracle() -> str:
 @register(
     "q_bpe_merges",
     oracle=_bpe_merges_oracle(),
-    tags=("llm", "text", "tokenizer"),
+    tags=("llm", "text", "tokenizer", "eager"),
 )
 def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE tokenizer training, first BPE_ROUNDS merge rounds: count
@@ -993,7 +993,7 @@ def _bpe_encode_oracle() -> str:
 @register(
     "q_bpe_encode",
     oracle=_bpe_encode_oracle(),
-    tags=("llm", "text"),
+    tags=("llm", "text", "eager"),
 )
 def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE ENCODING — the apply step that pairs with q_bpe_merges'

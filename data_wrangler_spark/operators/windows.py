@@ -148,8 +148,8 @@ def q_window_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     is nondeterministic). Computed TWO-PHASE (range partition →
     per-partition offsets → partition-local rank + arithmetic bucket,
     functions/distributed.py) so no single-task global sort appears
-    in the plan; the positional bucket formula is byte-identical to
-    the oracle's NTILE."""
+    in the plan, and the builder starts no job; the positional bucket
+    formula is byte-identical to the oracle's NTILE."""
     from data_wrangler_spark.functions.distributed import (
         ntile_from_position,
         with_global_position,
@@ -368,7 +368,7 @@ def q_window_skew_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS running_spend
     FROM orders
     """,
-    tags=("ext", "window", "skew"),
+    tags=("ext", "window", "skew", "eager"),
 )
 def q_window_skewed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running sum over a SKEWED partition key, hash-equal to the
@@ -388,8 +388,8 @@ def q_window_skewed(spark: SparkSession, sf_dir: str) -> DataFrame:
     window over the ~per-month chunk TOTALS (grid-sized, one tiny
     partition) produces each chunk's starting offset, broadcast-
     joined back and added. Two-phase running aggregation — the
-    functions/distributed.py global-position pattern applied inside
-    one key — so the hot key's work spreads over as many tasks as it
+    global helpers' functions/distributed.running_agg, keyed by the
+    skew key — so the hot key's work spreads over as many tasks as it
     has chunks instead of serializing on one. A uniform corpus
     detects NO hot keys and the whole table takes the cold path
     (pinned in test_skew.py).
@@ -441,7 +441,7 @@ def q_window_skewed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # hot keys: chunk by month of the ordering column
-    from data_wrangler_spark.functions.distributed import pin
+    from data_wrangler_spark.functions.distributed import pin, running_agg
 
     hot_pred = (
         F.col("skew_key").isin(hot_list) if hot_list else F.lit(False)
@@ -451,22 +451,7 @@ def q_window_skewed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("_chunk", F.date_format("o_orderdate", "yyyy-MM"))
         .persist()
     )
-    w_local = Window.partitionBy("skew_key", "_chunk").orderBy(
-        "o_orderdate", "o_orderkey"
-    ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    w_off = Window.partitionBy("skew_key").orderBy("_chunk").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offs = (
-        hot.groupBy("skew_key", "_chunk")
-        .agg(F.sum("_c").alias("_t"))
-        .withColumn("_off", F.coalesce(F.sum("_t").over(w_off), F.lit(0)))
-        .select("skew_key", "_chunk", "_off")
-    )
-    hot_rs = (
-        hot.withColumn("_rs_local", F.sum("_c").over(w_local))
-        .join(F.broadcast(offs), ["skew_key", "_chunk"])
-        .withColumn("_rs", F.col("_rs_local") + F.col("_off"))
-        .select(*out_cols)
-    )
+    hot_rs = running_agg(
+        hot, ["skew_key", "_chunk"], ["o_orderdate", "o_orderkey"], "_c", "_rs"
+    ).select(*out_cols)
     return cold.unionByName(hot_rs)

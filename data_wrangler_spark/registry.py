@@ -28,6 +28,8 @@ class QuerySpec:
     name: str
     builder: Callable[..., DataFrame]
     oracle: str | None  # ANSI SQL for DuckDB, or None → rows-only check
+    # "stream" / "eager": the builder runs its stream / other Spark
+    # jobs before returning; any other builder only plans
     tags: tuple[str, ...] = ()
     defaults: dict[str, Any] = field(default_factory=dict)
     doc: str = ""

@@ -55,6 +55,8 @@ RUNTIME_CONFS: dict[str, str] = {
     # with 128-512MB files the same knob goes back UP to 128-256m —
     # the invariant is splits ≈ row-group size so every core scans.
     "spark.sql.files.maxPartitionBytes": "16m",
+    # pushFilters on Python data sources (q_rest_ingest prunes pages)
+    "spark.sql.python.filterPushdown.enabled": "true",
 }
 
 

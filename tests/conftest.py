@@ -5,6 +5,32 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+
+def _jobs_started_by(spark, fn):
+    """(fn(), number of Spark jobs fn started). The status store is
+    fed asynchronously, so a marker job in a second group runs after
+    fn; once it is visible, every job fn started is visible too."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-started-by-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "code under test")
+    try:
+        out = fn()
+        sc.setJobGroup(group + "-marker", "status store flush")
+        sc.parallelize([0], 1).count()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(group + "-marker"):
+        assert time.monotonic() < deadline, "marker job never reached the status store"
+        time.sleep(0.05)
+    return out, len(tracker.getJobIdsForGroup(group))
+
+
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 

@@ -5,6 +5,7 @@ FK child-list convention (index.js:575) — on the reference's own
 foo/bar fixture and the driver tables."""
 
 import pytest
+from conftest import _jobs_started_by
 
 from pyspark.sql import functions as F
 
@@ -109,31 +110,6 @@ def _write_parquet(path, **cols):
     import pyarrow.parquet as pq
 
     pq.write_table(pa.table(cols), str(path))
-
-
-def _jobs_started_by(spark, fn):
-    """(fn(), number of Spark jobs fn started). The status store is
-    fed asynchronously, so a marker job in a second group runs after
-    fn; once it is visible, every job fn started is visible too."""
-    import time
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"load-table-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "load_table under test")
-    try:
-        out = fn()
-        sc.setJobGroup(group + "-marker", "status store flush")
-        sc.parallelize([0], 1).count()
-    finally:
-        for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(prop, None)
-    tracker = sc.statusTracker()
-    deadline = time.monotonic() + 30
-    while not tracker.getJobIdsForGroup(group + "-marker"):
-        assert time.monotonic() < deadline, "marker job never reached the status store"
-        time.sleep(0.05)
-    return out, len(tracker.getJobIdsForGroup(group))
 
 
 def test_load_table_reuses_schema_without_a_job(spark, tmp_path):

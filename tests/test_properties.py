@@ -118,8 +118,9 @@ def test_ntile_formula_matches_window_semantics(n, k):
 
 
 def test_running_sum_rejects_non_integral(spark):
-    """Fractional val_col would be silently truncated by the driver
-    offset round-trip — must raise instead."""
+    """A fractional sum depends on the order its terms are added in, so
+    per-partition sums plus offsets would not be bit-identical to the
+    one-task window — a fractional val_col must raise instead."""
     import pytest
     from data_wrangler_spark.functions.distributed import with_global_running_sum
 
@@ -139,9 +140,61 @@ def test_release_pinned_unpersists(spark):
     release_pinned()  # drain anything earlier tests pinned
     df = spark.range(100).withColumn("k", (F.col("id") % 7).cast("int"))
     out, n = with_global_position(df, ["k", "id"])
-    assert n == 100 and out.count() == 100
+    assert out.select(n).first()[0] == 100 and out.count() == 100
     assert release_pinned() >= 1
     assert release_pinned() == 0  # idempotent
+
+
+def test_global_helpers_exact_on_shuffled_input(spark):
+    """Each two-phase helper reads its range-partitioned frame twice in
+    one plan: the per-partition offsets and the partition-local window.
+    On a shuffled input the row order inside a partition varies from
+    one computation to the next, so every recomputation would sample
+    other range boundaries; with exchange reuse off nothing shares the
+    shuffle either. Only the persisted frame keeps both reads on one
+    partitioning, and each helper must equal the one-task window it
+    replaces."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from data_wrangler_spark.functions.distributed import (
+        release_pinned,
+        with_global_position,
+        with_global_running_max,
+        with_global_running_sum,
+    )
+
+    child = spark.newSession()
+    child.conf.set("spark.sql.exchange.reuse", "false")
+    child.conf.set("spark.sql.shuffle.partitions", "32")
+    # big enough that range sampling sees a sample, not whole partitions
+    base = child.range(200_000).select(
+        (F.col("id") % 40_000).alias("g"), (F.col("id") * 7919 % 1009).alias("x")
+    )
+    shuffled = base.groupBy("g").agg(
+        F.max("x").cast("int").alias("k"), F.sum("x").alias("v")
+    )
+    order = ["k", "g"]
+    one_task = Window.orderBy(*order)
+    upto = one_task.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    before = one_task.rowsBetween(Window.unboundedPreceding, -1)
+    want = {
+        r.g: r
+        for r in shuffled.select(
+            "g",
+            (F.row_number().over(one_task) - 1).alias("pos"),
+            F.sum("v").over(upto).alias("rs"),
+            F.max("k").over(before).alias("rm"),
+        ).collect()
+    }
+    pos, n = with_global_position(shuffled, order)
+    assert {r.g: r._pos for r in pos.collect()} == {g: r.pos for g, r in want.items()}
+    assert pos.select(n).first()[0] == len(want) == 40_000
+    rs = with_global_running_sum(shuffled, order, "v", "rs")
+    assert {r.g: r.rs for r in rs.collect()} == {g: r.rs for g, r in want.items()}
+    rm = with_global_running_max(shuffled, order, "k", "rm", exclusive=True)
+    assert {r.g: r.rm for r in rm.collect()} == {g: r.rm for g, r in want.items()}
+    release_pinned()
 
 
 @settings(max_examples=200, deadline=None)

@@ -138,6 +138,27 @@ def test_restapi_end_to_end(spark, sf_dir):
     assert row.name == "item_500" and row.value == (500 * 37 % 1000) / 4.0
 
 
+def test_rest_ingest_builder_writes_no_session_conf(spark, sf_dir, monkeypatch):
+    """Pushdown for Python sources is one of the engine's runtime confs,
+    which the session already carries (get_spark, Engine and the
+    __spark_entry__ contract apply them), so the builder writes none."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from data_wrangler_spark.registry import REGISTRY
+
+    writes = []
+    set_conf = RuntimeConfig.set
+
+    def counted(self, key, value):
+        writes.append(key)
+        return set_conf(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", counted)
+    df = REGISTRY["q_rest_ingest"].run(spark, sf_dir)
+    assert writes == []
+    assert df.count() == 1500
+
+
 def test_restapi_true_http_roundtrip_and_pruning(spark):
     """Drive the REST DataSource over a REAL socket: an in-process
     http.server serves paged JSON, executors fetch pages over HTTP,

@@ -7,9 +7,11 @@ Janino compiled during the measured runs (a warm query that keeps
 compiling is thrashing Spark's codegen class cache) and the median
 number of py4j round trips per measured run (each costs a fixed
 fraction of a millisecond, so a builder that makes thousands of them
-pays for it in the builder layer). Use this to claim before/after
-numbers for one operator without a full sweep's ordering/contention
-noise.
+pays for it in the builder layer), and the median number of Spark
+jobs each measured run started before its builder returned (a builder
+should only plan; each job costs tens of ms). Use this to claim
+before/after numbers for one operator without a full sweep's
+ordering/contention noise.
 
 Usage: python tools/isolate.py [-n RUNS] QUERY [QUERY ...]
        (data dir from $SPARK_GRAFT_SF_DIR, default /root/testdata/sf0.1)
@@ -51,6 +53,8 @@ def main() -> int:
         return send_command(*a, **kw)
 
     client.send_command = counting_send_command
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
     for name in args:
         spark.sparkContext.setJobDescription(f"isolate warmup: {name}")
         REGISTRY[name].run(spark, sf_dir).write.format("noop").mode(
@@ -59,23 +63,31 @@ def main() -> int:
         runs = []
         calls = []
         c0 = compiles.getCount()
+        groups = []
         for i in range(n):
-            spark.sparkContext.setJobDescription(f"isolate {i}: {name}")
+            groups.append(f"isolate-{os.getpid()}-{name}-{i}")
+            sc.setJobGroup(groups[-1], f"isolate {i}: {name} (builder)")
             p0 = py4j_calls[0]
             t0 = time.perf_counter()
-            REGISTRY[name].run(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
+            df = REGISTRY[name].run(spark, sf_dir)
+            sc.setJobGroup(groups[-1] + "-exec", f"isolate {i}: {name}")
+            df.write.format("noop").mode("overwrite").save()
             runs.append(round(time.perf_counter() - t0, 4))
             calls.append(py4j_calls[0] - p0)
         compilations = compiles.getCount() - c0
         release_pinned()
-        spark.sparkContext.setJobDescription(None)
+        # the status store is fed asynchronously and in order: once the
+        # last run's write is visible, every builder job is too
+        while not tracker.getJobIdsForGroup(groups[-1] + "-exec"):
+            time.sleep(0.05)
         rec = {
             "query": name,
             "median": round(statistics.median(runs), 4),
             "compilations": compilations,
             "py4j_calls": statistics.median(calls),
+            "builder_jobs": statistics.median(
+                len(tracker.getJobIdsForGroup(g)) for g in groups
+            ),
             "runs": runs,
         }
         print(json.dumps(rec))

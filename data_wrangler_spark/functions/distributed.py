@@ -205,6 +205,7 @@ def running_agg(
     agg=F.sum,
     combine=_plus_offset,
     end: int = Window.currentRow,
+    total_col: str | None = None,
 ) -> DataFrame:
     """``out_col`` = ``agg`` (sum or max: partials merge exactly) of
     ``val_col`` over the rows up to ``end`` under ``order_by``, two-
@@ -213,13 +214,17 @@ def running_agg(
     key. ``agg`` runs per chunk; the same ``agg`` over the key's
     EARLIER chunks' partials (a window over chunk rows, NULL for the
     first chunk) is broadcast back as ``_off``; the result is
-    ``combine(chunk-local running agg, _off)``. The chunk column is
-    dropped. Planned, never collected."""
+    ``combine(chunk-local running agg, _off)``. With ``total_col``,
+    ``agg`` over ALL the key's partials rides along as that column.
+    The chunk column is dropped. Planned, never collected."""
     *keys, chunk = chunks
     start = Window.unboundedPreceding
-    earlier = Window.partitionBy(*keys).orderBy(chunk).rowsBetween(start, -1)
+    ordered = Window.partitionBy(*keys).orderBy(chunk)
+    earlier = ordered.rowsBetween(start, -1)
+    whole = ordered.rowsBetween(start, Window.unboundedFollowing)
+    total = [agg("_part").over(whole).alias(total_col)] if total_col else []
     offs = frame.groupBy(*chunks).agg(agg(val_col).alias("_part")).select(
-        *chunks, agg("_part").over(earlier).alias("_off")
+        *chunks, agg("_part").over(earlier).alias("_off"), *total
     )
     local = Window.partitionBy(*chunks).orderBy(*order_by).rowsBetween(start, end)
     return (
@@ -234,13 +239,17 @@ def with_global_position(
 ) -> tuple[DataFrame, Column]:
     """df + 0-based global position under ``order_by`` (which must be
     a total order — include a pk tiebreak): a two-phase running count,
-    less one. Returns (df_with_pos, n_rows as a scalar subquery)."""
+    less one. Returns (df_with_pos, n_rows): the row total is summed
+    once from the per-partition counts and carried as the column
+    ``_n`` (n_rows names it), so referencing it N times plans no
+    further aggregate."""
     rp = _range_partitioned(df.withColumn("_one", F.lit(1)), order_by)
     out = running_agg(
         rp, ["_pid"], order_by, "_one", pos_col,
         combine=lambda run, off: _plus_offset(run - 1, off),
+        total_col="_n",
     )
-    return out.drop("_one"), rp.select(F.count(F.lit(1))).scalar()
+    return out.drop("_one"), F.col("_n")
 
 
 def with_global_running_sum(

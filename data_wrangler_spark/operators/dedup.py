@@ -21,6 +21,7 @@ otherwise explode the join.
 
 from __future__ import annotations
 
+import math
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
@@ -926,10 +927,26 @@ PREFIX_JACCARD_T = 0.6  # near-dup threshold for the prefix-filtered join
 # SPARK_GRAFT_PREFIX_CAND_PER_DOC (float; 'inf' disables) for a
 # verify stage that knowingly accepts the quadratic cost.
 PREFIX_CAND_PER_DOC = 256.0
-
-
-class PrefixSaturationError(RuntimeError):
-    """Exact PPJoin refused: the corpus saturates the prefix filter."""
+# The guard as plan text: a bucket's k(k−1), and the refusal over the
+# guard frame's (cand2, n_docs). size() is 32-bit: the product must
+# widen BEFORE multiplying or a >=46,341-posting bucket — precisely
+# the saturating regime the guard refuses — overflows int and either
+# throws (ANSI) or wraps negative and silently passes. The verdict
+# is ALL-INTEGER (Σ k(k−1) ≤ 2·bound·n) so the auto-router's DuckDB
+# oracle can replay it bit-for-bit; the refusal's per-doc figure is
+# display-only (a refusal implies n_docs > 0).
+_CAND2_SQL = "cast(size(ds) as bigint) * (cast(size(ds) as bigint) - 1)"
+_REFUSAL_SQL = (
+    "raise_error(format_string('exact prefix join refused: %.3g candidate "
+    "pairs over %d docs = %.1f candidates/doc (bound {bound:g}) — the "
+    "shingle dictionary saturates this corpus, so the PPJoin prefix "
+    "filter has no rarity to prune with and the join is "
+    "candidate-quadratic. Use the capped family instead (q_dedup_minhash / "
+    "q_dedup_lsh_keep under MAX_BUCKET, or q_dedup_jaccard under "
+    "JACCARD_DF_CAP); run q_dedup_prefix_audit for the full accounting "
+    "row; or raise SPARK_GRAFT_PREFIX_CAND_PER_DOC for a verify stage "
+    "that accepts the quadratic cost.', cand2 / 2, n_docs, cand2 / 2 / n_docs))"
+)
 
 
 # Every execution-bounding cap has a LIVE accounting operator
@@ -1121,7 +1138,7 @@ def q_dedup_prefix_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             / (len(sa.shingles) + len(sb.shingles) - i.n_inter)
           >= {PREFIX_JACCARD_T}
     """,
-    tags=("llm", "dedup", "eager"),
+    tags=("llm", "dedup"),
 )
 def q_dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Prefix-filtered exact Jaccard join (the SSJoin/PPJoin family,
@@ -1170,7 +1187,7 @@ def q_dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     pin(sh)
-    return prefix_verified_pairs(spark, sh, t)
+    return prefix_verified_pairs(spark, sh, t)[0]
 
 
 def prefix_verified_pairs(
@@ -1178,19 +1195,27 @@ def prefix_verified_pairs(
     sh: DataFrame,
     t: float,
     bound: float | None = None,
-) -> DataFrame:
+) -> tuple[DataFrame, DataFrame]:
     """The PPJoin candidate+verify pipeline over a prepared
     (doc_id, shingles, n_sh) frame — factored so q_dedup_jaccard_prefix
-    and the fused keeper (pipeline_ops.q_dedup_prefix_keep) share one
-    implementation. `sh` should be persisted by the caller (it is
-    scanned for the index build AND the verify join). Returns
-    (doc_a, doc_b, jaccard) with jaccard ≥ t, doc_a < doc_b.
+    and the fused keepers (pipeline_ops.q_dedup_prefix_keep,
+    q_dedup_keep_auto) share one implementation. `sh` should be
+    persisted by the caller (it is scanned for the index build AND the
+    verify join). Plans only; returns (pairs, guard):
+
+    - pairs: (doc_a, doc_b, jaccard) with jaccard ≥ t, doc_a < doc_b.
+      Executing it on a corpus over the saturation bound fails with
+      the refusal (raise_error: candidates/doc, the capped
+      alternatives, the env override) before any pair is emitted.
+    - guard: the 1-row saturation verdict (cand2 = Σ k(k−1) over the
+      candidate buckets, n_docs, ok) that pairs' refusal reads.
 
     ``bound``: explicit saturation-guard bound in candidates/doc; the
     default (None) honors the SPARK_GRAFT_PREFIX_CAND_PER_DOC env
     override. The auto-router (pipeline_ops.q_dedup_keep_auto) passes
     the hard default so its routing decision can never be silently
     changed by an environment opt-out the oracle cannot see."""
+    from pyspark import StorageLevel
     from pyspark.sql.types import LongType
 
     # tokens cross the wire as 8-byte LONGS, never strings: the
@@ -1248,76 +1273,39 @@ def prefix_verified_pairs(
     # INSIDE the emission, before any pair reaches the wire — it cuts
     # the candidate set ~3× at sf0.1 (300k → 90k) and is lossless by
     # the same containment bound the oracle's exact formulation obeys
-    from pyspark import StorageLevel
-
-    # persisted now, pin()-tracked only AFTER the guard passes: a
-    # refused call must not leave a resident MEMORY_AND_DISK copy of
-    # the (largest-case, saturating) postings index parked until the
-    # caller's next release_pinned() — long-lived serving sessions
-    # would accumulate one per refusal
-    buckets = (
+    buckets = pin(
         pex.groupBy("tok")
         .agg(F.array_sort(F.collect_list(F.struct("n_sh", "doc_id"))).alias("ds"))
         .filter(F.size("ds") >= 2)
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # Pre-flight saturation guard (PREFIX_CAND_PER_DOC above): one
-    # aggregate over the persisted buckets frame — the pipeline's own
-    # candidate volume, so unlike q_dedup_prefix_audit's advisory row
-    # it cannot diverge from what would actually run. Oracle-neutral:
-    # on any corpus where the guard passes, the result is unchanged
-    # (the persist is reused by the pair-emission consumer below).
-    import math
-
+    # Saturation guard (PREFIX_CAND_PER_DOC above), planned: one 1-row
+    # frame over the persisted buckets — the pipeline's own candidate
+    # volume, so unlike q_dedup_prefix_audit's advisory row it cannot
+    # diverge from what would actually run — read by the pair
+    # emission as a scalar-subquery filter that raises the refusal.
+    # Spark runs the subquery before the stage that filters on it, so
+    # a refused run fails before any quadratic stage starts; where the
+    # guard passes the result is unchanged (oracle-neutral). Σ k(k−1)
+    # and the doc count share one aggregate over a union (one
+    # exchange, not two plus a broadcast), and the frame is persisted
+    # so a caller that reads the verdict first (q_dedup_keep_auto)
+    # does not recompute it in the subquery.
     if bound is None:
         bound = float(
             os.environ.get(
                 "SPARK_GRAFT_PREFIX_CAND_PER_DOC", PREFIX_CAND_PER_DOC
             )
         )
-    if math.isfinite(bound):
-        # size() is 32-bit: the product must widen BEFORE multiplying
-        # or a >=46,341-posting bucket — precisely the saturating
-        # regime this guard refuses — overflows int and either throws
-        # (ANSI) or wraps negative and silently passes the guard.
-        # The decision is ALL-INTEGER (Σ k(k−1) > 2·bound·n) so the
-        # auto-router's DuckDB oracle can replay it bit-for-bit —
-        # per_doc below is display-only.
-        cand2 = int(
-            buckets.agg(
-                F.coalesce(
-                    F.sum(
-                        F.expr(
-                            "cast(size(ds) as bigint)"
-                            " * (cast(size(ds) as bigint) - 1)"
-                        )
-                    ),
-                    F.lit(0),
-                ).cast("long")
-            ).first()[0]
-        )
-        n_docs = sh.count()
-        cand_pairs = cand2 / 2
-        per_doc = cand_pairs / n_docs if n_docs else 0.0
-        if cand2 > 2 * bound * n_docs:
-            buckets.unpersist()
-            raise PrefixSaturationError(
-                f"exact prefix join refused: {cand_pairs:.3g} candidate "
-                f"pairs over {n_docs} docs = {per_doc:.1f} candidates/doc "
-                f"(bound {bound:g}) — the shingle dictionary saturates "
-                f"this corpus, so the PPJoin prefix filter has no rarity "
-                f"to prune with and the join is candidate-quadratic. Use "
-                f"the capped family instead (q_dedup_minhash / "
-                f"q_dedup_lsh_keep under MAX_BUCKET, or q_dedup_jaccard "
-                f"under JACCARD_DF_CAP); run q_dedup_prefix_audit for "
-                f"the full accounting row; or raise "
-                f"SPARK_GRAFT_PREFIX_CAND_PER_DOC for a verify stage "
-                f"that accepts the quadratic cost."
-            )
-    # guard passed (or disabled) — NOW track the persist for the
-    # caller's bulk release; the pair-emission consumer below reuses
-    # the materialized copy
-    pin(buckets)
+    ok = f"cand2 <= 2 * {bound!r} * n_docs" if math.isfinite(bound) else "true"
+    guard = pin(
+        buckets.selectExpr(f"{_CAND2_SQL} AS c2", "NULL AS doc")
+        .unionAll(sh.selectExpr("0L", "1"))
+        .selectExpr("coalesce(sum(c2), 0L) AS cand2", "count(doc) AS n_docs")
+        .selectExpr("*", f"{ok} AS ok")
+        .cache()
+    )
+    passes = guard.selectExpr(f"ok OR {_REFUSAL_SQL.format(bound=bound)}").scalar()
     # pair emission as TWO CHAINED GENERATORS (posexplode the anchor,
     # explode its tail slice): rows stream through codegen with O(k)
     # task memory per bucket — a single flatten(transform(...)) would
@@ -1326,17 +1314,15 @@ def prefix_verified_pairs(
     # ds ascends by n_sh, so the anchor x is the SMALLER set and the
     # length filter is x.n_sh >= t·y.n_sh.
     cand = (
-        buckets.select(F.posexplode("ds").alias("i", "x"), "ds")
-        .select(
-            F.col("x.doc_id").alias("da"),
-            F.col("x.n_sh").alias("na"),
-            F.explode(F.expr("slice(ds, i + 2, size(ds) - i - 1)")).alias("y"),
+        buckets.filter(passes)
+        .selectExpr("posexplode(ds) AS (i, x)", "ds")
+        .selectExpr(
+            "x.doc_id AS da",
+            "x.n_sh AS na",
+            "explode(slice(ds, i + 2, size(ds) - i - 1)) AS y",
         )
-        .filter(F.col("na") >= t * F.col("y.n_sh"))
-        .select(
-            F.least("da", F.col("y.doc_id")).alias("doc_a"),
-            F.greatest("da", F.col("y.doc_id")).alias("doc_b"),
-        )
+        .filter(f"na >= {t!r}D * y.n_sh")
+        .selectExpr("least(da, y.doc_id) AS doc_a", "greatest(da, y.doc_id) AS doc_b")
         .distinct()
     )
     # The candidate table is tiny in BYTES but each row costs an
@@ -1369,7 +1355,8 @@ def prefix_verified_pairs(
             / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
         )
     )
-    return verified.filter(F.col("jaccard") >= t).select("doc_a", "doc_b", "jaccard")
+    pairs = verified.filter(F.col("jaccard") >= t).select("doc_a", "doc_b", "jaccard")
+    return pairs, guard
 
 
 _INC_SCRATCH = f"{ROOT}/dedup_inc"

@@ -173,7 +173,7 @@ def _pr_float_loop(edges, ranks, n_nodes):
            CAST(3 * tri.c AS DOUBLE) / wed.w            AS global_clustering
     FROM tri, wed
     """,
-    tags=("ext", "graph", "eager"),
+    tags=("ext", "graph"),
 )
 def q_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle count + global clustering coefficient of the
@@ -195,10 +195,11 @@ def q_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~sqrt(|E|), so adjacency arrays stay small and no key needs
     salting even on power-law graphs; the per-edge join traffic is
     Σ outdeg ≈ |E|·avg-outdeg packed longs, strictly less than the
-    wedge-row stream it replaces. The degree map and adjacency are
-    broadcast only below an explicit measured size cutoff — above it
-    the joins fall back to hash-partitioned shuffles on node id, so
-    nothing here assumes a collectable graph."""
+    wedge-row stream it replaces. The builder picks no join strategy:
+    AQE broadcasts the degree map and adjacency from their measured
+    sizes (spark.sql.adaptive.autoBroadcastJoinThreshold) and keeps
+    hash-partitioned shuffles on node id above it, so nothing here
+    assumes a collectable graph and the builder starts no job."""
     from pyspark import StorageLevel
 
     po = load_table(spark, sf_dir, "lineitem").select(
@@ -226,14 +227,6 @@ def q_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     pin(adj0)
-    # ONE materializing job yields both plan-time scalars (guide §5:
-    # the driver does no data work — these are 2 longs): node count
-    # for the degree-map broadcast decision AND edge count for the
-    # adjacency broadcast decision. Previously two separate jobs
-    # (count + a later sum-collect) each paid a full pass over adj0.
-    n_nodes, n_edges_val = adj0.agg(
-        F.count(F.lit(1)), F.coalesce(F.sum(F.size("nbrs")), F.lit(0))
-    ).first()
     deg = (
         adj0.select(F.col("u").alias("node"), F.size("nbrs").alias("d"))
         .unionAll(adj0.select(F.explode("nbrs").alias("node"), F.lit(1).alias("d")))
@@ -241,17 +234,12 @@ def q_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("d").alias("d"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # deg feeds THREE consumers (du broadcast, dv broadcast, the
-    # wedge aggregate) — uncached, each one re-exploded the whole
-    # adjacency and re-shuffled it (3 extra exchanges per run)
+    # deg feeds THREE consumers (du join, dv join, the wedge
+    # aggregate) — uncached, each one re-exploded the whole adjacency
+    # and re-shuffled it (3 extra exchanges per run)
     pin(deg)
-    # measured-size broadcast decision, not a blind hint: the degree
-    # map is 16 B/node — broadcast under ~64 MB, else shuffle join
-    bcast_ok = n_nodes < 4_000_000
     du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
     dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
-    if bcast_ok:
-        du, dv = F.broadcast(du), F.broadcast(dv)
     # degree-ordered re-orientation: (lo, hi) by (deg, node)
     orient = (
         adj0.select("u", F.explode("nbrs").alias("v"))
@@ -278,17 +266,6 @@ def q_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # carries N⁺(lo), so closing needs only ONE join (on hi)
     estream = adj.select(F.col("nbrs").alias("nbrs_u"), F.explode("nbrs").alias("hi"))
     adj_v = adj.select(F.col("lo").alias("hi"), F.col("nbrs").alias("nbrs_v"))
-    # adjacency bytes ≈ 8·|E| — its broadcast cutoff keys on the edge
-    # count (folded into the adj0 materializing job above), not nodes
-    if n_edges_val < 8_000_000:
-        # the broadcast build is its own job and materializes the adj
-        # cache before estream reads it — no explicit count() needed
-        adj_v = F.broadcast(adj_v)
-    else:
-        # shuffle-join fallback: both join sides read adj inside ONE
-        # job, so materialize the cache first to avoid a racing
-        # double-compute of the orientation
-        adj.count()
     # inner join: an endpoint with no out-neighbors closes nothing
     agg_t = (
         estream.join(adj_v, "hi")

@@ -1786,7 +1786,7 @@ def q_dedup_prefix_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     pin(hs)
-    pairs = prefix_verified_pairs(spark, hs, t).select("doc_a", "doc_b")
+    pairs = prefix_verified_pairs(spark, hs, t)[0].select("doc_a", "doc_b")
     return _keeper_from_pairs(spark, d, pairs)
 
 
@@ -2176,35 +2176,35 @@ def q_dedup_keep_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     "capped family on saturating corpora" policy as one operator:
     run the exact PPJoin keeper (q_dedup_prefix_keep's path) under
     the saturation guard's candidate bound, and when the guard
-    REFUSES (PrefixSaturationError — the corpus's shingle dictionary
-    saturates, so prefix rarity cannot prune and the exact join is
-    candidate-quadratic), fall back to the MAX_BUCKET-capped LSH
-    keeper (q_dedup_lsh_keep's path) whose per-bucket fan-out is
-    bounded BY POLICY regardless of corpus shape. The router does
-    not re-implement the decision: it calls prefix_verified_pairs
-    and catches the refusal, so the routing aggregate IS the
-    enforced guard's (dedup.py, the Σk(k−1) ≤ 2·CAP·n integer
-    comparison over the md5-long prefix postings), taken with the
-    HARD default bound — the env escape hatch deliberately does not
-    apply, or the oracle could not replay the decision.
+    REFUSES (the corpus's shingle dictionary saturates, so prefix
+    rarity cannot prune and the exact join is candidate-quadratic),
+    fall back to the MAX_BUCKET-capped LSH keeper (q_dedup_lsh_keep's
+    path) whose per-bucket fan-out is bounded BY POLICY regardless of
+    corpus shape. The router does not re-implement the decision: it
+    reads the verdict of the guard frame prefix_verified_pairs
+    returns (one .first(), the builder's only action), so the routing
+    aggregate IS the enforced guard's (dedup.py, the Σk(k−1) ≤
+    2·CAP·n integer comparison over the md5-long prefix postings),
+    taken with the HARD default bound — the env escape hatch
+    deliberately does not apply, or the oracle could not replay the
+    decision.
 
     Output: one row per doc (doc_id, component, n_chars, keep) plus
     the route actually taken ('exact' | 'lsh') on every row, so the
     decision itself is part of the hash-checked contract.
 
-    Scale: the pre-flight costs the prefix-postings index build that
+    Scale: the verdict costs the prefix-postings index build that
     the exact branch was about to consume anyway (the persisted
-    frame is reused on the accept path and unpersisted on the refuse
-    path); the LSH fallback touches the corpus only through the
-    banded signature exchange. Wall-clock on a saturating corpus is
-    therefore index-build + LSH — never any quadratic stage — which
-    is the whole point: at 100 TB this query is safe to run UNSEEN
-    on any corpus."""
+    frame is reused on the accept path and released with the
+    caller's pins on the refuse path); the LSH fallback touches the
+    corpus only through the banded signature exchange. Wall-clock on
+    a saturating corpus is therefore index-build + LSH — never any
+    quadratic stage — which is the whole point: at 100 TB this query
+    is safe to run UNSEEN on any corpus."""
     from pyspark import StorageLevel
 
     from data_wrangler_spark.operators.dedup import (
         PREFIX_CAND_PER_DOC,
-        PrefixSaturationError,
         prefix_verified_pairs,
     )
 
@@ -2226,12 +2226,11 @@ def q_dedup_keep_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     pin(hs)
-    try:
-        pairs = prefix_verified_pairs(
-            spark, hs, t, bound=PREFIX_CAND_PER_DOC
-        ).select("doc_a", "doc_b")
+    pairs, guard = prefix_verified_pairs(spark, hs, t, bound=PREFIX_CAND_PER_DOC)
+    if guard.first()["ok"]:
+        pairs = pairs.select("doc_a", "doc_b")
         route = "exact"
-    except PrefixSaturationError:
+    else:
         pairs = lsh_verified_pairs(
             spark,
             d,

@@ -820,16 +820,18 @@ class GatewayServer:
             if qname in self._CONCURRENT_SAFE
             else self._run_lock
         )
+        # the handler thread dies with its connection, so whatever the
+        # builder pinned is released here even when it raised
         with ctx:
             try:
-                df = self.engine.run(qname, **binds)
-            except TypeError as exc:
-                if "required positional argument" in str(exc):
-                    # invoked without a required parameter — client
-                    # input problem; other TypeErrors stay 500s
-                    return _err("missing required query parameter")
-                raise
-            try:
+                try:
+                    df = self.engine.run(qname, **binds)
+                except TypeError as exc:
+                    if "required positional argument" in str(exc):
+                        # invoked without a required parameter — client
+                        # input problem; other TypeErrors stay 500s
+                        return _err("missing required query parameter")
+                    raise
                 return _ok(
                     {"results": _rows_json(df, int(q.get("limit", DEFAULT_RUN_LIMIT)))}
                 )

@@ -1,16 +1,18 @@
 """The PPJoin saturation guard (VERDICT r14 #1): the policy
 q_dedup_prefix_audit measured in r14 ("use the capped family on
-dictionary-saturating corpora") is now ENFORCED inside
+dictionary-saturating corpora") is ENFORCED inside
 prefix_verified_pairs, which both q_dedup_jaccard_prefix and
-q_dedup_prefix_keep run through — the quadratic plan refuses to run
-instead of melting, and the refusal names the capped alternatives."""
+q_dedup_prefix_keep run through. The guard is part of the plan: the
+builder starts no job, and executing the plan on a saturating corpus
+fails before the quadratic stage, with a refusal that names the
+capped alternatives."""
 
 import pytest
+from py4j.protocol import Py4JJavaError
 
-from data_wrangler_spark.operators.dedup import (
-    PREFIX_CAND_PER_DOC,
-    PrefixSaturationError,
-)
+from conftest import _jobs_started_by
+from data_wrangler_spark import Engine
+from data_wrangler_spark.operators.dedup import PREFIX_CAND_PER_DOC
 from data_wrangler_spark.registry import REGISTRY
 
 
@@ -36,8 +38,21 @@ def saturating_sf_dir(spark, tmp_path_factory):
 
 
 def test_guard_trips_on_saturating_corpus(spark, saturating_sf_dir):
-    with pytest.raises(PrefixSaturationError) as ei:
-        REGISTRY["q_dedup_jaccard_prefix"].run(spark, saturating_sf_dir)
+    """describe() and explain() only plan, so they neither start a job
+    nor refuse; collecting the plan does refuse."""
+    eng = Engine(spark, saturating_sf_dir)
+    eng.run("q_dedup_jaccard_prefix")  # cold: infers the table schema
+    _, jobs = _jobs_started_by(
+        spark,
+        lambda: (
+            eng.describe("q_dedup_jaccard_prefix"),
+            eng.explain("q_dedup_jaccard_prefix"),
+        ),
+    )
+    assert jobs == 0
+    with pytest.raises(Py4JJavaError) as ei:
+        eng.run("q_dedup_jaccard_prefix").collect()
+    eng.release_cache()
     # the refusal carries the accounting and the alternatives
     msg = str(ei.value)
     assert "candidates/doc" in msg
@@ -46,8 +61,8 @@ def test_guard_trips_on_saturating_corpus(spark, saturating_sf_dir):
 
 
 def test_guard_covers_the_fused_keeper(spark, saturating_sf_dir):
-    with pytest.raises(PrefixSaturationError):
-        REGISTRY["q_dedup_prefix_keep"].run(spark, saturating_sf_dir)
+    with pytest.raises(Py4JJavaError, match="exact prefix join refused"):
+        REGISTRY["q_dedup_prefix_keep"].run(spark, saturating_sf_dir).collect()
 
 
 def test_env_override_opts_into_the_quadratic_plan(
@@ -74,22 +89,25 @@ def test_driver_fixture_is_unaffected(spark, sf_dir):
 
 
 def test_refusal_leaves_no_pinned_postings_index(spark, saturating_sf_dir):
-    """ADVICE r16: a refused call must not park a MEMORY_AND_DISK copy
-    of the saturating postings index until the caller's next
-    release_pinned() — repeated refusals in a long-lived serving
-    session would accumulate resident copies. Only the caller-pinned
-    shingle frame may remain tracked; the buckets frame is unpersisted
-    in the raise path and pin()-tracked only after the guard passes."""
-    from data_wrangler_spark.functions import distributed as D
+    """ADVICE r16: a refused run must not park a MEMORY_AND_DISK copy
+    of the saturating postings index in a long-lived serving session.
+    The refusal now comes at execution, after the builder pinned its
+    frames (shingle sets, postings buckets, guard verdict), so the
+    caller's release_cache() must leave none of them cached."""
+    from pyspark import StorageLevel
 
-    D.release_pinned()
-    with pytest.raises(PrefixSaturationError):
-        REGISTRY["q_dedup_jaccard_prefix"].run(spark, saturating_sf_dir)
-    pinned = D.pinned_frames()
-    assert len(pinned) == 1  # sh only — never the postings buckets
-    assert "shingles" in pinned[0].columns
-    assert pinned[0].storageLevel.useMemory  # still cached (caller owns it)
-    D.release_pinned()
+    from data_wrangler_spark.functions.distributed import pinned_frames
+
+    eng = Engine(spark, saturating_sf_dir)
+    eng.release_cache()
+    df = eng.run("q_dedup_jaccard_prefix")
+    built = pinned_frames()
+    assert any("ds" in f.columns for f in built)  # the postings buckets
+    with pytest.raises(Py4JJavaError):
+        df.collect()
+    eng.release_cache()
+    assert pinned_frames() == []
+    assert [f.storageLevel for f in built] == [StorageLevel.NONE] * len(built)
 
 
 def test_keep_auto_routes_exact_on_driver_fixture(spark, sf_dir):
@@ -106,8 +124,8 @@ def test_keep_auto_routes_exact_on_driver_fixture(spark, sf_dir):
 def test_keep_auto_routes_lsh_on_saturating_corpus(spark, saturating_sf_dir):
     """On the dictionary-saturating corpus the guard refuses the exact
     branch and the router falls back to the MAX_BUCKET-capped LSH
-    keeper — same rows as q_dedup_lsh_keep, no PrefixSaturationError
-    escapes, and the route is disclosed on every row."""
+    keeper — same rows as q_dedup_lsh_keep, no refusal escapes, and
+    the route is disclosed on every row."""
     rows = REGISTRY["q_dedup_keep_auto"].run(spark, saturating_sf_dir).collect()
     assert {r.route for r in rows} == {"lsh"}
     base = REGISTRY["q_dedup_lsh_keep"].run(spark, saturating_sf_dir).collect()

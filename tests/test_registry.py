@@ -99,15 +99,15 @@ def test_no_handkept_inventory_counts():
     """No current-state doc may carry a numeric inventory claim
     ("N queries (M exact-oracle ...)") outside SURVEY's generated
     block (r10 judge #3 — BASELINE.md:22 said 229 while the registry
-    held 250). Historical round records (ROUND*.md) and judge
-    artifacts (VERDICT/ADVICE) are snapshots, not current-state
-    claims, and are exempt."""
+    held 250). Historical round records (ROUND*.md) and the judge
+    artifact (VERDICT) are snapshots, not current-state claims, and
+    are exempt."""
     import re
     from pathlib import Path
 
     repo = Path(__file__).resolve().parent.parent
     pat = re.compile(r"\b\d+ queries \(\d+ exact")
-    exempt = {"VERDICT.md", "ADVICE.md"}
+    exempt = {"VERDICT.md"}
     offenders = []
     for md in sorted(repo.glob("*.md")):
         if md.name in exempt or md.name.startswith("ROUND"):
@@ -141,8 +141,7 @@ def test_doc_references_name_existing_files():
     that a current-state doc or a package comment names must exist, so
     deleting a tool or an artifact cannot leave a dangling reference.
     Templated names (`CORRECTNESS_r{N}.json`, `BENCH_*.json`) are
-    skipped; CHANGES, ROADMAP, VERDICT and ADVICE are history and
-    exempt."""
+    skipped; CHANGES, ROADMAP and VERDICT are history and exempt."""
     import re
     from pathlib import Path
 

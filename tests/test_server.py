@@ -843,3 +843,28 @@ def test_concurrent_varied_binds_are_isolated(server, spark, sf_dir):
     with ThreadPoolExecutor(max_workers=12) as pool:
         for pg, got in pool.map(hit, range(36)):
             assert got == want[pg], f"page {pg} corrupted under concurrency"
+
+
+def test_run_releases_pins_when_the_builder_raises(server):
+    """Each connection gets its own handler thread, and pins are kept
+    per thread: a builder that pins a persisted frame and then raises
+    must still have that frame released by /run, or it stays cached
+    with nothing left to unpersist it."""
+    from pyspark import StorageLevel
+
+    from data_wrangler_spark.functions.distributed import pin
+    from data_wrangler_spark.registry import REGISTRY, register
+
+    built = []
+
+    @register("q_test_pin_then_raise")
+    def _pin_then_raise(spark, sf_dir):
+        built.append(pin(spark.range(3).persist()))
+        raise ValueError("builder failed after pinning")
+
+    try:
+        code, p = get(server, "/run/q_test_pin_then_raise")
+    finally:
+        REGISTRY.pop("q_test_pin_then_raise", None)
+    assert code == 200 and not p["ok"] and "after pinning" in p["error"]
+    assert built[0].storageLevel == StorageLevel.NONE

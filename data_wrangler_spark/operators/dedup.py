@@ -1363,20 +1363,8 @@ _INC_SCRATCH = f"{ROOT}/dedup_inc"
 
 
 def _inc_index_path(sf_dir: str) -> str:
-    """Path of the persisted LSH band index, keyed on the constants
-    it was built from — changing the signature family, band layout,
-    hot-bucket cap, or split auto-invalidates the cache instead of
-    serving stale bands behind a completeness marker (r10 review)."""
-    # fmt=l4 (r17): bands persisted with the COMPACT key — the 4 raw
-    # minhash longs instead of the '|'-joined bucket string (see
-    # _band_table's injectivity note; probes join on the same 4
-    # longs, so the equi-join is value-identical). The fmt token in
-    # the cache key self-heals any pre-r17 string-format scratch.
-    params = (
-        f"mh={N_MINHASH},bands={N_BANDS},cap={MAX_BUCKET},"
-        f"exist={INC_EXIST_PCT},sh={SHINGLE_PB},fmt=l4"
-    )
-    return f"{_INC_SCRATCH}/{scratch_tag(sf_dir, 'documents', params)}"
+    """Path of the persisted LSH band index."""
+    return f"{_INC_SCRATCH}/{scratch_tag(sf_dir)}"
 INC_EXIST_PCT = 8       # doc_id % 10 < 8 → already-ingested corpus
 INC_JAC_MICRO = 500000  # exact-Jaccard acceptance for a true dup
 SHINGLE_PB = 16         # hash-partition count of the shingle table
@@ -1647,11 +1635,7 @@ INC2_DAY2 = 8  # doc_id % 10 == 8 → day-2 batch; rest = history
 
 
 def _inc2day_path(sf_dir: str) -> str:
-    params = (
-        f"mh={N_MINHASH},bands={N_BANDS},cap={MAX_BUCKET},"
-        f"d1={INC2_DAY1},d2={INC2_DAY2},fmt=l4"
-    )
-    return f"{_INC_SCRATCH}2day/{scratch_tag(sf_dir, 'documents', params)}"
+    return f"{_INC_SCRATCH}2day/{scratch_tag(sf_dir)}"
 
 
 def _ensure_inc2day_built(spark: SparkSession, sf_dir: str) -> str:
@@ -2121,19 +2105,8 @@ _EMB_INC_SCRATCH = f"{ROOT}/embed_inc"
 
 def _embed_inc_path(sf_dir: str) -> str:
     """Path of the persisted embedding-dedup index (centroids +
-    cell-assigned history vectors), keyed on the constants it was
-    built from so a parameter change auto-invalidates (r10)."""
-    from data_wrangler_spark.operators.embeddings_ext import (
-        KM_ITER,
-        KM_K,
-        KM_Q,
-    )
-
-    params = (
-        f"k={KM_K},q={KM_Q},it={KM_ITER},tau={SEM_TAU},"
-        f"exist={INC_EXIST_PCT}"
-    )
-    return f"{_EMB_INC_SCRATCH}/{scratch_tag(sf_dir, 'embeddings', params)}"
+    cell-assigned history vectors)."""
+    return f"{_EMB_INC_SCRATCH}/{scratch_tag(sf_dir)}"
 
 
 def _embed_inc_oracle() -> str:
@@ -2329,17 +2302,7 @@ _EMB_2DAY_SCRATCH = f"{ROOT}/embed_2day"
 
 
 def _embed_2day_path(sf_dir: str) -> str:
-    from data_wrangler_spark.operators.embeddings_ext import (
-        KM_ITER,
-        KM_K,
-        KM_Q,
-    )
-
-    params = (
-        f"k={KM_K},q={KM_Q},it={KM_ITER},tau={SEM_TAU},"
-        f"d1={INC2_DAY1},d2={INC2_DAY2}"
-    )
-    return f"{_EMB_2DAY_SCRATCH}/{scratch_tag(sf_dir, 'embeddings', params)}"
+    return f"{_EMB_2DAY_SCRATCH}/{scratch_tag(sf_dir)}"
 
 
 def _ensure_embed_2day_built(spark: SparkSession, sf_dir: str) -> str:

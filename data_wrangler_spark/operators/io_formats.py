@@ -151,9 +151,7 @@ def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             "props",
         ).write.json(p)
 
-    path = materialize(
-        f"{_IO_SCRATCH}/{scratch_tag(sf_dir, 'events')}/events_jsonl", build
-    )
+    path = materialize(f"{_IO_SCRATCH}/{scratch_tag(sf_dir)}/events_jsonl", build)
     schema = (
         "event_id long, user_id long, event_type string, "
         "value_micro long, props string"
@@ -437,9 +435,7 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", "lang", "n_chars"
         ).write.parquet(f"{p}/gen=2")
 
-    path = materialize(
-        f"{_IO_SCRATCH}/{scratch_tag(sf_dir, 'documents')}/schema_evo", build
-    )
+    path = materialize(f"{_IO_SCRATCH}/{scratch_tag(sf_dir)}/schema_evo", build)
     merged = spark.read.option("mergeSchema", "true").parquet(
         f"{path}/gen=1", f"{path}/gen=2"
     )
@@ -532,8 +528,7 @@ SNAPSHOT_MOD = 89  # q_snapshot_commit: doc_id % 89 == 0 rows erased in v2
 
 
 def _erasure_path(sf_dir: str, mod: int) -> str:
-    params = f"mod={mod},buckets=8"
-    return f"{_IO_SCRATCH}/{scratch_tag(sf_dir, 'documents', params)}/erasure"
+    return f"{_IO_SCRATCH}/{scratch_tag(sf_dir, f'mod={mod}')}/erasure"
 
 
 def _erasure_snapshot(spark: SparkSession, sf_dir: str, mod: int) -> str:

@@ -19,11 +19,13 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from data_wrangler_spark.catalog import load_table
 from data_wrangler_spark.registry import register
-from data_wrangler_spark.scratch import ROOT, scratch_tag
+from data_wrangler_spark.scratch import ROOT, materialize, scratch_tag
 
 
 @register(
@@ -299,6 +301,9 @@ def q_join_range_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _BUCKET_N = 8  # bucket count for the co-located join demo
 _BUCKET_SCRATCH = f"{ROOT}/bucketed"
+# CREATE TABLE IF NOT EXISTS checks, then creates: two threads that
+# both see no table would both create, and one would raise
+_BUCKET_REGISTER = threading.Lock()
 
 
 @register(
@@ -325,25 +330,33 @@ def q_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     or aggregation on that key. Bucket count scales with data (8 here;
     thousands on a cluster); AQE cannot give you this — it still
     shuffles, bucketing doesn't. The oracle replays the plain join on
-    the raw tables, proving the layout changed nothing semantically."""
-    # staleness/collision-safe key (abs path + source mtime), dots
-    # stripped so the tag is a valid SQL identifier fragment
-    tag = scratch_tag(sf_dir, "orders").replace(".", "_")
-    base = f"{_BUCKET_SCRATCH}/{tag}"
-    names = {"orders": f"bkt_orders_{tag}", "customer": f"bkt_customer_{tag}"}
-    keys = {"orders": "o_custkey", "customer": "c_custkey"}
-    for tbl, name in names.items():
-        if not spark.catalog.tableExists(name):
-            (
-                load_table(spark, sf_dir, tbl)
-                .write.mode("overwrite")
-                .bucketBy(_BUCKET_N, keys[tbl])
-                .sortBy(keys[tbl])
-                .option("path", f"{base}/{name}")
-                .saveAsTable(name)
+    the raw tables, proving the layout changed nothing semantically.
+
+    The files are published by ``materialize``; each process then
+    registers them as a bucketed table over that location (Spark 4
+    wants the column list spelled out to declare bucketing)."""
+    # dots stripped so the tag is a valid SQL identifier fragment
+    tag = scratch_tag(sf_dir).replace(".", "_")
+    tables = []
+    for tbl, key in (("orders", "o_custkey"), ("customer", "c_custkey")):
+        name = f"bkt_{tbl}_{tag}"
+        df = load_table(spark, sf_dir, tbl)
+        path = materialize(
+            f"{_BUCKET_SCRATCH}/{tag}/{name}",
+            lambda p: df.write.mode("overwrite")
+            .bucketBy(_BUCKET_N, key)
+            .sortBy(key)
+            .option("path", p)
+            .saveAsTable(name),
+        )
+        with _BUCKET_REGISTER:
+            spark.sql(
+                f"CREATE TABLE IF NOT EXISTS {name} ({df.schema.toDDL()}) "
+                f"USING parquet CLUSTERED BY ({key}) SORTED BY ({key}) "
+                f"INTO {_BUCKET_N} BUCKETS LOCATION '{path}'"
             )
-    o = spark.table(names["orders"])
-    c = spark.table(names["customer"])
+        tables.append(spark.table(name))
+    o, c = tables
     return (
         o.join(c, o.o_custkey == c.c_custkey)
         .groupBy("c_mktsegment")

@@ -725,11 +725,8 @@ def q_mm_phash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     exist = F.col("doc_id") % 10 < INC_EXIST_PCT
 
-    # signature-index cache keyed on the hash/banding constants it was
-    # built from — changing them auto-invalidates (r10 review)
     path = materialize(
-        f"{_PHASH_INC_SCRATCH}/"
-        f"{scratch_tag(sf_dir, 'documents', f'pix={P_PIX},grid={P_ROWS}x{P_COLS},bandbits={PHASH_BAND_BITS},exist={INC_EXIST_PCT}')}",
+        f"{_PHASH_INC_SCRATCH}/{scratch_tag(sf_dir)}",
         lambda p: _phash_banded_df(d.filter(exist))
         .repartition("band")
         .write.partitionBy("band")

@@ -829,12 +829,8 @@ _CONTAM_INC_SCRATCH = f"{ROOT}/contam_inc"
 
 
 def _contam_index_path(sf_dir: str) -> str:
-    """Path of the persisted eval-gram index. The governing constants
-    are folded into the cache key, so changing the gram size or the
-    eval source invalidates the index automatically instead of
-    serving stale grams behind a completeness marker (r10 review)."""
-    params = f"ngram={CONTAM_NGRAM},eval={CONTAM_EVAL_SOURCE}"
-    return f"{_CONTAM_INC_SCRATCH}/{scratch_tag(sf_dir, 'documents', params)}"
+    """Path of the persisted eval-gram index."""
+    return f"{_CONTAM_INC_SCRATCH}/{scratch_tag(sf_dir)}"
 
 
 def ensure_contam_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1104,11 +1100,8 @@ def q_contamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so the driver fetch is at most 4096 (word, mask) rows — 32 KiB,
     # regardless of corpus or eval-suite size — not the raw bit list.
     # The packed bitmap is cached per fixture (the filter is built
-    # once per eval suite in production, not per probe run); the key
-    # carries every constant baked into the bits.
-    bm_key = scratch_tag(
-        sf_dir, "documents", f"bloom_bm,m={BLOOM_M_BITS},k={BLOOM_K}"
-    )
+    # once per eval suite in production, not per probe run).
+    bm_key = scratch_tag(sf_dir)
     bm_sql = _BLOOM_BM_CACHE.get(bm_key)
     if bm_sql is None:
         words_rows = (
@@ -2253,10 +2246,7 @@ def q_dedup_keep_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
 # persisted LSH band index (q_dedup_incremental's) and a persisted
 # per-source survivor counter; it is never rescanned, never re-paired.
 
-# v2: counter semantics gained the stage-2.5 decontamination gate in
-# round 10 — the path bump invalidates r9 counters that would
-# otherwise read as fresh behind their completeness marker
-_PIPE_INC_SCRATCH = f"{ROOT}/pipeline_inc_v2"
+_PIPE_INC_SCRATCH = f"{ROOT}/pipeline_inc"
 
 
 def _pipe_inc_oracle() -> str:
@@ -2477,41 +2467,6 @@ def q_corpus_pipeline_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
     # stage 4: persisted per-source history-survivor counter —
     # built ONCE per corpus (the only time history is scanned), then
     # a broadcast-sized read forever after
-    # the counter's governing semantics key its cache: a change to the
-    # split, gram size, eval source, or counter schema invalidates
-    # automatically (r10 review — no more manual _v2 renames)
-    # the key folds in EVERY gate the counter bakes in — split,
-    # decontamination, AND the Gopher quality thresholds (r10 review:
-    # omitting the quality constants would serve a stale counter
-    # after a GOPHER_* change, the exact trap params-keying closes)
-    from data_wrangler_spark.operators.text_analysis import (
-        GOPHER_MAX_MEAN_WLEN,
-        GOPHER_MAX_SHORT_FRAC,
-        GOPHER_MAX_WORDS,
-        GOPHER_MIN_MEAN_WLEN,
-        GOPHER_MIN_STOPWORD_HITS,
-        GOPHER_MIN_WORDS,
-        GOPHER_STOPWORDS,
-    )
-
-    # the stopword SET is hashed, not length-proxied (ADVICE r10 #2):
-    # swapping one stopword for another keeps len() constant but
-    # changes which docs pass the gate — a content hash invalidates
-    # on any edit.
-    import hashlib as _hl
-
-    _sw_hash = _hl.md5(
-        ",".join(sorted(GOPHER_STOPWORDS)).encode()
-    ).hexdigest()[:12]
-    counter_params = (
-        f"exist={INC_EXIST_PCT},ngram={CONTAM_NGRAM},"
-        f"eval={CONTAM_EVAL_SOURCE},schema=2,"
-        f"gopher={GOPHER_MIN_WORDS}-{GOPHER_MAX_WORDS}-"
-        f"{GOPHER_MIN_MEAN_WLEN}-{GOPHER_MAX_MEAN_WLEN}-"
-        f"{GOPHER_MAX_SHORT_FRAC}-{GOPHER_MIN_STOPWORD_HITS}-"
-        f"{_sw_hash}"
-    )
-
     def build(p: str) -> None:
         exist_d = d.filter(exist)
         ek = (
@@ -2546,7 +2501,7 @@ def q_corpus_pipeline_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
         )
 
     path = materialize(
-        f"{_PIPE_INC_SCRATCH}/{scratch_tag(sf_dir, 'documents', counter_params)}",
+        f"{_PIPE_INC_SCRATCH}/{scratch_tag(sf_dir)}",
         build,
     )
     prior = read_parquet(spark, path)

@@ -682,7 +682,7 @@ def q_rollup_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     event log — queries get ~4 orders of magnitude cheaper and the
     answer is provably identical."""
     path = materialize(
-        f"{_ROLLUP_SCRATCH}/{scratch_tag(sf_dir, 'events')}",
+        f"{_ROLLUP_SCRATCH}/{scratch_tag(sf_dir)}",
         lambda p: hourly_partials(load_table(spark, sf_dir, "events"))
         .repartition("day")
         .write.partitionBy("day")
@@ -747,9 +747,7 @@ def q_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{base}/compacted"
         )
 
-    base = materialize(
-        f"{_COMPACT_SCRATCH}/{scratch_tag(sf_dir, 'documents')}", build
-    )
+    base = materialize(f"{_COMPACT_SCRATCH}/{scratch_tag(sf_dir)}", build)
     c = read_parquet(spark, f"{base}/compacted")
     return c.groupBy("lang").agg(
         F.count("*").alias("n_docs"),
@@ -944,9 +942,7 @@ def q_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             "day"
         ).write.mode("append").partitionBy("day").parquet(p)
 
-    path = materialize(
-        f"{_ROLLUP_INC_SCRATCH}/{scratch_tag(sf_dir, 'events')}", build
-    )
+    path = materialize(f"{_ROLLUP_INC_SCRATCH}/{scratch_tag(sf_dir)}", build)
     rollup = read_parquet(spark, path)
     return rollup.groupBy("day", "event_type").agg(
         F.sum("n_events").alias("n_events"),

@@ -49,15 +49,16 @@ LSH_PROBE_R = 1
 LSH_PROBE_MASKS = [0] + [1 << r for r in range(LSH_BAND_BITS)]
 
 
-def _query_vec(spark: SparkSession, sf_dir: str):
-    """The query point: embedding of the smallest vec_id (exists at
-    every SF). Returned as (vec_id scalar subquery, 1-row DataFrame)."""
+def _query_vec(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The query point as a 1-row frame (qid, qe): the smallest vec_id
+    (exists at every SF) and its embedding. Callers exclude the query
+    from its own neighbours by joining on ``qid``, so each plan holds
+    one min aggregate."""
     e = load_table(spark, sf_dir, "embeddings")
-    qid = e.agg(F.min("vec_id")).scalar()
-    q = e.filter(F.col("vec_id") == qid).select(
-        to_double_array("embedding").alias("qe")
+    qid = e.agg(F.min("vec_id").alias("qid"))
+    return e.join(F.broadcast(qid), F.col("vec_id") == F.col("qid")).select(
+        "qid", to_double_array("embedding").alias("qe")
     )
-    return qid, q
 
 
 @register(
@@ -83,10 +84,9 @@ def q_sim_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = load_table(spark, sf_dir, "embeddings")
     dim = embedding_dim(raw)
     e = raw.select("vec_id", "label", to_double_array("embedding").alias("e"))
-    qid, q = _query_vec(spark, sf_dir)
+    q = _query_vec(spark, sf_dir)
     return (
-        e.filter(F.col("vec_id") != qid)
-        .crossJoin(F.broadcast(q))
+        e.join(F.broadcast(q), F.col("vec_id") != F.col("qid"))
         .withColumn("cos_sim", cosine(F.col("e"), F.col("qe"), dim))
         .select("vec_id", "label", "cos_sim")
         .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
@@ -167,7 +167,7 @@ def q_sim_search_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = load_table(spark, sf_dir, "embeddings")
     dim = embedding_dim(raw)
     e = raw.select("vec_id", "label", to_double_array("embedding").alias("e"))
-    qid, q = _query_vec(spark, sf_dir)
+    q = _query_vec(spark, sf_dir)
     ws = _plane_weights(dim)
 
     # One Arrow-vectorized UDF instead of a 16×64-term unrolled
@@ -198,18 +198,21 @@ def q_sim_search_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = e.withColumn("sig", signature(F.col("e")))
     qsig = (
         q.withColumn("sig", signature(F.col("qe")))
-        .select("qe", F.posexplode("sig").alias("band", "bucket0"))
+        .select("qid", "qe", F.posexplode("sig").alias("band", "bucket0"))
         .withColumn(
             "m", F.explode(F.array(*[F.lit(m) for m in LSH_PROBE_MASKS]))
         )
         .select(
-            "qe", "band", F.col("bucket0").bitwiseXOR(F.col("m")).alias("bucket")
+            "qid",
+            "qe",
+            "band",
+            F.col("bucket0").bitwiseXOR(F.col("m")).alias("bucket"),
         )
     )
     cand = (
         sig.select("vec_id", "label", "e", F.posexplode("sig").alias("band", "bucket"))
         .join(F.broadcast(qsig), ["band", "bucket"])
-        .filter(F.col("vec_id") != qid)
+        .filter(F.col("vec_id") != F.col("qid"))
         .dropDuplicates(["vec_id"])
     )
     return (
@@ -282,6 +285,7 @@ def q_sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangler_spark.operators.embeddings_ext import (
         kmeans_assign,
         kmeans_fit,
+        quantize_expr,
     )
 
     v, cen = kmeans_fit(spark, sf_dir, k=IVFX_NLIST)
@@ -289,12 +293,13 @@ def q_sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     raw = load_table(spark, sf_dir, "embeddings")
     dim = embedding_dim(raw)
-    qid, q = _query_vec(spark, sf_dir)
-
-    qv = v.filter(F.col("vec_id") == qid).select("dim", "x")
+    # the probe cells carry the query row on to the re-rank
+    qv = _query_vec(spark, sf_dir).select(
+        "qid", "qe", F.posexplode(quantize_expr(F.col("qe"))).alias("dim", "x")
+    )
     cell_d = (
         cen.join(F.broadcast(qv), "dim")
-        .groupBy("cl")
+        .groupBy("cl", "qid", "qe")
         .agg(F.sum((F.col("x") - F.col("c")) * (F.col("x") - F.col("c"))).alias("dist"))
     )
     probe = (
@@ -302,18 +307,17 @@ def q_sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rn", F.row_number().over(Window.orderBy("dist", "cl"))
         )
         .filter(F.col("rn") <= IVFX_NPROBE)
-        .select("cl")
+        .select("cl", "qid", "qe")
     )
 
     e = raw.select("vec_id", "label", to_double_array("embedding").alias("e"))
     cand = (
         e.join(asg, "vec_id")
         .join(F.broadcast(probe), "cl")
-        .filter(F.col("vec_id") != qid)
+        .filter(F.col("vec_id") != F.col("qid"))
     )
     return (
-        cand.crossJoin(F.broadcast(q))
-        .withColumn("cos_sim", cosine(F.col("e"), F.col("qe"), dim))
+        cand.withColumn("cos_sim", cosine(F.col("e"), F.col("qe"), dim))
         .select("vec_id", "label", F.col("cl").cast("int").alias("cell"), "cos_sim")
         .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
         .limit(IVFX_TOPK)
@@ -456,7 +460,7 @@ def q_sim_search_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangler_spark.operators.embeddings_ext import (
         kmeans_assign_np,
         kmeans_fit_arr,
-        quantize_xs,
+        quantize_expr,
     )
 
     def build(base: str) -> None:
@@ -473,21 +477,17 @@ def q_sim_search_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).parquet(f"{base}/vectors")
         cen.coalesce(1).write.parquet(f"{base}/centroids")
 
-    tag = scratch_tag(sf_dir, "embeddings", f"q=intkm,k={IVFX_NLIST}")
-    base = materialize(f"{_IVF_SCRATCH}/{tag}", build)
+    base = materialize(f"{_IVF_SCRATCH}/{scratch_tag(sf_dir)}", build)
     vec_path, cen_path = f"{base}/vectors", f"{base}/centroids"
 
     raw = load_table(spark, sf_dir, "embeddings")
-    qid, q = _query_vec(spark, sf_dir)
+    q = _query_vec(spark, sf_dir)
     dim = embedding_dim(raw)
 
     # rank cells against the PERSISTED centroids with the exact
     # integer arithmetic of the in-memory probe, then fetch the
     # nprobe winners (≤ nlist rows) as partition-filter literals
-    qv = (
-        quantize_xs(raw.filter(F.col("vec_id") == qid))
-        .select(F.posexplode("xs").alias("dim", "x"))
-    )
+    qv = q.select(F.posexplode(quantize_expr(F.col("qe"))).alias("dim", "x"))
     cen = read_parquet(spark, cen_path)
     probe_rows = (
         cen.join(F.broadcast(qv), "dim")
@@ -501,11 +501,9 @@ def q_sim_search_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe_cells = [int(r.cl) for r in probe_rows]
 
     vecs = read_parquet(spark, vec_path)
-    cand = vecs.filter(
-        F.col("cell").isin(probe_cells) & (F.col("vec_id") != qid)
-    )
     return (
-        cand.crossJoin(F.broadcast(q))
+        vecs.filter(F.col("cell").isin(probe_cells))
+        .join(F.broadcast(q), F.col("vec_id") != F.col("qid"))
         .withColumn("cos_sim", cosine(F.col("e"), F.col("qe"), dim))
         .select("vec_id", "label", F.col("cell").cast("int").alias("cell"), "cos_sim")
         .orderBy(F.desc("cos_sim"), F.asc("vec_id"))

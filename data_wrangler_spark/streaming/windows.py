@@ -1320,11 +1320,7 @@ def q_stream_quarantine_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     new = docs.filter(F.col("doc_id") % 10 >= INC_EXIST_PCT)
 
-    root = os.path.join(
-        SCRATCH,
-        "stream_resume",
-        scratch_tag(sf_dir, "documents", f"exist={INC_EXIST_PCT},split=2,v1"),
-    )
+    root = os.path.join(SCRATCH, "stream_resume", scratch_tag(sf_dir))
 
     def build(_root: str) -> None:
         # day 1: even doc_ids arrive; first invocation drains them.
@@ -1425,28 +1421,7 @@ def q_stream_embed_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     m10 = F.col("vec_id") % 10
 
-    # the scratch key folds in EVERY constant that governs the emitted
-    # rows (quantizer shape + pairing threshold, not just the day
-    # split) — same rule as dedup.py's index tag: a tuned constant
-    # must invalidate the materialized scratch, or replay serves
-    # stale rows against the refreshed oracle (ADVICE r13)
-    from data_wrangler_spark.operators.dedup import MAX_CELL, SEM_TAU
-    from data_wrangler_spark.operators.embeddings_ext import (
-        KM_ITER,
-        KM_K,
-        KM_Q,
-    )
-
-    root = os.path.join(
-        SCRATCH,
-        "embed_resume",
-        scratch_tag(
-            sf_dir,
-            "embeddings",
-            f"d1={INC2_DAY1},d2={INC2_DAY2},k={KM_K},q={KM_Q},"
-            f"it={KM_ITER},tau={SEM_TAU},cap={MAX_CELL},v1",
-        ),
-    )
+    root = os.path.join(SCRATCH, "embed_resume", scratch_tag(sf_dir))
 
     def run_once(vecs: DataFrame, members: DataFrame, day: int) -> None:
         _run_stream(

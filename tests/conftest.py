@@ -6,6 +6,14 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def pytest_sessionstart(session):
+    """Remove scratch artifacts built by other package source, or
+    never finished, before any test reads them."""
+    from data_wrangler_spark.scratch import sweep
+
+    sweep()
+
+
 def _jobs_started_by(spark, fn):
     """(fn(), number of Spark jobs fn started). The status store is
     fed asynchronously, so a marker job in a second group runs after

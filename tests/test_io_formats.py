@@ -175,7 +175,7 @@ def test_schema_evolution_merges_nullable_column(spark, sf_dir):
 
     out = REGISTRY["q_schema_evolution"].run(spark, sf_dir)
     rows = out.collect()
-    path = f"{_IO_SCRATCH}/{scratch_tag(sf_dir, 'documents')}/schema_evo"
+    path = f"{_IO_SCRATCH}/{scratch_tag(sf_dir)}/schema_evo"
     assert os.path.exists(f"{path}/gen=1") and os.path.exists(f"{path}/gen=2")
     for r in rows:
         if r.generation == 1:

@@ -806,7 +806,7 @@ def test_threshold_curve_monotone_and_consistent(spark, sf_dir):
     assert counts[0] > 0, "grid floor should see q_sim_join's pairs"
 
 
-def test_empty_shingle_docs_never_band_and_match_oracle(spark, tmp_path):
+def test_empty_shingle_docs_never_band_and_match_oracle(spark, tmp_path, monkeypatch):
     """Docs with < 3 words have an EMPTY shingle set and an all-NULL
     minhash signature. Spark's concat_ws would collapse that to
     bucket '' (pairing all such docs, then ANSI-dividing by zero in
@@ -817,11 +817,14 @@ def test_empty_shingle_docs_never_band_and_match_oracle(spark, tmp_path):
     table emitting nothing for them."""
     import duckdb
 
+    from data_wrangler_spark.operators import dedup
     from data_wrangler_spark.operators.dedup import (
         _band_table,
         _minhash_signatures,
     )
 
+    # the index of a corpus made here is built here, not in the checkout
+    monkeypatch.setattr(dedup, "_INC_SCRATCH", str(tmp_path / "dedup_inc"))
     dup = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     rows = [
         # <3-word docs in HISTORY (doc_id%10<8) and the NEW batch
@@ -893,7 +896,9 @@ def test_persisted_shingles_equal_fresh_recompute(spark, sf_dir):
     }
     assert stored == fresh
 
-def test_index_compaction_preserves_probes_and_reguards(spark, sf_dir, tmp_path):
+def test_index_compaction_preserves_probes_and_reguards(
+    spark, sf_dir, tmp_path, monkeypatch
+):
     """q_dedup_index_compact (VERDICT r11 #6). On the driver fixture
     no bucket crosses MAX_BUCKET across the day0/day1 appends, so the
     compacted index must yield BIT-IDENTICAL day-2 probe candidates
@@ -907,6 +912,7 @@ def test_index_compaction_preserves_probes_and_reguards(spark, sf_dir, tmp_path)
 
     import duckdb
 
+    from data_wrangler_spark.operators import dedup
     from data_wrangler_spark.operators.dedup import (
         BAND_KEY,
         INC2_DAY2,
@@ -965,6 +971,8 @@ def test_index_compaction_preserves_probes_and_reguards(spark, sf_dir, tmp_path)
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     ).write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
     sf = str(tmp_path)
+    # the synthetic corpus's index is built here, not in the checkout
+    monkeypatch.setattr(dedup, "_INC_SCRATCH", str(tmp_path / "dedup_inc"))
 
     got = sorted(
         tuple(r) for r in REGISTRY["q_dedup_index_compact"].run(spark, sf).collect()

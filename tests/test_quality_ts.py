@@ -118,7 +118,7 @@ def test_compact_files_reduces_file_count(spark, sf_dir):
     from data_wrangler_spark.scratch import scratch_tag
 
     REGISTRY["q_compact_files"].run(spark, sf_dir).collect()
-    sf_tag = scratch_tag(sf_dir, "documents")
+    sf_tag = scratch_tag(sf_dir)
     frag = f"{_COMPACT_SCRATCH}/{sf_tag}/fragmented"
     comp = f"{_COMPACT_SCRATCH}/{sf_tag}/compacted"
 
@@ -168,7 +168,7 @@ def test_rollup_incremental_layout_and_marker(spark, sf_dir):
     from pyspark.sql import functions as F
 
     REGISTRY["q_rollup_incremental"].run(spark, sf_dir).collect()
-    path = f"{_ROLLUP_INC_SCRATCH}/{scratch_tag(sf_dir, 'events')}"
+    path = f"{_ROLLUP_INC_SCRATCH}/{scratch_tag(sf_dir)}"
     assert os.path.exists(f"{path}/{MARKER}")
     days = {e.name for e in os.scandir(path) if e.name.startswith("day=")}
     ev = load_table(spark, sf_dir, "events")

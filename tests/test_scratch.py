@@ -1,5 +1,7 @@
-"""scratch.materialize publishes a build once and completely, and the
-scratch root is spelled out in one place only."""
+"""scratch.materialize publishes a build once and completely, its
+marker and key know what built an artifact, scratch.sweep removes what
+is no longer current, and the scratch root is spelled out in one place
+only."""
 
 import os
 import re
@@ -12,7 +14,8 @@ import time
 
 import pytest
 
-from data_wrangler_spark.scratch import MARKER, materialize
+from data_wrangler_spark import scratch
+from data_wrangler_spark.scratch import MARKER, materialize, scratch_tag, sweep
 
 PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                    "data_wrangler_spark")
@@ -142,9 +145,8 @@ def test_build_pins_do_not_outlive_the_build(spark, tmp_path):
 
 def test_copied_artifact_is_rebuilt_where_it_lands(tmp_path):
     """An artifact copied to another root is a miss there (stream
-    checkpoints and sink logs inside it name the old path), while a
-    marker written before markers recorded a path still counts as
-    built."""
+    checkpoints and sink logs inside it name the old path), and so is
+    one whose marker is empty."""
     import shutil
 
     calls = []
@@ -165,7 +167,82 @@ def test_copied_artifact_is_rebuilt_where_it_lands(tmp_path):
     os.makedirs(c)
     open(os.path.join(c, MARKER), "w").close()
     materialize(c, build)
-    assert calls == [a, b]
+    materialize(c, build)
+    assert calls == [a, b, c]
+
+
+def test_changed_code_digest_rebuilds_in_place(tmp_path, monkeypatch):
+    """A build under other package source is a miss at the same path
+    and the same key: the artifact is rebuilt where it is, and the
+    older build's files are gone."""
+
+    def build_as(name):
+        def build(p):
+            os.makedirs(p)
+            with open(os.path.join(p, name), "w") as fh:
+                fh.write("layout\n")
+
+        return build
+
+    path = str(tmp_path / "artifact")
+    materialize(path, build_as("old_layout"))
+    materialize(path, build_as("never_called"))
+    assert sorted(os.listdir(path)) == sorted([MARKER, "old_layout"])
+
+    monkeypatch.setattr(scratch, "code_digest", lambda: "edited source")
+    assert materialize(path, build_as("new_layout")) == path
+    assert sorted(os.listdir(path)) == sorted([MARKER, "new_layout"])
+    with open(os.path.join(path, MARKER)) as fh:
+        assert fh.read().splitlines() == [os.path.realpath(path), "edited source"]
+
+
+def test_key_covers_every_fixture_table(tmp_path):
+    """A new version of any table in the fixture is a new key, not
+    only of the one table an artifact reads first."""
+    for t in ("orders", "documents"):
+        (tmp_path / f"{t}.parquet").write_bytes(b"v1")
+    before = scratch_tag(str(tmp_path))
+    assert scratch_tag(str(tmp_path)) == before
+    st = os.stat(tmp_path / "documents.parquet")
+    os.utime(tmp_path / "documents.parquet", ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    assert scratch_tag(str(tmp_path)) != before
+    assert scratch_tag(str(tmp_path), "mod=97") != scratch_tag(str(tmp_path))
+
+
+def test_sweep_removes_stale_keeps_current_skips_locked(tmp_path, monkeypatch):
+    """sweep removes an artifact whose marker is missing or names other
+    source, with its lock file; keeps a current one; and leaves one
+    whose lock is held (a build in progress) alone."""
+    import fcntl
+
+    monkeypatch.setattr(scratch, "ROOT", str(tmp_path))
+
+    def build(p):
+        os.makedirs(p)
+
+    current = str(tmp_path / "a" / "current")
+    stale = str(tmp_path / "a" / "stale")
+    partial = str(tmp_path / "b" / "partial")
+    busy = str(tmp_path / "b" / "busy")
+    materialize(current, build)
+    materialize(busy, build)
+    with monkeypatch.context() as m:
+        m.setattr(scratch, "code_digest", lambda: "older source")
+        materialize(stale, build)
+        materialize(f"{current}/nested", build)
+    os.makedirs(partial)
+    open(partial + ".lock", "w").close()
+
+    with open(busy + ".lock") as held:
+        fcntl.flock(held, fcntl.LOCK_EX)
+        os.unlink(os.path.join(busy, MARKER))
+        sweep()
+    assert sorted(os.listdir(tmp_path / "a")) == ["current", "current.lock"]
+    assert sorted(os.listdir(current)) == [MARKER]
+    assert sorted(os.listdir(tmp_path / "b")) == ["busy", "busy.lock"]
+
+    sweep()
+    assert os.listdir(tmp_path / "b") == []
 
 
 def test_scratch_root_is_spelled_only_in_scratch_module():
@@ -192,9 +269,10 @@ def test_streams_and_temp_views_have_one_home():
     arguments instead). The incremental dedup probes have one
     definition each: the exact-Jaccard verify (dedup.jaccard_verify)
     and the cell index's member-side sub split (dedup.cell_probe).
-    Persisted state has one publication protocol: only
-    scratch.materialize takes a build lock, and only the one manifest
-    writer (scratch.write_manifest) fsyncs."""
+    Persisted state has one publication protocol: only scratch's
+    `_locked` (the lock materialize builds and sweep removes under)
+    takes a flock, and only the one manifest writer
+    (scratch.write_manifest) fsyncs."""
     import ast
 
     homes = {
@@ -203,7 +281,7 @@ def test_streams_and_temp_views_have_one_home():
         "createOrReplaceTempView": ("catalog.py", None),
         'array_intersect("sa", "sb")': ("operators/dedup.py", "jaccard_verify"),
         "_with_sub(members": ("operators/dedup.py", "cell_probe"),
-        "fcntl.flock": ("scratch.py", "materialize"),
+        "fcntl.flock": ("scratch.py", "_locked"),
         "os.fsync": ("scratch.py", "write_manifest"),
     }
     offenders = []

@@ -43,14 +43,20 @@ def main() -> int:
     spark = get_spark("isolate")
     compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     # count py4j round trips by wrapping the one client every JVM call
-    # goes through
+    # goes through; the detach commands py4j sends when Python's
+    # collector frees a JVM reference land in whichever phase the
+    # collector runs in, so they are not counted
+    from py4j import protocol
+
     client = spark.sparkContext._gateway._gateway_client
     send_command = client.send_command
     py4j_calls = [0]
+    detach = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
 
-    def counting_send_command(*a, **kw):
-        py4j_calls[0] += 1
-        return send_command(*a, **kw)
+    def counting_send_command(command, *a, **kw):
+        if not command.startswith(detach):
+            py4j_calls[0] += 1
+        return send_command(command, *a, **kw)
 
     client.send_command = counting_send_command
     sc = spark.sparkContext
